@@ -17,8 +17,10 @@ import graft.sources.{HttpTimeouts, HttpTransport, RetryingHttpClient, RetryPoli
   *    `df.coalesce(1)` reproduces that exactly when ordering matters;
   *  - at-least-once: Spark task retries can re-POST a partition's batches
   *    (the reference is not idempotent either — README.md:151-154 flags
-  *    idempotency as future work). Callers needing exactly-once should key
-  *    batches by (partitionId, batchIndex) server-side.
+  *    idempotency as future work). Callers needing exactly-once should
+  *    deduplicate by record id server-side: a retried partition need not
+  *    batch the same records, since lookups upstream emit in completion
+  *    order ([[graft.sources.RestEnrich]]).
   *
   * Returns the number of POSTed batches (via accumulator).
   */

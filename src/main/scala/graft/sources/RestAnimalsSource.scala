@@ -15,11 +15,14 @@ import org.apache.spark.unsafe.types.UTF8String
 /** DataSource V2 implementation of the reference's paginated listing scan
   * (S1, `/root/reference/src/animals_etl/pipeline.py:8-29`), Spark-first:
   *
-  *  - the driver probes page 1 once to learn `total_pages`
+  *  - the driver probes page 1 once per scan to learn `total_pages`
   *    (pipeline.py:13-14's "first page sync" step) and plans **one
   *    InputPartition per page** — pages then fetch in parallel across
-  *    executors, with in-flight concurrency bounded by scheduler slots
-  *    (the semaphore analog, R5);
+  *    executors, one GET per running task, so in-flight page GETs are
+  *    bounded by scheduler slots (the semaphore analog, R5). Detail
+  *    lookups are bounded by `concurrency` instead, whatever the slots
+  *    ([[RestEnrich]]), and POSTs run sequentially within each sink
+  *    partition ([[graft.sinks.HttpBatchSink]]);
   *  - each partition reader re-fetches its page through the retrying client
   *    (R1-R4 live in [[RetryingHttpClient]], per request, exactly like the
   *    reference);
@@ -95,12 +98,17 @@ class RestAnimalsScan(options: Map[String, String]) extends Scan with Batch {
   override def readSchema(): StructType = RestAnimalsSource.Schema
   override def toBatch: Batch           = this
 
-  /** Driver-side probe: one GET for page 1 sizes the scan. */
-  override def planInputPartitions(): Array[InputPartition] = {
+  /** Driver-side probe: one GET for page 1 sizes the scan. Memoized, since
+    * Spark asks once per copy of the scan node that physical planning makes
+    * (twice per pipeline run); only the page count is kept, so each
+    * execution still reads every page, page 1 included. */
+  private lazy val pages: Array[InputPartition] = {
     val client = RestAnimalsSource.clientFromOptions(options)
     val first = AnimalsJson.parsePage(client.get(s"${RestAnimalsSource.ListPath}?page=1").body)
     (1 to math.max(1, first.totalPages)).map(p => PagePartition(p): InputPartition).toArray
   }
+
+  override def planInputPartitions(): Array[InputPartition] = pages
 
   override def createReaderFactory(): PartitionReaderFactory = new RestPageReaderFactory(options)
 }

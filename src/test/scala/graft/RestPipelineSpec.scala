@@ -1,7 +1,9 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
@@ -19,6 +21,7 @@ import graft.sinks.HttpBatchSink
 object FakeAnimalsTransport {
   val posts = new ConcurrentLinkedQueue[String]()
   val detailCalls = new AtomicInteger(0)
+  val pageCalls = new ConcurrentHashMap[Int, AtomicInteger]()
 
   val pages: Map[Int, String] = Map(
     1 -> """{"page": 1, "total_pages": 2, "items": [{"id": 1, "name": "Dog"}, {"id": 2, "name": "Cat"}]}""",
@@ -37,7 +40,9 @@ class FakeAnimalsTransport extends HttpTransport {
     require(headers.contains("X-Request-Id"), "tracing header missing")
     (method, path) match {
       case ("GET", p) if p.startsWith("/animals/v1/animals?page=") =>
-        HttpResponse(200, pages(p.stripPrefix("/animals/v1/animals?page=").toInt))
+        val page = p.stripPrefix("/animals/v1/animals?page=").toInt
+        pageCalls.computeIfAbsent(page, _ => new AtomicInteger).incrementAndGet()
+        HttpResponse(200, pages(page))
       case ("GET", p) if p.matches("/animals/v1/animals/\\d+") =>
         detailCalls.incrementAndGet()
         HttpResponse(200, details(p.split("/").last.toLong))
@@ -87,6 +92,21 @@ class RestPipelineSpec extends AnyFunSuite {
     // key-omission for invalid born_at (pipeline.py:78-79): Dog has no born_at key
     assert(bodies.contains("""{"id":1,"name":"Dog","friends":["Kangaroo","Sea Lions"]}"""))
     assert(bodies.contains("""{"id":3,"name":"Mouse","friends":["Dog"]}"""))
+  }
+
+  test("a pipeline run probes page 1 once: one probe plus its partition") {
+    FakeAnimalsTransport.pageCalls.clear()
+    AnimalsPipeline.run(spark, transport, asOf, concurrency = 2, batchSize = 2, policy = fastPolicy)
+    val calls = FakeAnimalsTransport.pageCalls.asScala.map { case (p, n) => p -> n.get }.toMap
+    assert(calls == Map(1 -> 2, 2 -> 1))
+  }
+
+  test("a repeated action on one listing re-reads every page") {
+    val listing = AnimalsPipeline.listed(spark, transport)
+    FakeAnimalsTransport.pageCalls.clear()
+    assert(listing.collect().length == 3 && listing.collect().length == 3)
+    val calls = FakeAnimalsTransport.pageCalls.asScala.map { case (p, n) => p -> n.get }.toMap
+    assert(calls == Map(1 -> 3, 2 -> 2)) // page 1: one probe, then one read per action
   }
 
   test("transform output matches the reference's expected records") {
