@@ -2,24 +2,35 @@ package graft
 
 import java.util.concurrent.atomic.LongAdder
 
+import org.apache.spark.GraftSparkBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
-/** Benchmark harness: runs every registered query against
-  * SPARK_GRAFT_SF_DIR, reports one compact JSON line (short qNN keys, wall
-  * seconds) on stdout and writes full-name per-query wall+cpu detail to
-  * `bench_detail.json` (override via SPARK_GRAFT_BENCH_DETAIL). CPU time
-  * comes from task metrics via a SparkListener, so wall-vs-cpu divergence
-  * makes environmental contention self-evident: a contended run inflates
-  * wall time but not cpu time (a CPU-bound query on an idle box keeps
-  * wall ≲ cpu ≤ wall·cores).
+/** Benchmark harness: runs every registered query (plus the
+  * [[BenchExtras]] build/probe split rows) against one data directory,
+  * prints one compact JSON line on stdout ([[stdoutLine]]: registry rows
+  * only, short `qNN` keys, wall seconds) and writes the full-name per-row
+  * detail to a sidecar JSON file.
   *
-  * Each query runs SPARK_GRAFT_BENCH_REPS times (default 3) and reports the
-  * MEDIAN wall and cpu. In a shared session, one-off GC/JIT pauses land on
-  * whichever query happens to trigger them — measured swings up to 6× on the
-  * same binary between clean runs while the TOTAL stayed stable — which made
-  * per-query numbers incomparable across rounds. The median drops those
-  * one-offs; per-rep walls are preserved in the sidecar so the spread stays
-  * visible.
+  * Measurement. Each row runs `reps` times and reports the MEDIAN wall,
+  * executor cpu (task metrics via a SparkListener) and `plan_sec` (the
+  * span up to `executedPlan`: builder-side eager jobs plus Catalyst's
+  * analysis, optimization and physical planning). In a shared session,
+  * one-off GC/JIT pauses land on whichever query happens to trigger them;
+  * the median drops those, and the per-rep series stay in the sidecar.
+  * Rows in [[WarmupRows]] first burn one unrecorded rep.
+  *
+  * Contention. A fixed spin ([[ContentionProbe]]) is sampled before every
+  * row and once at the end. [[contentionFlags]] reads the probe series and
+  * the later-rep spreads at run level; [[probeDirtyQueries]] marks the rows
+  * next to an elevated probe. `contended` is the run-level flag OR at least
+  * [[DirtyCountThreshold]] dirty rows; `dirty` counts those rows.
+  *
+  * Settings (environment):
+  *  - `SPARK_GRAFT_SF_DIR`: the data directory;
+  *  - `SPARK_GRAFT_CPUS`: the session's `local[N]` (default 32);
+  *  - `SPARK_GRAFT_BENCH_REPS`: measured reps per row (default 3);
+  *  - `SPARK_GRAFT_BENCH_ONLY`: comma-separated name prefixes to run;
+  *  - `SPARK_GRAFT_BENCH_DETAIL`: sidecar path (default `bench_detail.json`).
   */
 object Bench {
 
@@ -43,143 +54,6 @@ object Bench {
     }
   }
 
-  /** Memory-STREAMING probe — the channel [[ContentionProbe]] cannot see.
-    * The spin probe is register/L1-resident, so a co-tenant hammering the
-    * host's LLC/memory bus leaves it FLAT while every memory-bound query's
-    * cpu inflates (the r11/r12 signature: probes at quiet-era speed, small
-    * compute rows ~1.0× their stamps, big rows uniformly ~1.7–2.2× at
-    * near-zero steal — SCALING.md round-12). This probe measures the thing
-    * that is actually contended: `threads` workers each stream a
-    * `mibPerThread` MiB array far past any LLC, touching one long per
-    * 64-byte line, started simultaneously off a barrier; the aggregate
-    * read bandwidth (MB/s) lands in `_run` as `membw_mbps_{start,end}`.
-    * A quiet-era stamp vs a hot run's value turns "the box feels slow"
-    * into a measured bandwidth deficit with zero guesswork. The stream
-    * arrays are lazily allocated and REUSED across the samples of a
-    * burst (per-measure fresh allocations made the instrument read its
-    * own allocation churn — a fresh JVM's first samples sat at 61–73
-    * GB/s while the same quiet box read 92–110 GB/s seconds later), but
-    * must be [[release]]d before the measured query phase: 0.5 GiB
-    * tenured in the default 8 GiB bench heap taxed the heap-heaviest
-    * rows ~2–10× (see the buffer comment below). */
-  final class MemBandwidthProbe(
-      threads: Int = 8,
-      mibPerThread: Int = 64,
-      timedPasses: Int = 3,
-      barrierTimeoutMs: Long = 10_000,
-      measureTimeoutMs: Long = 60_000) {
-    import java.util.concurrent.{CountDownLatch, CyclicBarrier, TimeUnit}
-    private val sink     = new java.util.concurrent.atomic.AtomicLong()
-    private val longsPer = mibPerThread * ((1 << 20) / 8)
-    // One buffer per worker, lazily (re-)initialized and REUSED across the
-    // samples of a bracket/gate burst: reused buffers keep every sample on
-    // the SAME pages (comparable TLB/huge-page state) and keep allocation
-    // churn out of the timed window. They must NOT stay resident through
-    // the measured query phase: 0.5 GiB tenured early in the default 8 GiB
-    // bench heap re-priced exactly the heap-heaviest rows (q37 ~10×, q39
-    // ~2× cpu, walls moving with cpu — a GC-pressure signature) the first
-    // time a run carried them end to end. [[release]] between bursts.
-    private var bufsRef: Array[Array[Long]] = null
-    // set on every (re)allocation; measureInjecting burns one unrecorded
-    // warm-up sample while it's pending — see the discard note there
-    private var warmupPending = false
-    private def buffers: Array[Array[Long]] = {
-      if (bufsRef == null) {
-        bufsRef = Array.fill(threads)(new Array[Long](longsPer))
-        warmupPending = true
-      }
-      bufsRef
-    }
-
-    /** Drop the stream buffers so the measured phase runs with the heap it
-      * would have without the probe; the next measure() reallocates and
-      * auto-discards its own warm-up sample (mechanical since r14 — no
-      * caller convention to forget). */
-    def release(): Unit = bufsRef = null
-
-    /** Aggregate streaming read bandwidth in MB/s (one sample), or None
-      * when ANY worker died or a barrier/latch timed out. A dead worker
-      * must invalidate the sample, never inflate it: the previous
-      * constant-numerator accounting credited `threads·passes` bytes over
-      * a shortened window, so the degrade path OVERSTATED bandwidth on
-      * exactly the pressured runs where the channel matters — and a
-      * `barrier.reset()` in the worker's catch parked later-arriving
-      * parties on a fresh generation that could never fill, hanging the
-      * whole bench. Timed awaits everywhere (a timeout BREAKS the barrier,
-      * unsticking every peer) and a None verdict replace both. */
-    def measure(): Option[Double] = measureInjecting(_ => ())
-
-    /** Spec seam: `fault(workerIdx)` runs after allocation, before the
-      * start barrier — throw from it to simulate a worker death. */
-    private[graft] def measureInjecting(fault: Int => Unit): Option[Double] = {
-      // materialize outside the workers: one failure point — but allocation
-      // failure on a pressured heap must still degrade the SAMPLE to None
-      // (the class contract), not abort the bench out of measure()
-      val bufs =
-        try buffers
-        catch { case e @ (_: OutOfMemoryError | scala.util.control.NonFatal(_)) =>
-          System.err.println(s"[membw] buffer allocation failed, sample invalid: $e")
-          return None
-        }
-      // MECHANICAL warm-up discard: the first sample on freshly-allocated
-      // buffers is page-fault/TLB grade (fresh-JVM firsts read 61–73 GB/s
-      // on a box whose settled samples read 92–110) — it was discarded by
-      // comment-documented caller convention through r13, which a future
-      // edit could silently stamp. Now the probe itself burns one unrecorded
-      // sample after every (re)allocation; no call site can forget.
-      if (warmupPending) {
-        warmupPending = false
-        sampleOnce(bufs, fault)
-        ()
-      }
-      sampleOnce(bufs, fault)
-    }
-
-    /** One barrier-coordinated sample over already-materialized buffers. */
-    private def sampleOnce(bufs: Array[Array[Long]], fault: Int => Unit): Option[Double] = {
-      val barrier  = new CyclicBarrier(threads + 1)
-      val done     = new CountDownLatch(threads)
-      val failed   = new java.util.concurrent.atomic.AtomicInteger()
-      (0 until threads).foreach { w =>
-        val t = new Thread(() => {
-          // countDown on EVERY exit: a worker dying (allocation failure on
-          // a pressured heap) must degrade the sample, not hang the bench
-          try {
-            val a = bufs(w)
-            java.util.Arrays.fill(a, 0x9E3779B9L) // page-in + write-warm
-            fault(w)
-            barrier.await(barrierTimeoutMs, TimeUnit.MILLISECONDS)
-            var p = 0
-            var x = 0L
-            while (p < timedPasses) {
-              var i = 0
-              while (i < longsPer) { x += a(i); i += 8 } // one touch per line
-              p += 1
-            }
-            sink.addAndGet(x)
-          } catch {
-            case e: Throwable =>
-              failed.incrementAndGet()
-              System.err.println(s"[bench] membw worker died: $e")
-          } finally done.countDown()
-        })
-        t.setDaemon(true)
-        t.start()
-      }
-      val started =
-        try { barrier.await(barrierTimeoutMs, TimeUnit.MILLISECONDS); true }
-        catch { case _: Throwable => false } // a dead worker broke the barrier
-      val t0       = System.nanoTime()
-      val finished = done.await(measureTimeoutMs, TimeUnit.MILLISECONDS)
-      val sec      = (System.nanoTime() - t0) / 1e9
-      if (!started || !finished || failed.get() > 0 || sec <= 0) None
-      else {
-        val bytes = threads.toLong * timedPasses * mibPerThread.toLong * (1L << 20)
-        Some(bytes / sec / 1e6)
-      }
-    }
-  }
-
   /** Run-cleanliness decision from (a) the probe walls — p90/p10 ratio
     * above [[ProbeRatioThreshold]] means the box's spare capacity visibly
     * changed mid-run (percentiles, not max/min: one GC blip landing on a
@@ -197,7 +71,7 @@ object Bench {
     if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
   }
 
-  /** PER-QUERY contamination, mechanism (a): a query is suspect if either
+  /** PER-QUERY contamination: a query is suspect if either
     * adjacent probe (sampled immediately before and after it) exceeds
     * [[ProbeElevatedFactor]] × the run-MEDIAN probe. Rationale from the
     * r8 driver run, where the run-level checks false-negatived: the load
@@ -212,27 +86,23 @@ object Bench {
 
   /** Absolute-delta floor on probe elevation, SCALE-AWARE: a probe is
     * elevated only when it ALSO sits `max(ProbeDeltaMedianFactor·median,
-    * ProbeGcBlipFloorSec)` above the run median. At this box's ~0.08 s
-    * probes the 1.5× ratio alone fires on routine GC blips — the two
-    * round-10 re-stamp runs flagged disjoint 4-row sets (deltas
-    * 0.042/0.065 s, commit 04d886c) and the final-stamp run a 0.099 s blip
-    * (c491055) on a probe-flat box, each time flipping `contended` on a run
-    * whose cpu medians agreed at ~1.00 with the quiet baseline. The recorded
-    * r8 burst's probes sit ≥0.152 s above median (0.152–0.365), so the floor
-    * must split the observed gap. Two components, because the two noise
-    * sources scale differently:
+    * ProbeGcBlipFloorSec)` above the run median. At ~0.08 s probes the
+    * 1.5× ratio alone fires on routine GC blips — two recorded quiet runs
+    * flagged disjoint 4-row sets (deltas 0.042/0.065 s) and a third a
+    * 0.099 s blip on a probe-flat box, each time flipping `contended`. The
+    * recorded r8 burst's probes sit ≥0.152 s above median (0.152–0.365), so
+    * the floor must split the observed gap. Two components, because the
+    * two noise sources scale differently:
     *
-    *  - `ProbeDeltaMedianFactor·median` tracks the box: on this box
-    *    (median ~0.083) it lands at ~0.124 — the r9-calibrated 0.12 — and
-    *    on faster hardware it drops with the probe cost instead of going
-    *    silent behind a constant tuned to a slower clock.
+    *  - `ProbeDeltaMedianFactor·median` tracks the box: at a ~0.083 s
+    *    median it lands at ~0.124, and on faster hardware it drops with the
+    *    probe cost instead of going silent behind a constant tuned to a
+    *    slower clock.
     *  - `ProbeGcBlipFloorSec` is deliberately ABSOLUTE: the recorded GC
     *    blips (0.042–0.099 s deltas) are heap-size-driven pauses of the
     *    shared JVM, not clock-driven — a faster box pauses just as long.
-    *    Bursts whose delta falls under it are invisible to the probe
-    *    mechanism on ANY box by physics; they are the cpu-baseline
-    *    mechanism's job by design (exactly how the two sub-floor r8 burst
-    *    probes were caught: q111 2.8×, q119 2.4× their quiet baselines).
+    *    Bursts whose delta falls under it are invisible to the probe on ANY
+    *    box by physics.
     *
     * All three recorded quiet-run blip series stay quiet and every burst
     * probe that mattered still fires. Replay-pinned both ways — plus the
@@ -258,724 +128,10 @@ object Bench {
       }
     }
 
-  /** Mechanism (b): cpu_sec vs a COMMITTED quiet-run baseline
-    * (BENCH_BASELINE.json). Task cpu is code-determined — wall inflates
-    * under any load, but >2× cpu on UNCHANGED code is contamination by
-    * definition (cache-thrash + scheduler overhead from a co-tenant:
-    * r8's q121 measured 146 cpu-s vs 21.5 quiet, q73 4.2 vs 0.4). This
-    * catches the case probes can't: a burst that starts and ends between
-    * two probe samples, or multi-core/memory-bandwidth contention the
-    * single-threaded probe under-measures. Floors keep jitter out: the
-    * baseline must be big enough to measure (≥ [[CpuBaselineFloorSec]])
-    * and the excess material (≥ [[CpuExcessFloorSec]] absolute), so a
-    * 0.1 s query doubling on GC noise never flags. A query whose CODE
-    * changed since the baseline legitimately trips this — refresh
-    * BENCH_BASELINE.json in the same commit as the query change. */
-  val CpuRatioThreshold   = 2.0
-  val CpuBaselineFloorSec = 0.2
-  val CpuExcessFloorSec   = 1.0
-
-  /** Tighter ratio for rows stamped at their HIGH quiet mode (the ones
-    * carrying a recorded `cpu_lo`): the high-mode stamp already contains the
-    * headroom the 2× ratio was meant to provide, so these rows flag at
-    * 1.5× hi instead of 2× hi. Parameter choice is replayed against the
-    * nine recorded full quiet runs of rounds 8–10 (BenchReplaySpec): every
-    * recorded quiet value stays under 1.5× its hi stamp (worst margin: q60
-    * 3.497 vs 4.05), while contamination in the previously-invisible band
-    * (1.5×hi, 2×hi] — e.g. q119 at 55 cpu-s vs its 69.6 old threshold —
-    * now flags. A lo-anchored `min(2·hi, k·lo)` rule is NOT satisfiable by
-    * any k against that history: the recorded quiet envelope demands k ≥ 9
-    * on q60 (lo 0.396, quiet max 3.497) where tightening anything needs
-    * k ≤ 5 — the quiet cpu of these warm-up rows is a decay CONTINUUM
-    * (q119: 11.4–37.3 across runs), not two separable modes, so hi is the
-    * only safe anchor and `cpu_lo` is the machine-readable record of the
-    * steady mode, not a threshold. */
-  val CpuHiModeRatio = 1.5
-
-  /** One committed baseline row: `cpu` is the quiet-run stamp (the HIGH
-    * quiet mode for warm-up-bimodal rows), `cpuLo` the recorded steady
-    * (warm-JVM) mode for those rows — presence marks the row hi-stamped and
-    * arms the tighter [[CpuHiModeRatio]] — and `srcSha` the source
-    * fingerprint at stamp time (freshness). */
-  final case class BaselineRow(cpu: Double, cpuLo: Option[Double], srcSha: Option[String])
-
-  /** Unrecorded warm-up reps the official runner burns before a row's
-    * measured reps: 1 for rows DECLARED warm-up-bimodal in the quiet
-    * baseline (`cpu_lo` present), 0 otherwise. Those rows' cost is a
-    * JIT/codegen warm-up decay CONTINUUM (q110 8-rep solo: walls
-    * 3.01→0.63, cpus 19.8→7.0 within one JVM), so a 3-rep median that
-    * includes the first rep lands anywhere on the decay shoulder — q110
-    * read >2× its quiet-median wall stamp three rounds running (r15's one
-    * dirty row) on an unchanged plan. Burning the first rep starts the
-    * measured window past the steep end, so the official median reads the
-    * same regime the stamp's clean-history median does. The warm-up rep is
-    * recorded in bench_detail (`warmup_wall`/`warmup_cpu`) for decay
-    * diagnosis but participates in no median, flag, or stamp. */
-  def warmupRepsFor(name: String, baseline: Map[String, BaselineRow]): Int =
-    if (baseline.get(name).exists(_.cpuLo.isDefined)) 1 else 0
-
-  /** Whether a requested baseline stamp may proceed: a contended run's
-    * inflated cpu medians would be stamped with FRESH src_sha and then
-    * false-flag every later quiet run — refuse unless explicitly forced
-    * (hand-adjudicated stamps only). */
-  /** Stamp eligibility. Beyond the contended flag, the big-row strata
-    * median (vs the PREVIOUS baseline, fresh rows only) must sit at or
-    * under [[StampBigRatioMax]]: the r13 first watcher-gated stamp run
-    * passed the dirty-count guard (2 < 3 — per-row dirty needs >2×) while
-    * carrying a BROAD 1.46× big-stratum cpu inflation (the ambient
-    * memory-pressure signature; 56 baselined big rows landed at median
-    * 1.54×, many at ~1.9–2.0×), i.e. the neighbor returned between the
-    * watcher's pre-run quiet read and the run's end. Stamping that run
-    * would have re-priced every memory-bound row ~1.5× high and blinded
-    * the 2× detector to real regressions of that size on quiet days. A
-    * None bigRatio (first stamp, scale change, no big fresh rows) cannot
-    * refuse — there is nothing to compare against. */
-  val StampBigRatioMax = 1.25
-
-  /** Host-steal ceiling for a stamp run: quiet runs on this box read
-    * 0.009–0.04%, the r11 hot-box runs 0.4–0.7%, and the r14 poisoned
-    * stamp attempt 2.0% — a co-tenant arriving MID-run inflates walls
-    * while big-row cpu stays at baseline, so neither the contended flag
-    * nor the cpu strata catch it (exactly how that attempt slipped
-    * through: contended:false, dirty 0, big strata 0.97 — and 23 rows
-    * landed >1.5× their clean-history wall medians). */
-  val StampStealMaxPct = 0.2
-
-  /** The run's END membw bracket must hold at least this fraction of the
-    * START bracket for a stamp: clean stamps hold 0.9–1.05× end-to-end
-    * (the end bracket samples warmed, post-GC); the r14 poisoned attempt
-    * collapsed 85.9 → 50.1 GB/s (0.58×) as the neighbor arrived. */
-  val StampMembwEndFloor = 0.7
-
-  def shouldStampBaseline(
-      requested: Boolean,
-      contended: Boolean,
-      forced: Boolean,
-      bigRatio: Option[Double] = None,
-      stealPct: Option[Double] = None,
-      membwStart: Option[Double] = None,
-      membwEnd: Option[Double] = None): Boolean = {
-    val membwCollapsed = (for { s <- membwStart; e <- membwEnd; if s > 0 }
-      yield e / s < StampMembwEndFloor).getOrElse(false)
-    requested && (forced ||
-      (!contended && !bigRatio.exists(_ > StampBigRatioMax) &&
-        !stealPct.exists(_ > StampStealMaxPct) && !membwCollapsed))
-  }
-
-  private def cpuThreshold(row: BaselineRow): Double =
-    (if (row.cpuLo.isDefined) CpuHiModeRatio else CpuRatioThreshold) * row.cpu
-
-  def cpuDirtyQueries(measured: Seq[(String, Double)], baseline: Map[String, BaselineRow]): Seq[String] =
-    measured.collect {
-      case (n, c)
-          if baseline
-            .get(n)
-            .exists(b =>
-              b.cpu >= CpuBaselineFloorSec && c > cpuThreshold(b) && c - b.cpu > CpuExcessFloorSec) =>
-        n
-    }
-
-  /** Fingerprint of the source files that determine a query's code: first
-    * 12 hex of SHA-256 over the concatenated file bytes, in declared-owner
-    * order. None when any owner file is unreadable (fingerprinting
-    * disarms rather than guesses — e.g. a deployment running from a jar
-    * without the source tree). */
-  def sourceFingerprint(files: Seq[String], root: java.nio.file.Path): Option[String] = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    val ok = files.nonEmpty && files.forall { f =>
-      val p = root.resolve(f)
-      if (java.nio.file.Files.isReadable(p)) {
-        md.update(java.nio.file.Files.readAllBytes(p)); true
-      } else false
-    }
-    if (ok) Some(md.digest().map("%02x".format(_)).mkString.take(12)) else None
-  }
-
-  /** Shared infra files folded into EVERY row's fingerprint: the table
-    * loaders, the module trait's numeric helpers, and the session builder
-    * shape every query's plan without appearing in any module's declared
-    * `sourceFiles` — the r14 null-vector filter in Tables.scala changed
-    * the plan of every similarity query and marked NOTHING stale
-    * (SCALING.md round-14 finding #2). Hashing them into every row turns
-    * "shared-helper edit" from an invisible baseline invalidation into a
-    * full-registry stale report, at the cost that such an edit forces a
-    * full restamp — which is exactly the discipline it should force. */
-  val InfraFiles: Seq[String] = Seq(
-    "src/main/scala/graft/Tables.scala",
-    "src/main/scala/graft/QueryModule.scala",
-    "src/main/scala/graft/GraftSession.scala")
-
-  /** Per-row current fingerprints: declared owner files PLUS the global
-    * [[InfraFiles]] (prepended, so infra bytes participate in every row's
-    * sha). An unreadable infra file disarms every row — same
-    * disarm-rather-than-guess contract as [[sourceFingerprint]]. */
-  def currentShaFor(
-      owners: Map[String, Seq[String]],
-      root: java.nio.file.Path,
-      infra: Seq[String] = InfraFiles): Map[String, String] =
-    owners.flatMap { case (n, files) => sourceFingerprint(infra ++ files, root).map(n -> _) }
-
-  /** Parse BENCH_BASELINE.json bytes: name → (cpu_sec, recorded src_sha).
-    * Returns empty — cpu check disarmed, with a stderr warning — unless
-    * the baseline's `_sf.dir` header EXISTS and MATCHES the run's dir: cpu
-    * is code-determined only at matching data scale, and a header-less
-    * file can't prove it matches (a missing header previously stayed
-    * ARMED, which would flag every big query dirty on a scale-corpus
-    * run). */
-  /** Quiet-era streaming bandwidth stamped in the baseline (`_membw.mbps`),
-    * if any. NOT sf-gated: bandwidth is a box property, not a data-scale
-    * property — a stamp from any scale is a valid reference for this box. */
-  def parseBaselineMembw(bytes: Array[Byte]): Option[Double] = {
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
-    Option(root.get("_membw")).flatMap(n => Option(n.get("mbps"))).map(_.asDouble())
-  }
-
-  /** A run whose streaming bandwidth sits below this fraction of the
-    * quiet-era stamp gets a stderr attribution hint: the memory system is
-    * contended even if steal and the spin probe read clean (the r12
-    * signature). Advisory only — never flips `contended` by itself. */
-  val MembwDeficitRatio = 0.7
-
-  /** Size-stratified cpu-ratio medians — the one-glance ambient
-    * discriminator a single run can self-report (r12's hand analysis,
-    * mechanized): median cpu_ratio of the SMALL rows (baseline cpu <
-    * [[SmallRowCpuSec]]) vs the BIG rows (≥ [[BigRowCpuSec]]).
-    * big≈small≈1 → quiet; big≫1 at small≈1 → memory-system pressure
-    * (stall cycles hit the rows with working sets, not the compute-bound
-    * small ones); big≈small≫1 → uniform slowdown (clock/load). None when
-    * a stratum has no baselined members.
-    *
-    * STALE rows (recorded `src_sha` differs from the current source
-    * fingerprint, per `current`) are EXCLUDED, mirroring
-    * [[cpuDirtyOrStale]]'s partition: a code change that legitimately
-    * re-prices a big row would otherwise skew `cpu_ratio_median_big` and
-    * mimic (or mask) the memory-pressure signature this discriminator
-    * exists to report. Rows with no fingerprint on either side stay in
-    * (legacy rows are armed, same as the dirty check). */
-  val SmallRowCpuSec = 1.0
-  val BigRowCpuSec   = 5.0
-  def sizeStratifiedRatios(
-      measured: Seq[(String, Double)],
-      baseline: Map[String, BaselineRow],
-      current: Map[String, String] = Map.empty): (Option[Double], Option[Double]) = {
-    val pairs = measured.flatMap { case (n, c) =>
-      baseline
-        .get(n)
-        .filterNot(row =>
-          (for { b <- row.srcSha; cur <- current.get(n) } yield b != cur).getOrElse(false))
-        .map(_.cpu)
-        .filter(_ > 0)
-        .map(b => (b, c / b))
-    }
-    def med(xs: Seq[Double]) = if (xs.isEmpty) None else Some(median(xs))
-    (med(pairs.collect { case (b, r) if b < SmallRowCpuSec => r }),
-      med(pairs.collect { case (b, r) if b >= BigRowCpuSec => r }))
-  }
-
-  def parseBaseline(bytes: Array[Byte], sfDir: String): Map[String, BaselineRow] = {
-    val root   = new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
-    val baseSf = Option(root.get("_sf")).flatMap(n => Option(n.get("dir"))).map(_.asText())
-    if (!baseSf.contains(sfDir)) {
-      System.err.println(
-        s"[bench] baseline sf '${baseSf.getOrElse("<absent>")}' vs run '$sfDir' — cpu contamination check off")
-      Map.empty
-    } else {
-      import scala.jdk.CollectionConverters._
-      root
-        .fieldNames()
-        .asScala
-        .filterNot(_.startsWith("_"))
-        .flatMap(k =>
-          Option(root.get(k)).flatMap(n => Option(n.get("cpu_sec"))).map { v =>
-            k -> BaselineRow(
-              v.asDouble(),
-              Option(root.get(k).get("cpu_lo")).map(_.asDouble()),
-              Option(root.get(k).get("src_sha")).map(_.asText()))
-          })
-        .toMap
-    }
-  }
-
-  /** The baseline's wall_sec column, same `_sf` gating as [[parseBaseline]]
-    * (silent on mismatch — the cpu parse already warned): feeds the
-    * per-row `wall_ratio` in bench_detail, whose pairing with `cpu_ratio`
-    * discriminates co-tenant cache/bandwidth pressure (cpu inflated, wall
-    * near-flat — stall cycles count as CPU time while parallel slack
-    * absorbs the wall) from a code regression (wall moves WITH cpu). */
-  def parseBaselineWalls(bytes: Array[Byte], sfDir: String): Map[String, Double] = {
-    val root   = new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
-    val baseSf = Option(root.get("_sf")).flatMap(n => Option(n.get("dir"))).map(_.asText())
-    if (!baseSf.contains(sfDir)) Map.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      root
-        .fieldNames()
-        .asScala
-        .filterNot(_.startsWith("_"))
-        .flatMap(k =>
-          Option(root.get(k)).flatMap(n => Option(n.get("wall_sec"))).map(v => k -> v.asDouble()))
-        .toMap
-    }
-  }
-
-  /** Mechanism (b) with freshness: a query over the cpu thresholds is
-    * DIRTY only when its baseline row is FRESH — its recorded `src_sha`
-    * matches the current source fingerprint, or no fingerprints exist to
-    * compare (legacy rows stay armed). When the code demonstrably changed
-    * since the baseline was recorded, the row reports STALE instead:
-    * refresh the baseline, don't cry contamination. This mechanizes the
-    * r9 "refresh BENCH_BASELINE.json in the same commit" convention into
-    * a check — a forgotten refresh can no longer turn the cpu mechanism
-    * into a false-positive source. */
-  def cpuDirtyOrStale(
-      measured: Seq[(String, Double)],
-      baseline: Map[String, BaselineRow],
-      current: Map[String, String]): (Seq[String], Seq[String]) = {
-    val flagged = cpuDirtyQueries(measured, baseline)
-    val (stale, dirty) = flagged.partition { n =>
-      (for {
-        row <- baseline.get(n)
-        b   <- row.srcSha
-        c   <- current.get(n)
-      } yield b != c).getOrElse(false)
-    }
-    (dirty, stale)
-  }
-
-  /** Cross-run WALL outlier check vs the clean-history medians — the
-    * channel that fires EVEN ON STALE ROWS. The r16 blind spot: the
-    * cpu-ratio machinery is (correctly) suppressed on rows whose src_sha
-    * changed, and driver-side planning time never appears in task cpu at
-    * all — so a 50–100× wall regression on q62/q111 (the nullif/With
-    * Catalyst planning blowup) read as "cost-free, median cpu 0.943" in
-    * nine consecutive runs while every one of them carried q62 at 22–33 s
-    * against a ~0.6 s history. This check compares each row's measured
-    * wall against the median of its CLEAN-history walls
-    * ([[cleanWallHistory]] — contended/steal-poisoned/bracket-collapsed
-    * runs and dirty rows already excluded) and flags on ratio ≥
-    * [[WallHistRatioThreshold]] with an absolute excess floor
-    * ([[WallHistFloorSec]], so sub-second noise rows can't trip it).
-    * Deliberately sha-blind: a legitimate code re-price ALSO fires once,
-    * which is the correct behavior — a wall that moved 3× wants a human
-    * reading either way, and the flag dies as clean history accumulates at
-    * the new price. Advisory (stderr + `_run.wall_outlier_rows` + per-row
-    * `wall_hist_ratio`), never flips `contended`: walls are load-sensitive
-    * and the stamp guards own that decision; steal-band inflation observed
-    * on this box tops out well under the 3× bar (poisoned-era small rows
-    * ran 1.5–2×). */
-  val WallHistRatioThreshold = 3.0
-  val WallHistFloorSec       = 1.0
-  val WallHistMinSamples     = 3
-
-  /** Per-row clean-history wall medians (rows with enough samples only). */
-  def wallHistMedians(hist: Map[String, Seq[Double]]): Map[String, Double] =
-    hist.collect { case (n, ws) if ws.size >= WallHistMinSamples => n -> median(ws) }
-
-  def wallHistOutliers(
-      measured: Seq[(String, Double)],
-      histMed: Map[String, Double]): Seq[(String, Double)] =
-    measured.flatMap { case (n, w) =>
-      histMed.get(n).collect {
-        case m if m > 0 && w > WallHistRatioThreshold * m && w - m > WallHistFloorSec =>
-          (n, w / m)
-      }
-    }
-
-  /** Driver-side planning above this (median across reps) earns a stderr
-    * note: planning is single-threaded work no cluster size amortizes, so
-    * a plan that optimizes in seconds is a scale bug even when execution
-    * is fast (the r16 q62/q111 class; see `plan_sec` in bench_detail). */
-  val PlanSecWarnThreshold = 1.0
-
-  /** PLAN outlier channel (r18, VERDICT r17 #7): the absolute
-    * [[PlanSecWarnThreshold]] only fires once planning crosses 1 s — a
-    * 0.1 → 0.8 s planning regression (8×) sails under it, and plan time
-    * never reaches task cpu, so nothing else would see it either. Fold
-    * plan_sec into the same clean-history median machinery as walls:
-    * ratio ≥ [[WallHistRatioThreshold]] with its own absolute floor
-    * (planning medians are tens-of-ms on most rows; 0.3 s of EXCESS is
-    * far above Catalyst-JIT jitter yet catches a sub-second creep the
-    * 1 s warn line misses). Advisory like the wall channel: stderr +
-    * `_run.plan_outlier_rows` + per-row `plan_hist_ratio`. */
-  val PlanHistFloorSec = 0.3
-
-  def planHistOutliers(
-      measured: Seq[(String, Double)],
-      histMed: Map[String, Double]): Seq[(String, Double)] =
-    measured.flatMap { case (n, p) =>
-      histMed.get(n).collect {
-        case m if m > 0 && p > WallHistRatioThreshold * m && p - m > PlanHistFloorSec =>
-          (n, p / m)
-      }
-    }
-
-  /** EVERY baselined row whose recorded src_sha mismatches the current
-    * source fingerprint — independent of whether the row is over the cpu
-    * flag bar. [[cpuDirtyOrStale]]'s stale list only surfaces a mismatched
-    * row once it FLAGS, which let q37/q39 drift silently for two rounds
-    * (their r11 re-price stayed invisible until a regression pushed them
-    * over the bar, r13). This full set is emitted per run as
-    * `_run.stale_sha_rows` so a forgotten refresh is visible on every run,
-    * not just on the run where it finally bites. */
-  def staleShaRows(baseline: Map[String, BaselineRow], current: Map[String, String]): Seq[String] =
-    baseline.collect {
-      case (n, row) if row.srcSha.exists(b => current.get(n).exists(_ != b)) => n
-    }.toSeq.sorted
-
-  /** Merge a (quiet, full-context) run's medians into the baseline JSON:
-    * measured rows replaced with {wall, cpu, src_sha}, unmeasured rows
-    * PRESERVED (so a BENCH_ONLY subset refresh touches exactly the rows it
-    * measured — though see the skill note: stamp from FULL runs), `_sf`
-    * set to the run dir, and an existing baseline at a DIFFERENT sf
-    * dropped wholesale (cpu baselines never mix scales). A row carrying a
-    * `cpu_lo` (warm-up-bimodal) holds its QUIET ENVELOPE, not a point:
-    * re-stamps converge it outward — hi := max(old hi, measured),
-    * lo := min(old lo, measured) — because a mechanical hi-replacement
-    * would let one low-mode stamp run clobber the hi stamp and turn the
-    * tighter 1.5x threshold into a false-positive source on the next
-    * hi-mode quiet run. The envelope can only loosen mechanically (never
-    * false-flags); tightening after a real cost reduction is a hand edit,
-    * exactly like the original hi-mode stamps. Pure: bytes in, bytes out
-    * (spec surface). */
-  /** Rows whose quiet wall sits under this are stamped from the MEDIAN of
-    * the clean-run history instead of the single stamp run: a small wall
-    * is noise-dominated (scheduler/GC granularity), so the record-
-    * quiet-window stamp convention that makes big rows a tight regression
-    * tripwire makes tiny rows false-trip the 2× rule (r13: q87 "2.04×" on
-    * a 0.15 s stamp, 1.66× on a clean run, not dirty-flagged). Big rows
-    * keep the tight single-run stamp.
-    *
-    * 0.3 → 0.6 in r15: q110 (cpu-heavy ~0.5–0.7 s wall, rep spreads ~2×
-    * inside single runs) false-tripped the 2× rule at 2.41× against a
-    * 0.557 stamp that history shows was the MINIMUM of 18 clean runs
-    * (median 0.68) — the same noise profile that false-tripped q87, one
-    * size class up. The wall channel is the judge's regression view; the
-    * tight per-row tripwire is the CPU channel, which keeps single-run
-    * stamps at every size.
-    *
-    * Rows DECLARED warm-up-bimodal (carrying `cpu_lo`) stamp from the
-    * history median at ANY size: their per-rep walls are a decay
-    * continuum (q119 rep walls 4.4→1.2 inside one run), so a single run's
-    * median-of-3 is a coin flip on the decay curve — r13 stamped q119 at
-    * 1.364 (a low-mode run), r14 officially read 2.619 = "+92%" on
-    * identical code. The cross-run median is the honest center of the
-    * quiet envelope; mode flips then read ≤ ~1.4×, not 2×. */
-  val SmallRowWallSec = 0.6
-
-  def mergeBaseline(
-      prev: Option[Array[Byte]],
-      rows: Seq[(String, Double, Double)],
-      currentSha: Map[String, String],
-      sfDir: String,
-      membwMbps: Option[Double] = None,
-      histWalls: Map[String, Seq[Double]] = Map.empty): Array[Byte] = {
-    val mapper   = new com.fasterxml.jackson.databind.ObjectMapper()
-    val prevRoot = prev.map(mapper.readTree).getOrElse(mapper.createObjectNode())
-    val prevSf   = Option(prevRoot.get("_sf")).flatMap(n => Option(n.get("dir"))).map(_.asText())
-    val out      = mapper.createObjectNode()
-    out.putObject("_sf").put("dir", sfDir)
-    // quiet-era streaming bandwidth (a stamp only happens on quiet runs):
-    // the reference a hot run's membw_mbps is read against. Measured value
-    // replaces; absent measurement preserves a previous stamp.
-    membwMbps
-      .orElse(Option(prevRoot.get("_membw")).flatMap(n => Option(n.get("mbps"))).map(_.asDouble()))
-      .foreach { v =>
-        out.putObject("_membw")
-          .put("mbps", BigDecimal(v).setScale(0, BigDecimal.RoundingMode.HALF_UP).toDouble)
-      }
-    if (prevSf.contains(sfDir)) {
-      import scala.jdk.CollectionConverters._
-      prevRoot.fieldNames().asScala.filterNot(_.startsWith("_")).foreach { k =>
-        out.set[com.fasterxml.jackson.databind.JsonNode](k, prevRoot.get(k)); ()
-      }
-    } else if (prevSf.nonEmpty)
-      System.err.println(s"[bench] baseline was for ${prevSf.get} — starting fresh at $sfDir")
-    rows.foreach { case (name, wall, cpuSec) =>
-      def r3(v: Double): Double = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toDouble
-      val prevRow = if (prevSf.contains(sfDir)) Option(prevRoot.get(name)) else None
-      val prevLo  = prevRow.flatMap(n => Option(n.get("cpu_lo"))).map(_.asDouble())
-      val prevHi  = prevRow.flatMap(n => Option(n.get("cpu_sec"))).map(_.asDouble())
-      val prevSha = prevRow.flatMap(n => Option(n.get("src_sha"))).map(_.asText())
-      val row = out.putObject(name)
-      // wall-median policy (see [[SmallRowWallSec]]): small rows and
-      // declared warm-up-bimodal rows (cpu_lo present) stamp the median of
-      // clean-run history + this run when >= 3 samples exist — but ONLY
-      // while the row's code is unchanged since its last stamp (history
-      // walls price the OLD code; a changed row takes a fresh point stamp
-      // and earns back the median as clean history accumulates)
-      val hist = histWalls.getOrElse(name, Nil)
-      val codeUnchanged = prevSha.isDefined && prevSha == currentSha.get(name)
-      val wallStamp =
-        if ((wall < SmallRowWallSec || prevLo.isDefined) && hist.size >= 2 && codeUnchanged)
-          median(hist :+ wall)
-        else wall
-      row.put("wall_sec", r3(wallStamp))
-      // dual-mode rows: envelope update (hi=max, lo=min); point rows: replace
-      row.put("cpu_sec", r3(if (prevLo.isDefined) math.max(prevHi.getOrElse(0.0), cpuSec) else cpuSec))
-      prevLo.foreach(lo => row.put("cpu_lo", r3(math.min(lo, cpuSec))))
-      // A dual-mode row whose CODE changed and whose measured cpu sits far
-      // below the retained hi is a row whose envelope may now be stale the
-      // OTHER way (the 1.5×hi threshold still prices the old cost, so a
-      // regression back to it would be invisible). Stamping the fresh sha
-      // here would mark the row "fresh" and bury that: keep the OLD sha so
-      // the row keeps reporting stale until the envelope is hand-tightened
-      // (exactly like the original hi-mode stamps), and say why on stderr.
-      val holdStaleSha =
-        prevLo.isDefined && prevHi.exists(hi => cpuSec < 0.5 * hi) &&
-          prevSha.isDefined && currentSha.get(name).exists(cur => !prevSha.contains(cur))
-      if (holdStaleSha) {
-        System.err.println(
-          s"[bench] $name: code changed but measured cpu ${r3(cpuSec)} is far below the " +
-            s"recorded hi ${prevHi.map(r3).getOrElse(0.0)} — keeping the old src_sha (row stays " +
-            "stale); hand-tighten the cpu_sec/cpu_lo envelope if the cost reduction is real")
-        prevSha.foreach(row.put("src_sha", _))
-      } else currentSha.get(name).foreach(row.put("src_sha", _))
-    }
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(out)
-  }
-
-  /** Per-query wall history from a directory of archived bench_detail
-    * JSONs, CLEAN samples only: runs flagged contended are skipped
-    * wholesale, and per-row `dirty:true` entries are skipped individually —
-    * a contaminated wall in the median would defeat the small-row policy
-    * it feeds ([[SmallRowWallSec]]). Unreadable files are skipped loudly
-    * (history is an optimization, never a stamp blocker).
-    *
-    * Scale-gated: files recorded at a DIFFERENT `_run.sf` than the
-    * stamping run are dropped — walls scale with data, so a history file
-    * archived from an sf0.01 dev run would silently deflate the sf0.1
-    * medians. Compared on the NORMALIZED scale token ([[normalizeSf]]),
-    * not the raw directory string: a trailing slash, symlinked prefix, or
-    * regenerated testdata at a new mount point must not silently drop ALL
-    * history (which would quietly revert the median policy to point
-    * stamps). Files with NO recorded sf (pre-r15 archives) are accepted
-    * for back-compat — every archived detail to date was recorded at the
-    * stamp scale, and future files always carry the field — and their
-    * count is LOGGED so a mismatch is visible rather than silent. */
-  def cleanWallHistory(dir: java.nio.file.Path, sfDir: String): Map[String, Seq[Double]] =
-    cleanFieldHistory(dir, sfDir, "wall_sec")
-
-  /** Per-query PLANNING-time history, same cleanliness/scale gates as the
-    * wall channel. plan_sec only exists in r17+ archives; older files
-    * simply contribute no samples (the median machinery already requires
-    * [[WallHistMinSamples]], so the channel arms itself as history
-    * accumulates — exactly how the wall channel bootstrapped). */
-  def cleanPlanHistory(dir: java.nio.file.Path, sfDir: String): Map[String, Seq[Double]] =
-    cleanFieldHistory(dir, sfDir, "plan_sec")
-
-  private def cleanFieldHistory(
-      dir: java.nio.file.Path,
-      sfDir: String,
-      field: String): Map[String, Seq[Double]] = {
-    import scala.jdk.CollectionConverters._
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val stream = java.nio.file.Files.list(dir)
-    val files =
-      try stream.iterator().asScala
-        .filter(p => p.getFileName.toString.matches("bench_detail.*\\.json"))
-        .toSeq.sortBy(_.getFileName.toString)
-      finally stream.close()
-    var sfLess = 0
-    val hist = files.foldLeft(Map.empty[String, Seq[Double]]) { (acc, f) =>
-      try {
-        val root = mapper.readTree(java.nio.file.Files.readAllBytes(f))
-        val run  = Option(root.get("_run"))
-        val contended = run.flatMap(r => Option(r.get("contended"))).exists(_.asBoolean())
-        // same cleanliness bar as the stamp guard: a steal-poisoned or
-        // bracket-collapsed run carries burst-inflated walls that medians
-        // should never see (contended:false on exactly those runs is HOW
-        // the r14 poisoned attempt slipped through)
-        val stealPoisoned =
-          run.flatMap(r => Option(r.get("steal_pct"))).exists(_.asDouble() > StampStealMaxPct)
-        val bracketCollapsed = (for {
-          r <- run
-          s <- Option(r.get("membw_mbps_start")).map(_.asDouble()) if s > 0
-          e <- Option(r.get("membw_mbps_end")).map(_.asDouble())
-        } yield e / s < StampMembwEndFloor).getOrElse(false)
-        val recordedSf = run.flatMap(r => Option(r.get("sf"))).map(_.asText())
-        val wrongScale = recordedSf.exists(s => normalizeSf(s) != normalizeSf(sfDir))
-        if (contended || stealPoisoned || bracketCollapsed || wrongScale) acc
-        else {
-          // count sf-less files only when actually ACCEPTED (ADVICE r16:
-          // counting before the cleanliness checks overstated the warning)
-          if (recordedSf.isEmpty) sfLess += 1
-          root.fieldNames().asScala.filterNot(_.startsWith("_")).foldLeft(acc) { (a, name) =>
-            val node  = root.get(name)
-            val dirty = Option(node.get("dirty")).exists(_.asBoolean())
-            Option(node.get(field)).filterNot(_ => dirty).map(_.asDouble()) match {
-              case Some(w) => a.updated(name, a.getOrElse(name, Nil) :+ w)
-              case None    => a
-            }
-          }
-        }
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] skipping unreadable history file $f: $e"); acc
-      }
-    }
-    if (sfLess > 0)
-      System.err.println(
-        s"[bench] $field history: $sfLess file(s) with no _run.sf accepted for back-compat " +
-          s"(pre-r15 archives) — verify they were recorded at the stamp scale ($sfDir)")
-    hist
-  }
-
-  /** The scale token of a bench data dir for history gating: the last
-    * path COMPONENT fully matching `sf<digits>[.<digits>]` if one exists
-    * (so `/root/testdata/sf0.1`, `/root/testdata/sf0.1/`, and a symlinked
-    * or re-mounted prefix all compare equal), else the trailing-slash-
-    * trimmed raw string (unknown layouts still gate, just on the exact
-    * dir). Whole-component match, not substring (ADVICE r16): the old
-    * substring scan normalized `/d/sf0.1.bak` to `sf0.1.` and admitted
-    * history from an unrelated `/data/mysf0.25x/run` layout as `sf0.25`. */
-  private[graft] def normalizeSf(dir: String): String = {
-    val trimmed = dir.replaceAll("/+$", "")
-    trimmed
-      .split('/')
-      .reverseIterator
-      .find(seg => SfComponent.pattern.matcher(seg).matches())
-      .getOrElse(trimmed)
-  }
-  private val SfComponent = "sf[0-9]+(\\.[0-9]+)?".r
-
-  /** (steal, total) jiffies from the aggregate `cpu ` line of a
-    * /proc/stat snapshot — the co-tenant evidence channel. Steal is time
-    * the hypervisor ran OTHER guests while this VM's vCPUs were runnable:
-    * the one contamination source no in-JVM probe or spread check can
-    * ATTRIBUTE (they see the symptom — elevated walls/cpu — not the
-    * cause). Emitted as `steal_pct` (100·Δsteal/Δtotal across the run) in
-    * `_run`, so a contended verdict carries its host-side cause: the r11
-    * hot-box runs showed broad ~1.2× cpu inflation that took a hand-read
-    * of /proc/stat to pin on co-tenancy (1.4% cumulative steal); this
-    * mechanizes that read. Pure parse (spec surface); absent field (pre-
-    * 2.6.11 kernels) counts steal 0, absent `cpu ` line → None. */
-  def parseCpuLine(statContent: String): Option[(Long, Long)] =
-    statContent.linesIterator.find(_.startsWith("cpu ")).flatMap { l =>
-      val f = l.trim.split("\\s+").drop(1)
-      if (f.isEmpty) None
-      else
-        try {
-          val vals  = f.map(_.toLong)
-          val steal = if (vals.length > 7) vals(7) else 0L
-          // total = user..steal (first 8 fields) ONLY: guest/guest_nice
-          // are already accounted inside user/nice, so summing them too
-          // double-counts guest time and understates steal_pct on hosts
-          // running nested guests
-          Some((steal, vals.take(8).sum))
-        } catch { case _: NumberFormatException => None }
-    }
-
-  /** Quiet-window gate for baseline stamping (r12→r13: nine manual stamp
-    * attempts all correctly refused by the contended guard — the neighbor
-    * is bursty on hour timescales, so polling by hand loses the window).
-    * With SPARK_GRAFT_WAIT_QUIET_SECS set, the bench samples the two
-    * ambient channels (median-of-3 streaming bandwidth + host steal over a
-    * short window) every SPARK_GRAFT_QUIET_POLL_SECS and starts the
-    * measured run only once BOTH read quiet, or the deadline passes
-    * (proceed-on-deadline: the refuse-contended stamp guard still
-    * protects the baseline; the watcher only improves the odds). The
-    * bandwidth reference is SPARK_GRAFT_QUIET_MEMBW_MBPS, else the
-    * committed `_membw.mbps` stamp; with neither, the gate is steal-only
-    * (first-ever stamp on a new box has no envelope to compare against). */
-  val QuietMembwFrac = 0.85
-  val QuietStealPct  = 0.25
-
-  /** Consecutive quiet polls required before the gate fires. One instant
-    * is not a window: the r13 flicker phase (bandwidth flipping 62↔100
-    * GB/s on SECOND timescales — MembwRamp profile, SCALING.md) let a
-    * single high-streak read fire four runs in a row that were all
-    * contaminated within a minute. Requiring the channels to hold quiet
-    * across several spaced polls trades a few minutes of waiting for not
-    * burning a 10-minute measured run on a coin flip. */
-  val QuietConsecutivePolls = 3
-
-  /** One gate poll verdict from the two ambient channels. Pure — the
-    * flicker/streak logic in [[waitForQuietWindow]] is spec-able against
-    * scripted sample series. `mb` None = invalid probe sample (not
-    * provably quiet); `steal` None = /proc/stat unreadable (steal channel
-    * disarmed, membw-only). */
-  def quietPoll(mb: Option[Double], steal: Option[Double], quietRef: Option[Double]): Boolean = {
-    val membwOk = (quietRef, mb) match {
-      case (Some(q), Some(m)) => m >= QuietMembwFrac * q
-      case (None, Some(_))    => true // no envelope yet: steal-only gate
-      case _                  => false // invalid samples: not provably quiet
-    }
-    membwOk && steal.forall(_ < QuietStealPct)
-  }
-
-  def waitForQuietWindow(
-      membw: MemBandwidthProbe,
-      quietRef: Option[Double],
-      maxWaitSecs: Long,
-      pollSecs: Long = 60,
-      consecutive: Int = QuietConsecutivePolls,
-      stealWindowMs: Long = 2000): Boolean =
-    waitForQuietWindowOver(
-      () => {
-        val samples = (1 to 3).flatMap(_ => membw.measure())
-        if (samples.nonEmpty) Some(median(samples)) else None
-      },
-      readProcStat _,
-      quietRef, maxWaitSecs, pollSecs, consecutive, stealWindowMs)
-
-  /** Sampler-injected body of [[waitForQuietWindow]] (spec seam: scripted
-    * bandwidth/steal series exercise the streak and deadline logic). */
-  private[graft] def waitForQuietWindowOver(
-      sampleMembw: () => Option[Double],
-      procStat: () => Option[(Long, Long)],
-      quietRef: Option[Double],
-      maxWaitSecs: Long,
-      pollSecs: Long,
-      consecutive: Int,
-      stealWindowMs: Long): Boolean = {
-    val deadline = System.nanoTime() + maxWaitSecs * 1_000_000_000L
-    var attempt  = 0
-    var streak   = 0
-    while (true) {
-      attempt += 1
-      val s0 = procStat()
-      val mb = sampleMembw()
-      Thread.sleep(stealWindowMs) // widen the steal window past the probe's own cpu
-      val steal = for {
-        (a, t0) <- s0
-        (b, t1) <- procStat()
-        if t1 > t0
-      } yield 100.0 * (b - a) / (t1 - t0)
-      val quiet = quietPoll(mb, steal, quietRef)
-      streak = if (quiet) streak + 1 else 0
-      val mbTxt  = mb.map(v => f"$v%.0f MB/s").getOrElse("invalid")
-      val refTxt = quietRef.map(v => f"$v%.0f").getOrElse("none")
-      val stTxt  = steal.map(v => f"$v%.3f%%").getOrElse("n/a")
-      System.err.println(
-        s"[bench] quiet-watch #$attempt: membw=$mbTxt (ref $refTxt), steal=$stTxt -> " +
-          (if (quiet) s"quiet ($streak/$consecutive)" else "busy"))
-      if (streak >= consecutive) return true
-      if (System.nanoTime() >= deadline) {
-        System.err.println(
-          s"[bench] quiet-watch: no quiet window within ${maxWaitSecs}s — proceeding on a " +
-            "busy box (the contended-stamp guard still applies)")
-        return false
-      }
-      // mid-streak confirmation polls are spaced tight (the streak is
-      // probing whether THIS window holds, not searching for a new one)
-      Thread.sleep(if (streak > 0) math.min(pollSecs, 15L) * 1000 else pollSecs * 1000)
-    }
-    false // unreachable
-  }
-
-  private def readProcStat(): Option[(Long, Long)] =
-    try
-      parseCpuLine(
-        new String(
-          java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("/proc/stat")),
-          java.nio.charset.StandardCharsets.US_ASCII))
-    catch { case _: Throwable => None }
-
   /** The run is contended when either run-level check fires OR the
-    * per-query dirty set is material ([[DirtyCountThreshold]]): a single
-    * GC blip elevating one probe flags at most its two neighbors and must
-    * not condemn an otherwise-quiet run, while r8's partial burst flagged
-    * 14. */
+    * per-query dirty set is material: a single GC blip elevating one probe
+    * flags at most its two neighbors and must not condemn an
+    * otherwise-quiet run, while r8's partial burst flagged 14. */
   val DirtyCountThreshold = 3
 
   def contentionFlags(probeWalls: Seq[Double], laterRepSpreads: Seq[Double]): (Boolean, Double, Double) = {
@@ -990,6 +146,120 @@ object Bench {
       if (laterRepSpreads.isEmpty) 0.0
       else laterRepSpreads.count(_ > SpreadThreshold).toDouble / laterRepSpreads.size
     (probeRatio > ProbeRatioThreshold || spreadFrac > SpreadFracThreshold, probeRatio, spreadFrac)
+  }
+
+  /** Rows that burn one unrecorded warm-up rep before their measured reps.
+    * Their quiet cost is a JIT/codegen warm-up decay CONTINUUM (q110 8-rep
+    * solo: walls 3.01→0.63, cpus 19.8→7.0 within one JVM), so a 3-rep
+    * median that includes the first rep lands anywhere on the decay
+    * shoulder. The warm-up rep is recorded in bench_detail
+    * (`warmup_wall`/`warmup_cpu`) but enters no median or flag. These are
+    * the rows BENCH_BASELINE.json marks with a `cpu_lo`. */
+  val WarmupRows: Set[String] = Set(
+    "q100_embedding_drift", "q103_bm25_retrieval", "q110_hashed_classifier",
+    "q119_semdedup", "q125_rollup_maintenance", "q23_iso_validate", "q60_knn_brute")
+
+  /** One measured row: medians, the per-rep series, and the burned
+    * warm-up rep's (wall, cpu) when the row has one. */
+  private final case class Measured(
+      name: String,
+      wall: Double,
+      cpu: Double,
+      plan: Double,
+      repWalls: Seq[Double],
+      repCpus: Seq[Double],
+      repPlans: Seq[Double],
+      warmup: Option[(Double, Double)])
+
+  /** Cap on the stdout line: the bench runner keeps only the last 2000
+    * chars of the run's output and parses the JSON line out of that tail
+    * (an overgrown line read `parsed: null` in BENCH_r01–r03). */
+  val LineMaxChars = 1900
+
+  private def s3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+  private def s2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
+  private def shortKey(name: String): String = name.takeWhile(_ != '_')
+
+  /** JSON string literal (sf is a filesystem path interpolated into JSON). */
+  private def jstr(s: String): String =
+    s.flatMap {
+      case '"'           => "\\\""
+      case '\\'          => "\\\\"
+      case c if c < ' '  => f"\\u${c.toInt}%04x"
+      case c             => c.toString
+    }.mkString("\"", "", "\"")
+
+  /** The stdout line the bench runner parses. `rows` are (name, median wall, median cpu)
+    * for every measured row in run order; only names in `registry` enter
+    * `queries`, `value` and `cpu_sec`, so the bench-only split rows never
+    * shift the cross-round totals. Per-query precision degrades BEFORE the
+    * line outgrows [[LineMaxChars]]: 3 decimals while it fits, then 2, then
+    * only the slowest rows plus an `omitted` count (never fewer than 10);
+    * `value` and `cpu_sec` never degrade. Throws when two rows share a
+    * short key (they would silently collide in `queries`) or when even the
+    * slowest-10 floor does not fit. */
+  def stdoutLine(
+      rows: Seq[(String, Double, Double)],
+      registry: String => Boolean,
+      reps: Int,
+      contended: Boolean,
+      dirty: Int,
+      sfDir: String): String = {
+    val shortKeys = rows.map(r => shortKey(r._1))
+    require(
+      shortKeys.distinct.size == shortKeys.size,
+      s"duplicate short bench keys would silently collide in the JSON line: " +
+        shortKeys.groupBy(identity).collect { case (k, vs) if vs.size > 1 => k }.mkString(", ")
+    )
+    val reg    = rows.filter(r => registry(r._1))
+    val total  = reg.map(_._2).sum
+    val cpuTot = reg.map(_._3).sum
+    val perQ   = reg.map(r => shortKey(r._1) -> r._2)
+    def jsonWith(fmt: Double => String, kv: Seq[(String, Double)]): String =
+      kv.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
+    def lineWith(qs: String, omitted: Int): String = {
+      val om = if (omitted > 0) s""","omitted":$omitted""" else ""
+      s"""{"metric":"total","value":${s3(total)},"unit":"sec","cpu_sec":${s3(cpuTot)},"reps":$reps,"contended":$contended,"dirty":$dirty,"queries":$qs$om,"sf":${jstr(sfDir)}}"""
+    }
+    // degrade steps derived from the query count so the slowest-10 floor is
+    // ALWAYS among the candidates no matter how large the registry grows
+    val floorStep = math.max(1, math.ceil((perQ.size - 10) / 20.0).toInt)
+    val candidates = Iterator(
+      lineWith(jsonWith(s3, perQ), 0),
+      lineWith(jsonWith(s2, perQ), 0)
+    ) ++ Iterator.range(1, floorStep + 1).map { step =>
+      val keep = math.max(10, perQ.size - step * 20)
+      val slowest = perQ.sortBy(-_._2).take(keep)
+      lineWith(jsonWith(s2, slowest), perQ.size - keep)
+    }
+    candidates.find(_.length <= LineMaxChars).getOrElse {
+      throw new IllegalStateException(
+        s"bench stdout line exceeds $LineMaxChars chars even at the slowest-10 floor — " +
+          "the runner's 2000-char tail window would truncate it"
+      )
+    }
+  }
+
+  /** The sidecar: a `_run` row (run-level flags and the probe series,
+    * so a reader sees WHEN load arrived) and one row per measured name.
+    * Consumers skip keys starting with `_`. */
+  private def detailJson(
+      sfDir: String,
+      contended: Boolean,
+      probeRatio: Double,
+      spreadFrac: Double,
+      dirty: Seq[String],
+      probeWalls: Seq[Double],
+      results: Seq[Measured]): String = {
+    def arr(xs: Seq[Double]) = xs.map(s3).mkString("[", ",", "]")
+    val runRow =
+      s""""_run":{"sf":${jstr(sfDir)},"contended":$contended,"probe_ratio":${s3(probeRatio)},"spread_frac":${s3(spreadFrac)},"dirty_queries":${dirty.map(jstr).mkString("[", ",", "]")},"probe_walls":${arr(probeWalls)}}"""
+    val dirtySet = dirty.toSet
+    (runRow +: results.map { r =>
+      val d    = if (dirtySet(r.name)) s""","dirty":true""" else ""
+      val warm = r.warmup.map { case (w, c) => s""","warmup_wall":${s3(w)},"warmup_cpu":${s3(c)}""" }.getOrElse("")
+      s""""${r.name}":{"wall_sec":${s3(r.wall)},"cpu_sec":${s3(r.cpu)},"plan_sec":${s3(r.plan)}$d$warm,"rep_walls":${arr(r.repWalls)},"rep_cpus":${arr(r.repCpus)},"rep_plans":${arr(r.repPlans)}}"""
+    }).mkString("{", ",", "}")
   }
 
   /** Accumulates executor CPU ns across all tasks; listener events arrive
@@ -1019,97 +289,25 @@ object Bench {
     // the latter appear in bench_detail.json only — the stdout line stays
     // registry-sized
     val all = SparkEntry.queries ++ BenchExtras.rows
-    // SPARK_GRAFT_BENCH_SKIP: comma-separated name prefixes to EXCLUDE —
-    // the A/B lever for isolating a row's effect on the rest of the run
-    // (e.g. does a persisted split-row store perturb later queries?).
-    // Dev-only: full gate runs leave it unset.
-    val skip = sys.env.get("SPARK_GRAFT_BENCH_SKIP").map(_.split(',').map(_.trim).filter(_.nonEmpty))
-    val afterSkip = skip match {
-      case Some(ps) => all.filter { case (n, _) => !ps.exists(n.startsWith) }
-      case None     => all
-    }
     val selected = only match {
-      case Some(ps) => afterSkip.filter { case (n, _) => ps.exists(n.startsWith) }
-      case None     => afterSkip
+      case Some(ps) => all.filter { case (n, _) => ps.exists(n.startsWith) }
+      case None     => all
     }
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(3)
     require(reps >= 1, s"SPARK_GRAFT_BENCH_REPS must be >= 1, got $reps")
-    // Committed quiet-run per-query baseline (name -> {wall_sec, cpu_sec,
-    // src_sha}); absent file → cpu check off. Refresh mechanically with
-    // SPARK_GRAFT_WRITE_BASELINE=1 on a quiet run.
-    val baselinePath = sys.env.getOrElse("SPARK_GRAFT_BENCH_BASELINE", "BENCH_BASELINE.json")
-    val (baseline: Map[String, BaselineRow], baselineWalls: Map[String, Double], quietMembw: Option[Double]) =
-      try {
-        val p = java.nio.file.Paths.get(baselinePath)
-        if (!java.nio.file.Files.exists(p))
-          (Map.empty[String, BaselineRow], Map.empty[String, Double], Option.empty[Double])
-        else {
-          val bytes = java.nio.file.Files.readAllBytes(p)
-          (parseBaseline(bytes, sfDir), parseBaselineWalls(bytes, sfDir), parseBaselineMembw(bytes))
-        }
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] baseline load failed ($baselinePath): $e")
-          (Map.empty[String, BaselineRow], Map.empty[String, Double], Option.empty[Double])
-      }
-    // Current source fingerprints per row (declared ownership): rows whose
-    // code changed since their baseline was stamped report STALE, not dirty
-    val srcRoot = java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_SRC_ROOT", "."))
-    val owners  = SparkEntry.queryOwners ++ BenchExtras.owners
-    val currentSha: Map[String, String] = currentShaFor(owners, srcRoot)
-    // Clean-run wall history, loaded up front (not just at stamp time): it
-    // feeds (a) the sha-blind wall-outlier channel on EVERY run — the r16
-    // planning-blowup class is invisible to task cpu and suppressed by
-    // staleness, so walls vs clean history are the only channel that sees
-    // it — and (b) the small-row median policy when a stamp lands.
-    val histDir = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_HISTORY_DIR", "bench_history"))
-    val histWalls =
-      if (java.nio.file.Files.isDirectory(histDir)) cleanWallHistory(histDir, sfDir)
-      else Map.empty[String, Seq[Double]]
-    val histMed = wallHistMedians(histWalls)
-    // planning-time history rides the same channel (r18): plan regressions
-    // are invisible to task cpu AND to walls when execution dominates
-    val histPlans =
-      if (java.nio.file.Files.isDirectory(histDir)) cleanPlanHistory(histDir, sfDir)
-      else Map.empty[String, Seq[Double]]
-    val planMed = wallHistMedians(histPlans)
     val probe = new ContentionProbe
     (1 to 3).foreach(_ => probe.spin()) // JIT-warm the probe loop itself
-    val membw = new MemBandwidthProbe()
-    // allocation/page-in warm-up is auto-discarded inside the probe since
-    // r14; this first call additionally absorbs JIT of the measure loop
-    membw.measure()
-    // optional quiet-window gate: block the run start until the ambient
-    // channels read quiet (or the deadline passes) — see waitForQuietWindow
-    sys.env.get("SPARK_GRAFT_WAIT_QUIET_SECS").map(_.toLong).filter(_ > 0).foreach { maxWait =>
-      val ref = sys.env.get("SPARK_GRAFT_QUIET_MEMBW_MBPS").map(_.toDouble).orElse(quietMembw)
-      val poll = sys.env.get("SPARK_GRAFT_QUIET_POLL_SECS").map(_.toLong).getOrElse(60L)
-      val consec =
-        // clamp to >= 1: a zero/negative override would satisfy the gate on
-        // the FIRST poll even when it reads busy (streak 0 >= 0), silently
-        // defeating the quiet wait
-        math.max(1, sys.env.get("SPARK_GRAFT_QUIET_CONSEC").map(_.toInt).getOrElse(QuietConsecutivePolls))
-      waitForQuietWindow(membw, ref, maxWait, poll, consec)
+    // (result, wall s, executor cpu s) of one execution; the bus drains on
+    // both sides attribute straggler task events to the right execution
+    def measured[A](body: => A): (A, Double, Double) = {
+      GraftSparkBridge.drainListenerBus(sc)
+      val cpu0 = cpu.cpuNs.sum()
+      val t0   = System.nanoTime()
+      val a    = body
+      val wall = (System.nanoTime() - t0) / 1e9
+      GraftSparkBridge.drainListenerBus(sc)
+      (a, wall, (cpu.cpuNs.sum() - cpu0) / 1e9)
     }
-    // bandwidth snapshot brackets the run — MEDIAN of 3 samples, like the
-    // gate's poll: the box's ambient regime can flip bimodally 62↔100 GB/s
-    // on second timescales (SCALING.md r13), so a single 100 ms sample is a
-    // coin flip between modes (the r13 stamp run's gate read 96–107 and its
-    // single-sample start bracket 61, seconds apart on the same buffers)
-    def bracketSample(): Option[Double] = {
-      val xs = (1 to 3).flatMap(_ => membw.measure())
-      if (xs.nonEmpty) Some(median(xs)) else None
-    }
-    val membwStart = bracketSample()
-    membw.release() // the queries must not run under 0.5 GiB of probe buffers
-    for {
-      q <- quietMembw if q > 0
-      s <- membwStart if s < MembwDeficitRatio * q
-    } System.err.println(
-      f"[bench] streaming bandwidth $s%.0f MB/s vs quiet-era stamp $q%.0f — " +
-        "memory-system co-tenant likely; treat cpu inflation as ambient")
-    val statStart  = readProcStat() // host-steal snapshot brackets the run
     val probeWalls = scala.collection.mutable.ArrayBuffer.empty[Double]
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       // Release the PREVIOUS query's dead localCheckpoint/persist blocks:
@@ -1120,359 +318,77 @@ object Bench {
       // window: queries still pay their OWN GC, just not their neighbors'.
       System.gc()
       probeWalls += probe.spin() // sampled while the session is idle
-      // Declared warm-up-bimodal rows (cpu_lo in the quiet baseline) burn
-      // their first execution UNRECORDED — see [[warmupRepsFor]]. Runs
-      // before the steal window opens: the window adjudicates the MEASURED
-      // span only.
-      val warmup = (1 to warmupRepsFor(name, baseline)).map { _ =>
-        org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
-        val cpu0 = cpu.cpuNs.sum()
-        val t0   = System.nanoTime()
-        try { fn(spark, sfDir).queryExecution.toRdd.count() }
-        catch { case e: Throwable => System.err.println(s"[bench] $name warmup failed: $e"); -1L }
-        val wall = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
-        (wall, (cpu.cpuNs.sum() - cpu0) / 1e9)
-      }.headOption
-      val qStat0 = readProcStat() // per-query steal window opens
+      val warmup = if (!WarmupRows(name)) None else {
+        val (_, w, c) = measured {
+          try { fn(spark, sfDir).queryExecution.toRdd.count() }
+          catch { case e: Throwable => System.err.println(s"[bench] $name warmup failed: $e"); -1L }
+        }
+        Some((w, c))
+      }
       val runs = (1 to reps).map { _ =>
-        org.apache.spark.GraftSparkBridge.drainListenerBus(sc) // attribute straggler events to the right query
-        val cpu0 = cpu.cpuNs.sum()
-        val t0   = System.nanoTime()
         // Materialize the query's OWN physical plan (all rows, all columns)
         // rather than `.count()`: wrapping the plan in a count lets the
         // optimizer prune everything the row count doesn't need — join
-        // elimination dropped q134's per-node triangle join entirely (the
-        // right side is key-unique and count references no columns), so
-        // rounds 5–6 benched the triangle family at the cost of its degree
-        // aggregate. toRdd executes the same plan Verify writes to parquet,
-        // minus the file IO; the RDD count moves no rows to the driver.
+        // elimination dropped q134's per-node triangle join entirely. toRdd
+        // executes the same plan Verify writes to parquet, minus the file
+        // IO; the RDD count moves no rows to the driver.
         //
-        // PLANNING/EXECUTION SPLIT (r17, verdict #3): the split point is
-        // `executedPlan`, which forces the whole driver-side chain
-        // (analysis → optimization → physical planning) WITHOUT executing
-        // anything — under AQE it returns the unexecuted
-        // AdaptiveSparkPlanExec root. Single-threaded work that task
-        // metrics never see: the r16 nullif/With blowup spent 25 s/action
-        // here while cpu_sec stayed flat, and nine runs' adjudication read
-        // it as co-tenant noise. plan_sec records that span per rep so a
-        // planning regression is first-class data, not an inference.
-        //
-        // MEASUREMENT-BUG NOTE (this split's first shipped form): the
-        // initial r17 split point was `toRdd`, whose `executedPlan
-        // .execute()` under AQE materializes EVERY intermediate query
-        // stage eagerly — the first full run read plan≈wall on all 149
-        // rows (sum plan 123 s of wall 129 s) because "planning" silently
-        // included all-but-the-last-stage execution. `executedPlan` alone
-        // is the honest boundary; bench_detail_r17a_try1.json preserves
-        // the old-split numbers. For rows whose builder `fn` runs eager
-        // intra-query actions (index builds, checkpointed loops), the
-        // span still includes those by construction — documented, since
-        // the builder call is indivisible from the row's pipeline.
-        val planned =
-          try {
-            val qe = fn(spark, sfDir).queryExecution
-            qe.executedPlan // forces the full plan chain, executes nothing
-            Some(qe)
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] $name failed (planning): $e"); None
-          }
-        val tPlan = System.nanoTime()
-        try planned.foreach { qe => qe.toRdd.count(); () }
-        catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
-        val wall = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
-        (wall, (cpu.cpuNs.sum() - cpu0) / 1e9, (tPlan - t0) / 1e9)
+        // The plan/execution split point is `executedPlan`, which forces
+        // the whole driver-side chain (analysis → optimization → physical
+        // planning) WITHOUT executing anything — under AQE it returns the
+        // unexecuted AdaptiveSparkPlanExec root (`toRdd` would materialize
+        // every intermediate query stage). For rows whose builder `fn` runs
+        // eager intra-query actions (index builds, checkpointed loops), the
+        // span includes those by construction.
+        measured {
+          val t0 = System.nanoTime()
+          val planned =
+            try {
+              val qe = fn(spark, sfDir).queryExecution
+              qe.executedPlan // forces the full plan chain, executes nothing
+              Some(qe)
+            } catch {
+              case e: Throwable =>
+                System.err.println(s"[bench] $name failed (planning): $e"); None
+            }
+          val planSec = (System.nanoTime() - t0) / 1e9
+          try planned.foreach { qe => qe.toRdd.count(); () }
+          catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
+          planSec
+        }
       }
-      // the query's LOCAL steal window: lets a dirty flag be adjudicated
-      // ambient-vs-code per row (a 2x cpu row whose own window shows
-      // elevated steal is the host's doing, not the commit's)
-      val qSteal = for {
-        (s0, t0) <- qStat0
-        (s1, t1) <- readProcStat()
-        if t1 > t0
-      } yield 100.0 * (s1 - s0) / (t1 - t0)
       // drop any per-JVM store this row cached for its own reps — later
       // queries must not run under its retained blocks (outside the
       // measured window, like the gc nudge above)
       BenchExtras.releaseAfter(name)
-      val planSec = median(runs.map(_._3))
-      if (planSec > PlanSecWarnThreshold)
-        System.err.println(
-          f"[bench] $name: driver-side planning $planSec%.2f s per action (median) — " +
-            "single-threaded cost no cluster size amortizes")
-      (name, median(runs.map(_._1)), median(runs.map(_._2)), runs.map(_._1), runs.map(_._2),
-        qSteal, warmup, planSec, runs.map(_._3))
+      val walls = runs.map(_._2)
+      val cpus  = runs.map(_._3)
+      val plans = runs.map(_._1)
+      Measured(name, median(walls), median(cpus), median(plans), walls, cpus, plans, warmup)
     }
-    def s3(v: Double): String   = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    def json(kv: Seq[(String, Double)]): String =
-      kv.map { case (k, v) => "\"" + k + "\":" + s3(v) }.mkString("{", ",", "}")
-    // The stdout JSON line must stay well under 2 KB (the harness keeps only
-    // the tail of the run's output), so the line uses short "qNN" keys and
-    // millisecond precision; the full-name wall+cpu per-query detail goes to
-    // a sidecar file instead.
-    def shortKey(name: String): String = name.takeWhile(_ != '_')
-    val shortKeys = results.map(r => shortKey(r._1))
-    require(
-      shortKeys.distinct.size == shortKeys.size,
-      s"duplicate short bench keys would silently collide in the JSON line: " +
-        shortKeys.groupBy(identity).collect { case (k, vs) if vs.size > 1 => k }.mkString(", ")
-    )
     probeWalls += probe.spin() // close the run: catch load arriving late
     // later-rep spreads (rep 1 excluded — JIT) over queries big enough to
     // measure; the probe walls catch load the spreads can't (uniform
     // slowdown) and vice versa (a burst between two probes)
     val spreads = results.collect {
-      case r if r._2 >= 0.2 && r._4.size >= 3 =>
-        val later = r._4.drop(1)
+      case r if r.wall >= 0.2 && r.repWalls.size >= 3 =>
+        val later = r.repWalls.drop(1)
         if (later.min > 0) later.max / later.min else 1.0
     }
     val (runContended, probeRatio, spreadFrac) = contentionFlags(probeWalls.toSeq, spreads)
-    // per-query contamination: adjacent-probe elevation + cpu vs committed
-    // quiet baseline (union); the run flag flips when the dirty set is
-    // material even if the run-level percentile checks miss a partial burst
-    val orderedNames = results.map(_._1)
-    val dirtyProbe   = probeDirtyQueries(orderedNames, probeWalls.toSeq)
-    val (dirtyCpu, staleCpu) =
-      cpuDirtyOrStale(results.map(r => r._1 -> r._3), baseline, currentSha)
-    if (staleCpu.nonEmpty)
-      System.err.println(
-        s"[bench] stale baseline rows (code changed since stamped — refresh with " +
-          s"SPARK_GRAFT_WRITE_BASELINE=1): ${staleCpu.mkString(", ")}")
-    val dirtyUnion = (dirtyProbe ++ dirtyCpu).distinct.sorted
-    val contended  = runContended || dirtyUnion.size >= DirtyCountThreshold
-    // sha-blind wall channel (see [[wallHistOutliers]]): advisory, loud
-    val wallOutliers = wallHistOutliers(results.map(r => r._1 -> r._2), histMed)
-    if (wallOutliers.nonEmpty)
-      System.err.println(
-        "[bench] WALL OUTLIERS vs clean-history medians (sha-blind — fires on stale rows " +
-          "too; adjudicate wall-vs-cpu per row): " +
-          wallOutliers.map { case (n, ratio) => f"$n ${ratio}%.1fx" }.mkString(", "))
-    // same machinery over plan_sec: a planning regression flags like a
-    // wall regression, even while it hides under the 1 s absolute warn
-    val planOutliers = planHistOutliers(results.map(r => r._1 -> r._8), planMed)
-    if (planOutliers.nonEmpty)
-      System.err.println(
-        "[bench] PLAN-TIME OUTLIERS vs clean-history medians (driver-side planning, " +
-          "single-threaded — no cluster size amortizes it): " +
-          planOutliers.map { case (n, ratio) => f"$n ${ratio}%.1fx" }.mkString(", "))
-    // headline totals cover the REGISTRY rows only — bench extras (build/
-    // probe splits) must not shift the cross-round total
-    val registryResults = results.filter(r => SparkEntry.queries.contains(r._1))
-    val total  = registryResults.map(_._2).sum
-    val cpuTot = registryResults.map(_._3).sum
-    // Per-query precision/coverage degrades BEFORE the line outgrows the
-    // window: 3-decimals while it fits, then 2, then only the slowest
-    // queries plus an "omitted" count — the total and cpu columns (the
-    // cross-round signals) never degrade, and bench_detail.json always
-    // carries the full-precision per-query table.
-    def s2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
-    // sfDir is a filesystem path interpolated into JSON: escape it (a quote
-    // or backslash in the dir would otherwise emit invalid JSON that the
-    // history parse then silently skips — hygiene today, since paths are
-    // controlled, but the failure mode is silent history loss)
-    def jstr(s: String): String =
-      s.flatMap {
-        case '"'           => "\\\""
-        case '\\'          => "\\\\"
-        case c if c < ' '  => f"\\u${c.toInt}%04x"
-        case c             => c.toString
-      }.mkString("\"", "", "\"")
-    def jsonWith(fmt: Double => String, kv: Seq[(String, Double)]): String =
-      kv.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
-    def lineWith(qs: String, omitted: Int): String = {
-      val om = if (omitted > 0) s""","omitted":$omitted""" else ""
-      s"""{"metric":"total","value":${s3(total)},"unit":"sec","cpu_sec":${s3(cpuTot)},"reps":$reps,"contended":$contended,"dirty":${dirtyUnion.size},"queries":$qs$om,"sf":${jstr(sfDir)}}"""
-    }
-    // stdout carries the registry rows only; extras live in the sidecar
-    val perQ = registryResults.map(r => shortKey(r._1) -> r._2)
-    // degrade steps derived from the query count so the slowest-10 floor is
-    // ALWAYS among the candidates no matter how large the registry grows
-    // (a fixed take(40) stopped reaching the floor past ~770 queries)
-    val floorStep = math.max(1, math.ceil((perQ.size - 10) / 20.0).toInt)
-    val candidates = Iterator(
-      lineWith(jsonWith(s3, perQ), 0),
-      lineWith(jsonWith(s2, perQ), 0)
-    ) ++ Iterator.range(1, floorStep + 1).map { step =>
-      val keep = math.max(10, perQ.size - step * 20)
-      val slowest = perQ.sortBy(-_._2).take(keep)
-      lineWith(jsonWith(s2, slowest), perQ.size - keep)
-    }
+    val dirty     = probeDirtyQueries(results.map(_.name), probeWalls.toSeq).sorted
+    val contended = runContended || dirty.size >= DirtyCountThreshold
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL", "bench_detail.json")
-    // "_run" sorts apart from query names; probe walls kept so a human
-    // can see WHEN the load arrived, not just that it did
-    val dirtyJson = dirtyUnion.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val staleJson = staleCpu.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // the FULL sha-mismatch set (flagged or not): a baselined row whose
-    // code changed since its stamp must be visible on every run
-    val staleSha = staleShaRows(baseline, currentSha)
-    if (staleSha.nonEmpty)
-      System.err.println(
-        s"[bench] baseline rows with changed source since stamping (cpu check suppressed " +
-          s"for these — refresh on the next quiet stamp): ${staleSha.mkString(", ")}")
-    val staleShaJson = staleSha.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // host steal across the run: attribution for a contended verdict (co-
-    // tenant vs in-JVM); absent on non-Linux or unreadable /proc/stat
-    val runStealPct: Option[Double] = for {
-      (s0, t0) <- statStart
-      (s1, t1) <- readProcStat()
-      if t1 > t0
-    } yield 100.0 * (s1 - s0) / (t1 - t0)
-    val stealJson = runStealPct.map(v => s""","steal_pct":${s3(v)}""").getOrElse("")
-    // streaming-bandwidth brackets: the LLC/bus co-tenant channel the spin
-    // probe and steal both miss (see MemBandwidthProbe) — MB/s at run
-    // start and end, compared against a quiet-era value by a human/judge
-    // Quiesce the JVM before the end sample: the last query's dead
-    // localCheckpoint/persist blocks are still being swept by the
-    // ContextCleaner and the GC tail is active right after a heavy rep —
-    // both eat bus bandwidth and were measured depressing the end bracket
-    // (q77 solo: in-JVM end 34 GB/s while a fresh JVM seconds later read
-    // quiet). A forced collection plus a short settle drains the
-    // self-induced traffic so the end bracket reads the BOX, not the run.
-    System.gc()
-    Thread.sleep(1500)
-    // realloc + page-in warm-up after release() is auto-discarded inside
-    // the probe (mechanical since r14) — bracketSample() starts clean
-    val membwEnd = bracketSample()
-    // invalid samples (worker death / barrier timeout) are OMITTED, not
-    // emitted as inflated numbers; membw_valid:false marks the gap loudly
-    val membwJson =
-      membwStart.map(v => s""","membw_mbps_start":${s3(v)}""").getOrElse("") +
-        membwEnd.map(v => s""","membw_mbps_end":${s3(v)}""").getOrElse("") +
-        (if (membwStart.isEmpty || membwEnd.isEmpty) s""","membw_valid":false""" else "")
-    // size-stratified ratio medians: the single-run ambient discriminator
-    val (smallRatio, bigRatio) =
-      sizeStratifiedRatios(results.map(r => r._1 -> r._3), baseline, currentSha)
-    val strataJson =
-      smallRatio.map(v => s""","cpu_ratio_median_small":${s3(v)}""").getOrElse("") +
-        bigRatio.map(v => s""","cpu_ratio_median_big":${s3(v)}""").getOrElse("")
-    val wallOutJson = wallOutliers.map { case (n, _) => "\"" + n + "\"" }.mkString("[", ",", "]")
-    val planOutJson = planOutliers.map { case (n, _) => "\"" + n + "\"" }.mkString("[", ",", "]")
-    val runRow =
-      s""""_run":{"sf":${jstr(sfDir)},"contended":$contended,"probe_ratio":${s3(probeRatio)},"spread_frac":${s3(spreadFrac)},"dirty_queries":$dirtyJson,"stale_queries":$staleJson,"stale_sha_rows":$staleShaJson,"wall_outlier_rows":$wallOutJson,"plan_outlier_rows":$planOutJson,"dirty_probe":${dirtyProbe.size},"dirty_cpu":${dirtyCpu.size},"baseline_loaded":${baseline.nonEmpty}$stealJson$membwJson$strataJson,"probe_walls":${probeWalls.map(s3).mkString("[", ",", "]")}}"""
-    val dirtySet = dirtyUnion.toSet
-    val detail = (runRow +: results
-      .map { r =>
-        val walls = r._4.map(s3).mkString("[", ",", "]")
-        // cpu_ratio vs the committed quiet baseline, when one covers this
-        // query — the auto-adjudication signal (code-determined cpu: ~1.0
-        // quiet-on-unchanged-code, >2 under contention or after a code change)
-        val ratio =
-          baseline.get(r._1).map(_.cpu).filter(_ > 0).map(b => s""","cpu_ratio":${s3(r._3 / b)}""").getOrElse("")
-        // wall_ratio beside cpu_ratio: the pair is the co-tenant
-        // discriminator (cpu inflated with wall near-flat = shared-cache/
-        // bandwidth pressure, which steal can't see; a code regression
-        // moves wall WITH cpu)
-        val wallRatio =
-          baselineWalls.get(r._1).filter(_ > 0).map(b => s""","wall_ratio":${s3(r._2 / b)}""").getOrElse("")
-        val dirty = if (dirtySet.contains(r._1)) s""","dirty":true""" else ""
-        // per-rep cpu alongside per-rep walls: warm-up-bimodal rows (the
-        // cpu_lo five) are diagnosable only from the rep-over-rep cpu decay
-        val cpus = r._5.map(s3).mkString("[", ",", "]")
-        // the row's own steal window (see _run.steal_pct): ambient-vs-code
-        // attribution for exactly this query's measured span
-        val steal = r._6.map(v => s""","steal_pct":${s3(v)}""").getOrElse("")
-        // the burned warm-up execution of a declared dual-mode row — decay
-        // diagnosis only, excluded from every median/flag/stamp
-        val warm = r._7.map { case (w, c) => s""","warmup_wall":${s3(w)},"warmup_cpu":${s3(c)}""" }.getOrElse("")
-        // wall vs the clean-history median — the sha-blind channel's raw
-        // per-row reading (present whenever >= WallHistMinSamples exist)
-        val wallHist =
-          histMed.get(r._1).filter(_ > 0).map(m => s""","wall_hist_ratio":${s3(r._2 / m)}""").getOrElse("")
-        // plan_sec vs ITS clean-history median — same sha-blind channel
-        val planHist =
-          planMed.get(r._1).filter(_ > 0).map(m => s""","plan_hist_ratio":${s3(r._8 / m)}""").getOrElse("")
-        // driver-side planning span per rep (see the rep-loop split): the
-        // channel task cpu can't see; median beside the per-rep series
-        val plans = r._9.map(s3).mkString("[", ",", "]")
-        s""""${r._1}":{"wall_sec":${s3(r._2)},"cpu_sec":${s3(r._3)},"plan_sec":${s3(r._8)}$ratio$wallRatio$wallHist$planHist$dirty$steal$warm,"rep_walls":$walls,"rep_cpus":$cpus,"rep_plans":$plans}"""
-      })
-      .mkString("{", ",", "}")
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(detailPath),
-      detail.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      detailJson(sfDir, contended, probeRatio, spreadFrac, dirty, probeWalls.toSeq, results)
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Throwable => System.err.println(s"[bench] detail write failed: $e") }
-    // the harness parses the JSON out of the LAST 2000 chars of output; an
-    // overgrown line silently truncates into "parsed: null" (BENCH_r01-r03)
-    // — degrade per-query detail until it fits, and fail loudly only if
-    // even the slowest-10 floor can't
-    val line = candidates.find(_.length <= 1900).getOrElse {
-      throw new IllegalStateException(
-        "bench stdout line exceeds 1900 chars even at the slowest-10 floor — " +
-          "the driver's 2000-char tail window would truncate it"
-      )
-    }
-    // SPARK_GRAFT_WRITE_BASELINE=1: stamp this (quiet!) run's medians into
-    // the baseline file — measured rows replaced with {wall, cpu, src_sha},
-    // unmeasured rows preserved (so a BENCH_ONLY subset refreshes exactly
-    // the rows whose code changed), `_sf` set to the run dir. An existing
-    // baseline at a DIFFERENT sf is dropped wholesale (never mix scales).
-    // A CONTENDED run must not stamp: its inflated cpu rows carry fresh
-    // src_sha, so they'd false-flag every later quiet run as dirty — the
-    // quiet-run requirement previously lived only in the skill doc; this
-    // mechanizes it the way staleness already is. SPARK_GRAFT_FORCE_BASELINE=1
-    // overrides (for adjudicated-by-hand stamps), loudly.
-    val writeRequested =
-      sys.env.get("SPARK_GRAFT_WRITE_BASELINE").exists(v => v == "1" || v.equalsIgnoreCase("true"))
-    val writeForced =
-      sys.env.get("SPARK_GRAFT_FORCE_BASELINE").exists(v => v == "1" || v.equalsIgnoreCase("true"))
-    if (writeRequested && contended && !writeForced) {
-      System.err.println(
-        s"[bench] REFUSING baseline stamp: run is contended (probe_ratio ${s3(probeRatio)}, " +
-          s"spread_frac ${s3(spreadFrac)}, dirty: ${dirtyUnion.mkString(", ")}) — rerun quiet, " +
-          "or set SPARK_GRAFT_FORCE_BASELINE=1 after adjudicating the flagged rows by hand")
-    }
-    if (writeRequested && !contended && !writeForced &&
-        bigRatio.exists(_ > StampBigRatioMax)) {
-      System.err.println(
-        f"[bench] REFUSING baseline stamp: big-row strata median ${bigRatio.get}%.2f > " +
-          f"$StampBigRatioMax%.2f vs the previous baseline (broad ambient cpu inflation — " +
-          "the dirty-count guard can miss a uniform ~1.5-2.0x band); rerun quiet, or set " +
-          "SPARK_GRAFT_FORCE_BASELINE=1 after cross-run adjudication")
-    }
-    if (writeRequested && !contended && !writeForced &&
-        runStealPct.exists(_ > StampStealMaxPct)) {
-      System.err.println(
-        f"[bench] REFUSING baseline stamp: steal_pct ${runStealPct.get}%.3f > " +
-          f"$StampStealMaxPct%.2f (a co-tenant ran DURING the measured phase — walls " +
-          "inflate at flat cpu, which neither the contended flag nor the strata see); " +
-          "rerun quiet, or set SPARK_GRAFT_FORCE_BASELINE=1 after cross-run adjudication")
-    }
-    if (writeRequested && !contended && !writeForced &&
-        (for { s <- membwStart; e <- membwEnd; if s > 0 } yield e / s < StampMembwEndFloor)
-          .getOrElse(false)) {
-      System.err.println(
-        f"[bench] REFUSING baseline stamp: end membw bracket ${membwEnd.get}%.0f fell below " +
-          f"$StampMembwEndFloor%.2f x the start ${membwStart.get}%.0f (ambient regime shifted " +
-          "mid-run); rerun quiet, or set SPARK_GRAFT_FORCE_BASELINE=1 after adjudication")
-    }
-    if (shouldStampBaseline(writeRequested, contended, writeForced, bigRatio,
-        runStealPct, membwStart, membwEnd)) {
-      try {
-        val p = java.nio.file.Paths.get(baselinePath)
-        val prev =
-          if (java.nio.file.Files.exists(p)) Some(java.nio.file.Files.readAllBytes(p)) else None
-        // clean-run wall history (hoisted load, shared with the wall-outlier
-        // channel) feeds the small-row median policy; its absence (fresh
-        // checkout, CWD elsewhere) degrades to point stamps
-        java.nio.file.Files.write(
-          p,
-          mergeBaseline(
-            prev,
-            results.map(r => (r._1, r._2, r._3)),
-            currentSha,
-            sfDir,
-            // never stamp a sample in which any worker died: an invalid
-            // bracket yields None here, which PRESERVES a previous stamp
-            (membwStart.toSeq ++ membwEnd.toSeq).reduceOption[Double](math.max),
-            histWalls))
-        System.err.println(s"[bench] baseline stamped: ${results.size} rows -> $baselinePath")
-      } catch {
-        case e: Throwable => System.err.println(s"[bench] baseline write failed: $e")
-      }
-    }
-    println(line)
+    println(
+      stdoutLine(
+        results.map(r => (r.name, r.wall, r.cpu)),
+        SparkEntry.queries.contains,
+        reps, contended, dirty.size, sfDir))
     graft.operators.FuzzyDedup.releaseCaches(spark)
     spark.stop()
   }

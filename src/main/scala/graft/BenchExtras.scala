@@ -64,18 +64,11 @@ object BenchExtras {
   /** q38 phase split: inside the composed operator (mine → CC → group),
     * doc-block mining dominates the wall with ±20–30% per-rep variance, so
     * the pair STORE's per-round scan cost is invisible in end-to-end
-    * medians — the r10 packed-vs-SER question was only decidable on q76,
-    * where CC dominates. These rows decide it on the DOC block directly:
-    * `q38m` times mining+packing alone (fresh store per rep); `q38c` runs
-    * the CC rounds + cluster grouping over a store built once per JVM;
-    * `q38s` runs the IDENTICAL loop over the r10 mid-round
-    * `MEMORY_AND_DISK_SER` row store (kept here, dev-only, as the A/B
-    * counterfactual — JavaSerializer per-row framing on every round scan).
-    * q38c-vs-q38s medians at matching reps are the store comparison with
-    * mining variance excluded by construction. */
+    * medians. `q38m` times mining+packing alone (fresh store per rep);
+    * `q38c` runs the CC rounds + cluster grouping over a packed store built
+    * once per JVM, so its median is the store's round cost with mining
+    * variance excluded by construction. */
   private val ccPacked = scala.collection.mutable.Map[String, FuzzyDedup.PackedPairStore]()
-  private val ccSer =
-    scala.collection.mutable.Map[String, (org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow], org.apache.spark.sql.types.StructType)]()
 
   private def minedPairs(s: SparkSession, dir: String): DataFrame =
     FuzzyDedup.minhashLsh(s, dir).select("id_a", "id_b")
@@ -97,24 +90,6 @@ object BenchExtras {
     ccToClusters(FuzzyDedup.ccLoop(store.edges)._1)
   }
 
-  def ccSerRounds(s: SparkSession, dir: String): DataFrame = {
-    val (rdd, schema) = synchronized(ccSer.getOrElseUpdate(dir, {
-      val pairs = minedPairs(s, dir)
-      // the SER-rows store the packed chunks replaced: per-row copy()
-      // (JavaSerializer back-references) + per-row serde on every scan
-      val r = pairs.queryExecution.toRdd
-        .map(_.copy())
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-      r.count()
-      (r, pairs.schema)
-    }))
-    val stored = org.apache.spark.sql.GraftBridge.internalCreateDataFrame(s, rdd, schema)
-    val edges = stored
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-      .union(stored.select(col("id_b").as("src"), col("id_a").as("dst")))
-    ccToClusters(FuzzyDedup.ccLoop(edges)._1)
-  }
-
   def layoutBuild(s: SparkSession, dir: String): DataFrame = {
     Analytics.bucketedLayoutBuild(s, dir, "g124b")
     done(s)
@@ -127,62 +102,22 @@ object BenchExtras {
 
   /** Release a split row's per-JVM cached store once the bench is done
     * with that row: a full-registry run at scale corpora must not retain
-    * q38c's packed chunks — or q38s's known-bad MEMORY_AND_DISK_SER
-    * store — across the rest of the gate (SCALING.md records the 100×
-    * exit-52 OOM that retention caused in q38m). Called by the bench
-    * after each row's reps complete; re-running the row just rebuilds.
-    * Idempotent; a no-op for rows with no cached store. */
+    * q38c's packed chunks across the rest of the gate (SCALING.md records
+    * the 100× exit-52 OOM that retention caused in q38m). Called by the
+    * bench after each row's reps complete; re-running the row just
+    * rebuilds. Idempotent; a no-op for rows with no cached store. */
   def releaseAfter(name: String): Unit = synchronized {
     if (name.startsWith("q38c")) { ccPacked.values.foreach(_.unpersist()); ccPacked.clear() }
-    if (name.startsWith("q38s")) {
-      ccSer.values.foreach { case (rdd, _) => rdd.unpersist(blocking = false) }
-      ccSer.clear()
-    }
   }
-
-  /** The q38s SER-store counterfactual is a dev-only A/B row (the packed
-    * store already won on r10's data); a default full-gate run should not
-    * re-pay — or even transiently hold — the known-bad per-row-serde
-    * store. Opt in with SPARK_GRAFT_BENCH_DEV=1. */
-  private def devRowsEnabled: Boolean = sys.env.get("SPARK_GRAFT_BENCH_DEV").contains("1")
 
   /** Short keys stay collision-free against the registry's qNN keys. */
-  def rows: Map[String, (SparkSession, String) => DataFrame] = {
-    val always: Map[String, (SparkSession, String) => DataFrame] = Map(
-      "q106b_index_build"   -> (indexBuild _),
-      "q106p_index_probe"   -> (indexProbe _),
-      "q112a_index_absorb"  -> (indexAbsorb _),
-      "q124b_layout_build"  -> (layoutBuild _),
-      "q124p_bucketed_probe" -> (bucketedProbe _),
-      "q38m_mining_pack"    -> (miningPack _),
-      "q38c_cc_packed"      -> (ccPackedRounds _)
-    )
-    if (devRowsEnabled) always + ("q38s_cc_ser" -> (ccSerRounds _)) else always
-  }
-
-  /** Freshness-fingerprint owners of the extra rows (see
-    * [[SparkEntry.queryOwners]]): this file plus the operator files the
-    * split rows delegate into. */
-  val owners: Map[String, Seq[String]] = {
-    val index = Seq(
-      "src/main/scala/graft/BenchExtras.scala",
-      "src/main/scala/graft/operators/DedupIndex.scala")
-    val layout = Seq(
-      "src/main/scala/graft/BenchExtras.scala",
-      "src/main/scala/graft/queries/Analytics.scala",
-      "src/main/scala/graft/sources/Layout.scala")
-    val fuzzy = Seq(
-      "src/main/scala/graft/BenchExtras.scala",
-      "src/main/scala/graft/operators/FuzzyDedup.scala")
-    Map(
-      "q106b_index_build"    -> index,
-      "q106p_index_probe"    -> index,
-      "q112a_index_absorb"   -> index,
-      "q124b_layout_build"   -> layout,
-      "q124p_bucketed_probe" -> layout,
-      "q38m_mining_pack"     -> fuzzy,
-      "q38c_cc_packed"       -> fuzzy,
-      "q38s_cc_ser"          -> fuzzy
-    )
-  }
+  val rows: Map[String, (SparkSession, String) => DataFrame] = Map(
+    "q106b_index_build"    -> (indexBuild _),
+    "q106p_index_probe"    -> (indexProbe _),
+    "q112a_index_absorb"   -> (indexAbsorb _),
+    "q124b_layout_build"   -> (layoutBuild _),
+    "q124p_bucketed_probe" -> (bucketedProbe _),
+    "q38m_mining_pack"     -> (miningPack _),
+    "q38c_cc_packed"       -> (ccPackedRounds _)
+  )
 }

@@ -16,18 +16,6 @@ trait QueryModule {
     * entry; keys must be a subset of [[oracles]] (the static entry remains
     * the documented floor rendering). */
   def oraclesDynamic: Map[String, (SparkSession, String) => String] = Map.empty
-
-  /** Repo-relative source files whose content determines this module's
-    * query code — the freshness fingerprint for BENCH_BASELINE.json rows
-    * (see [[Bench.sourceFingerprint]]). Default: the module's own defining
-    * file (object name == file name throughout this repo); modules
-    * registering queries IMPLEMENTED in other files override and append
-    * them. Declared ownership, not a whole-program hash: a shared-helper
-    * edit outside the declared set won't mark rows stale — the check
-    * covers the overwhelmingly common case (the operator file itself
-    * changed) and errs armed, never silently disarmed. */
-  def sourceFiles: Seq[String] = Seq(
-    "src/main/scala/" + getClass.getName.stripSuffix("$").replace('.', '/') + ".scala")
 }
 
 /** Numeric helpers shared by query modules.

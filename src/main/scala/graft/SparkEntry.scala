@@ -47,12 +47,6 @@ object SparkEntry {
   def oracleSqlDynamic: Map[String, (SparkSession, String) => String] =
     modules.flatMap(_.oraclesDynamic).toMap
 
-  /** Query name → repo-relative source files whose content determines its
-    * code (the registering module's declared ownership) — the freshness
-    * fingerprint surface for BENCH_BASELINE.json (see [[Bench]]). */
-  def queryOwners: Map[String, Seq[String]] =
-    modules.flatMap(m => m.queries.keys.map(_ -> m.sourceFiles)).toMap
-
   /** Queries intentionally without an oracle (not DuckDB-reproducible);
     * each must carry its own correctness spec instead. Empty since q14's
     * pairing: the sketch query now carries exact counts + in-row error

@@ -37,12 +37,6 @@ import graft.{QueryModule, Tables}
   */
 object Clustering extends QueryModule {
 
-  /** q119's verify divides through the shared [[Similarity.cosine]] guard —
-    * Similarity.scala co-determines this module's plans (same declared-
-    * ownership rationale as FuzzyDedup's override). */
-  override def sourceFiles: Seq[String] =
-    super.sourceFiles :+ "src/main/scala/graft/operators/Similarity.scala"
-
   val K     = 10
   val Iters = 2
   val Scale = 1e6

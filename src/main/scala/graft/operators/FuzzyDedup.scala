@@ -27,16 +27,6 @@ import graft.{QueryModule, Tables}
   */
 object FuzzyDedup extends QueryModule {
 
-  /** q106/q112 (and q58's index path) are implemented in DedupIndex.scala
-    * but registered here — both files determine this module's rows.
-    * Similarity.scala owns the shared cosine/dot helpers this module's
-    * embedding rows plan through (the r16 nullif guard re-shaped q37/q39's
-    * plans without staling them — declared ownership closes that hole). */
-  override def sourceFiles: Seq[String] =
-    super.sourceFiles ++ Seq(
-      "src/main/scala/graft/operators/DedupIndex.scala",
-      "src/main/scala/graft/operators/Similarity.scala")
-
   /** Mersenne-prime-free modulus just above 2^32 (a prime). With a < 2^31
     * and H < 2^32, a*H + b < 2^63 — no signed-64 overflow. */
   val P: Long = 4294967311L

@@ -22,10 +22,6 @@ import graft.{Num, QueryModule, Tables}
   */
 object Analytics extends QueryModule {
 
-  /** q124's bucketed-layout build path lives in Layout.scala — both files
-    * determine this module's rows. */
-  override def sourceFiles: Seq[String] =
-    super.sourceFiles :+ "src/main/scala/graft/sources/Layout.scala"
   import Num._
 
   private val ship9802 = lit("1998-09-02").cast(TimestampType)

@@ -2,15 +2,15 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Replays the RECORDED round-8 bench series — the run where the r8
-  * run-level `contended` flag false-negatived — through the round-9
-  * per-query detection, and the paired quiet run (commit 9eb29ff, same
-  * code) to prove the detection doesn't cry wolf. The r8 driver run
-  * inflated identical-code queries 8-35x (q73 0.49->8.11 s wall /
-  * 0.40->4.21 cpu-s; q121 1.44->10.81 / 21.5->146) under a PARTIAL load
-  * burst: 10 of 148 probes elevated, clustered exactly at the inflated
-  * queries, which beat both the p90/p10 probe ratio (1.106 < 1.5) and
-  * the later-rep spread check (0.114 < 0.25).
+/** Replays RECORDED bench probe series through the contention flag. The
+  * recorded r8 run is the one where the run-level `contended` flag
+  * false-negatived: it inflated identical-code queries 8-35x (q73
+  * 0.49->8.11 s wall; q121 1.44->10.81 s) under a PARTIAL load burst — 10
+  * of 148 probes elevated, clustered exactly at the inflated queries,
+  * which beat both the p90/p10 probe ratio (1.106 < 1.5) and the later-rep
+  * spread check (0.114 < 0.25). The paired quiet run (commit 9eb29ff, same
+  * code) and two round-10 quiet runs with GC blips prove the per-query
+  * detection doesn't cry wolf.
   */
 class BenchReplaySpec extends AnyFunSuite {
 
@@ -20,8 +20,6 @@ class BenchReplaySpec extends AnyFunSuite {
   private val r8Probes: Seq[Double] = Seq(0.085,0.086,0.09,0.086,0.086,0.082,0.081,0.081,0.082,0.081,0.08,0.083,0.081,0.084,0.081,0.081,0.081,0.08,0.081,0.081,0.08,0.081,0.291,0.178,0.086,0.083,0.094,0.085,0.085,0.084,0.08,0.081,0.082,0.152,0.334,0.256,0.421,0.296,0.08,0.091,0.082,0.082,0.081,0.081,0.083,0.081,0.08,0.081,0.081,0.081,0.081,0.08,0.08,0.085,0.081,0.08,0.081,0.082,0.085,0.081,0.08,0.08,0.081,0.082,0.089,0.081,0.081,0.084,0.083,0.081,0.085,0.082,0.082,0.082,0.085,0.089,0.081,0.084,0.081,0.089,0.081,0.081,0.081,0.081,0.082,0.081,0.083,0.087,0.084,0.083,0.083,0.083,0.084,0.083,0.083,0.085,0.086,0.084,0.085,0.085,0.083,0.083,0.086,0.084,0.083,0.083,0.083,0.089,0.089,0.084,0.083,0.082,0.083,0.085,0.234,0.084,0.083,0.083,0.083,0.083,0.082,0.083,0.084,0.082,0.085,0.081,0.084,0.081,0.08,0.087,0.085,0.081,0.081,0.082,0.08,0.081,0.081,0.082,0.08,0.082,0.081,0.085,0.447,0.149,0.08,0.089,0.081,0.082)
   // the builder quiet run (commit 9eb29ff) probe walls on identical code
   private val quietProbes: Seq[Double] = Seq(0.081,0.083,0.081,0.083,0.081,0.081,0.081,0.081,0.081,0.081,0.083,0.082,0.082,0.086,0.083,0.081,0.08,0.083,0.082,0.081,0.08,0.083,0.08,0.082,0.084,0.082,0.082,0.086,0.085,0.082,0.081,0.081,0.08,0.081,0.081,0.081,0.081,0.08,0.082,0.084,0.08,0.081,0.08,0.08,0.082,0.08,0.084,0.084,0.085,0.082,0.086,0.08,0.082,0.08,0.08,0.081,0.083,0.082,0.08,0.08,0.082,0.082,0.082,0.081,0.083,0.087,0.082,0.081,0.083,0.081,0.081,0.081,0.08,0.08,0.081,0.081,0.084,0.086,0.087,0.086,0.085,0.082,0.084,0.084,0.084,0.084,0.098,0.093,0.086,0.092,0.081,0.085,0.094,0.083,0.084,0.082,0.095,0.099,0.096,0.097,0.098,0.08,0.08,0.08,0.08,0.081,0.081,0.08,0.08,0.08,0.08,0.08,0.087,0.082,0.082,0.081,0.081,0.081,0.08,0.08,0.08,0.081,0.082,0.08,0.08,0.08,0.08,0.08,0.08,0.08,0.08,0.081,0.08,0.081,0.08,0.089,0.089,0.084,0.081,0.081,0.08,0.08,0.08,0.08,0.08,0.083,0.08,0.08)
-  private val r8Cpu: Seq[(String, Double)] = Seq("q01_pricing_summary"->1.346,"q02_filter_revenue"->0.084,"q03_top_orders"->0.322,"q04_order_priority"->0.105,"q05_region_revenue"->0.253,"q06_window_topk"->0.261,"q07_anti_join"->0.052,"q08_rollup"->0.078,"q09_distinct_stats"->0.875,"q100_embedding_drift"->2.604,"q101_containment"->10.46,"q102_packed_export"->0.401,"q103_bm25_retrieval"->6.419,"q104_growth_curve"->6.941,"q105_containment_lsh"->5.746,"q106_dedup_index"->18.392,"q106b_index_build"->13.256,"q106p_index_probe"->4.332,"q107_dedup_survivors"->7.324,"q108_boiler_strip"->5.472,"q109_survivors_quality"->10.919,"q10_pivot"->0.966,"q110_hashed_classifier"->20.402,"q111_ann_recall"->20.055,"q112_index_absorb"->109.635,"q112a_index_absorb"->7.256,"q113_near_contamination"->7.446,"q114_cluster_quality"->14.978,"q115_shard_drift"->2.641,"q116_span_ownership"->6.018,"q117_weighted_sample"->3.266,"q118_ngram_exposure"->13.941,"q119_semdedup"->61.979,"q11_set_ops"->0.858,"q120_cdc_chunks"->89.356,"q121_dsir_selection"->146.277,"q122_winnowing"->10.862,"q123_pca_covariance"->12.156,"q124_bucketed_join"->5.725,"q124b_layout_build"->1.893,"q124p_bucketed_probe"->0.945,"q125_rollup_maintenance"->3.934,"q126_skew_diagnosis"->0.216,"q127_k_anonymity"->3.903,"q128_journey_paths"->0.245,"q129_token_budget"->3.48,"q12_scalar_subquery"->0.065,"q130_split_leakage"->9.216,"q131_source_divergence"->4.855,"q132_curriculum_order"->7.487,"q133_deletion_audit"->4.41,"q134_triangle_count"->11.884,"q135_mi_features"->6.64,"q136_rank_fusion"->6.108,"q137_triangle_delta"->1.244,"q138_edge_similarity"->15.368,"q139_kcore"->46.106,"q13_cube"->0.423,"q140_retrieval_eval"->6.99,"q141_cluster_purity"->14.6,"q142_assortativity"->0.319,"q14_approx_distinct"->1.06,"q15_window_funcs"->0.601,"q16_unpivot"->0.682,"q17_salted_agg"->0.337,"q18_argmax"->0.049,"q19_or_of_ands"->0.174,"q20_epoch_normalize"->2.114,"q21_split_explode"->0.13,"q22_json_extract"->1.778,"q23_iso_validate"->1.976,"q24_grouping_sets"->0.82,"q25_window_tumbling"->0.129,"q26_window_session"->0.624,"q27_window_sliding"->0.111,"q28_asof_join"->0.246,"q29_typed_agg_mask"->0.065,"q30_dedup_exact"->4.671,"q31_dedup_canonical"->4.931,"q32_dedup_jaccard"->8.289,"q33_dedup_minhash_lsh"->5.534,"q34_simhash_fingerprint"->0.2,"q35_simhash_pairs"->2.401,"q36_rolling_fingerprint"->0.77,"q37_dedup_embedding"->3.391,"q38_dedup_clusters"->6.536,"q39_dedup_embedding_lsh"->5.991,"q40_text_stats"->0.085,"q41_lang_id"->1.512,"q42_quality"->0.246,"q43_token_count"->0.206,"q44_tfidf_top_terms"->8.968,"q45_stratified_sample"->0.031,"q46_sequence_packing"->0.159,"q47_repetition_score"->0.205,"q48_bigram_topk"->5.965,"q49_length_quantile"->0.054,"q50_binary_meta"->0.026,"q51_decode_stats"->0.116,"q52_media_features"->0.018,"q53_frame_sample"->0.126,"q54_contamination"->8.272,"q55_training_order"->7.01,"q56_shard_assign"->0.009,"q57_doc_chunking"->0.205,"q58_incremental_dedup"->11.526,"q59_lm_score"->4.809,"q60_knn_brute"->0.644,"q61_lsh_pairs"->6.734,"q62_ivf_knn"->3.555,"q63_min_cost_offer"->0.282,"q64_important_suppliers"->0.984,"q65_range_join"->0.142,"q66_moving_avg"->0.327,"q67_heavy_hitters"->7.447,"q68_clean_funnel"->7.593,"q69_source_mixing"->0.032,"q70_kmeans"->18.283,"q71_span_dedup"->5.915,"q72_gopher_rules"->11.989,"q73_pii_scrub"->4.208,"q74_url_canonical"->1.062,"q75_length_digest"->0.297,"q76_embedding_clusters"->7.685,"q77_pagerank"->36.759,"q78_salted_join"->1.508,"q79_int8_quant"->7.111,"q80_snapshot_diff"->6.502,"q81_sketch_rollup"->4.703,"q82_transitions"->0.245,"q83_upsert_merge"->5.475,"q84_asof_native"->0.214,"q85_bpe_pairs"->2.589,"q86_domain_cap"->2.771,"q87_zorder_layout"->0.05,"q88_global_ntile"->10.364,"q89_bloom_join"->0.28,"q90_source_overlap"->4.744,"q91_scd2_intervals"->0.354,"q92_event_funnel"->0.244,"q93_boilerplate"->4.486,"q94_mix_allocation"->8.933,"q95_cohort_retention"->18.506,"q96_rate_anomaly"->0.849,"q97_pmi_pairs"->8.136,"q98_data_profile"->19.413,"q99_fk_integrity"->0.256)
-  private val quietCpu: Map[String, Double] = Map("q01_pricing_summary"->0.941,"q02_filter_revenue"->0.076,"q03_top_orders"->0.23,"q04_order_priority"->0.092,"q05_region_revenue"->0.2,"q06_window_topk"->0.273,"q07_anti_join"->0.052,"q08_rollup"->0.07,"q09_distinct_stats"->0.759,"q100_embedding_drift"->3.88,"q101_containment"->9.8,"q102_packed_export"->0.297,"q103_bm25_retrieval"->7.142,"q104_growth_curve"->7.546,"q105_containment_lsh"->5.264,"q106_dedup_index"->20.678,"q106b_index_build"->14.308,"q106p_index_probe"->5.697,"q107_dedup_survivors"->11.506,"q108_boiler_strip"->8.124,"q109_survivors_quality"->15.455,"q10_pivot"->0.283,"q110_hashed_classifier"->9.532,"q111_ann_recall"->7.125,"q112_index_absorb"->28.022,"q112a_index_absorb"->5.416,"q113_near_contamination"->6.053,"q114_cluster_quality"->12.372,"q115_shard_drift"->1.723,"q116_span_ownership"->4.761,"q117_weighted_sample"->1.837,"q118_ngram_exposure"->10.629,"q119_semdedup"->25.799,"q11_set_ops"->0.201,"q120_cdc_chunks"->9.388,"q121_dsir_selection"->21.524,"q122_winnowing"->6.791,"q123_pca_covariance"->8.51,"q124_bucketed_join"->3.131,"q124b_layout_build"->1.401,"q124p_bucketed_probe"->0.762,"q125_rollup_maintenance"->2.089,"q126_skew_diagnosis"->6.724,"q127_k_anonymity"->3.463,"q128_journey_paths"->5.065,"q129_token_budget"->3.923,"q12_scalar_subquery"->0.054,"q130_split_leakage"->7.737,"q131_source_divergence"->9.026,"q132_curriculum_order"->9.316,"q133_deletion_audit"->3.293,"q134_triangle_count"->11.753,"q135_mi_features"->6.784,"q136_rank_fusion"->7.53,"q137_triangle_delta"->1.732,"q138_edge_similarity"->14.727,"q139_kcore"->47.576,"q13_cube"->0.421,"q140_retrieval_eval"->7.056,"q141_cluster_purity"->14.659,"q142_assortativity"->0.43,"q14_approx_distinct"->0.994,"q15_window_funcs"->0.554,"q16_unpivot"->0.649,"q17_salted_agg"->0.358,"q18_argmax"->0.046,"q19_or_of_ands"->0.207,"q20_epoch_normalize"->2.229,"q21_split_explode"->0.142,"q22_json_extract"->1.837,"q23_iso_validate"->1.847,"q24_grouping_sets"->0.938,"q25_window_tumbling"->4.901,"q26_window_session"->5.343,"q27_window_sliding"->4.787,"q28_asof_join"->0.394,"q29_typed_agg_mask"->0.074,"q30_dedup_exact"->6.305,"q31_dedup_canonical"->6.12,"q32_dedup_jaccard"->9.362,"q33_dedup_minhash_lsh"->5.425,"q34_simhash_fingerprint"->0.205,"q35_simhash_pairs"->5.772,"q36_rolling_fingerprint"->1.208,"q37_dedup_embedding"->3.264,"q38_dedup_clusters"->6.963,"q39_dedup_embedding_lsh"->6.537,"q40_text_stats"->0.09,"q41_lang_id"->1.856,"q42_quality"->0.207,"q43_token_count"->0.154,"q44_tfidf_top_terms"->11.436,"q45_stratified_sample"->0.021,"q46_sequence_packing"->0.183,"q47_repetition_score"->0.197,"q48_bigram_topk"->6.577,"q49_length_quantile"->0.046,"q50_binary_meta"->0.021,"q51_decode_stats"->0.132,"q52_media_features"->0.021,"q53_frame_sample"->0.097,"q54_contamination"->10.099,"q55_training_order"->6.338,"q56_shard_assign"->0.007,"q57_doc_chunking"->0.188,"q58_incremental_dedup"->10.069,"q59_lm_score"->5.824,"q60_knn_brute"->0.747,"q61_lsh_pairs"->6.128,"q62_ivf_knn"->2.263,"q63_min_cost_offer"->0.151,"q64_important_suppliers"->0.832,"q65_range_join"->4.714,"q66_moving_avg"->5.203,"q67_heavy_hitters"->6.149,"q68_clean_funnel"->6.298,"q69_source_mixing"->0.027,"q70_kmeans"->14.64,"q71_span_dedup"->4.907,"q72_gopher_rules"->6.148,"q73_pii_scrub"->0.4,"q74_url_canonical"->0.032,"q75_length_digest"->0.028,"q76_embedding_clusters"->5.465,"q77_pagerank"->26.012,"q78_salted_join"->1.322,"q79_int8_quant"->5.543,"q80_snapshot_diff"->6.133,"q81_sketch_rollup"->4.464,"q82_transitions"->4.69,"q83_upsert_merge"->5.665,"q84_asof_native"->0.16,"q85_bpe_pairs"->3.548,"q86_domain_cap"->2.421,"q87_zorder_layout"->0.079,"q88_global_ntile"->12.036,"q89_bloom_join"->0.28,"q90_source_overlap"->4.288,"q91_scd2_intervals"->4.628,"q92_event_funnel"->6.321,"q93_boilerplate"->5.386,"q94_mix_allocation"->1.826,"q95_cohort_retention"->7.001,"q96_rate_anomaly"->6.173,"q97_pmi_pairs"->8.84,"q98_data_profile"->13.039,"q99_fk_integrity"->0.233)
 
   // 147 query names (sorted run order) of the round-10 re-stamp runs
   private val r10Names: Seq[String] = Seq("q01_pricing_summary","q02_filter_revenue","q03_top_orders","q04_order_priority","q05_region_revenue","q06_window_topk","q07_anti_join","q08_rollup","q09_distinct_stats","q100_embedding_drift","q101_containment","q102_packed_export","q103_bm25_retrieval","q104_growth_curve","q105_containment_lsh","q106_dedup_index","q106b_index_build","q106p_index_probe","q107_dedup_survivors","q108_boiler_strip","q109_survivors_quality","q10_pivot","q110_hashed_classifier","q111_ann_recall","q112_index_absorb","q112a_index_absorb","q113_near_contamination","q114_cluster_quality","q115_shard_drift","q116_span_ownership","q117_weighted_sample","q118_ngram_exposure","q119_semdedup","q11_set_ops","q120_cdc_chunks","q121_dsir_selection","q122_winnowing","q123_pca_covariance","q124_bucketed_join","q124b_layout_build","q124p_bucketed_probe","q125_rollup_maintenance","q126_skew_diagnosis","q127_k_anonymity","q128_journey_paths","q129_token_budget","q12_scalar_subquery","q130_split_leakage","q131_source_divergence","q132_curriculum_order","q133_deletion_audit","q134_triangle_count","q135_mi_features","q136_rank_fusion","q137_triangle_delta","q138_edge_similarity","q139_kcore","q13_cube","q140_retrieval_eval","q141_cluster_purity","q142_assortativity","q14_approx_distinct","q15_window_funcs","q16_unpivot","q17_salted_agg","q18_argmax","q19_or_of_ands","q20_epoch_normalize","q21_split_explode","q22_json_extract","q23_iso_validate","q24_grouping_sets","q25_window_tumbling","q26_window_session","q27_window_sliding","q28_asof_join","q29_typed_agg_mask","q30_dedup_exact","q31_dedup_canonical","q32_dedup_jaccard","q33_dedup_minhash_lsh","q34_simhash_fingerprint","q35_simhash_pairs","q36_rolling_fingerprint","q37_dedup_embedding","q38_dedup_clusters","q39_dedup_embedding_lsh","q40_text_stats","q41_lang_id","q42_quality","q43_token_count","q44_tfidf_top_terms","q45_stratified_sample","q46_sequence_packing","q47_repetition_score","q48_bigram_topk","q49_length_quantile","q50_binary_meta","q51_decode_stats","q52_media_features","q53_frame_sample","q54_contamination","q55_training_order","q56_shard_assign","q57_doc_chunking","q58_incremental_dedup","q59_lm_score","q60_knn_brute","q61_lsh_pairs","q62_ivf_knn","q63_min_cost_offer","q64_important_suppliers","q65_range_join","q66_moving_avg","q67_heavy_hitters","q68_clean_funnel","q69_source_mixing","q70_kmeans","q71_span_dedup","q72_gopher_rules","q73_pii_scrub","q74_url_canonical","q75_length_digest","q76_embedding_clusters","q77_pagerank","q78_salted_join","q79_int8_quant","q80_snapshot_diff","q81_sketch_rollup","q82_transitions","q83_upsert_merge","q84_asof_native","q85_bpe_pairs","q86_domain_cap","q87_zorder_layout","q88_global_ntile","q89_bloom_join","q90_source_overlap","q91_scd2_intervals","q92_event_funnel","q93_boilerplate","q94_mix_allocation","q95_cohort_retention","q96_rate_anomaly","q97_pmi_pairs","q98_data_profile","q99_fk_integrity")
@@ -38,16 +36,12 @@ class BenchReplaySpec extends AnyFunSuite {
       s"run-level probe check now fires on the r8 series (ratio $ratio) — replay premise changed")
   }
 
-  // baseline fixture maps hold bare cpu values; lift into the row shape
-  private def rows(m: Map[String, Double]): Map[String, Bench.BaselineRow] =
-    m.map { case (k, v) => k -> Bench.BaselineRow(v, None, None) }
-
   test("r8 replay: adjacent-probe elevation flags the inflated query cluster") {
     val dirty = Bench.probeDirtyQueries(r8Names, r8Probes).toSet
     // the burst's core cluster — probes ≥0.152 s over the run median, far
     // above the GC-blip absolute floor. q111/q119 (burst-edge probes at
-    // +0.096/+0.070 s, below the floor) moved to the cpu mechanism's
-    // books: see the union test.
+    // +0.096/+0.070 s, below the floor) are not flagged: a sub-floor burst
+    // is indistinguishable from a GC blip.
     val expected = Set(
       "q110_hashed_classifier", "q120_cdc_chunks",
       "q121_dsir_selection", "q122_winnowing", "q123_pca_covariance",
@@ -72,35 +66,17 @@ class BenchReplaySpec extends AnyFunSuite {
       s"c491055 blip still flags: ${Bench.probeDirtyQueries(r10Names, r10Stamp2Probes)}")
   }
 
-  test("r8 replay: cpu-vs-quiet-baseline flags the queries the probes missed") {
-    val dirty = Bench.cpuDirtyQueries(r8Cpu, rows(quietCpu)).toSet
-    // q73 inflated 10.5x in cpu with QUIET adjacent probes (burst between
-    // samples) — only the baseline mechanism can catch it; q112/q120/q121
-    // are the big-cpu casualties the VERDICT adjudicated by hand
-    val expected = Set("q73_pii_scrub", "q112_index_absorb", "q120_cdc_chunks", "q121_dsir_selection")
-    val missed = expected -- dirty
-    assert(missed.isEmpty, s"cpu mechanism missed: $missed (flagged: $dirty)")
-  }
-
-  test("r8 replay: the per-query union is material and flips contended") {
-    val union = (Bench.probeDirtyQueries(r8Names, r8Probes) ++
-      Bench.cpuDirtyQueries(r8Cpu, rows(quietCpu))).distinct
-    assert(union.size >= Bench.DirtyCountThreshold,
-      s"union ${union.size} below threshold — r8 would still read clean")
-    // the two burst rows whose probes fell below the absolute floor must
-    // still be caught — by cpu (q111 2.8×, q119 2.4× their quiet baselines)
-    assert(Set("q111_ann_recall", "q119_semdedup").subsetOf(union.toSet),
-      s"burst-edge rows escaped both mechanisms: $union")
+  test("r8 replay: the probe-dirty set alone is material and flips contended") {
+    val dirty = Bench.probeDirtyQueries(r8Names, r8Probes)
+    assert(dirty.size >= Bench.DirtyCountThreshold,
+      s"probe-dirty set ${dirty.size} below threshold — r8 would still read clean")
   }
 
   test("quiet replay: same code, quiet box — detection stays silent") {
-    // probe side: the quiet run's own recorded series
+    // the quiet run's own recorded probe series
     val probeDirty = Bench.probeDirtyQueries(r8Names, quietProbes)
     assert(probeDirty.size < Bench.DirtyCountThreshold,
       s"quiet probes flagged $probeDirty")
-    // cpu side: quiet run measured against its own committed baseline
-    val cpuDirty = Bench.cpuDirtyQueries(quietCpu.toSeq, rows(quietCpu))
-    assert(cpuDirty.isEmpty, s"quiet cpu flagged $cpuDirty")
   }
 
   test("synthetic: a single GC blip flags at most its two neighbors, below the contended bar") {
@@ -130,643 +106,15 @@ class BenchReplaySpec extends AnyFunSuite {
     assert(Bench.probeDirtyQueries(names, blip).isEmpty)
   }
 
-  test("cpu floors: tiny queries and immaterial excess never flag") {
-    // 0.1 s baseline doubling (GC jitter on a small query) — floored out
-    assert(Bench.cpuDirtyQueries(Seq("a" -> 0.35), rows(Map("a" -> 0.1))).isEmpty)
-    // big ratio but sub-second absolute excess — floored out
-    assert(Bench.cpuDirtyQueries(Seq("b" -> 0.9), rows(Map("b" -> 0.3))).isEmpty)
-    // material both ways — flags
-    assert(Bench.cpuDirtyQueries(Seq("c" -> 4.2), rows(Map("c" -> 0.4))) == Seq("c"))
-    // no baseline row — never flags
-    assert(Bench.cpuDirtyQueries(Seq("d" -> 100.0), Map.empty).isEmpty)
-  }
-
-  // The five warm-up-bimodal rows' committed stamps (hi = high quiet mode)
-  // and their recorded quiet cpu histories across the six current-code full
-  // quiet runs of rounds 9–10 (bench_detail history, commits bd4d223,
-  // 04d886c, c491055, 5b65498, bec9192, 65fb205). cpu_lo = history min.
-  private val hiModeStamps: Map[String, Bench.BaselineRow] = Map(
-    "q119_semdedup"           -> Bench.BaselineRow(34.782, Some(14.085), None),
-    "q100_embedding_drift"    -> Bench.BaselineRow(4.105, Some(1.231), None),
-    "q125_rollup_maintenance" -> Bench.BaselineRow(4.763, Some(2.226), None),
-    "q60_knn_brute"           -> Bench.BaselineRow(2.703, Some(0.397), None),
-    "q23_iso_validate"        -> Bench.BaselineRow(3.773, Some(1.879), None)
-  )
-  private val hiModeHistory: Map[String, Seq[Double]] = Map(
-    "q119_semdedup"           -> Seq(21.977, 14.085, 26.831, 15.063, 24.637, 14.935),
-    "q100_embedding_drift"    -> Seq(1.918, 1.231, 4.105, 4.031, 2.933, 3.178),
-    "q125_rollup_maintenance" -> Seq(3.991, 4.494, 4.763, 3.655, 2.226, 2.522),
-    "q60_knn_brute"           -> Seq(2.209, 0.58, 0.397, 0.592, 2.703, 2.238),
-    "q23_iso_validate"        -> Seq(2.032, 1.879, 1.902, 2.081, 3.773, 1.911)
-  )
-
-  test("hi-mode rows: the full recorded quiet history replays clean at the 1.5x ratio") {
-    // the tighter ratio must not false-flag any recorded quiet value —
-    // the quiet cpu of these rows is a warm-up decay CONTINUUM (q119:
-    // 14.1–26.8 across the six runs), so this history IS the safety
-    // envelope the 1.5 parameter was chosen against
-    hiModeHistory.foreach { case (name, vals) =>
-      vals.foreach { v =>
-        val flagged = Bench.cpuDirtyQueries(Seq(name -> v), hiModeStamps)
-        assert(flagged.isEmpty, s"$name quiet value $v false-flags at the hi-mode ratio")
-      }
-    }
-  }
-
-  test("hi-mode rows: contamination in the previously-invisible (1.5x, 2x] band flags") {
-    // q119 at 55 cpu-s sat under the old 2x-hi threshold (69.6) — the
-    // masking the cpu_lo marker exists to remove; with the marker the row
-    // flags at 1.5x hi (52.2)
-    assert(Bench.cpuDirtyQueries(Seq("q119_semdedup" -> 55.0), hiModeStamps).nonEmpty)
-    // same row WITHOUT the cpu_lo marker keeps the legacy 2x threshold
-    val unmarked = Map("q119_semdedup" -> Bench.BaselineRow(34.782, None, None))
-    assert(Bench.cpuDirtyQueries(Seq("q119_semdedup" -> 55.0), unmarked).isEmpty)
-    assert(Bench.cpuDirtyQueries(Seq("q119_semdedup" -> 75.0), unmarked).nonEmpty)
-    // q60 at 4.5 was invisible under 2x (5.4) — flags at 1.5x (4.05)
-    assert(Bench.cpuDirtyQueries(Seq("q60_knn_brute" -> 4.5), hiModeStamps).nonEmpty)
-  }
-
-  test("baseline stamp decision: contended runs refuse unless forced") {
-    assert(Bench.shouldStampBaseline(requested = true, contended = false, forced = false))
-    assert(!Bench.shouldStampBaseline(requested = true, contended = true, forced = false))
-    assert(Bench.shouldStampBaseline(requested = true, contended = true, forced = true))
-    assert(!Bench.shouldStampBaseline(requested = false, contended = false, forced = true))
-  }
-
-  test("baseline stamp decision: broad big-row inflation refuses even when the dirty count missed it") {
-    // the r13 case: contended=false (dirty 2 < 3) but big-stratum median
-    // 1.46 vs the previous baseline — a stamp would re-price every
-    // memory-bound row ~1.5x high
-    assert(!Bench.shouldStampBaseline(
-      requested = true, contended = false, forced = false, bigRatio = Some(1.46)))
-    assert(Bench.shouldStampBaseline(
-      requested = true, contended = false, forced = false, bigRatio = Some(1.1)))
-    // boundary: exactly at the max stamps; just over refuses
-    assert(Bench.shouldStampBaseline(
-      requested = true, contended = false, forced = false, bigRatio = Some(Bench.StampBigRatioMax)))
-    assert(!Bench.shouldStampBaseline(
-      requested = true, contended = false, forced = false,
-      bigRatio = Some(Bench.StampBigRatioMax + 0.01)))
-    // None (first stamp / scale change / no big fresh rows) cannot refuse
-    assert(Bench.shouldStampBaseline(
-      requested = true, contended = false, forced = false, bigRatio = None))
-    // force overrides, as it does for the contended refusal
-    assert(Bench.shouldStampBaseline(
-      requested = true, contended = false, forced = true, bigRatio = Some(2.0)))
-  }
-
-  test("baseline stamp decision: mid-run steal and a collapsed end bracket refuse the stamp") {
-    // the r14 poisoned attempt: contended=false, dirty 0, big strata 0.97 —
-    // but steal 2.0% and membw 85.9 -> 50.1 GB/s; 23 rows landed >1.5x
-    // their clean-history medians. Neither prior guard channel sees a
-    // co-tenant that inflates WALLS at flat cpu.
-    assert(!Bench.shouldStampBaseline(
-      requested = true, contended = false, forced = false, stealPct = Some(2.02)))
-    assert(Bench.shouldStampBaseline(
-      requested = true, contended = false, forced = false, stealPct = Some(0.04)))
-    assert(!Bench.shouldStampBaseline(
-      requested = true, contended = false, forced = false,
-      membwStart = Some(85884.0), membwEnd = Some(50142.0)))
-    assert(Bench.shouldStampBaseline(
-      requested = true, contended = false, forced = false,
-      membwStart = Some(101300.0), membwEnd = Some(105800.0)))
-    // a missing bracket side cannot refuse (the membw-valid channel
-    // already marks the gap loudly); force overrides as everywhere
-    assert(Bench.shouldStampBaseline(
-      requested = true, contended = false, forced = false,
-      membwStart = Some(90000.0), membwEnd = None))
-    assert(Bench.shouldStampBaseline(
-      requested = true, contended = false, forced = true,
-      stealPct = Some(2.0), membwStart = Some(9e4), membwEnd = Some(1e4)))
-  }
-
-  test("freshness: a changed-code query with a stale baseline row reports stale, not dirty") {
-    val measured = Seq("a" -> 10.0, "b" -> 10.0, "c" -> 10.0, "d" -> 0.9)
-    val baseline = Map(
-      "a" -> Bench.BaselineRow(1.0, None, Some("aaa")), // code changed since stamped -> stale
-      "b" -> Bench.BaselineRow(1.0, None, Some("bbb")), // fingerprints match -> genuinely dirty
-      "c" -> Bench.BaselineRow(1.0, None, None),        // legacy row, no recorded sha -> stays armed
-      "d" -> Bench.BaselineRow(0.8, None, Some("ddd"))  // under thresholds -> neither
-    )
-    val current = Map("a" -> "zzz", "b" -> "bbb", "d" -> "zzz")
-    val (dirty, stale) = Bench.cpuDirtyOrStale(measured, baseline, current)
-    assert(stale == Seq("a"), s"stale=$stale")
-    // c has no fingerprint on either side: the check cannot prove a code
-    // change, so it STAYS ARMED (legacy behavior) and flags dirty
-    assert(dirty.toSet == Set("b", "c"), s"dirty=$dirty")
-  }
-
-  test("freshness: baseline parsing disarms on missing or mismatched _sf header") {
-    val rows = """"q1":{"wall_sec":1.0,"cpu_sec":2.5,"src_sha":"abc"},"q2":{"wall_sec":1.0,"cpu_sec":0.5},"q3":{"wall_sec":1.0,"cpu_sec":9.0,"cpu_lo":3.0,"src_sha":"xyz"}"""
-    // matching header: rows parsed, src_sha carried, legacy row -> None,
-    // hi-mode row carries its cpu_lo
-    val ok = Bench.parseBaseline(s"""{"_sf":{"dir":"/d/sf0.1"},$rows}""".getBytes, "/d/sf0.1")
-    assert(ok == Map(
-      "q1" -> Bench.BaselineRow(2.5, None, Some("abc")),
-      "q2" -> Bench.BaselineRow(0.5, None, None),
-      "q3" -> Bench.BaselineRow(9.0, Some(3.0), Some("xyz"))))
-    // mismatched header: disarmed (a scale run must not trip gate ratios)
-    assert(Bench.parseBaseline(s"""{"_sf":{"dir":"/d/sf0.1"},$rows}""".getBytes, "/tmp/sf1x30").isEmpty)
-    // MISSING header: disarmed too — r9 left this case armed, so a
-    // hand-trimmed baseline would flag every large query on a quiet run
-    assert(Bench.parseBaseline(s"""{$rows}""".getBytes, "/d/sf0.1").isEmpty)
-  }
-
-  test("baseline writer: subset merge preserves unmeasured rows; scale mismatch starts fresh") {
-    val prev = """{"_sf":{"dir":"/d/sf0.1"},"qa":{"wall_sec":1.0,"cpu_sec":2.0,"src_sha":"old"},"qb":{"wall_sec":3.0,"cpu_sec":4.0}}"""
-    // same sf, subset rows: qa replaced (with fresh sha), qb preserved verbatim
-    val merged = Bench.mergeBaseline(
-      Some(prev.getBytes), Seq(("qa", 1.5, 2.5)), Map("qa" -> "new"), "/d/sf0.1")
-    val got = Bench.parseBaseline(merged, "/d/sf0.1")
-    assert(got == Map(
-      "qa" -> Bench.BaselineRow(2.5, None, Some("new")),
-      "qb" -> Bench.BaselineRow(4.0, None, None)), s"got $got")
-    // different sf: old rows dropped wholesale — cpu baselines never mix scales
-    val fresh = Bench.parseBaseline(
-      Bench.mergeBaseline(Some(prev.getBytes), Seq(("qc", 9.0, 8.0)), Map.empty, "/tmp/sf1x30"),
-      "/tmp/sf1x30")
-    assert(fresh == Map("qc" -> Bench.BaselineRow(8.0, None, None)), s"got $fresh")
-    // no previous file: rows + header written
-    val first = Bench.parseBaseline(
-      Bench.mergeBaseline(None, Seq(("qd", 1.0, 1.0)), Map("qd" -> "d"), "/d/sf0.1"), "/d/sf0.1")
-    assert(first == Map("qd" -> Bench.BaselineRow(1.0, None, Some("d"))))
-  }
-
-  test("baseline writer: a dual-mode row's quiet envelope only widens across re-stamps") {
-    val prev = """{"_sf":{"dir":"/d/sf0.1"},"qh":{"wall_sec":1.0,"cpu_sec":30.0,"cpu_lo":14.0,"src_sha":"old"}}"""
-    // mid-envelope stamp: hi and lo both preserved — a low-ish quiet run
-    // must not clobber the hi stamp (the 1.5x threshold would then
-    // false-flag the next hi-mode quiet run)
-    val mid = Bench.parseBaseline(
-      Bench.mergeBaseline(Some(prev.getBytes), Seq(("qh", 1.0, 26.0)), Map("qh" -> "new"), "/d/sf0.1"),
-      "/d/sf0.1")
-    assert(mid == Map("qh" -> Bench.BaselineRow(30.0, Some(14.0), Some("new"))), s"got $mid")
-    // stamp BELOW the recorded lo: lo converges down, hi untouched
-    val down = Bench.parseBaseline(
-      Bench.mergeBaseline(Some(prev.getBytes), Seq(("qh", 1.0, 12.5)), Map.empty, "/d/sf0.1"),
-      "/d/sf0.1")
-    assert(down == Map("qh" -> Bench.BaselineRow(30.0, Some(12.5), None)), s"got $down")
-    // stamp ABOVE the recorded hi: hi converges up, lo untouched
-    val up = Bench.parseBaseline(
-      Bench.mergeBaseline(Some(prev.getBytes), Seq(("qh", 1.0, 33.0)), Map.empty, "/d/sf0.1"),
-      "/d/sf0.1")
-    assert(up == Map("qh" -> Bench.BaselineRow(33.0, Some(14.0), None)), s"got $up")
-    // scale change: envelope dropped with the rest of the old rows
-    val other = Bench.parseBaseline(
-      Bench.mergeBaseline(Some(prev.getBytes), Seq(("qh", 1.0, 5.0)), Map.empty, "/x/sf1"),
-      "/x/sf1")
-    assert(other == Map("qh" -> Bench.BaselineRow(5.0, None, None)), s"got $other")
-  }
-
-  test("baseline writer: a changed-code stamp far below the retained hi keeps the OLD sha") {
-    val prev = """{"_sf":{"dir":"/d/sf0.1"},"qh":{"wall_sec":1.0,"cpu_sec":30.0,"cpu_lo":14.0,"src_sha":"old"}}"""
-    // measured 9.0 < 0.5*hi under a NEW sha: the envelope still prices the
-    // old cost (threshold 1.5*30), so the fresh sha must not mark the row
-    // fresh — it keeps "old" and stays stale-reporting until hand-tightened
-    val held = Bench.parseBaseline(
-      Bench.mergeBaseline(Some(prev.getBytes), Seq(("qh", 1.0, 9.0)), Map("qh" -> "new"), "/d/sf0.1"),
-      "/d/sf0.1")
-    assert(held == Map("qh" -> Bench.BaselineRow(30.0, Some(9.0), Some("old"))), s"got $held")
-    // measured within the envelope's normal band (>= 0.5*hi): fresh sha stamps
-    val normal = Bench.parseBaseline(
-      Bench.mergeBaseline(Some(prev.getBytes), Seq(("qh", 1.0, 16.0)), Map("qh" -> "new"), "/d/sf0.1"),
-      "/d/sf0.1")
-    assert(normal == Map("qh" -> Bench.BaselineRow(30.0, Some(14.0), Some("new"))), s"got $normal")
-    // same sha, far-below measurement: ordinary envelope widening, sha kept
-    val same = Bench.parseBaseline(
-      Bench.mergeBaseline(Some(prev.getBytes), Seq(("qh", 1.0, 9.0)), Map("qh" -> "old"), "/d/sf0.1"),
-      "/d/sf0.1")
-    assert(same == Map("qh" -> Bench.BaselineRow(30.0, Some(9.0), Some("old"))), s"got $same")
-    // POINT rows are untouched by the hold rule: replace cpu, stamp fresh sha
-    val pt = """{"_sf":{"dir":"/d/sf0.1"},"qp":{"wall_sec":1.0,"cpu_sec":30.0,"src_sha":"old"}}"""
-    val point = Bench.parseBaseline(
-      Bench.mergeBaseline(Some(pt.getBytes), Seq(("qp", 1.0, 9.0)), Map("qp" -> "new"), "/d/sf0.1"),
-      "/d/sf0.1")
-    assert(point == Map("qp" -> Bench.BaselineRow(9.0, None, Some("new"))), s"got $point")
-  }
-
-  test("baseline writer: dual-mode rows stamp the clean-history wall median at any size") {
-    // the q119 class: per-rep walls are a warm-up decay continuum, so a
-    // single run's median-of-3 wall is a coin flip on the curve (r13
-    // stamped 1.364 from a low-mode run; r14 officially read 2.619 =
-    // "+92%" on identical code). A row DECLARED bimodal (cpu_lo present)
-    // takes the cross-run median even though its wall is far above the
-    // small-row cutoff.
-    def wallOf(bytes: Array[Byte], name: String): Double = {
-      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
-      root.get(name).get("wall_sec").asDouble()
-    }
-    val prev =
-      """{"_sf":{"dir":"/d/sf0.1"},
-        |"qbi":{"wall_sec":1.364,"cpu_sec":34.0,"cpu_lo":14.0,"src_sha":"s"},
-        |"qpt":{"wall_sec":2.2,"cpu_sec":10.0,"src_sha":"s"}}""".stripMargin
-    val hist = Map("qbi" -> Seq(1.9, 2.8, 1.4, 2.4), "qpt" -> Seq(3.0, 3.2, 2.8))
-    val sha  = Map("qbi" -> "s", "qpt" -> "s")
-    val merged = Bench.mergeBaseline(
-      Some(prev.getBytes), Seq(("qbi", 2.6, 33.0), ("qpt", 2.0, 10.0)), sha, "/d/sf0.1",
-      histWalls = hist)
-    // median of [1.9, 2.8, 1.4, 2.4, 2.6] = 2.4; the point row (no cpu_lo,
-    // wall >= cutoff) keeps the single-run convention
-    assert(wallOf(merged, "qbi") == 2.4, s"got ${wallOf(merged, "qbi")}")
-    assert(wallOf(merged, "qpt") == 2.0, s"got ${wallOf(merged, "qpt")}")
-    // a changed-sha dual-mode row still takes the fresh point stamp
-    val changed = Bench.mergeBaseline(
-      Some(prev.getBytes), Seq(("qbi", 2.6, 33.0)), Map("qbi" -> "NEW"), "/d/sf0.1",
-      histWalls = hist)
-    assert(wallOf(changed, "qbi") == 2.6, s"got ${wallOf(changed, "qbi")}")
-  }
-
-  test("baseline writer: rows under SmallRowWallSec stamp the clean-history median, big rows stay point stamps") {
-    // the r13 false-trip class: a 0.15 s record-quiet stamp makes ordinary
-    // quiet runs read "2x" on noise. With history, the small row stamps the
-    // median of clean samples + this run; without history (or for big
-    // rows) the single-run stamp convention is unchanged. The cutoff is
-    // SmallRowWallSec (0.3 through r14, 0.6 since r15) — qmid below pins
-    // the widened 0.3-0.6 band.
-    def wallOf(bytes: Array[Byte], name: String): Double = {
-      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytes)
-      root.get(name).get("wall_sec").asDouble()
-    }
-    assert(Bench.SmallRowWallSec == 0.6, "the qmid case below assumes the r15 cutoff")
-    val hist = Map(
-      "qtiny" -> Seq(0.25, 0.28, 0.31),
-      "qmid"  -> Seq(0.40, 0.52, 0.44),
-      "qbig"  -> Seq(3.1, 3.4, 2.9))
-    val prev =
-      """{"_sf":{"dir":"/d/sf0.1"},
-        |"qtiny":{"wall_sec":0.15,"cpu_sec":0.1,"src_sha":"s"},
-        |"qmid":{"wall_sec":0.38,"cpu_sec":1.2,"src_sha":"s"},
-        |"qbig":{"wall_sec":2.2,"cpu_sec":10.0,"src_sha":"s"}}""".stripMargin
-    val sha = Map("qtiny" -> "s", "qmid" -> "s", "qbig" -> "s")
-    val merged = Bench.mergeBaseline(
-      Some(prev.getBytes), Seq(("qtiny", 0.12, 0.1), ("qmid", 0.45, 1.2), ("qbig", 2.0, 10.0)), sha,
-      "/d/sf0.1", histWalls = hist)
-    // median of [0.25, 0.28, 0.31, 0.12] = (0.25 + 0.28) / 2
-    assert(wallOf(merged, "qtiny") == 0.265, s"got ${wallOf(merged, "qtiny")}")
-    // 0.45 s sits in the band the r15 cutoff raise added (0.3 <= w < 0.6):
-    // median of [0.40, 0.52, 0.44, 0.45] = (0.44 + 0.45) / 2
-    assert(wallOf(merged, "qmid") == 0.445, s"got ${wallOf(merged, "qmid")}")
-    assert(wallOf(merged, "qbig") == 2.0, s"got ${wallOf(merged, "qbig")}")
-    // history walls price the OLD code: a changed-sha row must take a
-    // fresh point stamp, not a median over a dead implementation
-    val changed = Bench.mergeBaseline(
-      Some(prev.getBytes), Seq(("qtiny", 0.12, 0.1)), Map("qtiny" -> "NEW"), "/d/sf0.1",
-      histWalls = hist)
-    assert(wallOf(changed, "qtiny") == 0.12, s"got ${wallOf(changed, "qtiny")}")
-    // no/thin history: point stamp (one prior sample is not a median base)
-    val bare = Bench.mergeBaseline(
-      Some(prev.getBytes), Seq(("qtiny", 0.12, 0.1)), sha, "/d/sf0.1",
-      histWalls = Map("qtiny" -> Seq(0.25)))
-    assert(wallOf(bare, "qtiny") == 0.12, s"got ${wallOf(bare, "qtiny")}")
-  }
-
-  test("clean wall history: contended runs and dirty rows are excluded") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-hist")
-    def write(name: String, body: String): Unit =
-      java.nio.file.Files.write(dir.resolve(name), body.getBytes)
-    write("bench_detail_a.json",
-      """{"_run":{"contended":false},"q1":{"wall_sec":0.25,"cpu_sec":1.0},"q2":{"wall_sec":5.0,"cpu_sec":9.0,"dirty":true}}""")
-    write("bench_detail_b.json",
-      """{"_run":{"contended":true},"q1":{"wall_sec":9.9,"cpu_sec":9.9},"q2":{"wall_sec":9.9,"cpu_sec":9.9}}""")
-    write("bench_detail_c.json",
-      """{"_run":{"contended":false},"q1":{"wall_sec":0.31,"cpu_sec":1.1},"q2":{"wall_sec":1.4,"cpu_sec":2.0}}""")
-    write("not_history.txt", "ignore me")
-    write("bench_detail_broken.json", "{not json")
-    // the r14 class: contended:false but steal-poisoned / bracket-collapsed
-    // — the same cleanliness bar as the stamp guard applies to history
-    write("bench_detail_steal.json",
-      """{"_run":{"contended":false,"steal_pct":2.02},"q1":{"wall_sec":8.8,"cpu_sec":1.0}}""")
-    write("bench_detail_collapse.json",
-      """{"_run":{"contended":false,"steal_pct":0.02,"membw_mbps_start":85884.0,"membw_mbps_end":50142.0},"q1":{"wall_sec":7.7,"cpu_sec":1.0}}""")
-    // the ADVICE-r14 class: a clean run archived at a DIFFERENT scale must
-    // not blend into this scale's medians; a matching sf and a missing sf
-    // (pre-r15 archive) both count
-    write("bench_detail_wrongsf.json",
-      """{"_run":{"sf":"/d/sf0.01","contended":false},"q1":{"wall_sec":0.02,"cpu_sec":0.1}}""")
-    write("bench_detail_rightsf.json",
-      """{"_run":{"sf":"/d/sf0.1","contended":false},"q1":{"wall_sec":0.27,"cpu_sec":1.0}}""")
-    val hist = Bench.cleanWallHistory(dir, "/d/sf0.1")
-    assert(hist == Map("q1" -> Seq(0.25, 0.31, 0.27), "q2" -> Seq(1.4)), s"got $hist")
-  }
-
-  test("clean wall history: the sf gate compares normalized scale tokens, not raw path strings") {
-    // the ADVICE-r15 class: a trailing slash, symlinked prefix, or
-    // regenerated testdata at a new mount point must not silently drop ALL
-    // history (quietly reverting the median policy to point stamps) — only
-    // a genuinely different SCALE may
-    assert(Bench.normalizeSf("/root/testdata/sf0.1") == "sf0.1")
-    assert(Bench.normalizeSf("/root/testdata/sf0.1/") == "sf0.1")
-    assert(Bench.normalizeSf("/mnt/new/testdata/sf0.1") == "sf0.1")
-    assert(Bench.normalizeSf("/d/sf0.01") == "sf0.01")
-    // no sf token: gate on the trailing-slash-trimmed raw dir
-    assert(Bench.normalizeSf("/data/bench/") == "/data/bench")
-    // ADVICE-r16 class: whole-component match only. The old substring scan
-    // normalized a backup dir to the never-equal "sf0.1." and admitted an
-    // unrelated layout's "mysf0.25x" as sf0.25.
-    assert(Bench.normalizeSf("/d/sf0.1.bak") == "/d/sf0.1.bak")
-    assert(Bench.normalizeSf("/data/mysf0.25x/run") == "/data/mysf0.25x/run")
-    // the LAST fully-matching component wins when the sf dir nests deeper
-    assert(Bench.normalizeSf("/root/testdata/sf0.1/sub") == "sf0.1")
-    val dir = java.nio.file.Files.createTempDirectory("graft-hist-sfnorm")
-    def write(name: String, body: String): Unit =
-      java.nio.file.Files.write(dir.resolve(name), body.getBytes)
-    write("bench_detail_slash.json",
-      """{"_run":{"sf":"/root/testdata/sf0.1/","contended":false},"q1":{"wall_sec":0.25,"cpu_sec":1.0}}""")
-    write("bench_detail_remount.json",
-      """{"_run":{"sf":"/mnt/elsewhere/sf0.1","contended":false},"q1":{"wall_sec":0.29,"cpu_sec":1.0}}""")
-    write("bench_detail_otherscale.json",
-      """{"_run":{"sf":"/root/testdata/sf0.01","contended":false},"q1":{"wall_sec":0.02,"cpu_sec":0.1}}""")
-    val hist = Bench.cleanWallHistory(dir, "/root/testdata/sf0.1")
-    // files are read in name order: _remount sorts before _slash
-    assert(hist == Map("q1" -> Seq(0.29, 0.25)), s"got $hist")
-  }
-
-  test("wall-outlier channel: a stale-sha row with 10x+ wall and flat cpu still fires (r16 blind spot)") {
-    // The r16 adjudication hole: the nullif/With planning blowup put q62 at
-    // 22–33 s wall against a ~0.6 s history with FLAT task cpu, in nine
-    // consecutive runs — and every flag stayed silent because (a) planning
-    // time never appears in task cpu and (b) the all-rows-stale state (the
-    // infra fingerprint doing its job after a Tables.scala edit) suppresses
-    // the cpu machinery on stale rows BY DESIGN. The wall channel compares
-    // against clean-history medians and never consults src_sha, so this
-    // exact shape now fires.
-    val hist = Map(
-      "q62_ivf_knn"   -> Seq(0.61, 0.63, 0.66, 0.71),
-      "q05_small"     -> Seq(0.30, 0.32, 0.31),
-      "q_two_samples" -> Seq(1.0, 1.1))
-    val med = Bench.wallHistMedians(hist)
-    // two samples are not a median base — the row stays unarmed
-    assert(!med.contains("q_two_samples"), s"got $med")
-    val measured = Seq(
-      "q62_ivf_knn" -> 31.44, // the r16 official run's actual value: ~49x
-      "q05_small"   -> 0.55,  // 1.8x and 0.24 s excess: under both bars
-      "q_unknown"   -> 99.0)  // no history — nothing to compare
-    val out = Bench.wallHistOutliers(measured, med)
-    assert(out.map(_._1) == Seq("q62_ivf_knn"), s"got $out")
-    assert(out.head._2 > 40, s"ratio should carry the magnitude: ${out.head._2}")
-  }
-
-  test("wall-outlier channel: steal-band inflation and sub-floor excesses stay silent") {
-    val med = Map("qbig" -> 5.0, "qsmall" -> 0.4)
-    // the observed poisoned-era envelope (walls 1.5–2x) must not fire —
-    // this channel is for order-of-magnitude code signatures, not load
-    assert(Bench.wallHistOutliers(Seq("qbig" -> 10.0), med).isEmpty)
-    // ratio over 3x but excess under the 1 s absolute floor: noise-sized
-    assert(Bench.wallHistOutliers(Seq("qsmall" -> 1.3), med).isEmpty)
-    // over both bars: fires
-    assert(Bench.wallHistOutliers(Seq("qbig" -> 16.0), med).map(_._1) == Seq("qbig"))
-  }
-
-  test("plan-outlier channel: sub-second planning creep fires; jitter and 1s-warn overlap stay sane (r18)") {
-    // The r17-VERDICT #7 hole: PlanSecWarnThreshold is absolute (1 s), so a
-    // 0.1 -> 0.8 s planning regression (8x, invisible to task cpu AND to
-    // walls when execution dominates) never printed anywhere. plan_sec now
-    // rides the clean-history median machinery with its own 0.3 s excess
-    // floor.
-    val med = Bench.wallHistMedians(Map(
-      "q62_ivf_knn" -> Seq(0.09, 0.11, 0.10),
-      "q_tiny_plan" -> Seq(0.02, 0.02, 0.03)))
-    // 8x with 0.7 s excess: fires, even though 0.8 s is under the warn bar
-    val out = Bench.planHistOutliers(Seq("q62_ivf_knn" -> 0.8), med)
-    assert(out.map(_._1) == Seq("q62_ivf_knn"), s"got $out")
-    // Catalyst-JIT jitter: 4x ratio but only 0.06 s excess — silent
-    assert(Bench.planHistOutliers(Seq("q_tiny_plan" -> 0.08), med).isEmpty)
-    // no history — nothing to compare, never throws
-    assert(Bench.planHistOutliers(Seq("q_new" -> 9.0), med).isEmpty)
-  }
-
-  test("clean plan history: plan_sec rides the same cleanliness/scale gates; pre-r17 rows contribute nothing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-hist-plan")
-    def write(name: String, body: String): Unit =
-      java.nio.file.Files.write(dir.resolve(name), body.getBytes)
-    write("bench_detail_a.json",
-      """{"_run":{"sf":"/d/sf0.1","contended":false},"q1":{"wall_sec":0.25,"cpu_sec":1.0,"plan_sec":0.10}}""")
-    // pre-r17 archive: no plan_sec field — silently contributes no sample
-    write("bench_detail_old.json",
-      """{"_run":{"sf":"/d/sf0.1","contended":false},"q1":{"wall_sec":0.26,"cpu_sec":1.0}}""")
-    // contended run: excluded wholesale, plan samples included
-    write("bench_detail_hot.json",
-      """{"_run":{"sf":"/d/sf0.1","contended":true},"q1":{"wall_sec":9.9,"cpu_sec":9.9,"plan_sec":5.0}}""")
-    // dirty row: its plan sample excluded individually
-    write("bench_detail_dirty.json",
-      """{"_run":{"sf":"/d/sf0.1","contended":false},"q1":{"wall_sec":0.5,"cpu_sec":3.0,"plan_sec":0.4,"dirty":true}}""")
-    // wrong scale: dropped
-    write("bench_detail_wrongsf.json",
-      """{"_run":{"sf":"/d/sf0.01","contended":false},"q1":{"wall_sec":0.02,"cpu_sec":0.1,"plan_sec":0.01}}""")
-    write("bench_detail_b.json",
-      """{"_run":{"sf":"/d/sf0.1","contended":false},"q1":{"wall_sec":0.27,"cpu_sec":1.0,"plan_sec":0.12}}""")
-    val hist = Bench.cleanPlanHistory(dir, "/d/sf0.1")
-    assert(hist == Map("q1" -> Seq(0.10, 0.12)), s"got $hist")
-  }
-
   test("official runner: only declared dual-mode rows burn a warm-up rep") {
-    // the r16 q110 fix: three rounds running, the one >2x wall row was a
-    // declared warm-up-bimodal row whose official 3-rep median landed on
-    // the JIT decay shoulder (r15: rep cpus 12.9/78.2/28.2). The official
-    // runner burns ONE unrecorded rep for rows carrying cpu_lo, so the
-    // measured median reads the same warm regime the stamp's clean-history
-    // median does. Point rows and unbaselined rows burn nothing.
-    def row(cpu: Double, lo: Option[Double]) = Bench.BaselineRow(cpu, lo, Some("s"))
-    val base = Map(
-      "qdual"  -> row(15.0, Some(7.0)),
-      "qpoint" -> row(10.0, None))
-    assert(Bench.warmupRepsFor("qdual", base) == 1)
-    assert(Bench.warmupRepsFor("qpoint", base) == 0)
-    assert(Bench.warmupRepsFor("qunknown", base) == 0)
-    assert(Bench.warmupRepsFor("qdual", Map.empty) == 0) // no baseline file -> no declared rows
-  }
-
-  test("size-stratified ratio medians separate memory-pressure from uniform slowdown") {
-    def row(c: Double) = Bench.BaselineRow(c, None, None)
-    // the r12 ambient signature: small rows at ~1.0x, big rows at ~1.7x
-    val base = Map("s1" -> row(0.2), "s2" -> row(0.5), "b1" -> row(8.0), "b2" -> row(20.0))
-    val ambient = Seq("s1" -> 0.2, "s2" -> 0.52, "b1" -> 13.6, "b2" -> 34.0)
-    val (sm, bg) = Bench.sizeStratifiedRatios(ambient, base)
-    assert(sm.exists(v => v > 0.9 && v < 1.1), s"small stratum $sm")
-    assert(bg.exists(v => v > 1.6 && v < 1.8), s"big stratum $bg")
-    // uniform slowdown (clock/load): both strata move together
-    val uniform = Seq("s1" -> 0.4, "s2" -> 1.0, "b1" -> 16.0, "b2" -> 40.0)
-    val (us, ub) = Bench.sizeStratifiedRatios(uniform, base)
-    assert(us.exists(v => math.abs(v - 2.0) < 0.01) && ub.exists(v => math.abs(v - 2.0) < 0.01))
-    // strata with no baselined members report None, never 0/NaN; mid-size
-    // rows (1s <= cpu < 5s) belong to NEITHER stratum
-    val midOnly = Map("m" -> row(2.0))
-    assert(Bench.sizeStratifiedRatios(Seq("m" -> 2.0), midOnly) == (None, None))
-    assert(Bench.sizeStratifiedRatios(Nil, base) == (None, None))
-    // zero-cpu baseline rows are excluded from ratios entirely
-    assert(Bench.sizeStratifiedRatios(Seq("z" -> 1.0), Map("z" -> row(0.0))) == (None, None))
-    // STALE rows (src_sha changed since stamping) are excluded, mirroring
-    // cpuDirtyOrStale: a deliberate re-price of one big row must not drag
-    // cpu_ratio_median_big into fake memory-pressure territory
-    def shaRow(c: Double, sha: String) = Bench.BaselineRow(c, None, Some(sha))
-    val shaBase = Map("b1" -> shaRow(8.0, "aaa"), "b2" -> shaRow(20.0, "bbb"))
-    val repriced = Seq("b1" -> 8.0, "b2" -> 60.0) // b2's code changed, 3x re-price
-    val (_, bgAll) =
-      Bench.sizeStratifiedRatios(repriced, shaBase, Map("b1" -> "aaa", "b2" -> "bbb"))
-    assert(bgAll.exists(v => v > 1.9), s"fresh rows both count: $bgAll")
-    val (_, bgFresh) =
-      Bench.sizeStratifiedRatios(repriced, shaBase, Map("b1" -> "aaa", "b2" -> "CHANGED"))
-    assert(bgFresh.exists(v => math.abs(v - 1.0) < 0.01), s"stale b2 must drop out: $bgFresh")
-    // rows with no fingerprint on either side stay armed (legacy behavior)
-    val (_, bgLegacy) = Bench.sizeStratifiedRatios(repriced, shaBase, Map.empty)
-    assert(bgLegacy.exists(v => v > 1.9), s"fingerprint-less rows stay in: $bgLegacy")
-  }
-
-  test("baseline _membw: stamped on quiet runs, preserved across subset re-stamps, not sf-gated") {
-    // fresh stamp with a measured bandwidth
-    val first = Bench.mergeBaseline(None, Seq(("qa", 1.0, 1.0)), Map.empty, "/d/sf0.1", Some(71234.6))
-    assert(Bench.parseBaselineMembw(first).contains(71235.0)) // rounded to whole MB/s
-    // a later stamp WITHOUT a measurement preserves the previous reference
-    val kept = Bench.mergeBaseline(Some(first), Seq(("qb", 1.0, 2.0)), Map.empty, "/d/sf0.1", None)
-    assert(Bench.parseBaselineMembw(kept).contains(71235.0))
-    // a later stamp WITH a measurement replaces it
-    val repl = Bench.mergeBaseline(Some(first), Seq(("qb", 1.0, 2.0)), Map.empty, "/d/sf0.1", Some(90000.0))
-    assert(Bench.parseBaselineMembw(repl).contains(90000.0))
-    // not sf-gated on read: bandwidth is a box property
-    assert(Bench.parseBaselineMembw(first).nonEmpty)
-    // absent on baselines that never stamped one
-    val bare = Bench.mergeBaseline(None, Seq(("qa", 1.0, 1.0)), Map.empty, "/d/sf0.1", None)
-    assert(Bench.parseBaselineMembw(bare).isEmpty)
-    // and the _membw header must not leak into the query-row parse
-    assert(!Bench.parseBaseline(first, "/d/sf0.1").contains("_membw"))
-  }
-
-  test("baseline walls: same _sf gating as the cpu parse, feeds wall_ratio") {
-    val prev = """{"_sf":{"dir":"/d/sf0.1"},"qa":{"wall_sec":1.25,"cpu_sec":10.0},"qb":{"cpu_sec":3.0}}"""
-    assert(Bench.parseBaselineWalls(prev.getBytes, "/d/sf0.1") == Map("qa" -> 1.25))
-    // scale mismatch disarms silently (cpu parse already warns)
-    assert(Bench.parseBaselineWalls(prev.getBytes, "/x/sf1").isEmpty)
-  }
-
-  test("host steal: /proc/stat cpu-line parse and the delta math behind steal_pct") {
-    // the r11 hot-box line shape (user nice system idle iowait irq softirq steal ...)
-    val line = "cpu  5268798 0 3222817 37507396 82778 0 23572 671258 0 0\ncpu0 1 2 3 4 5 6 7 8 0 0"
-    val parsed = Bench.parseCpuLine(line)
-    assert(parsed.contains((671258L, 5268798L + 3222817L + 37507396L + 82778L + 23572L + 671258L)))
-    // pre-2.6.11 kernels have no steal column: steal reads 0, total still sums
-    assert(Bench.parseCpuLine("cpu  10 0 20 70\n").contains((0L, 100L)))
-    // guest/guest_nice (fields 9-10) are ALREADY inside user/nice — summing
-    // them too would double-count and understate steal_pct on nested-guest
-    // hosts: total is user..steal only
-    assert(Bench.parseCpuLine("cpu  50 10 20 100 5 0 5 10 40 5\n").contains((10L, 200L)))
-    // no aggregate line / garbage fields: None (disarm, never guess)
-    assert(Bench.parseCpuLine("cpu0 1 2 3 4\n").isEmpty)
-    assert(Bench.parseCpuLine("cpu  x y z\n").isEmpty)
-    // the delta math the _run row emits: 1.4% of elapsed jiffies
-    val (s0, t0) = (1000L, 100000L)
-    val (s1, t1) = (1000L + 140L, 100000L + 10000L)
-    assert(math.abs(100.0 * (s1 - s0) / (t1 - t0) - 1.4) < 1e-9)
-  }
-
-  test("freshness: source fingerprints are content-determined and readable for every owner") {
-    val root = java.nio.file.Paths.get(".")
-    val owners = SparkEntry.queryOwners ++ BenchExtras.owners
-    // every registered row must fingerprint from the repo root — a rename
-    // that breaks declared ownership fails here, not silently at bench time
-    val missing = owners.collect { case (n, fs) if Bench.sourceFingerprint(fs, root).isEmpty => n -> fs }
-    assert(missing.isEmpty, s"unreadable owner files: ${missing.take(5)}")
-    // content-determined: same files -> same sha; different file set -> different sha
-    val a = Bench.sourceFingerprint(Seq("src/main/scala/graft/Bench.scala"), root)
-    val b = Bench.sourceFingerprint(Seq("src/main/scala/graft/Bench.scala"), root)
-    val c = Bench.sourceFingerprint(Seq("src/main/scala/graft/Tables.scala"), root)
-    assert(a == b && a.isDefined && a != c)
-    // unreadable member -> None (disarm, never guess)
-    assert(Bench.sourceFingerprint(Seq("src/main/scala/graft/Nope.scala"), root).isEmpty)
-  }
-
-  test("freshness: an infra-file edit changes EVERY row's fingerprint") {
-    // the SCALING.md r14 finding: a Tables.scala edit changed every
-    // similarity plan and marked nothing stale. currentShaFor folds the
-    // global infra files into each row's sha, so a shared-helper edit
-    // stales the whole registry instead of silently invalidating it.
-    val root = java.nio.file.Files.createTempDirectory("graft-infra")
-    def write(rel: String, body: String): Unit = {
-      val p = root.resolve(rel)
-      java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, body.getBytes)
-    }
-    write("infra/Tables.scala", "object Tables { val v = 1 }")
-    write("ops/A.scala", "object A")
-    write("ops/B.scala", "object B")
-    val owners = Map("qa" -> Seq("ops/A.scala"), "qb" -> Seq("ops/B.scala"))
-    val infra  = Seq("infra/Tables.scala")
-    val before = Bench.currentShaFor(owners, root, infra)
-    assert(before.keySet == Set("qa", "qb") && before("qa") != before("qb"))
-    // an owner-file edit stales only its own row...
-    write("ops/A.scala", "object A { val changed = true }")
-    val ownerEdit = Bench.currentShaFor(owners, root, infra)
-    assert(ownerEdit("qa") != before("qa") && ownerEdit("qb") == before("qb"))
-    // ...an INFRA edit stales every row
-    write("infra/Tables.scala", "object Tables { val v = 2 }")
-    val infraEdit = Bench.currentShaFor(owners, root, infra)
-    assert(infraEdit("qa") != ownerEdit("qa") && infraEdit("qb") != ownerEdit("qb"))
-    // unreadable infra disarms everything (same contract as owner files)
-    assert(Bench.currentShaFor(owners, root, Seq("infra/Nope.scala")).isEmpty)
-    // the real InfraFiles resolve from the repo root
-    val repoRoot = java.nio.file.Paths.get(".")
-    assert(Bench.InfraFiles.forall(f =>
-      java.nio.file.Files.isReadable(repoRoot.resolve(f))))
-  }
-
-  test("quiet gate: a flicker phase cannot fire the gate on one high instant") {
-    // r13 flicker phase: bandwidth flips 62<->100 GB/s on second timescales.
-    // Scripted series against consecutive=3: two isolated highs and a
-    // two-poll streak must NOT fire; only three in a row may.
-    def run(series: Seq[Option[Double]], consecutive: Int, maxWaitSecs: Long = 3600): Boolean = {
-      val it = series.iterator
-      Bench.waitForQuietWindowOver(
-        () => if (it.hasNext) it.next() else Some(0.0), // exhausted -> busy forever
-        () => Some((0L, 1L)),                            // steal 0: membw decides
-        quietRef = Some(100000.0),
-        maxWaitSecs = maxWaitSecs,
-        pollSecs = 0,
-        consecutive = consecutive,
-        stealWindowMs = 1)
-    }
-    val hi = Some(100000.0); val lo = Some(62000.0)
-    // streaks of 1 and 2 between lows: never fires, deadline path returns false
-    assert(!run(Seq(hi, lo, hi, hi, lo, hi, lo), consecutive = 3, maxWaitSecs = 0))
-    // three consecutive quiet polls fire the gate
-    assert(run(Seq(lo, hi, hi, hi), consecutive = 3))
-    // consecutive=1 preserves the old single-poll behavior
-    assert(run(Seq(lo, lo, hi), consecutive = 1))
-    // invalid probe samples are busy, not quiet (never provably quiet)
-    assert(!run(Seq(None, None, None), consecutive = 1, maxWaitSecs = 0))
-  }
-
-  test("quiet gate: one poll verdict — membw threshold, steal threshold, disarmed channels") {
-    val ref = Some(100000.0)
-    // membw at/above 85% of the reference is quiet; below is busy
-    assert(Bench.quietPoll(Some(85000.0), Some(0.0), ref))
-    assert(!Bench.quietPoll(Some(84999.0), Some(0.0), ref))
-    // steal at/above the cap flips busy even at full bandwidth
-    assert(!Bench.quietPoll(Some(120000.0), Some(0.25), ref))
-    assert(Bench.quietPoll(Some(120000.0), Some(0.249), ref))
-    // no envelope yet (first stamp on a new box): steal-only gate
-    assert(Bench.quietPoll(Some(1.0), Some(0.0), None))
-    assert(!Bench.quietPoll(Some(1.0), Some(0.5), None))
-    // unreadable /proc/stat disarms the steal channel (membw-only)
-    assert(Bench.quietPoll(Some(100000.0), None, ref))
-    // invalid membw sample: not provably quiet, regardless of steal
-    assert(!Bench.quietPoll(None, Some(0.0), ref))
-  }
-
-  test("stale_sha_rows: every sha-mismatched baselined row is visible, flagged or not") {
-    val base = Map(
-      "q37" -> Bench.BaselineRow(2.852, None, Some("aaaa")),  // mismatch, UNDER any flag bar
-      "q39" -> Bench.BaselineRow(10.016, None, Some("bbbb")), // match
-      "q61" -> Bench.BaselineRow(16.269, None, Some("cccc")), // mismatch
-      "q40" -> Bench.BaselineRow(0.212, None, None))          // legacy row, no sha: never stale
-    val cur = Map("q37" -> "XXXX", "q39" -> "bbbb", "q61" -> "YYYY")
-    // q40 has no recorded sha and q39 matches; q37/q61 mismatch regardless of cpu
-    assert(Bench.staleShaRows(base, cur) == Seq("q37", "q61"))
-    // a row whose current fingerprint is unavailable (unreadable owners) is
-    // not PROVABLY stale - it must not appear
-    assert(Bench.staleShaRows(Map("q1" -> Bench.BaselineRow(1.0, None, Some("z"))), Map.empty).isEmpty)
-    // contrast with the flagged-only channel: the same mismatched q37 at a
-    // healthy cpu appears in stale_sha_rows but NOT in cpuDirtyOrStale's
-    // stale list (this asymmetry is the r13 q37/q39 blind spot)
-    val (dirty, staleFlagged) = Bench.cpuDirtyOrStale(Seq("q37" -> 2.9), base, cur)
-    assert(dirty.isEmpty && staleFlagged.isEmpty)
+    // the warm-up-bimodal rows (the ones BENCH_BASELINE.json marks with a
+    // cpu_lo) burn one unrecorded rep so their measured median reads the
+    // warm regime; every name must stay a registered query, or a rename
+    // would silently drop its warm-up
+    assert(Bench.WarmupRows == Set(
+      "q100_embedding_drift", "q103_bm25_retrieval", "q110_hashed_classifier",
+      "q119_semdedup", "q125_rollup_maintenance", "q23_iso_validate", "q60_knn_brute"))
+    val unregistered = Bench.WarmupRows.filterNot(SparkEntry.queries.contains)
+    assert(unregistered.isEmpty, s"warm-up rows missing from the registry: $unregistered")
   }
 }
