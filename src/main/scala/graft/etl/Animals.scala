@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -24,25 +24,7 @@ object AnimalSchemas {
     StructField("total_pages", IntegerType),
     StructField("items", ArrayType(baseAnimal))
   ))
-
-  /** Detail record, input to the transform (models.py:29-33). */
-  val animalDetail: StructType = StructType(Seq(
-    StructField("id", LongType),
-    StructField("name", StringType),
-    StructField("friends", StringType),
-    StructField("born_at", LongType)
-  ))
 }
-
-/** Typed record mirroring `AnimalDetail` for Dataset-based stages. */
-case class AnimalDetail(id: Long, name: String, friends: Option[String], born_at: Option[Long])
-
-/** Transformed record (`AnimalTransformed`, models.py:36-40). `born_at` is an
-  * Option — the reference omits the key when invalid; Spark rows model that
-  * as NULL, and key-omission is reproduced only at a JSON sink
-  * (`to_json(..., ignoreNullFields=true)`).
-  */
-case class AnimalTransformed(id: Long, name: String, friends: Seq[String], born_at: Option[String])
 
 /** The reference's transform stage (P1-P5, F1-F3) as a narrow, fully
   * codegen'd DataFrame => DataFrame — one pipelined pass, no barrier, unlike
@@ -65,48 +47,21 @@ object AnimalsTransform {
 
   /** P1 projection + F1-F3 scalar transforms + P3/P4/P5 guards. `asOf` pins
     * the reference's wall-clock "future" cutoff for reproducibility.
-    * Attaches an `observe("quality", ...)` metric mirroring the reference's
-    * invalid-born_at counter (pipeline.py:66,82-83).
-    */
-  def transform(details: DataFrame, asOf: Column): DataFrame =
-    details
-      .withColumn("born_iso", epochToIso8601Utc(col("born_at"), asOf))
-      .observe(
-        "quality",
-        count(when(col("born_at").isNotNull && col("born_iso").isNull, 1)).as("invalid_born_at"),
-        count(lit(1)).as("rows")
-      )
+    * Attaches the reference's invalid-born_at counter (pipeline.py:66,82-83)
+    * as the named metric "quality", or to `observation` when one is given,
+    * so the caller can block on it after its action: the engine-side
+    * replacement for the reference's printed counter. */
+  def transform(details: DataFrame, asOf: Column, observation: Option[Observation] = None): DataFrame = {
+    val withIso = details.withColumn("born_iso", epochToIso8601Utc(col("born_at"), asOf))
+    val invalid = count(when(col("born_at").isNotNull && col("born_iso").isNull, 1)).as("invalid_born_at")
+    val rows    = count(lit(1)).as("rows")
+    observation
+      .fold(withIso.observe("quality", invalid, rows))(withIso.observe(_, invalid, rows))
       .select(
         col("id").cast(LongType).as("id"),
         col("name"),
         splitFriends(col("friends")).as("friends"),
         col("born_iso").as("born_at")
       )
-
-  /** Error-row filter (P2): drop rows whose keyed lookup failed (null id). */
-  def dropFailedLookups(details: DataFrame): DataFrame =
-    details.na.drop(Seq("id"))
-
-  /** [[transform]] with an [[org.apache.spark.sql.Observation]] handle so
-    * callers can block on the quality metrics after their action — the
-    * engine-side replacement for the reference's printed counter
-    * (pipeline.py:82-83). */
-  def transformObserved(
-      details: DataFrame,
-      asOf: Column,
-      obs: org.apache.spark.sql.Observation
-  ): DataFrame =
-    details
-      .withColumn("born_iso", epochToIso8601Utc(col("born_at"), asOf))
-      .observe(
-        obs,
-        count(when(col("born_at").isNotNull && col("born_iso").isNull, 1)).as("invalid_born_at"),
-        count(lit(1)).as("rows")
-      )
-      .select(
-        col("id").cast(LongType).as("id"),
-        col("name"),
-        splitFriends(col("friends")).as("friends"),
-        col("born_iso").as("born_at")
-      )
+  }
 }

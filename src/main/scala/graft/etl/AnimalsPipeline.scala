@@ -1,25 +1,51 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.{Partition, SparkContext, TaskContext}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sinks.HttpBatchSink
-import graft.sources.{HttpTimeouts, RestEnrich, RetryPolicy}
+import graft.sources.{AnimalsJson, HttpTimeouts, HttpTransport, RestEnrich, RetryingHttpClient, RetryPolicy}
 
 /** The reference's full E-T-L composed Spark-first
   * (`/root/reference/src/animals_etl/cli.py:40-43`): paginated scan →
   * keyed-lookup enrichment → transform → batched POST. Unlike the
   * reference's four materialization barriers, scan → enrich → transform is
-  * one pipelined narrow plan; only the sink action executes it.
+  * one pipelined narrow plan; only the sink action executes it. Every REST
+  * stage builds its clients from the run's one [[RetryPolicy]] and
+  * [[HttpTimeouts]], as the reference's CLI does with its one client.
   */
 object AnimalsPipeline {
 
   final case class Result(postedBatches: Long)
 
-  def listed(spark: SparkSession, transportClass: String): DataFrame =
-    spark.read
-      .format("graft.sources.RestAnimalsSource")
-      .option("transport", transportClass)
-      .load()
+  private val ListingSchema: StructType = StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("name", StringType, nullable = true),
+    StructField("born_at", LongType, nullable = true)
+  ))
+
+  def pagePath(page: Int): String = s"/animals/v1/animals?page=$page"
+
+  /** The paginated listing scan (S1, the reference's
+    * `src/animals_etl/pipeline.py:8-29`) with one partition per page.
+    * When the first action runs, the driver GETs page 1 to learn
+    * `total_pages` (pipeline.py:13-14's "first page sync"), once per
+    * listing; each task then GETs its own page on a client of its own. So
+    * in-flight page GETs are bounded by task slots (the semaphore analog,
+    * R5), and every action re-reads every page, page 1 included. */
+  def listed(
+      spark: SparkSession,
+      transportClass: String,
+      policy: RetryPolicy = RetryPolicy(),
+      timeouts: HttpTimeouts = HttpTimeouts()
+  ): DataFrame = {
+    val newClient = () => new RetryingHttpClient(HttpTransport.byName(transportClass), policy, timeouts)
+    GraftBridge.internalCreateDataFrame(spark, new PageRDD(spark.sparkContext, newClient), ListingSchema)
+  }
 
   def run(
       spark: SparkSession,
@@ -30,7 +56,7 @@ object AnimalsPipeline {
       policy: RetryPolicy = RetryPolicy(),
       timeouts: HttpTimeouts = HttpTimeouts()
   ): Result = {
-    val ids         = listed(spark, transportClass)
+    val ids         = listed(spark, transportClass, policy, timeouts)
     val details     = RestEnrich.details(ids, transportClass, concurrency, policy, timeouts)
     val transformed = AnimalsTransform.transform(details, asOf)
     Result(HttpBatchSink.post(transformed, transportClass, batchSize, policy, timeouts))
@@ -39,4 +65,22 @@ object AnimalsPipeline {
   /** Env/CLI-configured entry point — the reference's `cli.py` run shape. */
   def run(spark: SparkSession, transportClass: String, asOf: Column, config: EtlConfig): Result =
     run(spark, transportClass, asOf, config.concurrency, config.batchSize, config.policy, config.timeouts)
+
+  /** Listing rows, one partition per page. Spark asks an RDD for its
+    * partitions once, so the page-1 probe runs once per listing, and only
+    * when an action first needs it; it keeps a floor of one page. Rows are
+    * built as InternalRows, so tasks need no Row encoder. */
+  private final class PageRDD(sc: SparkContext, newClient: () => RetryingHttpClient)
+      extends RDD[InternalRow](sc, Nil) {
+    override protected def getPartitions: Array[Partition] = {
+      val pages = math.max(1, AnimalsJson.parsePage(newClient().get(pagePath(1)).body).totalPages)
+      Array.tabulate[Partition](pages)(PagePartition)
+    }
+
+    override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] =
+      AnimalsJson.parsePage(newClient().get(pagePath(split.index + 1)).body).items.iterator
+        .map(a => InternalRow(a.id, UTF8String.fromString(a.name), a.bornAt.map(Long.box).orNull))
+  }
+
+  private final case class PagePartition(index: Int) extends Partition
 }

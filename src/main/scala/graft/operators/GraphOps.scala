@@ -57,27 +57,12 @@ object GraphOps extends QueryModule {
 
   /** q77: [[Iters]] PageRank power iterations over [[edges]], returning
     * (node, rank, out_degree, in_degree) for every node. */
-  def pageRank(s: SparkSession, dir: String, iters: Int = Iters): DataFrame =
-    pageRankOver(edges(s, dir), iters)
+  def pageRank(s: SparkSession, dir: String): DataFrame =
+    pageRankOver(edges(s, dir))
 
   /** The operator proper, over any (src, dst) edge set — fixture-testable
-    * and the entry point for callers with a real edge table.
-    *
-    * `earlyStopWhenStable` breaks out of the power iteration as soon as a
-    * round reproduces the previous round's ranks exactly — sound because
-    * ranks are INTEGER (floor-scaled), so "unchanged" is an exact fixpoint
-    * and every further round is the identity; output is bit-identical to
-    * the fixed-round contract the oracle unrolls. Off in the registered
-    * query (the gate plan stays fixed-shape); a pure wall-time win in
-    * production, where convergence is uneven across a 1000-executor run
-    * and the stability probe is one cheap job over the skinny
-    * (node, rank) checkpoint. */
-  def pageRankOver(edgeDf: DataFrame, iters: Int = Iters, earlyStopWhenStable: Boolean = false): DataFrame =
-    pageRankRuns(edgeDf, iters, earlyStopWhenStable)._1
-
-  /** [[pageRankOver]] exposing the number of iterations executed, for
-    * specs pinning the early-exit. */
-  def pageRankRuns(edgeDf: DataFrame, iters: Int = Iters, earlyStopWhenStable: Boolean = false): (DataFrame, Int) = {
+    * and the entry point for callers with a real edge table. */
+  def pageRankOver(edgeDf: DataFrame): DataFrame = {
     // One pass builds the reusable graph artifacts; cache both — every
     // iteration re-reads them (cluster analog: a bucketed edge table).
     val e = edgeDf.cache()
@@ -91,16 +76,14 @@ object GraphOps extends QueryModule {
 
     try {
       var ranks = nodes.withColumn("rank", lit(RankScale))
-      var it = 0
-      var stable = false
-      while (it < iters && !stable) {
+      for (_ <- 1 to Iters) {
         val contribs = e
           .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
           .join(outdeg, Seq("src"))
           .select(col("dst"), call_function("div", col("rank"), col("outdeg")).as("contrib"))
           .groupBy("dst")
           .agg(sum(col("contrib")).as("mass"))
-        val next = nodes
+        ranks = nodes
           .join(contribs.withColumnRenamed("dst", "node"), Seq("node"), "left")
           .select(
             col("node"),
@@ -109,17 +92,8 @@ object GraphOps extends QueryModule {
               .as("rank")
           )
           .localCheckpoint() // truncate the per-round lineage (q38's pattern)
-        if (earlyStopWhenStable)
-          // exact-integer fixpoint probe on the skinny checkpoints — once a
-          // round is the identity, every later round is too
-          stable = next
-            .join(ranks.withColumnRenamed("rank", "prev_rank"), Seq("node"))
-            .filter(col("rank") =!= col("prev_rank"))
-            .isEmpty
-        ranks = next
-        it += 1
       }
-      val out = ranks
+      ranks
         .join(outdeg.withColumnRenamed("src", "node"), Seq("node"), "left")
         .join(indeg.withColumnRenamed("dst", "node"), Seq("node"), "left")
         .select(
@@ -131,7 +105,6 @@ object GraphOps extends QueryModule {
         // materialize the (nodes-sized) result before the finally releases
         // the caches it was built from
         .localCheckpoint()
-      (out, it)
     } finally {
       // release the loop's caches on EVERY path — an exception mid-iteration
       // would otherwise leak three cached DataFrames for the session lifetime
@@ -636,8 +609,8 @@ object GraphOps extends QueryModule {
     * MONOTONICALLY, so an unchanged survivor COUNT means an unchanged set
     * — a fixpoint every later round reproduces — and peeling can stop.
     * Output is bit-identical to the fixed-round contract; the probe is a
-    * count on the checkpointed skinny survivor table. Off in the
-    * registered query. */
+    * count on the checkpointed skinny survivor table. On in the registered
+    * query ([[kCore]]); off by default, which runs all `rounds`. */
   def kCoreOver(
       edgeDf: DataFrame,
       k: Int = CoreK,

@@ -132,7 +132,7 @@ final class RetryingHttpClient(
 
 object HttpTransport {
   /** Instantiate a transport by FQN (no-arg constructor) — the executor-side
-    * entry point for DSv2 partitions and sink tasks. */
+    * entry point for listing, lookup and sink tasks. */
   def byName(className: String): HttpTransport =
     Class.forName(className).getDeclaredConstructor().newInstance().asInstanceOf[HttpTransport]
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.Quarantine
-import graft.sources.{FatalStatusException, HttpResponse, HttpTimeouts, HttpTransport, Layout, RestAnimalsSource, RetriesExhaustedException, RetryingHttpClient, RetryPolicy}
+import graft.sources.{FatalStatusException, HttpResponse, HttpTimeouts, HttpTransport, Layout, RetriesExhaustedException, RetryingHttpClient, RetryPolicy}
 
 /** Storage layout, quarantine channel, SQL extensions, streaming sink. */
 class InfraSpec extends AnyFunSuite {
@@ -180,7 +180,7 @@ class InfraSpec extends AnyFunSuite {
     } finally spark.experimental.extraOptimizations = Nil
   }
 
-  test("R6: client hands concrete timeouts to the transport; option parsing") {
+  test("R6: client hands concrete timeouts to the transport") {
     class RecordingTransport extends HttpTransport {
       var seen: Option[HttpTimeouts] = None
       override def configure(t: HttpTimeouts): Unit = seen = Some(t)
@@ -194,10 +194,6 @@ class InfraSpec extends AnyFunSuite {
     val d = new RecordingTransport
     new RetryingHttpClient(d).get("/x")
     assert(d.seen.contains(HttpTimeouts(5000, 30000)))
-    assert(
-      RestAnimalsSource.timeoutsFromOptions(Map("timeout.connect.ms" -> "900")) ==
-        HttpTimeouts(900, 30000)
-    )
   }
 
   test("R6: a timing-out transport is retried, then surfaced as exhausted") {

@@ -62,6 +62,25 @@ class FlakyTransport extends HttpTransport {
     else HttpResponse(200, """{"ok": 1}""")
 }
 
+/** The listing with page 2 down: every page-2 GET answers 503. */
+object Page2DownTransport { val page2Gets = new AtomicInteger(0) }
+class Page2DownTransport extends FakeAnimalsTransport {
+  override def request(method: String, path: String, body: Option[String], headers: Map[String, String]): HttpResponse =
+    if (path == AnimalsPipeline.pagePath(2)) { Page2DownTransport.page2Gets.incrementAndGet(); HttpResponse(503, "down") }
+    else super.request(method, path, body, headers)
+}
+
+/** Records each request with the timeouts its client configured. */
+object TimeoutRecordingTransport { val seen = new ConcurrentLinkedQueue[(String, HttpTimeouts)]() }
+class TimeoutRecordingTransport extends FakeAnimalsTransport {
+  private var timeouts: HttpTimeouts = _
+  override def configure(t: HttpTimeouts): Unit = timeouts = t
+  override def request(method: String, path: String, body: Option[String], headers: Map[String, String]): HttpResponse = {
+    TimeoutRecordingTransport.seen.add(s"$method $path" -> timeouts)
+    super.request(method, path, body, headers)
+  }
+}
+
 object CountingTransport { val calls = new AtomicInteger(0) }
 class Failing422Transport extends HttpTransport {
   override def request(m: String, p: String, b: Option[String], h: Map[String, String]): HttpResponse = {
@@ -76,7 +95,7 @@ class RestPipelineSpec extends AnyFunSuite {
   private val asOf      = lit("2026-01-01 00:00:00").cast(TimestampType)
   private val fastPolicy = RetryPolicy(retries = 3, baseDelayMs = 1, capDelayMs = 2, jitterMs = 1)
 
-  test("paginated DSv2 source lists all ids across pages") {
+  test("paginated listing lists all ids across pages") {
     val ids = AnimalsPipeline.listed(spark, transport).select("id").collect().map(_.getLong(0)).toSet
     assert(ids == Set(1L, 2L, 3L)) // set-equality, order-insensitive (test_pipeline.py:35-40)
   }
@@ -107,6 +126,30 @@ class RestPipelineSpec extends AnyFunSuite {
     assert(listing.collect().length == 3 && listing.collect().length == 3)
     val calls = FakeAnimalsTransport.pageCalls.asScala.map { case (p, n) => p -> n.get }.toMap
     assert(calls == Map(1 -> 3, 2 -> 2)) // page 1: one probe, then one read per action
+  }
+
+  test("a run's retry policy bounds the page GETs: page 2 gives up after its attempts") {
+    Page2DownTransport.page2Gets.set(0)
+    val policy = RetryPolicy(retries = 2, baseDelayMs = 1, capDelayMs = 2, jitterMs = 1)
+    val e = intercept[Exception](
+      AnimalsPipeline.run(spark, classOf[Page2DownTransport].getName, asOf, policy = policy))
+    val exhausted = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case r: RetriesExhaustedException => r }
+    assert(exhausted.exists(r => r.attempts == 2 && r.path == AnimalsPipeline.pagePath(2)), e)
+    assert(Page2DownTransport.page2Gets.get() == 2)
+  }
+
+  test("every REST stage of a run gets the run's timeouts, page GETs included") {
+    TimeoutRecordingTransport.seen.clear()
+    val timeouts = HttpTimeouts(1234, 5678)
+    AnimalsPipeline.run(spark, classOf[TimeoutRecordingTransport].getName, asOf,
+      concurrency = 2, batchSize = 2, policy = fastPolicy, timeouts = timeouts)
+    val seen = TimeoutRecordingTransport.seen.asScala.toSeq
+    val requests = seen.map(_._1)
+    assert(requests.count(_.startsWith("GET /animals/v1/animals?page=")) == 3) // page 1 twice, page 2 once
+    assert(requests.count(_.startsWith("GET /animals/v1/animals/")) == 3)
+    assert(requests.count(_.startsWith("POST ")) == 2)
+    assert(seen.forall(_._2 == timeouts), seen)
   }
 
   test("transform output matches the reference's expected records") {
@@ -166,7 +209,7 @@ class RestPipelineSpec extends AnyFunSuite {
       (4L, "D", "", Some(-5L))                 // negative → invalid
     ).toDF("id", "name", "friends", "born_at")
     val obs = org.apache.spark.sql.Observation()
-    val out = graft.etl.AnimalsTransform.transformObserved(details, asOf, obs)
+    val out = graft.etl.AnimalsTransform.transform(details, asOf, Some(obs))
     out.collect()
     val m = obs.get
     assert(m("invalid_born_at") == 2L)

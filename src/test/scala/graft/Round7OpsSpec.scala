@@ -68,18 +68,6 @@ class Round7OpsSpec extends AnyFunSuite {
     assert(row.getAs[Long]("touched_nodes") == 4L)
   }
 
-  test("q77 early-exit: exact integer fixpoint halts the power iteration, output identical") {
-    import spark.implicits._
-    // a 2-cycle is at its fixpoint immediately: rank = Teleport +
-    // floor(0.85·RankScale) = RankScale, so round 1 is already the identity
-    val cyc = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
-    val (fast, fastRounds) = graft.operators.GraphOps.pageRankRuns(cyc, iters = 5, earlyStopWhenStable = true)
-    val (full, fullRounds) = graft.operators.GraphOps.pageRankRuns(cyc, iters = 5)
-    assert(fullRounds == 5, "flag off must honor the fixed-round contract")
-    assert(fastRounds < 5, s"expected an early stop, ran $fastRounds rounds")
-    assert(fast.collect().toSet == full.collect().toSet, "early-exit output must be bit-identical")
-  }
-
   test("q139 early-exit: unchanged survivor count halts the peel, output identical") {
     import spark.implicits._
     // triangle {1,2,3} with a 2-edge tail: k=2 peeling drains the tail in
