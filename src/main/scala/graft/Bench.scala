@@ -389,7 +389,6 @@ object Bench {
         results.map(r => (r.name, r.wall, r.cpu)),
         SparkEntry.queries.contains,
         reps, contended, dirty.size, sfDir))
-    graft.operators.FuzzyDedup.releaseCaches(spark)
     spark.stop()
   }
 }

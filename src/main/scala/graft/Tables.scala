@@ -106,8 +106,8 @@ object Tables {
   private val splitEstimates = new java.util.concurrent.ConcurrentHashMap[String, Long]()
 
   /** Row count of a table, cached per (dir, name) for the JVM lifetime —
-    * for size-gated plan decisions (e.g. q113's checkpoint-vs-persist
-    * branch) that would otherwise schedule a count job per invocation.
+    * for size guards and sizing knobs that would otherwise schedule a
+    * count job per invocation.
     * The count itself is parquet-footer metadata (no column IO), but on a
     * real corpus it still runs a task per input split; the test data is
     * read-only per round, so caching is sound.
@@ -119,19 +119,11 @@ object Tables {
     * read a stale count and could admit an oversized corpus it exists to
     * refuse. The engine's ingestion paths never append under a Tables
     * dir (streaming state lives in warehouse tables), so the assumption
-    * holds everywhere today; a future mutable-corpus caller must either
-    * call [[invalidateRowCounts]] on append or count directly. */
+    * holds everywhere today. A caller whose corpus can grow must not use
+    * this cache: it counts directly. */
   def rowCountCached(s: SparkSession, dir: String, name: String): Long =
     rowCounts.computeIfAbsent(s"$dir/$name", _ => apply(s, dir, name).count())
   private val rowCounts = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-
-  /** Invalidation hook for the read-only-per-JVM assumption above: a caller
-    * that appends under `dir` drops that dir's cached counts (guards and
-    * sizing knobs re-count on next use). */
-  def invalidateRowCounts(dir: String): Unit = {
-    val it = rowCounts.keySet().iterator()
-    while (it.hasNext) if (it.next().startsWith(s"$dir/")) it.remove()
-  }
 
   /** Row count of the FILTERED embeddings view — the count knob sizing
     * (autoSemK/autoLshBits/autoEmbBits) must see, since the queries only

@@ -6,44 +6,12 @@ import org.apache.spark.sql.types._
 
 import graft.functions.FaunaFunctions._
 
-/** Schemas for the animals pipeline, from the reference's TypedDicts
-  * (`/root/reference/src/animals_etl/models.py:17-42`). All fields nullable —
-  * the reference declares every field optional at runtime (`total=False`).
-  */
-object AnimalSchemas {
-  /** Listing item (models.py:17-20). */
-  val baseAnimal: StructType = StructType(Seq(
-    StructField("id", LongType),
-    StructField("name", StringType),
-    StructField("born_at", LongType)
-  ))
-
-  /** Paginated page envelope (models.py:23-26) — nested array-of-struct. */
-  val animalPage: StructType = StructType(Seq(
-    StructField("page", IntegerType),
-    StructField("total_pages", IntegerType),
-    StructField("items", ArrayType(baseAnimal))
-  ))
-}
-
 /** The reference's transform stage (P1-P5, F1-F3) as a narrow, fully
   * codegen'd DataFrame => DataFrame — one pipelined pass, no barrier, unlike
   * the reference's full materialization between stages
   * (`/root/reference/src/animals_etl/pipeline.py:57-86`).
   */
 object AnimalsTransform {
-
-  /** Flatten a page envelope into one row per listing item with a long `id`
-    * (S3, pipeline.py:15,24): explode(items) + cast.
-    */
-  def flattenPages(pages: DataFrame): DataFrame =
-    pages
-      .select(explode(col("items")).as("item"))
-      .select(
-        col("item.id").cast(LongType).as("id"),
-        col("item.name").as("name"),
-        col("item.born_at").cast(LongType).as("born_at")
-      )
 
   /** P1 projection + F1-F3 scalar transforms + P3/P4/P5 guards. `asOf` pins
     * the reference's wall-clock "future" cutoff for reproducibility.

@@ -783,178 +783,16 @@ object FuzzyDedup extends QueryModule {
     * verify. The corpus never shuffles for candidate generation; verify
     * joins are candidate-sized. Per-source accounting is the actionable
     * report (which crawl source leaks the benchmark). */
-  /** Above this corpus size [[nearContamination]] swaps its eager
-    * `localCheckpoint` (non-reliable executor-local blocks: one executor
-    * loss fails the job, and the materialized shingle state is
-    * corpus-sized) for a lineage-preserving `persist(MEMORY_AND_DISK)` —
-    * still one shingle pass on first materialization, but a lost
-    * partition recomputes from the scan instead of killing the run.
-    * Override with `spark.graft.nearContamination.checkpointMaxRows`. */
-  val NearCheckpointMaxRows = 2000000L
-  val NearCheckpointConf    = "spark.graft.nearContamination.checkpointMaxRows"
-  /** The contamination screen's (doc_id, source, shingles) projection —
-    * deterministic construction from (session, dir), so a rebuilt frame is
-    * plan-canonically identical to the one [[nearPersisted]] cached (the
-    * property the weak-value cache leans on). */
-  private def nearProjected(s: SparkSession, dir: String): DataFrame =
-    Tables
-      .documentsDistributed(s, dir)
-      .select(col("doc_id"), col("source"), Dedup.shingles(col("text")).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-
-  /** One persisted corpus handle per SESSION — a size-1 LRU: screening a
-    * second dir in the same session unpersists the first, so a sweep over
-    * many corpora no longer accretes one corpus-sized persist per dir, and
-    * [[releaseCaches]] drops the entry outright. Keyed WEAKLY by the
-    * session object itself: r9 keyed a never-evicting map by
-    * `System.identityHashCode(session)`, which (a) is a hash, not an
-    * identity — two live sessions can collide and share one session-bound
-    * frame — and (b) retained entries for stopped sessions for the JVM
-    * lifetime.
-    *
-    * The VALUE holds the frame through a `WeakReference` because a
-    * `DataFrame` strongly references its own `SparkSession`
-    * (`queryExecution.sparkSession`), and the JDK `WeakHashMap` contract
-    * voids key eviction when a value strongly refers to its own key — r10
-    * stored the frame directly, so the advertised dies-with-its-session
-    * eviction was unreachable. A GC-cleared handle is re-wrapped
-    * plan-canonically ([[nearProjected]]): the shared `CacheManager` keys
-    * cached data by canonical plan, not by wrapper object, so a rebuilt
-    * wrapper reads the same storage and a re-`persist` dedupes instead of
-    * double-caching (the `clearCache()` re-persist path, reused). Stopped
-    * sessions' entries are additionally purged eagerly on every access —
-    * their blocks died with the context; only the map row lingers. */
-  private val nearPersistCache =
-    new java.util.WeakHashMap[SparkSession, (String, java.lang.ref.WeakReference[DataFrame])]()
-
-  /** Drop entries whose session is dead (callers hold the lock). The
-    * predicate is a parameter because the production condition —
-    * `sparkContext.isStopped` — cannot be arranged in a spec without
-    * killing the suite's one-per-JVM context: the purge LOGIC is spec'd
-    * through an identity predicate (FuzzyDedupSpec), the one-line wiring
-    * to `isStopped` stays here. No unpersist on the removed entries: a
-    * stopped context already dropped its blocks; only the map row
-    * lingers. */
-  private def purgeDeadSessions(dead: SparkSession => Boolean): Unit = {
-    val it = nearPersistCache.entrySet().iterator()
-    while (it.hasNext) if (dead(it.next().getKey)) it.remove()
-  }
-
-  /** Drop entries of stopped sessions (callers hold the lock). */
-  private def purgeStoppedSessions(): Unit =
-    purgeDeadSessions(_.sparkContext.isStopped)
-
-  /** Test hook: run the purge under the lock with an arbitrary
-    * dead-session predicate (see [[purgeDeadSessions]]). */
-  private[graft] def nearCachePurgeForTest(dead: SparkSession => Boolean): Unit =
-    nearPersistCache.synchronized(purgeDeadSessions(dead))
-
-  /** The entry's frame, re-wrapped from (session, dir) when the weak ref
-    * was GC-cleared. Plan-canonical reconstruction reaches the same
-    * CacheManager entry, so storage-level reads and unpersists on the
-    * rebuilt wrapper hit the original persist. None when the dir can no
-    * longer even be analyzed (deleted between screens) — nothing readable
-    * is left to release. Callers hold the lock. */
-  private def entryFrame(
-      s: SparkSession,
-      d: String,
-      ref: java.lang.ref.WeakReference[DataFrame]): Option[DataFrame] =
-    Option(ref.get).orElse(scala.util.Try(nearProjected(s, d)).toOption)
-
-  private def nearPersisted(s: SparkSession, dir: String, projected: DataFrame): DataFrame =
-    nearPersistCache.synchronized {
-      purgeStoppedSessions()
-      val cached = Option(nearPersistCache.get(s))
-      cached match {
-        case Some((d, ref)) if d == dir =>
-          Option(ref.get).filter(_.storageLevel != org.apache.spark.storage.StorageLevel.NONE) match {
-            case Some(df) => df
-            case None     =>
-              // wrapper GC'd or clearCache()'d: re-persist; the CacheManager
-              // dedupes by canonical plan, so a still-cached build is reused
-              val df = projected.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-              nearPersistCache.put(s, (dir, new java.lang.ref.WeakReference(df)))
-              df
-          }
-        case prev =>
-          prev.foreach { case (d, ref) =>
-            entryFrame(s, d, ref).foreach(_.unpersist(blocking = false))
-          }
-          val df = projected.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          nearPersistCache.put(s, (dir, new java.lang.ref.WeakReference(df)))
-          df
-      }
-    }
-
-  /** Test hook: the session's current (dir, persisted frame) entry; a
-    * GC-cleared frame is re-wrapped plan-canonically, so storage-level
-    * assertions are unaffected by wrapper lifetime. */
-  private[graft] def nearCacheEntry(s: SparkSession): Option[(String, DataFrame)] =
-    nearPersistCache.synchronized {
-      Option(nearPersistCache.get(s)).map { case (d, ref) =>
-        (d, Option(ref.get).getOrElse(nearProjected(s, d)))
-      }
-    }
-
-  /** Test hook: live entry count (stale WeakHashMap keys expunged by
-    * size()) — the GC-eviction spec's observable. */
-  private[graft] def nearCacheSize: Int =
-    nearPersistCache.synchronized(nearPersistCache.size)
-
-  /** Test hook: the raw map, for the no-strong-path reachability spec. */
-  private[graft] def nearCacheInternal: AnyRef = nearPersistCache
-
-  /** Test hook: insert an entry in the production tuple shape WITHOUT
-    * persisting or running a job — the GC-eviction spec needs an entry
-    * whose session is rooted by nothing else (a persisted frame is rooted
-    * by the shared CacheManager; a run query is captured by Spark's
-    * pool-thread inheritable locals). */
-  private[graft] def nearCachePutForTest(s: SparkSession, dir: String): Unit =
-    nearPersistCache.synchronized {
-      nearPersistCache.put(s, (dir, new java.lang.ref.WeakReference(nearProjected(s, dir))))
-      ()
-    }
-
-  /** Release the session's persisted contamination-screen corpus (if any).
-    * Long-lived sessions mixing contamination screens with other
-    * cache-hungry phases call this between phases; [[graft.Bench]] calls it
-    * before shutdown. */
-  def releaseCaches(s: SparkSession): Unit =
-    nearPersistCache.synchronized {
-      purgeStoppedSessions()
-      Option(nearPersistCache.remove(s)).foreach { case (d, ref) =>
-        if (!s.sparkContext.isStopped)
-          entryFrame(s, d, ref).foreach(_.unpersist(blocking = false))
-      }
-    }
-
   def nearContamination(s: SparkSession, dir: String): DataFrame = {
     // (doc_id, source, shingles) feeds FIVE consumers (eval bands, train
     // bands, both verify sides, final accounting) — materialize so the
-    // corpus text is shingled ONCE per run instead of per consumer. At
-    // gate SF the skinny checkpoint is the same call
-    // DedupIndex.probeAndAbsorb makes for its delta; past the conf
-    // ceiling (parquet-footer row count — no text read) the reliable
-    // persist path takes over, trading replay-on-loss for the checkpoint's
-    // unrecoverable executor-local blocks.
-    val projected = nearProjected(s, dir)
-    val ceiling = s.conf.getOption(NearCheckpointConf).map { v =>
-      try v.toLong
-      catch {
-        case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"$NearCheckpointConf must be a row count in plain digits, got '$v'")
-      }
-    }.getOrElse(NearCheckpointMaxRows)
-    // The persist branch's handle is cached per session (size-1 LRU, see
-    // [[nearPersistCache]]): repeated invocations in one session — bench
-    // reps on a large corpus — reuse one corpus-sized MEMORY_AND_DISK
-    // entry instead of persisting a fresh one per rep, a second dir
-    // evicts-and-unpersists the first, and [[releaseCaches]] ends the
-    // cache's life explicitly when the screen phase is over.
-    val docs =
-      if (Tables.rowCountCached(s, dir, "documents") <= ceiling) projected.localCheckpoint()
-      else nearPersisted(s, dir, projected)
+    // corpus text is shingled ONCE per run instead of per consumer; the
+    // same skinny-projection checkpoint q33/q107/q109 take of this corpus
+    val docs = Tables
+      .documentsDistributed(s, dir)
+      .select(col("doc_id"), col("source"), Dedup.shingles(col("text")).as("shingles"))
+      .filter(size(col("shingles")) > 0)
+      .localCheckpoint()
     val isEval = col("doc_id") % TrainingPrep.EvalMod === 0
     val eval   = docs.filter(isEval)
     val train  = docs.filter(!isEval)

@@ -10,6 +10,46 @@ import org.apache.spark.sql.functions.col
   */
 object Layout {
 
+  /** Value-determined full-row salt hash (package-private for the spec):
+    * hashable columns directly when any exist, else all columns with maps
+    * canonicalized via [[canonicalHashable]]. */
+  private[graft] def deterministicSalt(df: DataFrame): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.hash
+    def hashable(t: org.apache.spark.sql.types.DataType): Boolean = t match {
+      case _: org.apache.spark.sql.types.MapType => false
+      case s: org.apache.spark.sql.types.StructType => s.fields.forall(f => hashable(f.dataType))
+      case a: org.apache.spark.sql.types.ArrayType => hashable(a.elementType)
+      case _ => true
+    }
+    val saltCols = df.schema.fields.filter(f => hashable(f.dataType)).map(f => col(f.name))
+    if (saltCols.nonEmpty) hash(saltCols.toIndexedSeq: _*)
+    else
+      hash(df.schema.fields.toIndexedSeq.map(f => canonicalHashable(col(f.name), f.dataType)): _*)
+  }
+
+  /** Rewrite a column into a value-determined, `hash()`-able form: every
+    * map (at any nesting depth) becomes its entry array SORTED by (key,
+    * value) — storage order, which task retries can change for maps built
+    * from unordered groups, no longer reaches the hash. */
+  private def canonicalHashable(
+      c: org.apache.spark.sql.Column,
+      t: org.apache.spark.sql.types.DataType): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.{array_sort, map_entries, struct, transform}
+    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+    t match {
+      case m: MapType =>
+        array_sort(transform(map_entries(c), e =>
+          struct(
+            canonicalHashable(e.getField("key"), m.keyType).as("key"),
+            canonicalHashable(e.getField("value"), m.valueType).as("value"))))
+      case st: StructType =>
+        struct(st.fields.toIndexedSeq.map(f =>
+          canonicalHashable(c.getField(f.name), f.dataType).as(f.name)): _*)
+      case a: ArrayType => transform(c, x => canonicalHashable(x, a.elementType))
+      case _            => c
+    }
+  }
+
   /** Hive-style partitioned parquet: one directory per distinct value
     * combination; readers filtering on `cols` get PartitionFilters (pruning
     * before any IO) instead of data filters. Keep partition columns
@@ -52,46 +92,6 @@ object Layout {
     * — so a hot partition value serializes into one write task where
     * pre-r8 callers got parallel (but tasks × partitions-file) writes.
     * Callers with a skewed dimension should pass `saltFiles` > 1. */
-  /** Value-determined full-row salt hash (package-private for the spec):
-    * hashable columns directly when any exist, else all columns with maps
-    * canonicalized via [[canonicalHashable]]. */
-  private[graft] def deterministicSalt(df: DataFrame): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.hash
-    def hashable(t: org.apache.spark.sql.types.DataType): Boolean = t match {
-      case _: org.apache.spark.sql.types.MapType => false
-      case s: org.apache.spark.sql.types.StructType => s.fields.forall(f => hashable(f.dataType))
-      case a: org.apache.spark.sql.types.ArrayType => hashable(a.elementType)
-      case _ => true
-    }
-    val saltCols = df.schema.fields.filter(f => hashable(f.dataType)).map(f => col(f.name))
-    if (saltCols.nonEmpty) hash(saltCols.toIndexedSeq: _*)
-    else
-      hash(df.schema.fields.toIndexedSeq.map(f => canonicalHashable(col(f.name), f.dataType)): _*)
-  }
-
-  /** Rewrite a column into a value-determined, `hash()`-able form: every
-    * map (at any nesting depth) becomes its entry array SORTED by (key,
-    * value) — storage order, which task retries can change for maps built
-    * from unordered groups, no longer reaches the hash. */
-  private def canonicalHashable(
-      c: org.apache.spark.sql.Column,
-      t: org.apache.spark.sql.types.DataType): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{array_sort, map_entries, struct, transform}
-    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
-    t match {
-      case m: MapType =>
-        array_sort(transform(map_entries(c), e =>
-          struct(
-            canonicalHashable(e.getField("key"), m.keyType).as("key"),
-            canonicalHashable(e.getField("value"), m.valueType).as("value"))))
-      case st: StructType =>
-        struct(st.fields.toIndexedSeq.map(f =>
-          canonicalHashable(c.getField(f.name), f.dataType).as(f.name)): _*)
-      case a: ArrayType => transform(c, x => canonicalHashable(x, a.elementType))
-      case _            => c
-    }
-  }
-
   def writePartitioned(df: DataFrame, path: String, cols: Seq[String], saltFiles: Int = 1): Unit = {
     import org.apache.spark.sql.functions.{lit, pmod}
     val keys =
@@ -197,10 +197,6 @@ object Layout {
       .sortBy(bucketCol)
       .format("parquet")
       .saveAsTable(table)
-
-  /** Read a partitioned dataset back. */
-  def readPartitioned(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 
   /** Drop a managed table AND clear its warehouse location: a location left
     * by a PREVIOUS session (Verify/Bench run their own JVMs with fresh derby

@@ -326,163 +326,6 @@ class FuzzyDedupSpec extends AnyFunSuite {
     }
   }
 
-  test("q113 corpus persist: size-1 LRU per session — a second dir unpersists the first") {
-    // force the persist branch at gate SF, screen two dirs in one session:
-    // the r9 cache (keyed by identity hash + dir, never evicting) kept one
-    // corpus-sized persist per dir alive for the JVM lifetime
-    spark.conf.set(FuzzyDedup.NearCheckpointConf, "0")
-    try {
-      FuzzyDedup.nearContamination(spark, "/root/testdata/sf0.001").count()
-      val first = FuzzyDedup.nearCacheEntry(spark).get
-      assert(first._1 == "/root/testdata/sf0.001")
-      assert(first._2.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
-        "first dir's corpus frame is not persisted")
-      FuzzyDedup.nearContamination(spark, "/root/testdata/sf0.01").count()
-      val second = FuzzyDedup.nearCacheEntry(spark).get
-      assert(second._1 == "/root/testdata/sf0.01", "LRU did not advance to the new dir")
-      assert(first._2.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-        "evicted dir's corpus persist was not released")
-      // explicit release drops the survivor too
-      FuzzyDedup.releaseCaches(spark)
-      assert(FuzzyDedup.nearCacheEntry(spark).isEmpty, "releaseCaches left an entry")
-      assert(second._2.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-        "releaseCaches did not unpersist the entry")
-    } finally spark.conf.unset(FuzzyDedup.NearCheckpointConf)
-  }
-
-  /** Is `target` STRONGLY reachable from `root`? Reflective BFS over the
-    * object graph; fields declared by java.lang.ref.Reference (referent &
-    * queue plumbing) are not followed, so weak edges don't count — the
-    * JDK WeakHashMap eviction question, asked directly of the heap. */
-  private def stronglyReaches(root: AnyRef, target: AnyRef, maxNodes: Int = 500000): Boolean = {
-    import java.lang.reflect.Modifier
-    val seen  = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
-    val queue = scala.collection.mutable.Queue[AnyRef](root)
-    seen.add(root)
-    var n = 0
-    while (queue.nonEmpty && n < maxNodes) {
-      val cur = queue.dequeue(); n += 1
-      if (cur eq target) return true
-      cur match {
-        case arr: Array[AnyRef] =>
-          arr.foreach(v => if (v != null && seen.add(v)) queue += v)
-        case _: Array[_] => // primitive array: no refs
-        case o =>
-          var k: Class[_] = o.getClass
-          while (k != null) {
-            if (k != classOf[java.lang.ref.Reference[_]])
-              k.getDeclaredFields.foreach { f =>
-                if (!Modifier.isStatic(f.getModifiers) && !f.getType.isPrimitive)
-                  try {
-                    f.setAccessible(true)
-                    val v = f.get(o)
-                    if (v != null && seen.add(v.asInstanceOf[AnyRef])) queue += v.asInstanceOf[AnyRef]
-                  } catch { case _: Throwable => }
-              }
-            k = k.getSuperclass
-          }
-      }
-    }
-    false
-  }
-
-  test("q113 persist cache: the map does not strongly root its session (value→key cycle broken)") {
-    // r10 stored the DataFrame STRONGLY in the WeakHashMap value; a
-    // DataFrame strongly references its SparkSession, and per the JDK
-    // WeakHashMap contract a value that strongly refers to its own key
-    // pins the entry for the map's lifetime — the advertised
-    // dies-with-its-session eviction was unreachable. A full
-    // GC-observation spec is flaky by SPARK's design (AQE/broadcast pool
-    // threads inherit the active-session InheritableThreadLocal and retain
-    // any session that ran a query — measured: the rooter of a dropped
-    // scratch session is ResultQueryStageExecution-1's inherited thread
-    // locals), so this asserts the map's own contribution directly:
-    // no STRONG path may exist from the cache map to the session.
-    val s2 = spark.newSession()
-    s2.conf.set(FuzzyDedup.NearCheckpointConf, "0")
-    try {
-      FuzzyDedup.nearContamination(s2, "/root/testdata/sf0.001").count()
-      assert(FuzzyDedup.nearCacheEntry(s2).nonEmpty, "persist path did not cache an entry")
-      assert(!stronglyReaches(FuzzyDedup.nearCacheInternal, s2),
-        "nearPersistCache strongly reaches the session it is weakly keyed by — " +
-          "the WeakHashMap can never evict this entry (the r10 defect)")
-    } finally FuzzyDedup.releaseCaches(s2)
-  }
-
-  test("q113 persist cache: an entry GC-evicts with its session (no queries — Spark thread-local capture excluded)") {
-    // The GC half of the contract, made deterministic: a session that never
-    // RAN a query is not captured by Spark's pool-thread locals, and an
-    // entry whose frame was never persisted is not rooted by the shared
-    // CacheManager — what remains is exactly the map's tuple shape. Under
-    // the r10 shape ((String, DataFrame) strong value) this session would
-    // be pinned through its own entry and never clear.
-    def makeEntry(): java.lang.ref.WeakReference[org.apache.spark.sql.SparkSession] = {
-      val s2 = spark.newSession()
-      FuzzyDedup.nearCachePutForTest(s2, "/root/testdata/sf0.001")
-      new java.lang.ref.WeakReference(s2)
-    }
-    val before     = FuzzyDedup.nearCacheSize
-    val sessionRef = makeEntry()
-    assert(FuzzyDedup.nearCacheSize == before + 1, "test entry missing")
-    var tries = 0
-    while (sessionRef.get != null && tries < 100) { System.gc(); Thread.sleep(20); tries += 1 }
-    assert(sessionRef.get == null,
-      "query-free scratch session never became unreachable — the map's value shape roots it")
-    assert(FuzzyDedup.nearCacheSize == before, "session was GC'd but its cache entry survived")
-  }
-
-  test("q113 persist cache: purge removes exactly the dead session's entry; live entries untouched") {
-    // The eager stopped-session purge, spec'd through its predicate seam:
-    // arranging a REAL stopped context would kill the suite's shared
-    // one-per-JVM SparkContext, so the purge logic runs against an
-    // identity predicate and the isStopped wiring stays a one-liner in
-    // purgeStoppedSessions. The scenario is the r11 verdict's: a "dead"
-    // session whose entry is still pinned by a strong handle (WeakHashMap
-    // alone can never evict it) must be dropped on access, and a live
-    // session's entry must survive the same purge with its frame intact.
-    val dead = spark.newSession()
-    val live = spark.newSession()
-    FuzzyDedup.nearCachePutForTest(dead, "/root/testdata/sf0.001")
-    FuzzyDedup.nearCachePutForTest(live, "/root/testdata/sf0.001")
-    try {
-      // strong handles to BOTH sessions are held throughout — eviction by
-      // GC is impossible here; only the purge can remove the dead entry
-      assert(FuzzyDedup.nearCacheEntry(dead).nonEmpty && FuzzyDedup.nearCacheEntry(live).nonEmpty)
-      FuzzyDedup.nearCachePurgeForTest(_ eq dead)
-      assert(FuzzyDedup.nearCacheEntry(dead).isEmpty,
-        "dead session's entry survived the purge")
-      val kept = FuzzyDedup.nearCacheEntry(live)
-      assert(kept.exists(_._1 == "/root/testdata/sf0.001"),
-        s"live session's entry was collateral damage: $kept")
-      // all-alive predicate (the production default on a healthy JVM):
-      // purge is a no-op
-      FuzzyDedup.nearCachePurgeForTest(_ => false)
-      assert(FuzzyDedup.nearCacheEntry(live).nonEmpty)
-      // and the PRODUCTION path exercises the same purge on every access:
-      // releaseCaches(live) must remove only live's entry (dead is gone,
-      // nothing else registered by this test)
-      FuzzyDedup.releaseCaches(live)
-      assert(FuzzyDedup.nearCacheEntry(live).isEmpty)
-    } finally { FuzzyDedup.releaseCaches(dead); FuzzyDedup.releaseCaches(live) }
-  }
-
-  test("q113 persist path (over the checkpoint ceiling) answers identically to the checkpoint path") {
-    // the scale branch swaps the unrecoverable localCheckpoint for a
-    // lineage-preserving persist — same one-shingle-pass materialization,
-    // same answer; forcing the ceiling to 0 exercises it at gate SF
-    val dir      = "/root/testdata/sf0.001"
-    val expected = FuzzyDedup.nearContamination(spark, dir).collect().map(_.toSeq).toSet
-    spark.conf.set(FuzzyDedup.NearCheckpointConf, "0")
-    try {
-      val got = FuzzyDedup.nearContamination(spark, dir).collect().map(_.toSeq).toSet
-      assert(got == expected, "persist branch diverged from checkpoint branch")
-    } finally {
-      spark.conf.unset(FuzzyDedup.NearCheckpointConf)
-      spark.sharedState.cacheManager.clearCache()
-    }
-  }
-
   test("connectedComponents: random graphs match a union-find reference exactly") {
     // Five registry queries ride on the pointer-jumped CC loop (q38/q76/
     // q107/q109/q119); its planted fixtures pin known shapes, this pins the

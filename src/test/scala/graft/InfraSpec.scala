@@ -45,7 +45,7 @@ class InfraSpec extends AnyFunSuite {
     val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName).sorted
     assert(dirs.exists(_.startsWith("event_type=click")), s"no hive layout: ${dirs.mkString(",")}")
 
-    val read = Layout.readPartitioned(spark, out).filter(col("event_type") === "purchase")
+    val read = spark.read.parquet(out).filter(col("event_type") === "purchase")
     read.collect()
     val plan = read.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters: [isnotnull(event_type"), s"no partition pruning in:\n$plan")

@@ -100,6 +100,13 @@ class RestPipelineSpec extends AnyFunSuite {
     assert(ids == Set(1L, 2L, 3L)) // set-equality, order-insensitive (test_pipeline.py:35-40)
   }
 
+  test("S4 page tolerance: a non-JSON body is one empty page, an id-less item fails loudly") {
+    assert(AnimalsJson.parsePage("not json at all") == AnimalsJson.AnimalPage(1, 1, Seq.empty))
+    val e = intercept[IllegalArgumentException](
+      AnimalsJson.parsePage("""{"page": 1, "total_pages": 2, "items": [{"id": 1}, {"name": "Cat"}]}"""))
+    assert(e.getMessage.contains("item 1 has no 'id'"), e.getMessage)
+  }
+
   test("full pipeline: scan -> enrich -> transform -> batched sink") {
     FakeAnimalsTransport.posts.clear()
     val result = AnimalsPipeline.run(spark, transport, asOf, concurrency = 2, batchSize = 2, policy = fastPolicy)
