@@ -8,7 +8,7 @@ import graft.operators.{AsOfJoin, Clustering, Dedup, EventWindows, FuzzyDedup, G
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Queries are contributed by operator modules; every entry has a matching
-  * DuckDB oracle unless the operator is not SQL-expressible.
+  * DuckDB oracle (QueriesSmokeSpec pins that none is missing).
   */
 object SparkEntry {
   private val modules: Seq[QueryModule] = Seq(
@@ -36,7 +36,7 @@ object SparkEntry {
     modules.flatMap(_.queries).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
     modules.flatMap(_.oracles).toMap
 
@@ -46,10 +46,4 @@ object SparkEntry {
     * oracle parity at any scale. */
   def oracleSqlDynamic: Map[String, (SparkSession, String) => String] =
     modules.flatMap(_.oraclesDynamic).toMap
-
-  /** Queries intentionally without an oracle (not DuckDB-reproducible);
-    * each must carry its own correctness spec instead. Empty since q14's
-    * pairing: the sketch query now carries exact counts + in-row error
-    * flags, which DuckDB CAN oracle (Analytics.approxDistinct). */
-  val noOracle: Set[String] = Set.empty
 }

@@ -3,13 +3,16 @@ package graft.etl
 import graft.sources.{HttpTimeouts, RetryPolicy}
 
 /** Runtime configuration with the reference's env defaults and CLI override
-  * semantics (`/root/reference/src/animals_etl/config.py:4-16`: argparse
-  * flags defaulting to `API_BASE_URL`, `CONCURRENCY`, `BATCH_SIZE`,
-  * `MAX_RETRIES`, `CONNECT_TIMEOUT`, `READ_TIMEOUT`). Timeout env values are
-  * seconds (floats), like the reference; internally carried as millis.
+  * semantics (the reference's `config.py`: argparse flags defaulting to
+  * `CONCURRENCY`, `BATCH_SIZE`, `MAX_RETRIES`, `CONNECT_TIMEOUT`,
+  * `READ_TIMEOUT`). Timeout env values are seconds (floats), like the
+  * reference; internally carried as millis. The reference's `API_BASE_URL`
+  * is not read: transports are bound by class name with no-arg
+  * constructors ([[graft.sources.HttpTransport.byName]]), so the service
+  * address belongs to the transport class, and an unknown `--base-url`
+  * flag is ignored like any other.
   */
 final case class EtlConfig(
-    baseUrl: String = "http://localhost:3123",
     concurrency: Int = 8,
     batchSize: Int = 100,
     retries: Int = 6,
@@ -32,7 +35,6 @@ object EtlConfig {
     def pick(flag: String, envKey: String, dflt: String): String =
       flags.getOrElse(flag, env.getOrElse(envKey, dflt))
     EtlConfig(
-      baseUrl = pick("base-url", "API_BASE_URL", "http://localhost:3123"),
       concurrency = pick("concurrency", "CONCURRENCY", "8").toInt,
       batchSize = pick("batch-size", "BATCH_SIZE", "100").toInt,
       retries = pick("retries", "MAX_RETRIES", "6").toInt,

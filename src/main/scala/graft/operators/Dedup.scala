@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
@@ -44,21 +43,6 @@ object Dedup extends QueryModule {
     * discrimination improves. Guards the <3-token case — `sequence(1, 0)`
     * would generate a descending range, not an empty one. */
   def shingles(text: Column): Column = graft.plans.TextHashExpressions.wordShingles(text)
-
-  /** Reference HOF formulation of [[shingles]] — semantically identical;
-    * kept for the parity test. Interpreted lambdas re-run the split per
-    * element (O(tokens²)), which is why the native expression exists. */
-  def shinglesHof(text: Column): Column = {
-    val toks = split(text, " +")
-    when(size(toks) < 3, array().cast("array<string>")).otherwise(
-      array_distinct(
-        transform(
-          sequence(lit(1), size(toks) - 2),
-          i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1), element_at(toks, i + 2))
-        )
-      )
-    )
-  }
 
   /** Row ceiling for [[ngramJaccard]] (override with the
     * `graft.invertedJaccard.maxRows` session conf): the inverted index is
@@ -145,24 +129,10 @@ object Dedup extends QueryModule {
     * spans (trailing ragged span dropped — sub-width spans are too short to
     * mean anything). Narrow per-row, no shuffle; native codegen expression
     * (one tokenize + one md5 per span — see
-    * [[graft.plans.SpanFingerprints]]); [[spanFingerprintsHof]] is the
-    * interpreted reference formulation, parity-pinned. */
+    * [[graft.plans.SpanFingerprints]]); the interpreted HOF reference
+    * formulation lives in the tests (`HofReference`), parity-pinned. */
   def spanFingerprints(text: Column): Column =
     graft.plans.TextHashExpressions.spanFingerprints(text, SpanTokens)
-
-  /** Reference HOF formulation of [[spanFingerprints]] — semantically
-    * identical; kept for the parity test. Each lambda invocation rebuilds a
-    * slice + concat_ws + md5 tree, interpreted. */
-  def spanFingerprintsHof(text: Column): Column = {
-    val t      = split(text, " +")
-    val nSpans = call_function("div", size(t).cast("long"), lit(SpanTokens.toLong))
-    when(nSpans < 1, array().cast("array<string>")).otherwise(
-      transform(
-        sequence(lit(0L), nSpans - 1),
-        j => md5(concat_ws(" ", slice(t, (j * SpanTokens + 1).cast("int"), lit(SpanTokens))))
-      )
-    )
-  }
 
   /** Span-level exact dedup (q71): the sub-document complement of q30 —
     * boilerplate paragraphs (headers, footers, license blocks) duplicate
@@ -322,15 +292,17 @@ object Dedup extends QueryModule {
   def cdcChunkTable(s: SparkSession, dir: String): DataFrame = {
     val toks = col("toks")
     val n    = size(toks)
-    // 0-based boundary positions: i >= 3 where the 4-token window ending
-    // at i hashes to 0 mod CdcMod (0-based i-3..i = 1-based slice(i-2, 4))
+    // 0-based boundary positions: i >= W-1 where the W-token window
+    // ending at i hashes to 0 mod CdcMod (W = CdcWindow; 0-based
+    // i-W+1..i = 1-based slice(i-W+2, W))
     val bpos = filter(
       transform(
-        sequence(lit(3), n - 1),
+        sequence(lit(CdcWindow - 1), n - 1),
         i =>
           when(
             graft.functions.Fingerprints
-              .fp8(concat(lit("cdc:"), concat_ws(" ", slice(toks, i - lit(2), lit(4))))) % CdcMod === 0L,
+              .fp8(concat(lit("cdc:"), concat_ws(" ", slice(toks, i - lit(CdcWindow - 2), lit(CdcWindow))))) %
+              CdcMod === 0L,
             i
           ).otherwise(lit(-2))
       ),
@@ -782,10 +754,9 @@ object Dedup extends QueryModule {
          |),
          |f AS (
          |  SELECT doc_id, source, pos, token,
-         |    CASE WHEN pos >= 3 AND
+         |    CASE WHEN pos >= ${CdcWindow - 1} AND
          |      ${graft.functions.Fingerprints.fp8Sql(
-            "'cdc:' || lag(token, 3) OVER w || ' ' || lag(token, 2) OVER w || ' ' || " +
-              "lag(token, 1) OVER w || ' ' || token"
+            "'cdc:' || " + (CdcWindow - 1 to 1 by -1).map(k => s"lag(token, $k) OVER w || ' ' || ").mkString + "token"
           )} % $CdcMod = 0
          |    THEN 1 ELSE 0 END AS flag
          |  FROM p WINDOW w AS (PARTITION BY doc_id ORDER BY pos)

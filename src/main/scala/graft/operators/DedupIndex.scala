@@ -179,10 +179,10 @@ object DedupIndex {
     // Pre-partition on the band key AT THE BUCKET COUNT before the
     // occupancy window (r18, guide §2): the window needs a band-clustered
     // exchange anyway, and HashPartitioning(band, n) satisfies it — so
-    // this ONE exchange serves the window AND the bucketed layout, where
-    // the previous shape paid the window's shuffle-partitions exchange
-    // plus writeBucketed's second repartition back-to-back. Same for the
-    // fp distinct: aggregate + layout share one fingerprint exchange.
+    // this ONE exchange serves the window AND the bucketed layout
+    // (writeBucketed's own repartition(n, band) is then dropped by AQE as
+    // already satisfied). Same for the fp distinct: aggregate + layout
+    // share one fingerprint exchange.
     val bands = FuzzyDedup.boundedBands(
       shTable
         .filter(size(col("shingles")) > 0)
@@ -200,11 +200,11 @@ object DedupIndex {
     // back-fill cores the other frees)
     inParallel(
       () =>
-        Layout.writeBucketedAligned(
+        Layout.writeBucketed(
           shTable.select("fingerprint").repartition(n, col("fingerprint")).distinct(),
           s"${prefix}_fp", "fingerprint", n),
       () =>
-        Layout.writeBucketedAligned(bands.select("band", "doc_id"), s"${prefix}_bands", "band", n)
+        Layout.writeBucketed(bands.select("band", "doc_id"), s"${prefix}_bands", "band", n)
     )
   }
 
@@ -309,13 +309,13 @@ object DedupIndex {
     // all-appends-then-return contract as the sequential form.
     inParallel(
       () =>
-        Layout.appendBucketedAligned(
+        Layout.appendBucketed(
           kept.select("fingerprint").repartition(nFp, col("fingerprint")).distinct(),
           s"${prefix}_fp", "fingerprint", nFp),
       () =>
         Layout.appendBucketed(kept, s"${prefix}_shingles", "doc_id", tableBuckets(s, s"${prefix}_shingles")),
       () =>
-        Layout.appendBucketedAligned(
+        Layout.appendBucketed(
           bands.select("band", "doc_id"),
           s"${prefix}_bands", "band", nBands)
     )

@@ -42,31 +42,8 @@ object FuzzyDedup extends QueryModule {
     (md5Long(s"minhash:a:$j") % ((1L << 31) - 1) + 1, md5Long(s"minhash:b:$j") % (1L << 31))
   }
 
-  /** H(s): first 8 md5 hex chars → uint32 as long ([[graft.functions.Fingerprints.fp8]]). */
-  def baseHash(c: Column): Column = graft.functions.Fingerprints.fp8(c)
-
-  /** H60(s): first 15 md5 hex chars → 60-bit long (SimHash base;
-    * [[graft.functions.Fingerprints.fp15]]). */
-  def baseHash60(c: Column): Column = graft.functions.Fingerprints.fp15(c)
-
   val SimhashBits  = 60
   val SimhashBands = 4 // 15 bits each; hamming ≤ 3 ⇒ ≥1 band identical
-
-  /** All K minhash values from a PRE-HASHED shingle array (`baseHash` per
-    * element, materialized once — inlining it here would re-run md5 inside
-    * each of the K expressions). */
-  def minhashSignature(hsCol: Column): Seq[Column] =
-    Coeffs.map { case (a, b) =>
-      array_min(transform(hsCol, h => (lit(a) * h + lit(b)) % lit(P)))
-    }
-
-  /** Band keys: signature rows grouped BandSize at a time into strings. */
-  def bandKeys(sig: Seq[Column]): Column =
-    array(
-      (0 until NumBands).map { b =>
-        concat_ws(":", (lit(b) +: sig.slice(b * BandSize, (b + 1) * BandSize)): _*)
-      }: _*
-    )
 
   /** Default band-bucket occupancy cap for [[boundedBands]]: far above any
     * honest near-dup cluster at test scale (so oracle results are
@@ -210,21 +187,6 @@ object FuzzyDedup extends QueryModule {
       .withColumn("jaccard", round(col("inter") / (col("n_a") + col("n_b") - col("inter")), 6))
       .filter(col("containment") >= Dedup.ContainmentThreshold)
       .select("id_a", "id_b", "inter", "n_a", "n_b", "containment", "jaccard")
-  }
-
-  /** 60-bit SimHash from a PRE-HASHED token array (see [[simhashed]]).
-    * 60 bits (vs 32) shrinks band buckets ~2^7× at candidate-generation time
-    * and sharpens the hamming signal. */
-  def simhashFromHashes(hsCol: Column): Column = {
-    val bits = (0 until SimhashBits).map { b =>
-      val balance = aggregate(
-        hsCol,
-        lit(0L),
-        (acc, h) => acc + when(shiftright(h, b) % 2 === 1, 1L).otherwise(-1L)
-      )
-      when(balance >= 0, lit(1L << b)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
   }
 
   /** documents → (doc_id, lang, fp) via the native single-pass SimHash. */
@@ -376,16 +338,12 @@ object FuzzyDedup extends QueryModule {
     math.max(floor, ceilLog2)
   }
 
-  /** LSH candidate pairs only (pre-verification) — exposed so specs can
-    * measure the candidate volume the banding actually admits.
-    * `bits` ≤ 0 auto-sizes from the corpus row count ([[autoEmbBits]];
-    * parquet metadata count, no data read). */
-  def embCandidates(s: SparkSession, dir: String, bits: Int = 0, bands: Int = EmbBands): DataFrame =
-    embCandidatesOver(Similarity.embWithNorm(s, dir), bits, bands)
-
-  /** [[embCandidates]] over a caller-supplied (vec_id, v, nrm) frame — lets
-    * [[embeddingPairsLsh]] share ONE materialized projection between the
-    * row-count probe, the banding pass, and both verify sides. */
+  /** LSH candidate pairs only (pre-verification) over a caller-supplied
+    * (vec_id, v, nrm) frame — lets [[embeddingPairsLsh]] share ONE
+    * materialized projection between the row-count probe, the banding
+    * pass, and both verify sides, and lets specs measure the candidate
+    * volume the banding actually admits. `bits` ≤ 0 auto-sizes from the
+    * frame's row count ([[autoEmbBits]]). */
   def embCandidatesOver(emb: DataFrame, bits: Int = 0, bands: Int = EmbBands): DataFrame = {
     val b = if (bits > 0) bits else autoEmbBits(emb.count())
     val banded = boundedBands(
@@ -925,8 +883,8 @@ object FuzzyDedup extends QueryModule {
     *
     * Runs on the native [[graft.plans.WinnowMinimizers]] expression — one
     * monotonic-deque pass per row, O(m) total, inside whole-stage codegen.
-    * [[winnowSketchHof]] is the HOF reference formulation (O(m·w)
-    * interpreted lambda evaluations), parity-pinned in
+    * The HOF reference formulation (O(m·w) interpreted lambda
+    * evaluations, `HofReference` in the tests) is parity-pinned in
     * ExpressionParitySpec and value-identical to the DuckDB oracle. */
   def winnowSketchTable(s: SparkSession, dir: String): DataFrame =
     Tables
@@ -937,30 +895,6 @@ object FuzzyDedup extends QueryModule {
         (greatest(size(split(col("text"), " +")) - (WinK - 1), lit(0))).as("m"),
         graft.plans.TextHashExpressions.winnowMinimizers(col("text"), WinK, WinW).as("mins")
       )
-
-  /** HOF reference formulation of the winnowing sketch columns — the
-    * oracle-shaped twin [[winnowSketchTable]]'s native expression is
-    * parity-pinned against. Returns (m, mins) over a text column. */
-  def winnowSketchHofCols(text: Column): (Column, Column) = {
-    val toks = split(text, " +")
-    val kgramHashes = when(size(toks) < WinK, array().cast("array<bigint>")).otherwise(
-      transform(
-        sequence(lit(1), size(toks) - (WinK - 1)),
-        i =>
-          graft.functions.Fingerprints
-            .fp15(concat(lit("win:"), concat_ws(" ", slice(toks, i, lit(WinK)))))
-      )
-    )
-    val mins = when(size(kgramHashes) === 0, array().cast("array<bigint>")).otherwise(
-      array_distinct(
-        transform(
-          sequence(lit(1), greatest(size(kgramHashes) - (WinW - 1), lit(1))),
-          j => array_min(slice(kgramHashes, j, lit(WinW)))
-        )
-      )
-    )
-    (greatest(size(toks) - (WinK - 1), lit(0)), mins)
-  }
 
   /** q122: winnowing fingerprint sketch (Schleimer/Wilkerson/Aiken, SIGMOD
     * 2003 — the MOSS algorithm): hash every [[WinK]]-token gram, slide a

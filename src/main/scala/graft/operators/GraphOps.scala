@@ -576,55 +576,27 @@ object GraphOps extends QueryModule {
 
   /** q139: bounded-round k-core peel — the density-core extractor behind
     * link-farm detection and community seeding: iteratively remove nodes
-    * with degree < k until the remainder is the k-core. Stopping after a
-    * FIXED [[CoreRounds]] rounds makes the semantics deterministic and
+    * with degree < k until the remainder is the k-core. Stopping after at
+    * most [[CoreRounds]] rounds makes the semantics deterministic and
     * cross-engine exact (the oracle unrolls the same rounds as CTEs —
     * q77's pattern); the bounded result is a sound OVER-approximation of
     * the true core (peeling only shrinks), and production runs the same
     * per-round plan to fixpoint. Per round: one survivors⋈edges semi-join
     * pair + one degree aggregate, every shuffled row (long, long);
     * survivor sets localCheckpoint-ed to truncate lineage (q38/q77's
-    * loop discipline).
-    *
-    * The registered query runs with `earlyStopWhenStable = true` (r17):
-    * the survivor COUNT probe per round costs one job over the
-    * checkpointed skinny survivor table, and an unchanged count is an
-    * exact fixpoint (survivor sets shrink monotonically — see
-    * [[kCoreOver]]) that every later round reproduces, so the output is
-    * bit-identical to the fixed-[[CoreRounds]] contract the oracle
-    * unrolls (Round7OpsSpec pins the equality). Measured at sf0.1: the
-    * interaction graph's minimum full degree already exceeds
-    * [[CoreK]] — round 1 peels nothing and the loop exits after 1 round
-    * + 2 probes, 4.6 s → 1.4 s warm. The win carries to any scale: each
-    * avoided round is two semi-joins and an aggregate over the full
-    * surviving edge set, and real graphs stabilize long before a fixed
-    * worst-case cap. */
+    * loop discipline). */
   def kCore(s: SparkSession, dir: String): DataFrame =
-    kCoreOver(edges(s, dir), earlyStopWhenStable = true)
+    kCoreRuns(edges(s, dir))._1
 
-  /** The operator proper; `k`/`rounds` parametrized for fixtures and
-    * production fixpoint callers.
+  /** The operator proper, with the number of peel rounds it ran; `k` and
+    * `rounds` parametrized for fixtures and production fixpoint callers.
     *
-    * `earlyStopWhenStable` (q77's round-7 twin): survivor sets shrink
-    * MONOTONICALLY, so an unchanged survivor COUNT means an unchanged set
-    * — a fixpoint every later round reproduces — and peeling can stop.
-    * Output is bit-identical to the fixed-round contract; the probe is a
-    * count on the checkpointed skinny survivor table. On in the registered
-    * query ([[kCore]]); off by default, which runs all `rounds`. */
-  def kCoreOver(
-      edgeDf: DataFrame,
-      k: Int = CoreK,
-      rounds: Int = CoreRounds,
-      earlyStopWhenStable: Boolean = false): DataFrame =
-    kCoreRuns(edgeDf, k, rounds, earlyStopWhenStable)._1
-
-  /** [[kCoreOver]] exposing the number of peel rounds executed, for specs
-    * pinning the early-exit. */
-  def kCoreRuns(
-      edgeDf: DataFrame,
-      k: Int = CoreK,
-      rounds: Int = CoreRounds,
-      earlyStopWhenStable: Boolean = false): (DataFrame, Int) = {
+    * The peel stops early at a fixpoint: survivor sets shrink
+    * MONOTONICALLY, so an unchanged survivor COUNT means an unchanged set,
+    * which every later round reproduces. The output is therefore
+    * bit-identical to running all `rounds`; the probe is one count on the
+    * checkpointed skinny survivor table. */
+  def kCoreRuns(edgeDf: DataFrame, k: Int = CoreK, rounds: Int = CoreRounds): (DataFrame, Int) = {
     val und = undirected(edgeDf).cache()
     try {
       val fullDeg = und
@@ -632,7 +604,7 @@ object GraphOps extends QueryModule {
         .groupBy("node")
         .agg(count(lit(1)).as("deg"))
       var surv = fullDeg.select("node").localCheckpoint()
-      var prevCount = if (earlyStopWhenStable) surv.count() else -1L
+      var prevCount = surv.count()
       var it = 0
       var stable = false
       while (it < rounds && !stable) {
@@ -646,11 +618,9 @@ object GraphOps extends QueryModule {
           .filter(col("d") >= k)
           .select("node")
           .localCheckpoint()
-        if (earlyStopWhenStable) {
-          val c = surv.count()
-          stable = c == prevCount
-          prevCount = c
-        }
+        val c = surv.count()
+        stable = c == prevCount
+        prevCount = c
         it += 1
       }
       val out = fullDeg

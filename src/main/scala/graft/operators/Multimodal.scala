@@ -220,15 +220,6 @@ object Multimodal extends QueryModule {
     }
   }
 
-  /** Successful decodes only — the P2 drop view over [[decodeSafe]]. */
-  def decodeAll(
-      media: Dataset[MediaRecord],
-      codecClass: String = classOf[FakeCodec].getName
-  ): Dataset[MediaMeta] = {
-    import media.sparkSession.implicits._
-    decodeSafe(media, codecClass).filter(_.ok).map(_.meta)
-  }
-
   /** The media frame: doc keys joined with their [[syntheticPayload]]
     * (doc_id-derived — independent of `text` by design, see the header).
     *

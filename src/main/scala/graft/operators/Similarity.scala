@@ -539,7 +539,7 @@ object Similarity extends QueryModule {
     "list_sum(list_transform(generate_series(1, 64), i -> CAST(a.v[i] AS DOUBLE) * CAST(b.v[i] AS DOUBLE)))"
 
   /** DuckDB rendering of one plane's projection + sign bit. */
-  private def bucketSql(vExpr: String, planes: Seq[Seq[Double]] = Planes): String = {
+  private def bucketSql(vExpr: String, planes: Seq[Seq[Double]]): String = {
     val bitTerms = planes.zipWithIndex.map { case (plane, b) =>
       val planeList = plane.map(p => if (p > 0) "1.0" else "-1.0").mkString("[", ", ", "]")
       s"(CASE WHEN list_sum(list_transform(generate_series(1, 64), i -> CAST($vExpr[i] AS DOUBLE) * ($planeList)[i])) >= 0 THEN ${1L << b} ELSE 0 END)"

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{Num, QueryModule, Tables}
+import graft.{QueryModule, Tables}
 
 /** Text-analysis operators over `documents`: token statistics, heuristic
   * language ID, quality scoring, and tokenizer comparisons — all per-row
@@ -12,7 +12,6 @@ import graft.{Num, QueryModule, Tables}
   * through whole-stage codegen at any scale.
   */
 object TextAnalysis extends QueryModule {
-  import Num._
 
   def tokens(c: Column): Column = split(c, " +")
 

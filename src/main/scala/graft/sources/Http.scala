@@ -71,17 +71,6 @@ final case class RetryPolicy(
   }
 }
 
-object RetryPolicy {
-  /** The single-file script variant's knobs
-    * (`/root/reference/scripts/animals_etl.py:209`): slower backoff
-    * (base 0.5 s, cap 8 s, jitter 0.5 s) and a tighter concurrency clamp
-    * than the library's. */
-  val SingleFileVariant: RetryPolicy = RetryPolicy(baseDelayMs = 500, capDelayMs = 8000)
-
-  /** Single-file variant's concurrency clamp [1, 32] (animals_etl.py:131). */
-  def clampSingleFileConcurrency(n: Int): Int = math.max(1, math.min(32, n))
-}
-
 /** Retrying client with the reference's semantics: per-request UUID tracing
   * header (R4), exponential backoff + jitter on transient 5xx / transport
   * errors (R1), fail-fast 4xx (R2), typed 422 channel (R3).

@@ -169,6 +169,16 @@ class DedupIndexSpec extends AnyFunSuite {
     assert(
       bPlan.split("Exchange hashpartitioning").length - 1 == 1,
       s"band occupancy window should share one band exchange with the layout:\n$bPlan")
+    // writeBucketed/appendBucketed repartition(n, key) on top: AQE drops it
+    // as already satisfied, so the written frame still has ONE exchange
+    for ((frame, key) <- Seq(fp -> "fingerprint", bands.select("band", "doc_id") -> "band")) {
+      val written = frame.repartition(n, col(key))
+      written.collect()
+      val wPlan = written.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+      assert(
+        wPlan.split("Exchange hashpartitioning").length - 1 == 1,
+        s"the writer's repartition on $key must reuse the aligned exchange:\n$wPlan")
+    }
   }
 
   test("bucketed writes emit ONE file per bucket: build <= buckets files, absorb adds <= buckets") {
@@ -224,7 +234,6 @@ class DedupIndexSpec extends AnyFunSuite {
   }
 
   test("non-default bucket count: build persists it, probe stays exchange-free, absorb follows the catalog") {
-    import scala.jdk.CollectionConverters._
     val prefix = "widebucket_idx"
     val docs   = spark.read.parquet(s"$dir/documents.parquet").repartition(8)
     val base   = docs.filter(col("doc_id") % FuzzyDedup.DeltaMod < 8)

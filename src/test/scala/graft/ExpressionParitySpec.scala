@@ -7,8 +7,8 @@ import graft.operators.{Dedup, FuzzyDedup}
 import graft.plans.TextHashExpressions
 
 /** The native single-pass expressions must be value-identical to their
-  * higher-order-function reference formulations (which in turn are pinned by
-  * the DuckDB oracles).
+  * higher-order-function reference formulations in [[HofReference]] (which
+  * in turn are pinned by the DuckDB oracles).
   */
 class ExpressionParitySpec extends AnyFunSuite {
   lazy val spark = GraftSession.get("local[4]", 4)
@@ -77,7 +77,7 @@ class ExpressionParitySpec extends AnyFunSuite {
 
   test("WordShingles == HOF shingles") {
     val diff = docs
-      .select(Dedup.shingles(col("text")).as("a"), Dedup.shinglesHof(col("text")).as("b"))
+      .select(Dedup.shingles(col("text")).as("a"), HofReference.shingles(col("text")).as("b"))
       .filter(not(col("a") === col("b")))
       .count()
     assert(diff == 0)
@@ -87,7 +87,7 @@ class ExpressionParitySpec extends AnyFunSuite {
     import spark.implicits._
     val edge = Seq("", "one", "one two", "a b c", "a  b   c", " lead", "trail ").toDF("text")
     val rows = edge
-      .select(col("text"), Dedup.shingles(col("text")).as("a"), Dedup.shinglesHof(col("text")).as("b"))
+      .select(col("text"), Dedup.shingles(col("text")).as("a"), HofReference.shingles(col("text")).as("b"))
       .collect()
     rows.foreach(r => assert(r.getSeq[String](1) == r.getSeq[String](2), s"input='${r.getString(0)}'"))
   }
@@ -97,8 +97,8 @@ class ExpressionParitySpec extends AnyFunSuite {
       .select(col("doc_id"), Dedup.shingles(col("text")).as("shingles"))
       .filter(size(col("shingles")) > 0)
     val hof = sh
-      .withColumn("hs", transform(col("shingles"), s => FuzzyDedup.baseHash(s)))
-      .select(col("doc_id"), FuzzyDedup.bandKeys(FuzzyDedup.minhashSignature(col("hs"))).as("bands"))
+      .withColumn("hs", transform(col("shingles"), s => HofReference.baseHash(s)))
+      .select(col("doc_id"), HofReference.bandKeys(HofReference.minhashSignature(col("hs"))).as("bands"))
     val native = sh.select(col("doc_id"), TextHashExpressions.minhashBandKeys(col("shingles")).as("bands"))
     val a = hof.collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     val b = native.collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
@@ -108,7 +108,7 @@ class ExpressionParitySpec extends AnyFunSuite {
   test("SpanFingerprints == HOF span fingerprints (corpus + edge cases)") {
     import spark.implicits._
     val corpusDiff = docs
-      .select(Dedup.spanFingerprints(col("text")).as("a"), Dedup.spanFingerprintsHof(col("text")).as("b"))
+      .select(Dedup.spanFingerprints(col("text")).as("a"), HofReference.spanFingerprints(col("text")).as("b"))
       .filter(not(col("a") === col("b")))
       .count()
     assert(corpusDiff == 0)
@@ -121,14 +121,14 @@ class ExpressionParitySpec extends AnyFunSuite {
       "a  b " + Seq.fill(w)("c").mkString(" ") // whitespace runs
     ).toDF("text")
     edge
-      .select(col("text"), Dedup.spanFingerprints(col("text")).as("a"), Dedup.spanFingerprintsHof(col("text")).as("b"))
+      .select(col("text"), Dedup.spanFingerprints(col("text")).as("a"), HofReference.spanFingerprints(col("text")).as("b"))
       .collect()
       .foreach(r => assert(r.getSeq[String](1) == r.getSeq[String](2), s"input='${r.getString(0)}'"))
   }
 
   test("WinnowMinimizers == HOF winnowing (corpus + edge cases)") {
     import spark.implicits._
-    val (mHof, minsHof) = FuzzyDedup.winnowSketchHofCols(col("text"))
+    val (mHof, minsHof) = HofReference.winnowSketchCols(col("text"))
     val corpusDiff = docs
       .select(
         graft.plans.TextHashExpressions
@@ -163,8 +163,8 @@ class ExpressionParitySpec extends AnyFunSuite {
 
   test("SimHash60 == HOF simhash") {
     val hof = docs
-      .withColumn("hs", transform(split(col("text"), " +"), t => FuzzyDedup.baseHash60(t)))
-      .select(col("doc_id"), FuzzyDedup.simhashFromHashes(col("hs")).as("fp"))
+      .withColumn("hs", transform(split(col("text"), " +"), t => HofReference.baseHash60(t)))
+      .select(col("doc_id"), HofReference.simhashFromHashes(col("hs")).as("fp"))
     val native = docs.select(col("doc_id"), TextHashExpressions.simhash60(col("text")).as("fp"))
     val a = hof.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val b = native.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

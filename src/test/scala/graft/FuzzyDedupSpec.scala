@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.FuzzyDedup
+import graft.operators.{FuzzyDedup, Similarity}
 import graft.plans.{VectorExpressions, VectorHash}
 
 /** Embedding near-dup (q37/q39) semantics the 0-row gate corpus can't pin:
@@ -111,7 +111,7 @@ class FuzzyDedupSpec extends AnyFunSuite {
     // magnitude on realistic (correlated) data, not just on uniform noise.
     val n        = Tables.embeddings(spark, dir).count()
     val allPairs = n * (n - 1) / 2
-    val cands    = FuzzyDedup.embCandidates(spark, dir).count()
+    val cands    = FuzzyDedup.embCandidatesOver(Similarity.embWithNorm(spark, dir)).count()
     assert(
       cands * 40 <= allPairs,
       s"banding admits $cands of $allPairs pairs (${cands * 100.0 / allPairs}%) — no real prune"

@@ -13,45 +13,6 @@ class InfraSpec extends AnyFunSuite {
   lazy val spark = GraftSession.get("local[4]", 4)
   private val dir = "/root/testdata/sf0.001"
 
-  test("no-hashable-column salt is value-determined under map entry reordering") {
-    // two rows carrying the SAME logical map built in opposite entry
-    // orders — the retry shape: a map materialized from an unordered group
-    // can re-serialize either way on recompute. The old to_json fallback
-    // hashed the STORED order (different salt per ordering → repartition
-    // loses/duplicates rows on retry); the canonicalized salt must agree.
-    val df = spark.sql(
-      """SELECT map_from_arrays(array('a','b'), array(array(1L,2L), array(3L,4L))) AS m
-        |UNION ALL
-        |SELECT map_from_arrays(array('b','a'), array(array(3L,4L), array(1L,2L))) AS m
-        |""".stripMargin)
-    assert(df.schema.fields.forall(_.dataType.isInstanceOf[org.apache.spark.sql.types.MapType]))
-    val salts = df.select(Layout.deterministicSalt(df).as("s")).collect().map(_.getInt(0))
-    assert(salts(0) == salts(1),
-      s"value-equal maps with different entry orders salted differently: ${salts.mkString(",")}")
-    // different VALUES must still (generically) salt apart
-    val df2 = spark.sql(
-      "SELECT map_from_arrays(array('a'), array(array(9L))) AS m")
-    val other = df2.select(Layout.deterministicSalt(df2).as("s")).collect().head.getInt(0)
-    assert(other != salts(0), "distinct map values collided (degenerate salt)")
-  }
-
-  test("partitioned write prunes partitions at planning time") {
-    val out = Files.createTempDirectory("graft_layout").toString
-    Layout.writePartitioned(
-      Tables.events(spark, dir).select("event_id", "event_type", "user_id", "value"),
-      out,
-      Seq("event_type")
-    )
-    val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName).sorted
-    assert(dirs.exists(_.startsWith("event_type=click")), s"no hive layout: ${dirs.mkString(",")}")
-
-    val read = spark.read.parquet(out).filter(col("event_type") === "purchase")
-    read.collect()
-    val plan = read.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(event_type"), s"no partition pruning in:\n$plan")
-    assert(read.count() == Tables.events(spark, dir).filter(col("event_type") === "purchase").count())
-  }
-
   test("bucketed table joins without an exchange on the bucket key") {
     // default warehouse dir (./spark-warehouse, gitignored) — the conf is
     // static and can't change on a live session. Clear any orphaned
@@ -148,7 +109,6 @@ class InfraSpec extends AnyFunSuite {
   }
 
   test("optimizer rule substitutes HOF dot product with the native expression") {
-    import spark.implicits._
     // live-session path; scoped so other suites (e.g. ExpressionParitySpec,
     // which compares HOF vs native) keep an unmodified optimizer
     spark.experimental.extraOptimizations = Seq(graft.plans.NativeDotProductRule)
@@ -238,15 +198,6 @@ class InfraSpec extends AnyFunSuite {
     assert(exitFor(wrapped).contains((2, "Validation error: friends must be a list")))
     assert(exitFor(new InterruptedException()).contains((0, "Aborted.")))
     assert(exitFor(new RuntimeException("boom")).isEmpty, "unmapped errors must propagate")
-  }
-
-  test("single-file variant presets: backoff 0.5/8.0 s, concurrency clamp [1,32]") {
-    val p = RetryPolicy.SingleFileVariant
-    assert(p.baseDelayMs == 500 && p.capDelayMs == 8000 && p.jitterMs == 500)
-    assert(p.retryStatuses == Set(500, 502, 503, 504))
-    assert(RetryPolicy.clampSingleFileConcurrency(0) == 1)
-    assert(RetryPolicy.clampSingleFileConcurrency(100) == 32)
-    assert(RetryPolicy.clampSingleFileConcurrency(7) == 7)
   }
 
   test("streaming foreachBatch drives the HTTP batch sink") {

@@ -341,7 +341,7 @@ class PropertySpec extends AnyFunSuite {
       }
       val df = edges.toSeq.toDF("src", "dst")
       def engineCore(k: Int): Set[Long] =
-        graft.operators.GraphOps.kCoreOver(df, k = k, rounds = 24).collect()
+        graft.operators.GraphOps.kCoreRuns(df, k = k, rounds = 24)._1.collect()
           .filter(_.getAs[Long]("in_core") == 1L).map(_.getAs[Long]("node")).toSet
       val c2 = engineCore(2); val c3 = engineCore(3)
       assert(c2 == brutePeel(2), s"2-core mismatch on $edges")

@@ -479,7 +479,6 @@ class Round5OpsSpec extends AnyFunSuite {
   }
 
   test("q92: funnel order constraints — pre-view clicks and pre-click purchases don't count") {
-    import spark.implicits._
     val dir = eventsFixture(
       Seq(
         // user 1: click BEFORE view, then view → click → purchase (converts, 2 s latency)

@@ -991,14 +991,14 @@ class Round6OpsSpec extends AnyFunSuite {
     // K4 on 10..13 (3-core survives intact)
     val edges = (Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)) ++
       Seq((20L, 21L), (21L, 22L), (22L, 23L), (23L, 24L)) ++ k4).toDF("src", "dst")
-    val two = graft.operators.GraphOps.kCoreOver(edges, k = 2, rounds = 8).collect()
+    val two = graft.operators.GraphOps.kCoreRuns(edges, k = 2, rounds = 8)._1.collect()
       .map(r => r.getAs[Long]("node") -> r.getAs[Long]("in_core")).toMap
     Seq(1L, 2L, 3L).foreach(n => assert(two(n) == 1L, s"triangle node $n must stay in the 2-core"))
     assert(two(4L) == 0L, "degree-1 tail must peel")
     Seq(20L, 21L, 22L, 23L, 24L).foreach(n =>
       assert(two(n) == 0L, s"path node $n must drain by cascade — ends peel, middles follow"))
     nodes.foreach(n => assert(two(n) == 1L))
-    val three = graft.operators.GraphOps.kCoreOver(edges, k = 3, rounds = 8).collect()
+    val three = graft.operators.GraphOps.kCoreRuns(edges, k = 3, rounds = 8)._1.collect()
       .map(r => r.getAs[Long]("node") -> r.getAs[Long]("in_core")).toMap
     nodes.foreach(n => assert(three(n) == 1L, s"K4 node $n survives k=3"))
     Seq(1L, 2L, 3L, 4L).foreach(n => assert(three(n) == 0L, s"triangle node $n peels at k=3"))

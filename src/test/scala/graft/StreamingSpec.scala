@@ -469,7 +469,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("q104 growth curve: streaming novelty events reproduce the batch curve exactly") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     // 3 ingest buckets (GrowthBucket = 50) with planted duplicates: within a
     // bucket, across buckets in file A, and across the micro-batch boundary
     // (file B dups of file A texts) — the cross-batch case is what the
