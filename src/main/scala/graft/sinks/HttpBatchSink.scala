@@ -3,7 +3,7 @@ package graft.sinks
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.sources.{HttpTimeouts, HttpTransport, RetryingHttpClient, RetryPolicy}
+import graft.sources.{AnimalsJson, HttpTimeouts, HttpTransport, RestEnrich, RetryingHttpClient, RetryPolicy}
 
 /** Batched HTTP POST sink (K1,
   * `/root/reference/src/animals_etl/pipeline.py:88-99`):
@@ -12,8 +12,13 @@ import graft.sources.{HttpTimeouts, HttpTransport, RetryingHttpClient, RetryPoli
   *  - records serialized with `to_json(..., ignoreNullFields=true)` so an
   *    invalid `born_at` is *key-omitted*, not null — the reference's output
   *    contract (pipeline.py:78-79, SURVEY.md §1.4);
-  *  - POSTs run per partition through the retrying client (R1-R4); across
-  *    partitions they parallelize — the reference POSTs sequentially, so
+  *  - POSTs run per partition through the retrying client (R1-R4), in
+  *    order, one at a time, from one sender thread of
+  *    [[graft.sources.RestEnrich.inFlight]] at width 1: a batch is sent only
+  *    after the one before it is acknowledged, and none after a failed one.
+  *    While a POST is in flight or backing off, the task thread builds the
+  *    next batch, so the lookups upstream keep running. Across partitions
+  *    POSTs parallelize — the reference POSTs sequentially, so
   *    `df.coalesce(1)` reproduces that exactly when ordering matters;
   *  - at-least-once: Spark task retries can re-POST a partition's batches
   *    (the reference is not idempotent either — README.md:151-154 flags
@@ -22,7 +27,10 @@ import graft.sources.{HttpTimeouts, HttpTransport, RetryingHttpClient, RetryPoli
   *    batch the same records, since lookups upstream emit in completion
   *    order ([[graft.sources.RestEnrich]]).
   *
-  * Returns the number of POSTed batches (via accumulator).
+  * Batches are counted on the task thread as they are acknowledged; a task
+  * returns only after its last POST succeeds, and a failed POST fails the
+  * task with its own exception. Returns the number of POSTed batches (via
+  * accumulator).
   */
 object HttpBatchSink {
 
@@ -42,12 +50,11 @@ object HttpBatchSink {
     val records  = df.sparkSession.sparkContext.longAccumulator("posted_records")
     val jsonRows = df.select(to_json(struct(df.columns.toIndexedSeq.map(col): _*), java.util.Map.of("ignoreNullFields", "true")))
     jsonRows.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-      val client = new RetryingHttpClient(HttpTransport.byName(transportClass), policy, timeouts)
-      it.map(_.getString(0)).grouped(size).foreach { group =>
-        // the K1 array-envelope contract lives in ONE place (AnimalsJson)
-        client.post(HomePath, graft.sources.AnimalsJson.toJsonBatch(group))
-        batches.add(1)
-        records.add(group.size)
+      val newClient = () => new RetryingHttpClient(HttpTransport.byName(transportClass), policy, timeouts)
+      // the K1 array-envelope contract lives in ONE place (AnimalsJson)
+      val groups = it.map(_.getString(0)).grouped(size).map(g => g.size -> AnimalsJson.toJsonBatch(g))
+      RestEnrich.inFlight(1, newClient, groups)((client, batch) => client.post(HomePath, batch._2)).foreach {
+        case ((n, _), _) => batches.add(1); records.add(n)
       }
     }
     batches.value

@@ -1,14 +1,17 @@
 package graft.sources
 
-import java.util.concurrent.{Callable, ExecutorCompletionService, ExecutorService, Executors, ThreadFactory, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService, ExecutorService, Executors, Future, ThreadFactory, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import scala.annotation.tailrec
 import scala.util.Try
 
-import org.apache.spark.{TaskContext, TaskKilledException}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.{Partition, TaskContext, TaskKilledException}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Keyed point-lookup fan-out (S2,
   * `/root/reference/src/animals_etl/pipeline.py:31-55`): enrich an id column
@@ -16,15 +19,16 @@ import org.apache.spark.sql.types._
   *
   * Spark mapping: the reference's semaphore (R5) bounds in-flight lookups to
   * `concurrency`, and so does this stage, whatever the number of task slots.
-  * The ids are repartitioned to `k = min(concurrency, defaultParallelism)`
-  * partitions; each task keeps its share of `concurrency` in flight on a
-  * per-task pool of daemon threads (one [[RetryingHttpClient]] per thread, so
-  * transports need not be thread-safe) and emits results in completion
-  * order, so a lookup sleeping in backoff does not hold up the others. Pool
-  * threads only do the HTTP exchange; parsing and row building stay on the
-  * task thread. Failed lookups are logged and dropped (P2), matching the
-  * reference's error-tolerant semantics; the scan stays pipelined (no
-  * barrier).
+  * The ids are coalesced (narrow, no shuffle) to at most
+  * `k = min(concurrency, defaultParallelism)` partitions; `concurrency` is
+  * split into shares over the partitions the coalesce yields, and each task
+  * keeps its share in flight through [[inFlight]] and emits results in
+  * completion order, so a lookup sleeping in backoff does not hold up the
+  * others. Pool threads only do the HTTP exchange; parsing and row building
+  * stay on the task thread. Failed lookups are logged and dropped (P2),
+  * matching the reference's error-tolerant semantics. The stage pipelines
+  * with the scan before it and the sink after it: a run is one job with no
+  * Exchange.
   */
 object RestEnrich {
 
@@ -35,7 +39,8 @@ object RestEnrich {
     StructField("born_at", LongType, nullable = true)
   ))
 
-  /** Name prefix of the lookup pool threads. */
+  /** Name prefix of every [[inFlight]] pool thread: page GETs, lookups and
+    * POSTs. */
   val PoolThreadPrefix = "graft-enrich"
 
   def detailPath(id: Long): String = s"/animals/v1/animals/$id"
@@ -58,22 +63,34 @@ object RestEnrich {
     val spark       = ids.sparkSession
     val concurrency = math.max(1, parallelism)
     val k           = math.min(concurrency, spark.sparkContext.defaultParallelism)
-    // RDD mapPartitions: genuine per-partition imperative logic (a live
-    // lookup pool per partition) — the one place RDDs beat Dataset ops.
-    val rdd = ids
-      .select("id")
-      .repartition(k)
-      .rdd
-      .mapPartitionsWithIndex { (part, rows) =>
-        val pool = new LookupPool(share(concurrency, k, part),
-          () => new RetryingHttpClient(HttpTransport.byName(transportClass), policy, timeouts))
-        var done = 0L
-        pool.lookups(rows.map(_.getLong(0))).flatMap { case (id, body) =>
+    val newClient   = () => new RetryingHttpClient(HttpTransport.byName(transportClass), policy, timeouts)
+    val idRows      = ids.select("id").coalesce(k).queryExecution.toRdd
+    GraftBridge.internalCreateDataFrame(spark, new LookupRDD(idRows, concurrency, newClient), DetailSchema)
+  }
+
+  /** The lookups over the coalesced ids, one task per id partition. Each
+    * partition carries its share of `concurrency`, computed when Spark first
+    * asks for partitions, so building the stage sends no request. Rows are
+    * built as InternalRows, so tasks need no Row encoder. */
+  private final class LookupRDD(idRows: RDD[InternalRow], concurrency: Int, newClient: () => RetryingHttpClient)
+      extends RDD[InternalRow](idRows) {
+    override protected def getPartitions: Array[Partition] = {
+      val parts = firstParent[InternalRow].partitions
+      parts.map(p => SharePartition(p, share(concurrency, parts.length, p.index)))
+    }
+
+    override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] = {
+      val part = split.asInstanceOf[SharePartition]
+      val ids  = firstParent[InternalRow].iterator(part.parent, context).map(_.getLong(0))
+      var done = 0L
+      inFlight(part.width, newClient, ids)((client, id) => Try(client.get(detailPath(id)).body)).flatMap {
+        case (id, body) =>
           val res =
             try {
               AnimalsJson
                 .parseDetail(body.get)
-                .map(d => Row(d.id, d.name, d.friends.orNull, d.bornAt.map(Long.box).orNull))
+                .map(d => InternalRow(d.id, UTF8String.fromString(d.name),
+                  d.friends.map(UTF8String.fromString).orNull, d.bornAt.map(Long.box).orNull))
             } catch {
               case scala.util.control.NonFatal(e) =>
                 // reference logs and drops the row (pipeline.py:39-43)
@@ -84,17 +101,29 @@ object RestEnrich {
           // per partition (each partition runs its share of the lookups)
           done += 1
           if (done % 100 == 0)
-            System.err.println(s"[progress] partition $part fetched $done details…")
+            System.err.println(s"[progress] partition ${part.index} fetched $done details…")
           res
-        }
       }
-    spark.createDataFrame(rdd, DetailSchema)
+    }
   }
 
-  /** A task's lookup pool: `width` daemon threads, each with its own client
-    * from `newClient`. Shut down by a completion listener of the calling
-    * task, so it ends with the task on success, failure or kill. */
-  private final class LookupPool(width: Int, newClient: () => RetryingHttpClient) {
+  private final case class SharePartition(parent: Partition, width: Int) extends Partition {
+    override def index: Int = parent.index
+  }
+
+  /** The REST stages' one in-flight primitive: `request` for every key, up
+    * to `width` at a time, on `width` daemon threads of the calling task,
+    * each with its own client from `newClient` (so transports need not be
+    * thread-safe). Up to 2 × width calls are submitted ahead, so a thread
+    * that finishes finds the next key queued even while the task thread is
+    * busy downstream, and a call sleeping in backoff holds only its own
+    * thread. Yields (key, result) in completion order, which at width 1 is
+    * key order. The first request that throws fails the iterator with its
+    * own exception, and no request starts after it. The pool is shut down by
+    * a completion listener of the calling task, so it ends with the task on
+    * success, failure or kill. */
+  private[graft] def inFlight[K, R](width: Int, newClient: () => RetryingHttpClient, keys: Iterator[K])(
+      request: (RetryingHttpClient, K) => R): Iterator[(K, R)] = new Iterator[(K, R)] {
     private val ctx = TaskContext.get()
     private val pool: ExecutorService = Executors.newFixedThreadPool(width, new ThreadFactory {
       private val n = new AtomicInteger()
@@ -104,41 +133,40 @@ object RestEnrich {
         t
       }
     })
-    private val client = ThreadLocal.withInitial[RetryingHttpClient](() => newClient())
-    private val done   = new ExecutorCompletionService[(Long, Try[String])](pool)
+    private val client  = ThreadLocal.withInitial[RetryingHttpClient](() => newClient())
+    private val done    = new ExecutorCompletionService[(K, R)](pool)
+    private val failure = new AtomicReference[Throwable]
+    private var pending = 0
     ctx.addTaskCompletionListener[Unit](_ => pool.shutdownNow())
 
-    /** (id, response body or failure) for every id, in completion order.
-      * Up to 2 × width ids are submitted ahead, so a thread that finishes
-      * finds the next id queued even while the task thread is busy
-      * downstream. */
-    def lookups(ids: Iterator[Long]): Iterator[(Long, Try[String])] = new Iterator[(Long, Try[String])] {
-      private var pending = 0
-
-      private def fill(): Unit =
-        while (pending < 2 * width && ids.hasNext) {
-          val id = ids.next()
-          done.submit(new Callable[(Long, Try[String])] {
-            def call(): (Long, Try[String]) = id -> Try(client.get().get(detailPath(id)).body)
-          })
-          pending += 1
-        }
-
-      def hasNext: Boolean = { fill(); pending > 0 }
-
-      def next(): (Long, Try[String]) = {
-        if (!hasNext) throw new NoSuchElementException("no more lookups")
-        pending -= 1
-        await()
+    private def fill(): Unit =
+      while (pending < 2 * width && keys.hasNext) {
+        val key = keys.next()
+        done.submit(new Callable[(K, R)] {
+          def call(): (K, R) = {
+            if (failure.get != null) throw failure.get
+            try key -> request(client.get(), key)
+            catch { case e: Throwable => failure.compareAndSet(null, e); throw e }
+          }
+        })
+        pending += 1
       }
 
-      // Polls rather than blocks, so a killed task stops waiting even when
-      // the kill does not interrupt its thread.
-      @tailrec private def await(): (Long, Try[String]) = {
-        if (ctx.isInterrupted()) throw new TaskKilledException("lookup wait interrupted")
-        val f = done.poll(100, TimeUnit.MILLISECONDS)
-        if (f == null) await() else f.get()
-      }
+    def hasNext: Boolean = { fill(); pending > 0 }
+
+    def next(): (K, R) = {
+      if (!hasNext) throw new NoSuchElementException("no more calls")
+      pending -= 1
+      try await().get()
+      catch { case _: ExecutionException => throw failure.get }
+    }
+
+    // Polls rather than blocks, so a killed task stops waiting even when
+    // the kill does not interrupt its thread.
+    @tailrec private def await(): Future[(K, R)] = {
+      if (ctx.isInterrupted()) throw new TaskKilledException("in-flight wait interrupted")
+      val f = done.poll(100, TimeUnit.MILLISECONDS)
+      if (f == null) await() else f
     }
   }
 }

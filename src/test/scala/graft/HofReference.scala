@@ -77,9 +77,10 @@ object HofReference {
     bits.reduce(_ + _)
   }
 
-  /** [[graft.operators.FuzzyDedup.winnowSketchTable]]'s sketch columns:
-    * (m, mins) over a text column. */
-  def winnowSketchCols(text: Column): (Column, Column) = {
+  /** [[graft.operators.FuzzyDedup.winnowSketchTable]]'s `mins` sketch
+    * column over a text column. (Its `m`, the k-gram count, is the same
+    * Column formula in main, so a reference for it would check nothing.) */
+  def winnowSketchCols(text: Column): Column = {
     val toks = split(text, " +")
     val kgramHashes = when(size(toks) < WinK, array().cast("array<bigint>")).otherwise(
       transform(
@@ -89,7 +90,7 @@ object HofReference {
             .fp15(concat(lit("win:"), concat_ws(" ", slice(toks, i, lit(WinK)))))
       )
     )
-    val mins = when(size(kgramHashes) === 0, array().cast("array<bigint>")).otherwise(
+    when(size(kgramHashes) === 0, array().cast("array<bigint>")).otherwise(
       array_distinct(
         transform(
           sequence(lit(1), greatest(size(kgramHashes) - (WinW - 1), lit(1))),
@@ -97,6 +98,5 @@ object HofReference {
         )
       )
     )
-    (greatest(size(toks) - (WinK - 1), lit(0)), mins)
   }
 }

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * before the driver's verify pass does.
   */
 class QueriesSmokeSpec extends AnyFunSuite {
-  lazy val spark = GraftSession.get("local[8]", 8)
+  lazy val spark = GraftSession.get("local[4]", 4)
   private val dir = "/root/testdata/sf0.001"
 
   test("entry returns rows") {

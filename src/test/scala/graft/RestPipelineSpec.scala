@@ -1,13 +1,21 @@
 package graft
 
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicLong}
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.{ShuffleDependency, SparkException}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
+import org.scalatest.concurrent.Eventually
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 import graft.etl.AnimalsPipeline
 import graft.sources._
@@ -89,11 +97,182 @@ class Failing422Transport extends HttpTransport {
   }
 }
 
-class RestPipelineSpec extends AnyFunSuite {
+/** A six-page listing of twenty ids a page that logs every request in event
+  * order: a global tick at its start and at its end, the thread it ran on
+  * and its status. Page 2 and the first POST each answer 503 once; `postMode`
+  * can instead fail every POST or hold every POST for a minute. State lives
+  * in the companion because every pool thread builds its own transport. */
+object ScriptedTransport {
+  final case class Call(kind: String, key: String, rid: String, thread: String, start: Long, end: Long, status: Int)
+
+  val Pages   = 6
+  val PerPage = 20
+  val tick    = new AtomicLong
+  val calls   = new ConcurrentLinkedQueue[Call]()
+  val posts   = new ConcurrentLinkedQueue[String]()
+  val postsInFlight = new ConcurrentHashMap[String, AtomicInteger]()
+  val maxPostsInFlight = new AtomicInteger
+  private val page2Failed = new AtomicBoolean
+  private val postFailed  = new AtomicBoolean
+  @volatile var postMode = "ok" // "ok" | "fail" | "hang"
+
+  def reset(mode: String = "ok"): Unit = {
+    calls.clear(); posts.clear(); postsInFlight.clear(); maxPostsInFlight.set(0)
+    page2Failed.set(false); postFailed.set(false); postMode = mode
+  }
+
+  /** The partition a pool thread works for: its name without the pool's
+    * thread counter. A task thread is its own partition. */
+  def partitionOf(thread: String): String = thread.replaceAll("-\\d+$", "")
+
+  def idsIn(body: String): Seq[Long] = "\"id\":(\\d+)".r.findAllMatchIn(body).map(_.group(1).toLong).toSeq
+}
+
+class ScriptedTransport extends HttpTransport {
+  import ScriptedTransport._
+  override def request(method: String, path: String, body: Option[String], headers: Map[String, String]): HttpResponse = {
+    val start  = tick.incrementAndGet()
+    val thread = Thread.currentThread.getName
+    val (kind, key, resp) = (method, path) match {
+      case ("GET", p) if p.startsWith("/animals/v1/animals?page=") =>
+        val page  = p.stripPrefix("/animals/v1/animals?page=").toInt
+        val items = ((page - 1) * PerPage + 1 to page * PerPage).map(i => s"""{"id": $i, "name": "a$i"}""")
+        val resp =
+          if (page == 2 && page2Failed.compareAndSet(false, true)) HttpResponse(503, "down")
+          else HttpResponse(200, s"""{"page": $page, "total_pages": $Pages, "items": ${items.mkString("[", ",", "]")}}""")
+        ("page", page.toString, resp)
+      case ("GET", p) =>
+        val id = p.stripPrefix("/animals/v1/animals/").toLong
+        Thread.sleep(1)
+        ("detail", id.toString, HttpResponse(200, s"""{"id": $id, "name": "a$id", "friends": "", "born_at": null}"""))
+      case (_, _) =>
+        val inFlight = postsInFlight.computeIfAbsent(partitionOf(thread), _ => new AtomicInteger)
+        maxPostsInFlight.accumulateAndGet(inFlight.incrementAndGet(), math.max)
+        try {
+          Thread.sleep(if (postMode == "hang") 60000 else 2)
+          val resp =
+            if (postMode == "fail" || postFailed.compareAndSet(false, true)) HttpResponse(503, "busy")
+            else { posts.add(body.getOrElse("")); HttpResponse(200, """{"message": "ok"}""") }
+          ("post", body.getOrElse(""), resp)
+        } finally inFlight.decrementAndGet()
+    }
+    calls.add(Call(kind, key, headers("X-Request-Id"), thread, start, tick.incrementAndGet(), resp.status))
+    resp
+  }
+}
+
+class RestPipelineSpec extends AnyFunSuite with Eventually {
   lazy val spark = GraftSession.get("local[4]", 4)
   private val transport = classOf[FakeAnimalsTransport].getName
   private val asOf      = lit("2026-01-01 00:00:00").cast(TimestampType)
   private val fastPolicy = RetryPolicy(retries = 3, baseDelayMs = 1, capDelayMs = 2, jitterMs = 1)
+  private val scripted   = classOf[ScriptedTransport].getName
+
+  override implicit val patienceConfig: PatienceConfig = PatienceConfig(timeout = Span(10, Seconds))
+
+  private def livePoolThreads: Set[Thread] =
+    Thread.getAllStackTraces.keySet.asScala.filter(_.getName.startsWith(RestEnrich.PoolThreadPrefix)).toSet
+
+  private def causes(e: Throwable): Iterator[Throwable] = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+
+  private def shuffles(rdd: RDD[_]): Seq[ShuffleDependency[_, _, _]] =
+    rdd.dependencies.flatMap { d =>
+      (d match { case s: ShuffleDependency[_, _, _] => Seq(s); case _ => Nil }) ++ shuffles(d.rdd)
+    }
+
+  test("a run is one job, and details over the listing has no Exchange") {
+    val sc   = spark.sparkContext
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    def inGroup[T](group: String)(body: => T): T = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      inGroup("etl-run")(AnimalsPipeline.run(spark, transport, asOf, concurrency = 2, batchSize = 2, policy = fastPolicy))
+      // the listener bus delivers in order: once the marker job is seen,
+      // every job of the run has been
+      inGroup("etl-marker")(sc.parallelize(Seq(1), 1).count())
+      eventually(assert(jobs.contains("etl-marker")))
+      assert(jobs.asScala.count(_ == "etl-run") == 1, jobs)
+    } finally sc.removeSparkListener(listener)
+
+    val details = RestEnrich.details(AnimalsPipeline.listed(spark, transport), transport, 2, fastPolicy)
+    val plan    = details.queryExecution.executedPlan
+    assert(plan.collect { case e: Exchange => e }.isEmpty, plan)
+    assert(shuffles(details.queryExecution.toRdd).isEmpty, details.queryExecution.toRdd.toDebugString)
+  }
+
+  test("lookups run while a page GET and a POST back off; one POST in flight per partition") {
+    ScriptedTransport.reset()
+    val backoff = RetryPolicy(retries = 3, baseDelayMs = 150, capDelayMs = 150, jitterMs = 1)
+    val batch   = ScriptedTransport.PerPage
+    val result  = AnimalsPipeline.run(spark, scripted, asOf, concurrency = 2, batchSize = batch, policy = backoff)
+    val ids     = 1L to ScriptedTransport.Pages.toLong * ScriptedTransport.PerPage
+    assert(result.postedBatches == ids.size / batch)
+    assert(ScriptedTransport.posts.asScala.toSeq.flatMap(ScriptedTransport.idsIn).sorted == ids)
+
+    val calls   = ScriptedTransport.calls.asScala.toSeq
+    val details = calls.filter(_.kind == "detail")
+    def retried(kind: String): (ScriptedTransport.Call, ScriptedTransport.Call) = {
+      val failed = calls.filter(c => c.kind == kind && c.status == 503)
+      assert(failed.size == 1, failed)
+      val Seq(first, second) = calls.filter(_.rid == failed.head.rid).sortBy(_.start)
+      (first, second)
+    }
+    // page 2's backoff: the other pages' ids are being looked up
+    val (page2, page2Again) = retried("page")
+    assert(page2.key == "2")
+    assert(details.exists(d => d.end > page2.end && d.end < page2Again.start))
+    // the first POST's backoff: the partition that sent it looks up more ids
+    // than its lookup pool had submitted ahead before the POST began
+    val (post, postAgain) = retried("post")
+    val postingPartition = ScriptedTransport.partitionOf(
+      details.find(_.key == ScriptedTransport.idsIn(post.key).head.toString).get.thread)
+    val during = details.filter(d =>
+      ScriptedTransport.partitionOf(d.thread) == postingPartition && d.start > post.end && d.end < postAgain.start)
+    assert(during.size > 2 * RestEnrich.share(2, 2, 0), (post, postAgain, during))
+    assert(ScriptedTransport.maxPostsInFlight.get == 1)
+
+    // every request but the driver's page-1 probe ran on a pool thread,
+    // and none outlives the run
+    val taskSide = calls.filterNot(_.thread == Thread.currentThread.getName)
+    assert(taskSide.size == calls.size - 1)
+    assert(taskSide.forall(_.thread.startsWith(RestEnrich.PoolThreadPrefix)), taskSide.map(_.thread).distinct)
+    eventually(assert(livePoolThreads.isEmpty))
+  }
+
+  test("a run whose POSTs all fail fails with the POST's error and leaves no pool thread") {
+    ScriptedTransport.reset(mode = "fail")
+    val e = intercept[Exception](AnimalsPipeline.run(spark, scripted, asOf, concurrency = 2, batchSize = 10, policy = fastPolicy))
+    assert(causes(e).exists {
+      case r: RetriesExhaustedException => r.method == "POST" && r.status == 503
+      case _                            => false
+    }, e)
+    assert(ScriptedTransport.posts.isEmpty)
+    eventually(assert(livePoolThreads.isEmpty))
+  }
+
+  test("a run cancelled with a POST in flight returns promptly and leaves no pool thread") {
+    // POSTs would hold a minute; only the cancel can end them in time.
+    ScriptedTransport.reset(mode = "hang")
+    val sc    = spark.sparkContext
+    val group = "etl-cancel"
+    val run = Future {
+      sc.setJobGroup(group, "cancelled run")
+      try AnimalsPipeline.run(spark, scripted, asOf, concurrency = 2, batchSize = 10, policy = fastPolicy)
+      finally sc.clearJobGroup()
+    }(ExecutionContext.global)
+    try eventually(assert(ScriptedTransport.postsInFlight.values.asScala.exists(_.get > 0)))
+    finally sc.cancelJobGroup(group)
+    intercept[SparkException](Await.result(run, 10.seconds))
+    eventually(assert(livePoolThreads.isEmpty))
+    assert(ScriptedTransport.postsInFlight.values.asScala.forall(_.get == 0))
+  }
 
   test("paginated listing lists all ids across pages") {
     val ids = AnimalsPipeline.listed(spark, transport).select("id").collect().map(_.getLong(0)).toSet
