@@ -2,22 +2,29 @@ package graft
 
 import java.util.concurrent.atomic.LongAdder
 
-import org.apache.spark.GraftSparkBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import scala.collection.mutable
 
-/** Benchmark harness: runs every registered query (plus the
-  * [[BenchExtras]] build/probe split rows) against one data directory,
-  * prints one compact JSON line on stdout ([[stdoutLine]]: registry rows
-  * only, short `qNN` keys, wall seconds) and writes the full-name per-row
-  * detail to a sidecar JSON file.
+import org.apache.spark.GraftSparkBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** Benchmark harness: runs every registered query against one data
+  * directory, prints one compact JSON line on stdout ([[stdoutLine]]:
+  * short `qNN` keys, wall seconds) and writes the full-name per-row detail
+  * to a sidecar JSON file.
   *
   * Measurement. Each row runs `reps` times and reports the MEDIAN wall,
-  * executor cpu (task metrics via a SparkListener) and `plan_sec` (the
-  * span up to `executedPlan`: builder-side eager jobs plus Catalyst's
-  * analysis, optimization and physical planning). In a shared session,
-  * one-off GC/JIT pauses land on whichever query happens to trigger them;
-  * the median drops those, and the per-rep series stay in the sidecar.
-  * Rows in [[WarmupRows]] first burn one unrecorded rep.
+  * executor cpu (task metrics via a SparkListener), `construct_sec` (the
+  * builder call: the jobs it runs through [[Eager]] before it returns its
+  * DataFrame) and `plan_sec` (the span up to `executedPlan`: construction
+  * plus Catalyst's analysis, optimization and physical planning). Jobs
+  * started during construction are grouped by their [[Eager]] phase name
+  * into `phases: {name: {jobs, job_sec}}`, taken from the median-wall rep;
+  * a construction job without a phase name would be listed as `unnamed`.
+  * In a shared session, one-off GC/JIT pauses land on whichever query
+  * happens to trigger them; the median drops those, and the per-rep series
+  * stay in the sidecar. Rows in [[WarmupRows]] first burn one unrecorded
+  * rep.
   *
   * Contention. A fixed spin ([[ContentionProbe]]) is sampled before every
   * row and once at the end. [[contentionFlags]] reads the probe series and
@@ -165,7 +172,9 @@ object Bench {
       name: String,
       wall: Double,
       cpu: Double,
+      construct: Double,
       plan: Double,
+      phases: Map[String, (Int, Double)],
       repWalls: Seq[Double],
       repCpus: Seq[Double],
       repPlans: Seq[Double],
@@ -191,8 +200,7 @@ object Bench {
 
   /** The stdout line the bench runner parses. `rows` are (name, median wall, median cpu)
     * for every measured row in run order; only names in `registry` enter
-    * `queries`, `value` and `cpu_sec`, so the bench-only split rows never
-    * shift the cross-round totals. Per-query precision degrades BEFORE the
+    * `queries`, `value` and `cpu_sec`. Per-query precision degrades BEFORE the
     * line outgrows [[LineMaxChars]]: 3 decimals while it fits, then 2, then
     * only the slowest rows plus an `omitted` count (never fewer than 10);
     * `value` and `cpu_sec` never degrade. Throws when two rows share a
@@ -258,18 +266,47 @@ object Bench {
     (runRow +: results.map { r =>
       val d    = if (dirtySet(r.name)) s""","dirty":true""" else ""
       val warm = r.warmup.map { case (w, c) => s""","warmup_wall":${s3(w)},"warmup_cpu":${s3(c)}""" }.getOrElse("")
-      s""""${r.name}":{"wall_sec":${s3(r.wall)},"cpu_sec":${s3(r.cpu)},"plan_sec":${s3(r.plan)}$d$warm,"rep_walls":${arr(r.repWalls)},"rep_cpus":${arr(r.repCpus)},"rep_plans":${arr(r.repPlans)}}"""
+      val phases = r.phases.toSeq.sortBy(_._1).map { case (p, (jobs, sec)) =>
+        s"""${jstr(p)}:{"jobs":$jobs,"job_sec":${s3(sec)}}"""
+      }.mkString("{", ",", "}")
+      s""""${r.name}":{"wall_sec":${s3(r.wall)},"cpu_sec":${s3(r.cpu)},"construct_sec":${s3(r.construct)},"plan_sec":${s3(r.plan)}$d$warm,"phases":$phases,"rep_walls":${arr(r.repWalls)},"rep_cpus":${arr(r.repCpus)},"rep_plans":${arr(r.repPlans)}}"""
     }).mkString("{", ",", "}")
   }
 
-  /** Accumulates executor CPU ns across all tasks; listener events arrive
-    * asynchronously, so queries snapshot the counter before/after and the
-    * bus is drained between queries. */
-  private final class CpuListener extends SparkListener {
+  /** Job tag Bench holds while a row's builder runs: jobs carrying it are
+    * that row's construction jobs. */
+  private val ConstructTag = "graft-bench-construct"
+
+  /** Accumulates executor CPU ns across all tasks, and tallies the
+    * construction jobs (tagged [[ConstructTag]]) by their job description,
+    * which [[Eager]] sets to the phase name. Listener events arrive
+    * asynchronously, so queries snapshot before/after and the bus is
+    * drained between queries. */
+  private final class Listener extends SparkListener {
     val cpuNs = new LongAdder
+    private val started = mutable.Map.empty[Int, (String, Long)]
+    private val phases  = mutable.Map.empty[String, (Int, Long)]
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
       val m = e.taskMetrics
       if (m != null) cpuNs.add(m.executorCpuTime)
+    }
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      def prop(key: String) = Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+      if (prop("spark.job.tags").exists(_.split(',').contains(ConstructTag)))
+        synchronized(started(e.jobId) = (prop("spark.job.description").getOrElse("unnamed"), e.time))
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      started.remove(e.jobId).foreach { case (phase, t0) =>
+        val (jobs, ms) = phases.getOrElse(phase, (0, 0L))
+        phases(phase) = (jobs + 1, ms + e.time - t0)
+      }
+    }
+    /** Construction jobs ended since the last call, as phase -> (jobs, job
+      * seconds). */
+    def takePhases(): Map[String, (Int, Double)] = synchronized {
+      val out = phases.map { case (p, (jobs, ms)) => p -> (jobs, ms / 1e3) }.toMap
+      phases.clear()
+      out
     }
   }
 
@@ -278,35 +315,39 @@ object Bench {
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.get(s"local[$cpus]", cpus.toInt)
     val sc    = spark.sparkContext
-    val cpu   = new CpuListener
-    sc.addSparkListener(cpu)
+    val listener = new Listener
+    sc.addSparkListener(listener)
     // warm the JVM/session so the first measured query doesn't pay init costs
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     // Optional subset for iteration: comma-separated name prefixes, e.g.
     // SPARK_GRAFT_BENCH_ONLY=q31,q32 (full runs leave it unset).
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(',').map(_.trim).filter(_.nonEmpty))
-    // registry queries + bench-only build/probe split rows (BenchExtras);
-    // the latter appear in bench_detail.json only — the stdout line stays
-    // registry-sized
-    val all = SparkEntry.queries ++ BenchExtras.rows
     val selected = only match {
-      case Some(ps) => all.filter { case (n, _) => ps.exists(n.startsWith) }
-      case None     => all
+      case Some(ps) => SparkEntry.queries.filter { case (n, _) => ps.exists(n.startsWith) }
+      case None     => SparkEntry.queries
     }
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(3)
     require(reps >= 1, s"SPARK_GRAFT_BENCH_REPS must be >= 1, got $reps")
     val probe = new ContentionProbe
     (1 to 3).foreach(_ => probe.spin()) // JIT-warm the probe loop itself
-    // (result, wall s, executor cpu s) of one execution; the bus drains on
-    // both sides attribute straggler task events to the right execution
-    def measured[A](body: => A): (A, Double, Double) = {
+    // (result, wall s, executor cpu s, construction phases) of one
+    // execution; the bus drains on both sides attribute straggler task and
+    // job events to the right execution
+    def measured[A](body: => A): (A, Double, Double, Map[String, (Int, Double)]) = {
       GraftSparkBridge.drainListenerBus(sc)
-      val cpu0 = cpu.cpuNs.sum()
+      listener.takePhases()
+      val cpu0 = listener.cpuNs.sum()
       val t0   = System.nanoTime()
       val a    = body
       val wall = (System.nanoTime() - t0) / 1e9
       GraftSparkBridge.drainListenerBus(sc)
-      (a, wall, (cpu.cpuNs.sum() - cpu0) / 1e9)
+      (a, wall, (listener.cpuNs.sum() - cpu0) / 1e9, listener.takePhases())
+    }
+    // the builder call, its jobs tagged as construction jobs
+    def construct(fn: (SparkSession, String) => DataFrame): DataFrame = {
+      sc.addJobTag(ConstructTag)
+      try fn(spark, sfDir)
+      finally sc.removeJobTag(ConstructTag)
     }
     val probeWalls = scala.collection.mutable.ArrayBuffer.empty[Double]
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
@@ -319,8 +360,8 @@ object Bench {
       System.gc()
       probeWalls += probe.spin() // sampled while the session is idle
       val warmup = if (!WarmupRows(name)) None else {
-        val (_, w, c) = measured {
-          try { fn(spark, sfDir).queryExecution.toRdd.count() }
+        val (_, w, c, _) = measured {
+          try { construct(fn).queryExecution.toRdd.count() }
           catch { case e: Throwable => System.err.println(s"[bench] $name warmup failed: $e"); -1L }
         }
         Some((w, c))
@@ -337,14 +378,15 @@ object Bench {
         // the whole driver-side chain (analysis → optimization → physical
         // planning) WITHOUT executing anything — under AQE it returns the
         // unexecuted AdaptiveSparkPlanExec root (`toRdd` would materialize
-        // every intermediate query stage). For rows whose builder `fn` runs
-        // eager intra-query actions (index builds, checkpointed loops), the
-        // span includes those by construction.
+        // every intermediate query stage). The construction span is the
+        // builder call alone, which runs the row's Eager jobs.
         measured {
           val t0 = System.nanoTime()
+          var constructSec = 0.0
           val planned =
             try {
-              val qe = fn(spark, sfDir).queryExecution
+              val df = try construct(fn) finally constructSec = (System.nanoTime() - t0) / 1e9
+              val qe = df.queryExecution
               qe.executedPlan // forces the full plan chain, executes nothing
               Some(qe)
             } catch {
@@ -354,17 +396,15 @@ object Bench {
           val planSec = (System.nanoTime() - t0) / 1e9
           try planned.foreach { qe => qe.toRdd.count(); () }
           catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e") }
-          planSec
+          (constructSec, planSec)
         }
       }
-      // drop any per-JVM store this row cached for its own reps — later
-      // queries must not run under its retained blocks (outside the
-      // measured window, like the gc nudge above)
-      BenchExtras.releaseAfter(name)
       val walls = runs.map(_._2)
       val cpus  = runs.map(_._3)
-      val plans = runs.map(_._1)
-      Measured(name, median(walls), median(cpus), median(plans), walls, cpus, plans, warmup)
+      val plans = runs.map(_._1._2)
+      val medianRep = runs.sortBy(_._2).apply((runs.size - 1) / 2)
+      Measured(name, median(walls), median(cpus), median(runs.map(_._1._1)), median(plans), medianRep._4,
+        walls, cpus, plans, warmup)
     }
     probeWalls += probe.spin() // close the run: catch load arriving late
     // later-rep spreads (rep 1 excluded — JIT) over queries big enough to

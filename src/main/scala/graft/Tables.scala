@@ -10,8 +10,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * anyway. Set lazily, before the first events read.
   */
 object Tables {
+  /** The table's DataFrame. Reading it runs a job, which infers the parquet
+    * schema. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Eager.phase("tables.read")(spark.read.parquet(s"$dir/$name.parquet"))
 
   def lineitem(s: SparkSession, d: String): DataFrame = apply(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame   = apply(s, d, "orders")
@@ -122,7 +124,7 @@ object Tables {
     * holds everywhere today. A caller whose corpus can grow must not use
     * this cache: it counts directly. */
   def rowCountCached(s: SparkSession, dir: String, name: String): Long =
-    rowCounts.computeIfAbsent(s"$dir/$name", _ => apply(s, dir, name).count())
+    rowCounts.computeIfAbsent(s"$dir/$name", _ => Eager.count(apply(s, dir, name), "tables.rowCount"))
   private val rowCounts = new java.util.concurrent.ConcurrentHashMap[String, Long]()
 
   /** Row count of the FILTERED embeddings view — the count knob sizing
@@ -134,7 +136,7 @@ object Tables {
     * parity: dynamic oracles interpolate this same number, so both sides
     * of every knob move together on a null/NaN-bearing corpus. */
   def embeddingsCountCached(s: SparkSession, dir: String): Long =
-    rowCounts.computeIfAbsent(s"$dir/embeddings#finite", _ => embeddings(s, dir).count())
+    rowCounts.computeIfAbsent(s"$dir/embeddings#finite", _ => Eager.count(embeddings(s, dir), "tables.rowCount"))
 
   /** Raw-order embeddings view, same null/non-finite vector drop as
     * [[embeddingsDistributed]] (one contract, both entry points). */
@@ -146,7 +148,7 @@ object Tables {
     * type — see [[normalizeEvents]].
     */
   def events(s: SparkSession, d: String): DataFrame =
-    normalizeEvents(s.read.parquet(s"$d/events.parquet"))
+    normalizeEvents(apply(s, d, "events"))
 
   /** [[events]] with the [[documentsDistributed]] fan-out guarantee — for
     * the per-row CPU consumers (timestamp rendering, JSON parsing) that a

@@ -87,7 +87,7 @@ object AnimalsPipeline {
 
     override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] = {
       val pages = split.asInstanceOf[PagePartition].pages.iterator
-      RestEnrich.inFlight(2, newClient, pages)((client, page) => client.get(pagePath(page)).body).flatMap {
+      RestEnrich.inFlight("page", 2, newClient, pages)((client, page) => client.get(pagePath(page)).body).flatMap {
         case (_, body) =>
           AnimalsJson.parsePage(body).items.iterator
             .map(a => InternalRow(a.id, UTF8String.fromString(a.name), a.bornAt.map(Long.box).orNull))

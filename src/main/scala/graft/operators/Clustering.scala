@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{QueryModule, Tables}
+import graft.{Eager, QueryModule, Tables}
 
 /** Distributed k-means over the embedding corpus (q70) — the clustering
   * stage a training pipeline runs for corpus curation (topic balancing,
@@ -64,12 +64,13 @@ object Clustering extends QueryModule {
     * `dim` is passed in (known from the current model) — reading it off
     * the frame cost a `head()` job per iteration (r18: two driver-side
     * round-trips per fit for a constant the centroids already carry). */
-  private def update(assigned: DataFrame, dim: Int): Seq[(Long, Array[Double])] = {
-    val rows = assigned
-      .select(col("cid"), posexplode(col("qv")).as(Seq("dim", "v")))
-      .groupBy("cid", "dim")
-      .agg(sum(col("v").cast(LongType)).as("s"), count(lit(1)).as("n"))
-      .collect()
+  private def update(assigned: DataFrame, k: Int, dim: Int): Seq[(Long, Array[Double])] = {
+    val rows = Eager.collect(
+      assigned
+        .select(col("cid"), posexplode(col("qv")).as(Seq("dim", "v")))
+        .groupBy("cid", "dim")
+        .agg(sum(col("v").cast(LongType)).as("s"), count(lit(1)).as("n")),
+      k * dim, "clustering.update")
     rows
       .groupBy(_.getLong(0))
       .map { case (cid, rs) =>
@@ -93,20 +94,17 @@ object Clustering extends QueryModule {
     // Materialize the quantized projection ONCE (MLlib's pattern: persist
     // the prepared input before an iterative fit). Without it every
     // iteration's update — plus the caller's final pass — re-reads parquet
-    // and re-quantizes; localCheckpoint stores the skinny (vec_id, label,
+    // and re-quantizes; the checkpoint stores the skinny (vec_id, label,
     // qv) blocks and truncates lineage, and the ContextCleaner frees the
     // blocks when the query releases the frame. At corpus scale this is
     // 8·dim bytes/vector — the thing you CAN afford to keep per fit.
     val emb = Tables
       .embeddingsDistributed(s, dir)
       .select(col("vec_id"), col("label").cast(LongType).as("label"), quantize(col("embedding")).as("qv"))
-      .localCheckpoint()
+      .transform(Eager.materialize(_, "clustering.quantized"))
     // deterministic init: the k lowest vec_ids, cid = rank in that order
-    var centroids: Seq[(Long, Array[Double])] = emb
-      .orderBy("vec_id")
-      .limit(k)
-      .select(col("qv"))
-      .collect()
+    var centroids: Seq[(Long, Array[Double])] = Eager
+      .collect(emb.orderBy("vec_id").limit(k).select(col("qv")), k, "clustering.init")
       .zipWithIndex
       .map { case (r, i) => i.toLong -> r.getSeq[Double](0).toArray }
       .toSeq
@@ -127,7 +125,7 @@ object Clustering extends QueryModule {
         val assigned = emb
           .withColumn("best", nearest(col("qv"), centroids))
           .select(col("vec_id"), col("label"), col("qv"), col("best.c").as("cid"), col("best.d").as("d"))
-        centroids = update(assigned, dim)
+        centroids = update(assigned, centroids.size, dim)
       }
     }
     (emb, centroids)
@@ -142,7 +140,7 @@ object Clustering extends QueryModule {
     val assigned = emb
       .withColumn("best", nearest(col("qv"), centroids))
       .select(col("vec_id"), col("label"), col("best.c").as("cid"), col("best.d").as("d"))
-      .localCheckpoint()
+      .transform(Eager.materialize(_, "clustering.assigned"))
     val byLabel = assigned
       .groupBy("cid", "label")
       .agg(count(lit(1)).as("cnt"))
@@ -207,8 +205,7 @@ object Clustering extends QueryModule {
     * integer dot products exact cross-engine). */
   val SemDupCos = 0.9
 
-  /** Fail-fast ceiling on the largest cluster for [[semDedup]] (override
-    * via `graft.semdedup.maxClusterSize`). */
+  /** Fail-fast ceiling on the largest cluster for [[semDedup]]. */
   val SemDedupDefaultMaxCluster = 100000L
 
   /** [[semDedup]]'s K sizing — the q39 `autoEmbBits` / index `autoNumBuckets`
@@ -265,19 +262,18 @@ object Clustering extends QueryModule {
     // the assignment is consumed four times (sizes, the fail-fast probe,
     // both self-join sides) — materialize the skinny clustered corpus once
     // instead of re-running the per-row argmin per consumer
-    val assigned = assignments(s, dir, k).localCheckpoint()
+    val assigned = Eager.materialize(assignments(s, dir, k), "clustering.assigned")
     val sizes    = assigned.groupBy("cid").agg(count(lit(1)).as("n_points"))
-    val maxCluster = s.conf
-      .getOption("graft.semdedup.maxClusterSize")
-      .map(_.toLong)
-      .getOrElse(SemDedupDefaultMaxCluster)
     // coalesce(0): max() over zero clusters is NULL (empty corpus) and the
     // getLong would throw — an empty corpus trivially satisfies the guard
-    val biggest = sizes.agg(coalesce(max(col("n_points")), lit(0L))).head().getLong(0)
+    val biggest = Eager
+      .collect(sizes.agg(coalesce(max(col("n_points")), lit(0L))), 1, "clustering.semDedup.guard")
+      .head
+      .getLong(0)
     require(
-      biggest <= maxCluster,
+      biggest <= SemDedupDefaultMaxCluster,
       s"semDedup's intra-cluster pair scan is O(cluster²): largest cluster has $biggest vectors " +
-        s"> limit $maxCluster. Raise K (the SemDeDup remedy) or graft.semdedup.maxClusterSize explicitly."
+        s"> limit $SemDedupDefaultMaxCluster. Raise K (the SemDeDup remedy)."
     )
     val withNorm = assigned.withColumn("nrm", sqrt(dot(col("qv"), col("qv"))))
     val a = withNorm.select(
@@ -336,7 +332,7 @@ object Clustering extends QueryModule {
     // counts) — materialize it once so the assignment argmin runs a single
     // time; every downstream aggregate is then model-sized. tot derives
     // from ncl rather than re-scanning the assignment.
-    val ncl = assigned.groupBy("cid", "label").agg(count(lit(1)).as("n_cl")).localCheckpoint()
+    val ncl = Eager.materialize(assigned.groupBy("cid", "label").agg(count(lit(1)).as("n_cl")), "clustering.purity")
     val nc  = ncl.groupBy("cid").agg(sum(col("n_cl")).as("n_c"))
     val nl  = ncl.groupBy("label").agg(sum(col("n_cl")).as("n_l"))
     val tot = ncl.agg(sum(col("n_cl")).as("n"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
-import graft.{QueryModule, Tables}
+import graft.{Eager, QueryModule, Tables}
 
 /** Document deduplication family over `documents` — the operators a
   * training-data pipeline runs at 100 TB.
@@ -74,7 +74,7 @@ object Dedup extends QueryModule {
     val sh = Tables
       .documentsDistributed(s, dir)
       .select(col("doc_id"), shingles(col("text")).as("shingles"))
-      .localCheckpoint()
+      .transform(Eager.materialize(_, "dedup.shingles"))
     // cast: Spark's size() is INT but DuckDB counts are BIGINT — the driver
     // hash is dtype-sensitive, so n_a/n_b must ship as BIGINT
     val sz = sh.select(col("doc_id"), size(col("shingles")).cast("long").as("n_sh"))
@@ -422,14 +422,14 @@ object Dedup extends QueryModule {
     * df-fraction compare is one IEEE multiply, identical in DuckDB. */
   def boilerplate(s: SparkSession, dir: String): DataFrame = {
     // ONE corpus pass (q81's discipline): the skinny distinct
-    // (doc_id, source, fp) table is materialized (localCheckpoint) so both
-    // consumers — per-source doc counts and span document frequencies —
-    // read it instead of re-exploding text
+    // (doc_id, source, fp) table is materialized so both consumers —
+    // per-source doc counts and span document frequencies — read it
+    // instead of re-exploding text
     val e = Tables
       .documentsDistributed(s, dir)
       .select(col("doc_id"), col("source"), explode(spanFingerprints(col("text"))).as("fp"))
       .distinct()
-      .localCheckpoint()
+      .transform(Eager.materialize(_, "dedup.spans"))
     val nd = e.groupBy("source").agg(countDistinct(col("doc_id")).as("n_docs"))
     val df = e.groupBy("source", "fp").agg(count(lit(1)).as("df"))
     val isBoiler =
@@ -483,7 +483,7 @@ object Dedup extends QueryModule {
         size(split(col("text"), " +")).cast(LongType).as("n_tok"),
         spanFingerprints(col("text")).as("fps")
       )
-      .localCheckpoint()
+      .transform(Eager.materialize(_, "dedup.spans"))
     val nd = base
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("tokens_before"))
@@ -574,9 +574,9 @@ object Dedup extends QueryModule {
     * columns only (see [[sketchRollup]]), making the gate deterministic. */
   def sketchRollupEst(s: SparkSession, dir: String): DataFrame = {
     // ONE corpus pass: narrow md5 → distinct (source, fp), materialized
-    // (localCheckpoint) so BOTH consumers — per-source exact counts +
-    // sketches, and the global exact count — read the vocabulary-sized
-    // table instead of re-scanning text (without the checkpoint the
+    // so BOTH consumers — per-source exact counts + sketches, and the
+    // global exact count — read the vocabulary-sized table instead of
+    // re-scanning text (without the checkpoint the
     // optimizer prunes each consumer into its own corpus scan; HLL is
     // duplicate-insensitive, so sketching distinct rows is identical to
     // sketching the corpus). Checkpoint blocks free with the DF reference,
@@ -585,7 +585,7 @@ object Dedup extends QueryModule {
       .documentsDistributed(s, dir)
       .select(col("source"), md5(canonicalText(col("text"))).as("fp"))
       .distinct()
-      .localCheckpoint()
+      .transform(Eager.materialize(_, "dedup.fingerprints"))
     val perSource = sf
       .groupBy("source")
       .agg(
@@ -656,7 +656,7 @@ object Dedup extends QueryModule {
       .documentsDistributed(s, dir)
       .select(col("source"), md5(canonicalText(col("text"))).as("fp"))
       .distinct()
-      .localCheckpoint()
+      .transform(Eager.materialize(_, "dedup.fingerprints"))
     val per = sf
       .groupBy("source")
       .agg(hll_sketch_agg(col("fp")).as("sk"), count(lit(1)).as("n"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.{Tables}
+import graft.{Eager, Tables}
 import graft.sources.Layout
 
 /** PERSISTED dedup index (q106) — the cross-run production shape of q58's
@@ -172,9 +172,9 @@ object DedupIndex {
 
   def build(docs: DataFrame, prefix: String = IndexPrefix, numBuckets: Int = 0): Unit = {
     val s = docs.sparkSession
-    val n = if (numBuckets > 0) numBuckets else autoNumBuckets(docs.count())
+    val n = if (numBuckets > 0) numBuckets else autoNumBuckets(Eager.count(docs, "dedupIndex.build.size"))
     Seq(s"${prefix}_fp", s"${prefix}_shingles", s"${prefix}_bands").foreach(reset(s, _))
-    Layout.writeBucketed(hashed(docs), s"${prefix}_shingles", "doc_id", n)
+    Eager.phase("dedupIndex.build.shingles")(Layout.writeBucketed(hashed(docs), s"${prefix}_shingles", "doc_id", n))
     val shTable = s.table(s"${prefix}_shingles")
     // Pre-partition on the band key AT THE BUCKET COUNT before the
     // occupancy window (r18, guide §2): the window needs a band-clustered
@@ -198,14 +198,15 @@ object DedupIndex {
     // to DIFFERENT tables — independent jobs, overlapped (r17: 0.72 s +
     // 1.06 s sequential → max of the two; the tail tasks of one write
     // back-fill cores the other frees)
-    inParallel(
-      () =>
-        Layout.writeBucketed(
-          shTable.select("fingerprint").repartition(n, col("fingerprint")).distinct(),
-          s"${prefix}_fp", "fingerprint", n),
-      () =>
-        Layout.writeBucketed(bands.select("band", "doc_id"), s"${prefix}_bands", "band", n)
-    )
+    Eager.phase("dedupIndex.build.fpBands")(
+      inParallel(
+        () =>
+          Layout.writeBucketed(
+            shTable.select("fingerprint").repartition(n, col("fingerprint")).distinct(),
+            s"${prefix}_fp", "fingerprint", n),
+        () =>
+          Layout.writeBucketed(bands.select("band", "doc_id"), s"${prefix}_bands", "band", n)
+      ))
   }
 
   /** Screen a delta batch against the persisted index: q58's output shape —
@@ -213,7 +214,7 @@ object DedupIndex {
     * The batch text is read ONCE (the [[hashed]] checkpoint); the three
     * probe joins all derive from the skinny materialized frame. */
   def probe(s: SparkSession, delta: DataFrame, prefix: String = IndexPrefix): DataFrame =
-    probeHashed(s, hashed(delta).localCheckpoint(), prefix)
+    probeHashed(s, Eager.materialize(hashed(delta), "dedupIndex.probe.hashed"), prefix)
 
   /** [[probe]] over an already-materialized [[hashed]] frame — shared with
     * [[probeAndAbsorb]], whose absorb appends reuse the same checkpoint. */
@@ -262,9 +263,9 @@ object DedupIndex {
     * batch alone; the global cap is re-enforced by the periodic [[build]]
     * compaction, exactly like segment merges in any LSM-ish index.
     *
-    * Correctness note: verdicts are materialized (`localCheckpoint`)
-    * BEFORE the index tables are mutated — `probe` is lazy, and computing
-    * it after the append would screen the batch against itself. */
+    * Correctness note: verdicts are materialized BEFORE the index tables
+    * are mutated — `probe` is lazy, and computing it after the append
+    * would screen the batch against itself. */
   def probeAndAbsorb(s: SparkSession, batch: DataFrame, prefix: String = IndexPrefix): DataFrame = {
     // Detect a pre-fingerprint (2-column) shingle table UP FRONT — without
     // this, the mismatch surfaces as an AnalysisException on the absorb
@@ -280,8 +281,8 @@ object DedupIndex {
     // ONE text pass over the whole batch: probe joins AND the absorb
     // appends all derive from this checkpoint — the batch text is never
     // re-read after this line
-    val h        = hashed(batch).localCheckpoint()
-    val verdicts = probeHashed(s, h, prefix).localCheckpoint()
+    val h        = Eager.materialize(hashed(batch), "dedupIndex.absorb.hashed")
+    val verdicts = Eager.materialize(probeHashed(s, h, prefix), "dedupIndex.absorb.verdicts")
     // survivor-sized: both checkpointed sides, three consumers below
     val kept = h.join(verdicts.filter(col("keep") === 1L).select("doc_id"), Seq("doc_id"))
     // same exchange-sharing shape as build(): pre-partition at the
@@ -307,18 +308,19 @@ object DedupIndex {
     // (guide §2.6, r17); all complete before this returns, so callers
     // (incl. the streaming sink's commit-marker write) see the same
     // all-appends-then-return contract as the sequential form.
-    inParallel(
-      () =>
-        Layout.appendBucketed(
-          kept.select("fingerprint").repartition(nFp, col("fingerprint")).distinct(),
-          s"${prefix}_fp", "fingerprint", nFp),
-      () =>
-        Layout.appendBucketed(kept, s"${prefix}_shingles", "doc_id", tableBuckets(s, s"${prefix}_shingles")),
-      () =>
-        Layout.appendBucketed(
-          bands.select("band", "doc_id"),
-          s"${prefix}_bands", "band", nBands)
-    )
+    Eager.phase("dedupIndex.absorb.write")(
+      inParallel(
+        () =>
+          Layout.appendBucketed(
+            kept.select("fingerprint").repartition(nFp, col("fingerprint")).distinct(),
+            s"${prefix}_fp", "fingerprint", nFp),
+        () =>
+          Layout.appendBucketed(kept, s"${prefix}_shingles", "doc_id", tableBuckets(s, s"${prefix}_shingles")),
+        () =>
+          Layout.appendBucketed(
+            bands.select("band", "doc_id"),
+            s"${prefix}_bands", "band", nBands)
+      ))
     verdicts
   }
 
@@ -438,7 +440,8 @@ object DedupIndex {
       key,
       batchId,
       tableExists = s.catalog.tableExists(vt),
-      seenInTable = () => !s.table(vt).filter(col("batch_id") === batchId).isEmpty)
+      seenInTable = () =>
+        !Eager.phase("dedupIndex.replayProbe")(s.table(vt).filter(col("batch_id") === batchId).isEmpty))
     // replay skips must be OBSERVABLE: if a stale mark (or a foreign
     // verdict table under a fresh checkpoint without resetVerdicts) ever
     // misclassifies a live batch, the failure mode is silent data loss —
@@ -494,12 +497,13 @@ object DedupIndex {
       else s.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)
     val accountable = base.select("doc_id").union(survivors).distinct()
     val sh  = s.table(s"${prefix}_shingles")
-    val shOrphans = sh.select("doc_id").distinct()
-      .join(accountable, Seq("doc_id"), "left_anti").count()
-    val bandOrphans = s.table(s"${prefix}_bands").select("doc_id").distinct()
-      .join(accountable, Seq("doc_id"), "left_anti").count()
-    val fpOrphans = s.table(s"${prefix}_fp").select("fingerprint").distinct()
-      .join(sh.select("fingerprint").distinct(), Seq("fingerprint"), "left_anti").count()
+    def orphans(df: DataFrame): Long = Eager.count(df, "dedupIndex.audit")
+    val shOrphans = orphans(sh.select("doc_id").distinct().join(accountable, Seq("doc_id"), "left_anti"))
+    val bandOrphans = orphans(
+      s.table(s"${prefix}_bands").select("doc_id").distinct().join(accountable, Seq("doc_id"), "left_anti"))
+    val fpOrphans = orphans(
+      s.table(s"${prefix}_fp").select("fingerprint").distinct()
+        .join(sh.select("fingerprint").distinct(), Seq("fingerprint"), "left_anti"))
     import s.implicits._
     Seq(
       ("shingles", shOrphans),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{QueryModule, Tables}
+import graft.{Eager, QueryModule, Tables}
 
 /** Scale-path fuzzy deduplication: MinHash + banded LSH, SimHash, rolling
   * hash, and embedding-cosine near-dup.
@@ -91,7 +91,7 @@ object FuzzyDedup extends QueryModule {
       .documentsDistributed(s, dir)
       .select(col("doc_id"), Dedup.shingles(col("text")).as("shingles"))
       .filter(size(col("shingles")) > 0)
-      .localCheckpoint()
+      .transform(Eager.materialize(_, "fuzzyDedup.shingles"))
     minhashPairsVerified(docs, maxOccupancy)
   }
 
@@ -163,7 +163,7 @@ object FuzzyDedup extends QueryModule {
       .documentsDistributed(s, dir)
       .select(col("doc_id"), Dedup.shingles(col("text")).as("shingles"))
       .filter(size(col("shingles")) > 0)
-      .localCheckpoint()
+      .transform(Eager.materialize(_, "fuzzyDedup.shingles"))
     val bands = boundedBands(
       docs.select(col("doc_id"), explode(graft.plans.TextHashExpressions.minhashBandKeys(col("shingles"))).as("band")),
       "band",
@@ -269,9 +269,9 @@ object FuzzyDedup extends QueryModule {
     * silently running an O(n²) join — the count is one footer-statistics
     * read, not a scan. */
   def embeddingPairs(s: SparkSession, dir: String): DataFrame = {
-    // fail-fast BEFORE the eager checkpoint below: localCheckpoint
-    // materializes the full scan + norm pass, which is exactly the work
-    // the guard exists to refuse on an oversized corpus
+    // fail-fast BEFORE the eager checkpoint below: it materializes the
+    // full scan + norm pass, which is exactly the work the guard exists to
+    // refuse on an oversized corpus
     val maxRows = s.conf.getOption("graft.exactPairs.maxRows").map(_.toLong).getOrElse(ExactPairsDefaultMaxRows)
     // guard scalar from the cached filtered-view count (the same number
     // every sizing knob reads) — not a fresh scan+filter pass per action (r17)
@@ -282,7 +282,7 @@ object FuzzyDedup extends QueryModule {
         "Use embeddingPairsLsh (q39) at corpus scale, or raise graft.exactPairs.maxRows explicitly."
     )
     // both O(n²) join sides — one embedding scan + norm pass
-    val emb = Similarity.embWithNorm(s, dir).localCheckpoint()
+    val emb = Eager.materialize(Similarity.embWithNorm(s, dir), "fuzzyDedup.embeddings")
     val a = emb.select(col("vec_id").as("id_a"), col("v").as("va"), col("nrm").as("na"))
     val b = emb.select(col("vec_id").as("id_b"), col("v").as("vb"), col("nrm").as("nb"))
     a.join(b, col("id_a") < col("id_b"))
@@ -345,7 +345,7 @@ object FuzzyDedup extends QueryModule {
     * volume the banding actually admits. `bits` ≤ 0 auto-sizes from the
     * frame's row count ([[autoEmbBits]]). */
   def embCandidatesOver(emb: DataFrame, bits: Int = 0, bands: Int = EmbBands): DataFrame = {
-    val b = if (bits > 0) bits else autoEmbBits(emb.count())
+    val b = if (bits > 0) bits else autoEmbBits(Eager.count(emb, "fuzzyDedup.embBits"))
     val banded = boundedBands(
       emb.select(col("vec_id"), explode(embBandKeys(col("v"), b, bands)).as("band")),
       "band",
@@ -375,7 +375,7 @@ object FuzzyDedup extends QueryModule {
   ): DataFrame = {
     // four consumers (count probe, banding, both verify sides) — one
     // embedding scan + norm pass
-    val emb  = Similarity.embWithNorm(s, dir).localCheckpoint()
+    val emb  = Eager.materialize(Similarity.embWithNorm(s, dir), "fuzzyDedup.embeddings")
     val cand = embCandidatesOver(emb, bits, bands)
     val a    = emb.select(col("vec_id").as("id_a"), col("v").as("va"), col("nrm").as("na"))
     val b    = emb.select(col("vec_id").as("id_b"), col("v").as("vb"), col("nrm").as("nb"))
@@ -410,9 +410,8 @@ object FuzzyDedup extends QueryModule {
   def incrementalDedup(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documentsDistributed(s, dir)
     // delta/base splits both read this — one md5 text pass
-    val withFp = docs
-      .select(col("doc_id"), md5(col("text")).as("fingerprint"))
-      .localCheckpoint()
+    val withFp =
+      Eager.materialize(docs.select(col("doc_id"), md5(col("text")).as("fingerprint")), "fuzzyDedup.fingerprints")
     val delta  = withFp.filter(isDelta(col("doc_id")))
     val baseFp = withFp.filter(!isDelta(col("doc_id"))).select("fingerprint").distinct()
     val exactDup = delta
@@ -422,7 +421,7 @@ object FuzzyDedup extends QueryModule {
     val sh = docs
       .select(col("doc_id"), Dedup.shingles(col("text")).as("shingles"))
       .filter(size(col("shingles")) > 0)
-      .localCheckpoint()
+      .transform(Eager.materialize(_, "fuzzyDedup.shingles"))
     val bands = boundedBands(
       sh.select(col("doc_id"), explode(graft.plans.TextHashExpressions.minhashBandKeys(col("shingles"))).as("band")),
       "band",
@@ -588,13 +587,8 @@ object FuzzyDedup extends QueryModule {
     * convergence (final labels are checkpoint-materialized by the last
     * label-sum action). */
   /** The materialized packed pair store plus its lazy undirected edge
-    * VIEW — the two halves [[connectedComponents]] composes. Exposed
-    * (package-private) so the bench's phase-split rows can build the store
-    * ONCE and time [[ccLoop]]'s per-round scans in isolation: inside the
-    * composed operator, mining dominates the wall on the doc block
-    * (±20–30% per-rep variance), which makes the store's scan cost
-    * invisible in end-to-end medians. */
-  private[graft] final case class PackedPairStore(
+    * VIEW — the two halves [[connectedComponents]] composes. */
+  private final case class PackedPairStore(
       packed: org.apache.spark.rdd.RDD[Array[Byte]],
       schema: org.apache.spark.sql.types.StructType,
       session: SparkSession) {
@@ -621,13 +615,14 @@ object FuzzyDedup extends QueryModule {
 
   /** Mine `pairs` ONCE into the packed byte-chunk store (see the
     * [[connectedComponents]] scaladoc for why this is the only path) and
-    * materialize it. */
-  private[graft] def packPairStore(pairs: DataFrame): PackedPairStore = {
+    * materialize it. The phase also covers `toRdd`, where adaptive
+    * execution runs the mining's shuffle stages. */
+  private def packPairStore(pairs: DataFrame): PackedPairStore = Eager.phase("fuzzyDedup.cc.pack") {
     val schema = pairs.schema
     val packed = pairs.queryExecution.toRdd
       .mapPartitions(packUnsafeRows(_, CcPackChunkBytes, Some(schema)))
       .persist(CcEdgeStorageLevel)
-    packed.count() // materialize: ONE mining pass, not one per union branch
+    Eager.count(packed, "fuzzyDedup.cc.pack") // ONE mining pass, not one per union branch
     PackedPairStore(packed, schema, pairs.sparkSession)
   }
 
@@ -641,12 +636,12 @@ object FuzzyDedup extends QueryModule {
     finally store.unpersist()
   }
 
-  private[graft] def ccLoop(edges: DataFrame, maxRounds: Int = MaxCcRounds): (DataFrame, Int) = {
+  private def ccLoop(edges: DataFrame, maxRounds: Int): (DataFrame, Int) = {
     val nodes  = edges.select(col("src").as("node")).distinct()
-    var labels = nodes.withColumn("label", col("node")).localCheckpoint()
+    var labels = Eager.materialize(nodes.withColumn("label", col("node")), "fuzzyDedup.cc.labels")
 
     def labelSum(df: DataFrame): Long =
-      df.agg(coalesce(sum(col("label")), lit(0L))).head().getLong(0)
+      Eager.collect(df.agg(coalesce(sum(col("label")), lit(0L))), 1, "fuzzyDedup.cc.round").head.getLong(0)
 
     var prevSum = -1L
     var curSum  = labelSum(labels)
@@ -671,7 +666,7 @@ object FuzzyDedup extends QueryModule {
       val jumped = propagated
         .join(byNode, col("label") === col("pnode"), "left")
         .select(col("node"), coalesce(col("plabel"), col("label")).as("label"))
-        .localCheckpoint(eager = false) // materialized by the sum action below
+        .transform(Eager.materialize(_, "fuzzyDedup.cc.round", eager = false)) // materialized by the sum action below
       prevSum = curSum
       curSum = labelSum(jumped)
       require(curSum <= prevSum, s"label sum increased ($prevSum -> $curSum): propagation not monotone")
@@ -709,7 +704,7 @@ object FuzzyDedup extends QueryModule {
     val docs = Tables
       .documentsDistributed(s, dir)
       .select(col("doc_id"), col("source"), Dedup.shingles(col("text")).as("shingles"))
-      .localCheckpoint()
+      .transform(Eager.materialize(_, "fuzzyDedup.corpus"))
     val mined = minhashPairsVerified(
       docs.filter(size(col("shingles")) > 0).select("doc_id", "shingles"),
       MaxBandOccupancy)
@@ -750,7 +745,7 @@ object FuzzyDedup extends QueryModule {
       .documentsDistributed(s, dir)
       .select(col("doc_id"), col("source"), Dedup.shingles(col("text")).as("shingles"))
       .filter(size(col("shingles")) > 0)
-      .localCheckpoint()
+      .transform(Eager.materialize(_, "fuzzyDedup.shingles"))
     val isEval = col("doc_id") % TrainingPrep.EvalMod === 0
     val eval   = docs.filter(isEval)
     val train  = docs.filter(!isEval)
@@ -821,16 +816,15 @@ object FuzzyDedup extends QueryModule {
           .as("qm"),
         Dedup.shingles(col("text")).as("shingles")
       )
-      .localCheckpoint()
+      .transform(Eager.materialize(_, "fuzzyDedup.corpus"))
     val mined = minhashPairsVerified(
       docs.filter(size(col("shingles")) > 0).select("doc_id", "shingles"),
       MaxBandOccupancy)
     val (labels, _) = connectedComponents(mined.select("id_a", "id_b"))
     val qdocs = docs.select("doc_id", "source", "qm")
     // cluster-sized; feeds the argmax windows AND the removed filter
-    val members = labels
-      .join(qdocs.select(col("doc_id").as("node"), col("qm")), Seq("node"))
-      .localCheckpoint()
+    val members =
+      Eager.materialize(labels.join(qdocs.select(col("doc_id").as("node"), col("qm")), Seq("node")), "fuzzyDedup.members")
     // Argmax via two stacked windows over ONE label partitioning (r18 — the
     // previous best-join/reps-join chain cost three exchanges and two
     // joins for the same answer): maxq = max qm per cluster (ignores NULL
@@ -946,7 +940,7 @@ object FuzzyDedup extends QueryModule {
         sum(when(col("pos") === 0 || col("pos").isNull, 1L).otherwise(0L)).as("d"),
         sum(when(col("pos") === 0 || col("pos").isNull, col("m").cast(LongType)).otherwise(0L)).as("p")
       )
-      .localCheckpoint()
+      .transform(Eager.materialize(_, "fuzzyDedup.winnow"))
     val wDf = org.apache.spark.sql.expressions.Window.partitionBy("h")
     val agg = sh
       .filter(col("h").isNotNull)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{QueryModule, Tables}
+import graft.{Eager, QueryModule, Tables}
 
 /** Iterative graph analytics over an interaction graph (q77) — the
   * domain-authority stage of a crawl/curation pipeline: PageRank-style
@@ -91,7 +91,7 @@ object GraphOps extends QueryModule {
               floor(lit(0.85) * coalesce(col("mass"), lit(0L)).cast(DoubleType)).cast(LongType))
               .as("rank")
           )
-          .localCheckpoint() // truncate the per-round lineage (q38's pattern)
+          .transform(Eager.materialize(_, "graphOps.pageRank.round")) // truncate the per-round lineage (q38's pattern)
       }
       ranks
         .join(outdeg.withColumnRenamed("src", "node"), Seq("node"), "left")
@@ -104,7 +104,7 @@ object GraphOps extends QueryModule {
         )
         // materialize the (nodes-sized) result before the finally releases
         // the caches it was built from
-        .localCheckpoint()
+        .transform(Eager.materialize(_, "graphOps.pageRank.result"))
     } finally {
       // release the loop's caches on EVERY path — an exception mid-iteration
       // would otherwise leak three cached DataFrames for the session lifetime
@@ -194,7 +194,7 @@ object GraphOps extends QueryModule {
     // und feeds deg's union (2 evals) + the orientation join (1) — one
     // skinny checkpoint instead of three events→distinct-edges passes;
     // deg/oriented materialized for the wedge self-join's triple read
-    val (oriented, deg) = orientedOf(undirected(edgeDf).localCheckpoint())
+    val (oriented, deg) = orientedOf(Eager.materialize(undirected(edgeDf), "graphOps.edges"))
     val tri = trianglesOf(oriented)
     // one explode pass charges all three corners — a 3-way union would
     // recompute the wedge join three times
@@ -257,7 +257,7 @@ object GraphOps extends QueryModule {
     // checkpoints re-derives the whole events→distinct-edges pipeline
     // (r17 — one full-corpus pass saved per run; the base/delta
     // checkpoints downstream become scans of this one).
-    val und  = undirected(edges(s, dir)).localCheckpoint()
+    val und  = Eager.materialize(undirected(edges(s, dir)), "graphOps.edges")
     val part = graft.functions.Fingerprints
       .fp8(concat(col("a").cast(StringType), lit(":"), col("b").cast(StringType))) % EdgeDeltaMod
     triangleDeltaAuto(und.filter(part < EdgeDeltaMod - 1), und.filter(part === EdgeDeltaMod - 1))
@@ -441,8 +441,8 @@ object GraphOps extends QueryModule {
     * checkpointed degree table, far cheaper than the scheduling
     * round-trip it replaces. */
   def triangleDeltaDispatch(base: DataFrame, delta: DataFrame): (DataFrame, Boolean) = {
-    val baseC = base.localCheckpoint()
-    val deltaC = delta.localCheckpoint()
+    val baseC  = Eager.materialize(base, "graphOps.triangleDelta.edges")
+    val deltaC = Eager.materialize(delta, "graphOps.triangleDelta.edges")
     val und = baseC.unionByName(deltaC)
     // |V|-row table consumed by the three stat subtrees below —
     // materialize so the degree aggregation over the edge set runs once
@@ -451,7 +451,7 @@ object GraphOps extends QueryModule {
       .union(und.select(col("b").as("node")))
       .groupBy("node")
       .agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+      .transform(Eager.materialize(_, "graphOps.triangleDelta.degrees"))
     val candMassAgg = deltaC
       .select(explode(array(col("a"), col("b"))).as("node"))
       .join(deg, Seq("node"))
@@ -472,11 +472,9 @@ object GraphOps extends QueryModule {
       .distinct()
       .join(deg, Seq("node"))
       .agg(sum(col("deg")).as("db_mass"))
-    val stats = candMassAgg
-      .crossJoin(broadcast(wedgeAgg))
-      .crossJoin(broadcast(degTotalAgg))
-      .crossJoin(broadcast(dbAgg))
-      .head()
+    val stats = Eager.collect(
+      candMassAgg.crossJoin(broadcast(wedgeAgg)).crossJoin(broadcast(degTotalAgg)).crossJoin(broadcast(dbAgg)),
+      1, "graphOps.triangleDelta.stats").head
     def longAt(name: String): Long = {
       val i = stats.fieldIndex(name)
       if (stats.isNullAt(i)) 0L else stats.getLong(i)
@@ -518,7 +516,7 @@ object GraphOps extends QueryModule {
     // und feeds deg (2 evals), the orientation join (1) AND the final sim
     // join (1); deg is read twice more by sim — same checkpoint discipline
     // as triangleStatsOver (r18)
-    val und             = undirected(edgeDf).localCheckpoint()
+    val und             = Eager.materialize(undirected(edgeDf), "graphOps.edges")
     val (oriented, deg) = orientedOf(und)
     val tri             = trianglesOf(oriented)
     // each triangle supports its three edges: ONE explode pass (a 3-way
@@ -603,8 +601,8 @@ object GraphOps extends QueryModule {
         .select(explode(array(col("a"), col("b"))).as("node"))
         .groupBy("node")
         .agg(count(lit(1)).as("deg"))
-      var surv = fullDeg.select("node").localCheckpoint()
-      var prevCount = surv.count()
+      var surv      = Eager.materialize(fullDeg.select("node"), "graphOps.kCore.round")
+      var prevCount = Eager.count(surv, "graphOps.kCore.round")
       var it = 0
       var stable = false
       while (it < rounds && !stable) {
@@ -617,8 +615,8 @@ object GraphOps extends QueryModule {
           .agg(count(lit(1)).as("d"))
           .filter(col("d") >= k)
           .select("node")
-          .localCheckpoint()
-        val c = surv.count()
+          .transform(Eager.materialize(_, "graphOps.kCore.round"))
+        val c = Eager.count(surv, "graphOps.kCore.round")
         stable = c == prevCount
         prevCount = c
         it += 1
@@ -626,7 +624,7 @@ object GraphOps extends QueryModule {
       val out = fullDeg
         .join(surv.withColumn("c", lit(1L)), Seq("node"), "left")
         .select(col("node"), col("deg").as("degree"), coalesce(col("c"), lit(0L)).as("in_core"))
-        .localCheckpoint()
+        .transform(Eager.materialize(_, "graphOps.kCore.result"))
       (out, it)
     } finally und.unpersist()
   }

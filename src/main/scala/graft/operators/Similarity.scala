@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{QueryModule, Tables}
+import graft.{Eager, QueryModule, Tables}
 
 /** Similarity search over the `embeddings` table (`ARRAY<FLOAT>`, dim 64).
   *
@@ -149,7 +149,10 @@ object Similarity extends QueryModule {
     * (Q61RecallSpec pins ≥0.6). */
   val LshBandFamilies = 2
 
-  /** Deterministic pseudo-random ±1 hyperplane matrix (bits × 64 dims),
+  /** Embedding dimension. */
+  val Dim = 64
+
+  /** Deterministic pseudo-random ±1 hyperplane matrix (bits × [[Dim]]),
     * derived from md5("plane<b>:<i>") parity at build time — band family 0.
     * Band families ≥ 1 salt the digest key with the band index, giving
     * independent tables with the same reproducibility. Embedded as
@@ -159,7 +162,7 @@ object Similarity extends QueryModule {
   def planesFor(bits: Int): Seq[Seq[Double]] = planesForBand(0, bits)
 
   def planesForBand(band: Int, bits: Int): Seq[Seq[Double]] = (0 until bits).map { b =>
-    (0 until 64).map { i =>
+    (0 until Dim).map { i =>
       // band 0 keeps the r6 key shape (committed oracle renderings and the
       // replayed gate hashes depend on these exact planes)
       val key = if (band == 0) s"plane$b:$i" else s"band$band:plane$b:$i"
@@ -203,7 +206,7 @@ object Similarity extends QueryModule {
     * ground-truth pairs on one fixture corpus). */
   private[graft] def lshPairsAt(s: SparkSession, dir: String, bits: Int): DataFrame = {
     // bucketing + both verify sides — one embedding scan + norm pass
-    val emb = embWithNorm(s, dir).localCheckpoint()
+    val emb = Eager.materialize(embWithNorm(s, dir), "similarity.embeddings")
     def bandCandidates(band: Int): DataFrame = {
       val skinny = FuzzyDedup.boundedBands(
         emb.select(lshBucket(col("v"), bits, band).as("bucket"), col("vec_id")),
@@ -245,10 +248,8 @@ object Similarity extends QueryModule {
   def ivfKnn(s: SparkSession, dir: String): DataFrame = {
     val emb = embWithNorm(s, dir)
     // bounded driver-side collect: exactly 16 rows, pushdown on vec_id < 16
-    val centroids = emb
-      .filter(col("vec_id") < 16)
-      .select(col("vec_id"), col("v"), col("nrm"))
-      .collect()
+    val centroids = Eager
+      .collect(emb.filter(col("vec_id") < 16).select(col("vec_id"), col("v"), col("nrm")), 16, "similarity.ivf.centroids")
       .sortBy(_.getLong(0))
     // the dummy-centroid branch below is ONLY for the empty corpus; a
     // NON-empty corpus with no vec_id < 16 rows is a mis-keyed input and
@@ -256,7 +257,7 @@ object Similarity extends QueryModule {
     // probe is a limit-1 job and runs only on the already-degenerate path)
     if (centroids.isEmpty)
       require(
-        emb.isEmpty,
+        Eager.phase("similarity.ivf.emptyProbe")(emb.isEmpty),
         "ivfKnn: no centroid rows (vec_id < 16) found in a non-empty corpus — " +
           "centroid keying assumes vec_ids start at 0")
     // per-row array of struct(c_cos, -c_id): array_max = nearest centroid by
@@ -373,11 +374,13 @@ object Similarity extends QueryModule {
         col("label").cast(LongType).as("label"),
         transform(col("embedding"), x => floor(x.cast(DoubleType) * lit(1e6))).as("qv")
       )
-    val stats = emb
-      .select(posexplode(col("qv")).as(Seq("dim", "v")))
-      .groupBy("dim")
-      .agg(min(col("v")).as("mn"), max(col("v")).as("mx"))
-      .collect()
+    val stats = Eager
+      .collect(
+        emb
+          .select(posexplode(col("qv")).as(Seq("dim", "v")))
+          .groupBy("dim")
+          .agg(min(col("v")).as("mn"), max(col("v")).as("mx")),
+        Dim, "similarity.int8.range")
       .sortBy(_.getInt(0))
     // Spark's floor() yields LONG (DuckDB's yields integer-valued DOUBLE);
     // the values are identical small integers, so mixed long/double IEEE
@@ -435,7 +438,7 @@ object Similarity extends QueryModule {
       )
       .groupBy("label", "dim")
       .agg(count(lit(1)).as("n"), sum(col("qm")).as("sum_micro"))
-      .localCheckpoint()
+      .transform(Eager.materialize(_, "similarity.drift"))
     val labelRows =
       perDim.select(col("label").cast(StringType).as("scope"), col("dim"), col("n"), col("sum_micro"))
     val globalRows = perDim

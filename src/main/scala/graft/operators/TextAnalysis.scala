@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{QueryModule, Tables}
+import graft.{Eager, QueryModule, Tables}
 
 /** Text-analysis operators over `documents`: token statistics, heuristic
   * language ID, quality scoring, and tokenizer comparisons — all per-row
@@ -605,7 +605,7 @@ object TextAnalysis extends QueryModule {
         size(col("t")).cast(LongType).as("dl"),
         filter(col("t"), w => w.isin(termSet: _*)).as("hits")
       )
-      .localCheckpoint()
+      .transform(Eager.materialize(_, "textAnalysis.docTerms"))
     val stats = docTerms.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
     val tf = docTerms
       .select(col("doc_id"), col("dl"), explode(col("hits")).as("w"))
@@ -776,7 +776,7 @@ object TextAnalysis extends QueryModule {
         "rel",
         (col("n_terms_matched") === col("n_query_terms") && col("min_tf") >= RelMinTf).cast(LongType)
       )
-      .localCheckpoint()
+      .transform(Eager.materialize(_, "textAnalysis.candidates"))
     val bySystem = cand
       .select(col("query_id"), lit("bm25").as("system"), col("rank_bm25").as("rnk"), col("rel"))
       .unionByName(
@@ -844,13 +844,15 @@ object TextAnalysis extends QueryModule {
     val tok = Tables
       .documentsDistributed(s, dir)
       .select(col("source"), explode(tokens(col("text"))).as("w"))
-    val vocab: Array[String] = tok
-      .groupBy("w")
-      .agg(count(lit(1)).as("total"))
-      .orderBy(col("total").desc, col("w"))
-      .limit(DivergenceVocab)
-      .select("w")
-      .collect()
+    val vocab: Array[String] = Eager
+      .collect(
+        tok
+          .groupBy("w")
+          .agg(count(lit(1)).as("total"))
+          .orderBy(col("total").desc, col("w"))
+          .limit(DivergenceVocab)
+          .select("w"),
+        DivergenceVocab, "textAnalysis.divergence.vocab")
       .map(_.getString(0))
     val counts = tok
       .filter(col("w").isin(vocab.toSeq: _*))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{Num, QueryModule, Tables}
+import graft.{Eager, Num, QueryModule, Tables}
 
 /** Training-data preparation operators beyond dedup/quality: the sampling
   * and batching stages of a 100 TB corpus pipeline.
@@ -891,16 +891,18 @@ object TrainingPrep extends QueryModule {
           .as("fp")
       )
     val isDelta = col("doc_id") % RollupDeltaMod === 0
-    Layout.resetTable(s, "g125_rollup")
-    Layout.writeBucketed(
-      docs
-        .filter(!isDelta)
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("tokens"), sum(col("fp")).as("cfp")),
-      "g125_rollup",
-      "source",
-      4
-    )
+    Eager.phase("trainingPrep.rollup.write") {
+      Layout.resetTable(s, "g125_rollup")
+      Layout.writeBucketed(
+        docs
+          .filter(!isDelta)
+          .groupBy("source")
+          .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("tokens"), sum(col("fp")).as("cfp")),
+        "g125_rollup",
+        "source",
+        4
+      )
+    }
     val deltaAgg = docs
       .filter(isDelta)
       .groupBy("source")
@@ -974,6 +976,9 @@ object TrainingPrep extends QueryModule {
     * running sum — density lives in [0, 1e6] ppm, so ≤ 21 bands. */
   val DensityBand = 50000L
 
+  /** Rows of a per-band model: one per [[DensityBand]] band of [0, 1e6]. */
+  private val DensityBands = (1000000L / DensityBand + 1).toInt
+
   /** Shared (doc_id, extra…, toks, dtoks, density, band) frame for the
     * density-banded two-phase ranks (q129/q132). Null-text contract
     * (reference P3 semantics — nullify and continue, never throw,
@@ -1022,13 +1027,11 @@ object TrainingPrep extends QueryModule {
     // band-total collect and the final ranked pass) otherwise re-tokenize
     // the corpus; the collect forces an action anyway, so materializing
     // here adds no extra job.
-    val d = densityBanded(Tables.documentsDistributed(s, dir), col("source")).localCheckpoint()
+    val d = Eager.materialize(densityBanded(Tables.documentsDistributed(s, dir), col("source")), "trainingPrep.density")
     // Bounded collect: ≤ 21 (band, token-total) rows — the "model" from
     // which the budget and the per-band offsets both derive.
-    val bandTotals: Array[(Long, Long)] = d
-      .groupBy("band")
-      .agg(sum(col("toks")).as("btoks"))
-      .collect()
+    val bandTotals: Array[(Long, Long)] = Eager
+      .collect(d.groupBy("band").agg(sum(col("toks")).as("btoks")), DensityBands, "trainingPrep.bandModel")
       .map(r => (r.getLong(0), r.getLong(1)))
       .sortBy(-_._1) // descending band = descending density
     val total  = bandTotals.map(_._2).sum
@@ -1157,12 +1160,10 @@ object TrainingPrep extends QueryModule {
     // twice inside main's md5PrefixRank (rank side + offset side), and
     // twice more via reserve inside ann's. d is corpus-skinny (ids +
     // longs), and the collect right below forces the action regardless.
-    val d = densityBanded(Tables.documentsDistributed(s, dir)).localCheckpoint()
+    val d = Eager.materialize(densityBanded(Tables.documentsDistributed(s, dir)), "trainingPrep.density")
     // bounded collect: ≤ 21 (band, count) rows — the anneal-cut model
-    val bandCounts: Array[(Long, Long)] = d
-      .groupBy("band")
-      .agg(count(lit(1)).as("bn"))
-      .collect()
+    val bandCounts: Array[(Long, Long)] = Eager
+      .collect(d.groupBy("band").agg(count(lit(1)).as("bn")), DensityBands, "trainingPrep.bandModel")
       .map(r => (r.getLong(0), r.getLong(1)))
       .sortBy(-_._1)
     val n       = bandCounts.map(_._2).sum

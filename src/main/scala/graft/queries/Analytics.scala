@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.{Num, QueryModule, Tables}
+import graft.{Eager, Num, QueryModule, Tables}
 
 /** Relational analytics surface over the TPC-H-ish star schema: scan,
   * filter/pushdown, hash aggregate, broadcast + shuffle joins, semi/anti
@@ -413,14 +413,14 @@ object Analytics extends QueryModule {
     * itself stops being shippable and the right tool is a shuffled
     * semi-join on the skinny key column instead. */
   def bloomJoin(s: SparkSession, dir: String): DataFrame = {
-    // filtered dim keys, materialized once (localCheckpoint) — consumed
-    // three times: count (bloom sizing), bloom build, and the exact join
+    // filtered dim keys, materialized once — consumed three times: count
+    // (bloom sizing), bloom build, and the exact join
     val dimKeys = Tables
       .orders(s, dir)
       .filter(col("o_orderpriority") === "1-URGENT" && col("o_orderstatus") === "F")
       .select(col("o_orderkey"))
-      .localCheckpoint()
-    val nKeys = dimKeys.count()
+      .transform(Eager.materialize(_, "analytics.bloom.keys"))
+    val nKeys = Eager.count(dimKeys, "analytics.bloom.keys")
     val factCols = Tables
       .lineitem(s, dir)
       .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"), col("l_returnflag"))
@@ -430,7 +430,7 @@ object Analytics extends QueryModule {
     val fact =
       if (nKeys == 0) factCols.filter(lit(false))
       else {
-        val bf = dimKeys.stat.bloomFilter("o_orderkey", nKeys, BloomFpp)
+        val bf = Eager.phase("analytics.bloom.filter")(dimKeys.stat.bloomFilter("o_orderkey", nKeys, BloomFpp))
         factCols.filter(graft.plans.BloomExpressions.mightContain(bf, col("l_orderkey")))
       }
     fact
@@ -615,35 +615,25 @@ object Analytics extends QueryModule {
     * The `merge` hint keeps the demonstration honest at gate SF (AQE
     * would otherwise broadcast the small side and hide the layout win);
     * at production SF sort-merge is what the planner picks anyway. */
-  /** The one-time layout build, parameterized by table prefix — the bench's
-    * build/probe split rows call THIS so they measure the registered
-    * query's exact shape, never a drifted copy. */
-  def bucketedLayoutBuild(s: SparkSession, dir: String, prefix: String = "g124"): Unit = {
+  def bucketedJoin(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.Layout
-    Layout.resetTable(s, s"${prefix}_orders")
-    Layout.resetTable(s, s"${prefix}_lineitem")
-    Layout.writeBucketed(
-      Tables.orders(s, dir).select("o_orderkey", "o_orderpriority"),
-      s"${prefix}_orders", "o_orderkey", JoinBuckets)
-    Layout.writeBucketed(
-      Tables.lineitem(s, dir).select("l_orderkey", "l_extendedprice", "l_discount"),
-      s"${prefix}_lineitem", "l_orderkey", JoinBuckets)
-  }
-
-  /** The steady-state probe over an existing `prefix` layout. */
-  def bucketedJoinProbe(s: SparkSession, prefix: String = "g124"): DataFrame =
-    s.table(s"${prefix}_orders")
+    Eager.phase("analytics.bucketed.write") {
+      Layout.resetTable(s, "g124_orders")
+      Layout.resetTable(s, "g124_lineitem")
+      Layout.writeBucketed(
+        Tables.orders(s, dir).select("o_orderkey", "o_orderpriority"), "g124_orders", "o_orderkey", JoinBuckets)
+      Layout.writeBucketed(
+        Tables.lineitem(s, dir).select("l_orderkey", "l_extendedprice", "l_discount"),
+        "g124_lineitem", "l_orderkey", JoinBuckets)
+    }
+    s.table("g124_orders")
       .hint("merge")
-      .join(s.table(s"${prefix}_lineitem"), col("o_orderkey") === col("l_orderkey"))
+      .join(s.table("g124_lineitem"), col("o_orderkey") === col("l_orderkey"))
       .groupBy("o_orderpriority")
       .agg(
         count(lit(1)).as("n_items"),
         dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), dec6).as("revenue")
       )
-
-  def bucketedJoin(s: SparkSession, dir: String): DataFrame = {
-    bucketedLayoutBuild(s, dir)
-    bucketedJoinProbe(s)
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -53,7 +53,7 @@ object HttpBatchSink {
       val newClient = () => new RetryingHttpClient(HttpTransport.byName(transportClass), policy, timeouts)
       // the K1 array-envelope contract lives in ONE place (AnimalsJson)
       val groups = it.map(_.getString(0)).grouped(size).map(g => g.size -> AnimalsJson.toJsonBatch(g))
-      RestEnrich.inFlight(1, newClient, groups)((client, batch) => client.post(HomePath, batch._2)).foreach {
+      RestEnrich.inFlight("post", 1, newClient, groups)((client, batch) => client.post(HomePath, batch._2)).foreach {
         case ((n, _), _) => batches.add(1); records.add(n)
       }
     }

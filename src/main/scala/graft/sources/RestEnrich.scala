@@ -40,7 +40,8 @@ object RestEnrich {
   ))
 
   /** Name prefix of every [[inFlight]] pool thread: page GETs, lookups and
-    * POSTs. */
+    * POSTs. The stage label follows it, so each REST stage's threads are
+    * told apart. */
   val PoolThreadPrefix = "graft-enrich"
 
   def detailPath(id: Long): String = s"/animals/v1/animals/$id"
@@ -83,7 +84,7 @@ object RestEnrich {
       val part = split.asInstanceOf[SharePartition]
       val ids  = firstParent[InternalRow].iterator(part.parent, context).map(_.getLong(0))
       var done = 0L
-      inFlight(part.width, newClient, ids)((client, id) => Try(client.get(detailPath(id)).body)).flatMap {
+      inFlight("lookup", part.width, newClient, ids)((client, id) => Try(client.get(detailPath(id)).body)).flatMap {
         case (id, body) =>
           val res =
             try {
@@ -112,7 +113,8 @@ object RestEnrich {
   }
 
   /** The REST stages' one in-flight primitive: `request` for every key, up
-    * to `width` at a time, on `width` daemon threads of the calling task,
+    * to `width` at a time, on `width` daemon threads of the calling task
+    * named `graft-enrich-<label>-<stage>.<partition>-<n>`,
     * each with its own client from `newClient` (so transports need not be
     * thread-safe). Up to 2 × width calls are submitted ahead, so a thread
     * that finishes finds the next key queued even while the task thread is
@@ -122,13 +124,14 @@ object RestEnrich {
     * own exception, and no request starts after it. The pool is shut down by
     * a completion listener of the calling task, so it ends with the task on
     * success, failure or kill. */
-  private[graft] def inFlight[K, R](width: Int, newClient: () => RetryingHttpClient, keys: Iterator[K])(
+  private[graft] def inFlight[K, R](
+      label: String, width: Int, newClient: () => RetryingHttpClient, keys: Iterator[K])(
       request: (RetryingHttpClient, K) => R): Iterator[(K, R)] = new Iterator[(K, R)] {
     private val ctx = TaskContext.get()
     private val pool: ExecutorService = Executors.newFixedThreadPool(width, new ThreadFactory {
       private val n = new AtomicInteger()
       def newThread(r: Runnable): Thread = {
-        val t = new Thread(r, s"$PoolThreadPrefix-${ctx.stageId()}.${ctx.partitionId()}-${n.incrementAndGet()}")
+        val t = new Thread(r, s"$PoolThreadPrefix-$label-${ctx.stageId()}.${ctx.partitionId()}-${n.incrementAndGet()}")
         t.setDaemon(true)
         t
       }

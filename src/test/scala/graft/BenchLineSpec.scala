@@ -70,16 +70,4 @@ class BenchLineSpec extends AnyFunSuite {
       Bench.stdoutLine(rows, everything, 3, contended = false, dirty = 0, "sf")
     }
   }
-
-  test("BenchExtras rows never enter queries, value or cpu_sec") {
-    val registry = SparkEntry.queries.keys.toSeq.sorted.take(3)
-    val extras   = BenchExtras.rows.keys.toSeq.sorted
-    val rows =
-      registry.map(n => (n, 1.0, 10.0)) ++ extras.map(n => (n, 100.0, 1000.0))
-    val j = mapper.readTree(
-      Bench.stdoutLine(rows, SparkEntry.queries.contains, 3, contended = false, dirty = 0, "sf"))
-    assert(j.get("queries").fieldNames().asScala.toSeq == registry.map(_.takeWhile(_ != '_')))
-    assert(j.get("value").asDouble() == 3.0)
-    assert(j.get("cpu_sec").asDouble() == 30.0)
-  }
 }

@@ -121,8 +121,8 @@ object ScriptedTransport {
     page2Failed.set(false); postFailed.set(false); postMode = mode
   }
 
-  /** The partition a pool thread works for: its name without the pool's
-    * thread counter. A task thread is its own partition. */
+  /** The pool a thread belongs to, one REST stage of one partition: its
+    * name without the pool's thread counter. A task thread is its own. */
   def partitionOf(thread: String): String = thread.replaceAll("-\\d+$", "")
 
   def idsIn(body: String): Seq[Long] = "\"id\":(\\d+)".r.findAllMatchIn(body).map(_.group(1).toLong).toSeq
@@ -243,6 +243,11 @@ class RestPipelineSpec extends AnyFunSuite with Eventually {
     val taskSide = calls.filterNot(_.thread == Thread.currentThread.getName)
     assert(taskSide.size == calls.size - 1)
     assert(taskSide.forall(_.thread.startsWith(RestEnrich.PoolThreadPrefix)), taskSide.map(_.thread).distinct)
+    // page GETs, lookups and POSTs each run on threads named for their stage
+    val threadsOf = taskSide.groupBy(_.kind).map { case (kind, cs) => kind -> cs.map(_.thread).toSet }
+    assert(threadsOf.keySet == Set("page", "detail", "post"), threadsOf)
+    for (Seq(a, b) <- threadsOf.keys.toSeq.combinations(2))
+      assert(threadsOf(a).intersect(threadsOf(b)).isEmpty, threadsOf)
     eventually(assert(livePoolThreads.isEmpty))
   }
 
