@@ -199,8 +199,8 @@ object Bench {
     }.mkString("\"", "", "\"")
 
   /** The stdout line the bench runner parses. `rows` are (name, median wall, median cpu)
-    * for every measured row in run order; only names in `registry` enter
-    * `queries`, `value` and `cpu_sec`. Per-query precision degrades BEFORE the
+    * for every measured row in run order; all of them enter `queries`,
+    * `value` and `cpu_sec`. Per-query precision degrades BEFORE the
     * line outgrows [[LineMaxChars]]: 3 decimals while it fits, then 2, then
     * only the slowest rows plus an `omitted` count (never fewer than 10);
     * `value` and `cpu_sec` never degrade. Throws when two rows share a
@@ -208,7 +208,6 @@ object Bench {
     * slowest-10 floor does not fit. */
   def stdoutLine(
       rows: Seq[(String, Double, Double)],
-      registry: String => Boolean,
       reps: Int,
       contended: Boolean,
       dirty: Int,
@@ -219,10 +218,9 @@ object Bench {
       s"duplicate short bench keys would silently collide in the JSON line: " +
         shortKeys.groupBy(identity).collect { case (k, vs) if vs.size > 1 => k }.mkString(", ")
     )
-    val reg    = rows.filter(r => registry(r._1))
-    val total  = reg.map(_._2).sum
-    val cpuTot = reg.map(_._3).sum
-    val perQ   = reg.map(r => shortKey(r._1) -> r._2)
+    val total  = rows.map(_._2).sum
+    val cpuTot = rows.map(_._3).sum
+    val perQ   = rows.map(r => shortKey(r._1) -> r._2)
     def jsonWith(fmt: Double => String, kv: Seq[(String, Double)]): String =
       kv.map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     def lineWith(qs: String, omitted: Int): String = {
@@ -427,7 +425,6 @@ object Bench {
     println(
       stdoutLine(
         results.map(r => (r.name, r.wall, r.cpu)),
-        SparkEntry.queries.contains,
         reps, contended, dirty.size, sfDir))
     spark.stop()
   }

@@ -220,8 +220,8 @@ object Clustering extends QueryModule {
     * [[graft.plans.NearestCentroid]] argmin (a K×dim literal tree would
     * melt codegen at exactly the K values the sizing exists to reach). */
   val SemDedupTargetCluster = 1024L
-  def autoSemK(n: Long, floor: Int = K): Int =
-    math.max(floor.toLong, (n + SemDedupTargetCluster - 1) / SemDedupTargetCluster).toInt
+  def autoSemK(n: Long): Int =
+    math.max(K.toLong, (n + SemDedupTargetCluster - 1) / SemDedupTargetCluster).toInt
 
   /** q119: SemDeDup (Abbas et al. 2023) — semantic dedup with k-means
     * cluster scoping: near-duplicate pairs are only searched WITHIN each

@@ -156,7 +156,7 @@ object FuzzyDedup extends QueryModule {
     * remains the exact test-scale oracle for arbitrary skew. The oracle
     * replays the identical candidate set in DuckDB, so the gate checks
     * PARITY of the declared semantics, not recall against q101. */
-  def containmentLsh(s: SparkSession, dir: String, maxOccupancy: Int = MaxBandOccupancy): DataFrame = {
+  def containmentLsh(s: SparkSession, dir: String): DataFrame = {
     // three consumers (bands + both verify sides) — one shingle pass, as
     // in [[minhashLsh]]
     val docs = Tables
@@ -167,7 +167,7 @@ object FuzzyDedup extends QueryModule {
     val bands = boundedBands(
       docs.select(col("doc_id"), explode(graft.plans.TextHashExpressions.minhashBandKeys(col("shingles"))).as("band")),
       "band",
-      maxOccupancy
+      MaxBandOccupancy
     )
     val cand = bands
       .select(col("band"), col("doc_id").as("id_a"))
@@ -319,8 +319,8 @@ object FuzzyDedup extends QueryModule {
 
   /** Band keys "b:sig" per vector — one fused narrow pass (codegen'd native
     * expression; see [[graft.plans.HyperplaneBandKeys]]), no shuffle. */
-  def embBandKeys(v: Column, bits: Int = EmbBits, bands: Int = EmbBands): Column =
-    graft.plans.VectorExpressions.hyperplaneBandKeys(v, bits, bands)
+  def embBandKeys(v: Column, bits: Int = EmbBits): Column =
+    graft.plans.VectorExpressions.hyperplaneBandKeys(v, bits, EmbBands)
 
   /** [[EmbBits]]'s own sizing rule made executable: per-band candidate
     * volume is n²/2^bits, so `bits` must track log₂(n) for candidates to
@@ -333,21 +333,21 @@ object FuzzyDedup extends QueryModule {
     * per-band collision odds at fixed band count (0.99998 → ~0.996 AT the
     * 0.9 boundary for 16 bits); production re-sizing pairs bits growth
     * with more bands to buy it back. */
-  def autoEmbBits(n: Long, floor: Int = EmbBits): Int = {
+  def autoEmbBits(n: Long): Int = {
     val ceilLog2 = 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1))
-    math.max(floor, ceilLog2)
+    math.max(EmbBits, ceilLog2)
   }
 
   /** LSH candidate pairs only (pre-verification) over a caller-supplied
     * (vec_id, v, nrm) frame — lets [[embeddingPairsLsh]] share ONE
     * materialized projection between the row-count probe, the banding
     * pass, and both verify sides, and lets specs measure the candidate
-    * volume the banding actually admits. `bits` ≤ 0 auto-sizes from the
+    * volume the banding actually admits. The bit count is sized from the
     * frame's row count ([[autoEmbBits]]). */
-  def embCandidatesOver(emb: DataFrame, bits: Int = 0, bands: Int = EmbBands): DataFrame = {
-    val b = if (bits > 0) bits else autoEmbBits(Eager.count(emb, "fuzzyDedup.embBits"))
+  def embCandidatesOver(emb: DataFrame): DataFrame = {
+    val bits = autoEmbBits(Eager.count(emb, "fuzzyDedup.embBits"))
     val banded = boundedBands(
-      emb.select(col("vec_id"), explode(embBandKeys(col("v"), b, bands)).as("band")),
+      emb.select(col("vec_id"), explode(embBandKeys(col("v"), bits)).as("band")),
       "band",
       MaxBandOccupancy
     )
@@ -367,16 +367,11 @@ object FuzzyDedup extends QueryModule {
     * [[EmbBits]] for the volume/recall trade and the bits ~ log₂(n) sizing
     * rule). Oracle = the exact all-pairs SQL; recall on planted near-dups is
     * additionally pinned by FuzzyDedupSpec. */
-  def embeddingPairsLsh(
-      s: SparkSession,
-      dir: String,
-      bits: Int = 0, // ≤ 0 = auto-size from corpus rows (autoEmbBits)
-      bands: Int = EmbBands
-  ): DataFrame = {
+  def embeddingPairsLsh(s: SparkSession, dir: String): DataFrame = {
     // four consumers (count probe, banding, both verify sides) — one
     // embedding scan + norm pass
     val emb  = Eager.materialize(Similarity.embWithNorm(s, dir), "fuzzyDedup.embeddings")
-    val cand = embCandidatesOver(emb, bits, bands)
+    val cand = embCandidatesOver(emb)
     val a    = emb.select(col("vec_id").as("id_a"), col("v").as("va"), col("nrm").as("na"))
     val b    = emb.select(col("vec_id").as("id_b"), col("v").as("vb"), col("nrm").as("nb"))
     cand

@@ -252,15 +252,15 @@ object GraphOps extends QueryModule {
     * oracle side vs the distinct corners of closed triangles on the
     * engine side. */
   def triangleDelta(s: SparkSession, dir: String): DataFrame = {
-    // Checkpoint the canonical edge set ONCE: both dispatch inputs are
-    // filters of it, and without this each of the dispatch's two input
-    // checkpoints re-derives the whole events→distinct-edges pipeline
-    // (r17 — one full-corpus pass saved per run; the base/delta
-    // checkpoints downstream become scans of this one).
-    val und  = Eager.materialize(undirected(edges(s, dir)), "graphOps.edges")
+    // The canonical edge set is checkpointed ONCE with its delta flag as a
+    // column: base and delta are filters of it, so neither re-derives the
+    // events→distinct-edges pipeline and no read re-hashes an edge.
     val part = graft.functions.Fingerprints
       .fp8(concat(col("a").cast(StringType), lit(":"), col("b").cast(StringType))) % EdgeDeltaMod
-    triangleDeltaAuto(und.filter(part < EdgeDeltaMod - 1), und.filter(part === EdgeDeltaMod - 1))
+    val und = Eager.materialize(
+      undirected(edges(s, dir)).withColumn("is_delta", part === EdgeDeltaMod - 1),
+      "graphOps.edges")
+    triangleDeltaOver(und.filter(!col("is_delta")).select("a", "b"), und.filter(col("is_delta")).select("a", "b"))
   }
 
   /** The operator proper over canonical (a, b) base and delta edge sets
@@ -270,26 +270,21 @@ object GraphOps extends QueryModule {
     * paper): the DELTA side broadcasts — it is small by the incremental
     * premise — so candidate enumeration STREAMS the adjacency through the
     * broadcast hash in one codegen pass; the side-edge verification then
-    * probes the adjacency again as a broadcast build pre-shrunk to edges
-    * leaving a delta endpoint (a no-op on the saturated test fold, a huge
-    * cut on a real sparse graph; the 100 TB analog is q106's bucketed
-    * index probe). Candidates never hit an exchange, and both output
-    * aggregates fold in ONE pass over the closed-triangle corners.
+    * probes the adjacency again as a build pre-shrunk to edges leaving a
+    * delta endpoint (a no-op on the saturated test fold, a huge cut on a
+    * real sparse graph; the 100 TB analog is q106's bucketed index probe).
+    * Candidates never hit an exchange, and both output aggregates fold in
+    * ONE pass over the closed-triangle corners.
     *
-    * `broadcastAdj2` re-adds the forced broadcast hint on the verify-side
-    * adjacency — ONLY safe when the caller has measured it small (it
-    * scales with the hub degrees of delta db-endpoints, not |Δ|, so an
+    * That verify-side build broadcasts only under a measured size guard:
+    * it scales with the hub degrees of delta db-endpoints, not |Δ|, so an
     * unconditional hint can exceed the driver's broadcast limit on a
-    * hub-heavy batch — the round-6 ADVICE finding). [[triangleDeltaDispatch]]
-    * estimates its row count from the degree table it already holds and
-    * sets this under [[Adj2BroadcastRows]]; direct callers default to
-    * letting the planner/AQE decide. Measured at the 10× fold: the hint
-    * (2.4M-row build) takes the verify join from a sorted exchange of the
-    * 108M-row candidate stream to a stationary broadcast probe. */
-  def triangleDeltaOver(
-      base: DataFrame,
-      delta: DataFrame,
-      broadcastAdj2: Boolean = false): DataFrame = {
+    * hub-heavy batch. One count of the build decides against
+    * [[Adj2BroadcastRows]]; above it the planner/AQE picks the join.
+    * Measured at the 10× fold: the hint takes the verify join from a
+    * sorted exchange of the 108M-row candidate stream to a stationary
+    * broadcast probe. */
+  def triangleDeltaOver(base: DataFrame, delta: DataFrame): DataFrame = {
     // Adjacency of base ∪ delta in both directions, each row carrying its
     // canonical (lo, hi) pair + delta flag so the "allowed before (da, db)"
     // predicate is a pure column comparison — no rank materialization.
@@ -314,17 +309,14 @@ object GraphOps extends QueryModule {
       .select(col("da"), col("db"), col("y").as("c"))
     // Verify the (db, c) side edge. Build side: adjacency restricted to
     // edges leaving a delta endpoint — on a real graph this is the
-    // bucketed-index probe (q106). NO broadcast hint here: adj2 scales
-    // with the HUB DEGREES of delta endpoints, not with |delta|, so a
-    // hub-heavy graph or a large batch can blow the driver's broadcast
-    // limit; only the delta side (small by the incremental premise,
-    // enforced by triangleDeltaAuto's dispatch) keeps its hint, and the
-    // planner — AQE at runtime — picks broadcast for adj2 when it IS
-    // small rather than being forced to.
+    // bucketed-index probe (q106). Its rows number Σ deg over the distinct
+    // db endpoints, hub degrees included, hence the counted guard.
     val adj2base = adj
       .join(broadcast(d.select(col("db")).distinct()), col("x") === col("db"), "leftsemi")
       .select(col("x").as("x2"), col("y").as("y2"), col("lo").as("lo2"), col("hi").as("hi2"), col("is_delta").as("del2"))
-    val adj2 = if (broadcastAdj2) broadcast(adj2base) else adj2base
+    val adj2 =
+      if (Eager.count(adj2base, "graphOps.triangleDelta.adj2") < Adj2BroadcastRows) broadcast(adj2base)
+      else adj2base
     val closed = viaA
       .join(
         adj2,
@@ -344,151 +336,11 @@ object GraphOps extends QueryModule {
       .select("n_delta_edges", "tri_added", "touched_nodes")
   }
 
-  /** Dispatch threshold for [[triangleDeltaAuto]]: scratch wins only when
-    * the increment's candidate mass (Σ deg over delta-edge endpoints — the
-    * adjacency rows its delta join streams) exceeds [[ScratchCrossover]] ×
-    * the FULL graph's oriented wedge work (Σ deg·min(deg, √(2m)), the
-    * degree-table proxy for what one q134-style enumeration costs; scratch
-    * pays it twice, base and base∪delta).
-    *
-    * Calibrated on HONEST measurements — the round-7 bench fix exposed
-    * that `.count()` join-elimination had been hiding q134's entire
-    * triangle enumeration, and the round-6 "scratch = 3.6 cpu-s" premise
-    * with it. Measured honestly on the saturated 10× fold (611k edges,
-    * 27% triangle churn, mass/wedge-work ≈ 0.1): incremental costs 71
-    * cpu-s, two scratch enumerations (81M + 111M triangles) ≈ 300 cpu-s —
-    * incremental STILL wins, because closing-edge attribution touches ~30M
-    * triangles where scratch re-enumerates ~190M. The crossover is where
-    * the delta's streamed adjacency approaches the wedge work itself —
-    * i.e. the delta IS the graph (mass/wedge-work reaches ~2 at a 100%
-    * delta) — so 0.5 routes majority-delta batches to scratch and
-    * everything in the operator's design regime to the increment. */
-  val ScratchCrossover = 0.5
-
-  /** Row ceiling under which [[triangleDeltaDispatch]] forces the adj2
-    * verify-side broadcast in [[triangleDeltaOver]] — ~4M five-long rows
-    * ≈ 160 MB, comfortably under driver/executor broadcast budgets on a
-    * real cluster; above it the planner keeps its choice (AQE broadcasts
-    * smaller folds on its own). */
-  val Adj2BroadcastRows = 4000000L
-
-  /** Per-node triangle counts of a canonical undirected edge set — q134's
-    * oriented enumeration reduced to (node, t). */
-  private def perNodeTriangles(und: DataFrame): DataFrame = {
-    val (oriented, _) = orientedOf(und)
-    trianglesOf(oriented)
-      .select(explode(array(col("u"), col("x"), col("y"))).as("node"))
-      .groupBy("node")
-      .agg(count(lit(1)).as("t"))
-  }
-
-  /** Scratch twin of [[triangleDeltaOver]]: two q134-style per-node counts
-    * (base, base∪delta) diffed — the SAME rows, derived the way the q137
-    * oracle derives them. Equivalence argument: edges are only added, so a
-    * node's count changes iff it corners a new triangle (diff > 0 ⇔ corner
-    * of a closed triangle), and Σ diff = 3·tri_added exactly. */
-  def triangleDeltaScratch(base: DataFrame, delta: DataFrame): DataFrame = {
-    val b = perNodeTriangles(base).select(col("node"), col("t").as("t_base"))
-    val f = perNodeTriangles(base.unionByName(delta)).select(col("node"), col("t").as("t_full"))
-    // left join from full is total: a node with base triangles keeps ≥ that
-    // many in the superset graph, so it appears in f whenever it is in b
-    f.join(b, Seq("node"), "left")
-      .select((col("t_full") - coalesce(col("t_base"), lit(0L))).as("dt"))
-      .agg(
-        coalesce(call_function("div", sum(col("dt")), lit(3L)), lit(0L)).as("tri_added"),
-        count(when(col("dt") > 0, 1)).as("touched_nodes")
-      )
-      .crossJoin(delta.agg(count(lit(1)).as("n_delta_edges")))
-      .select("n_delta_edges", "tri_added", "touched_nodes")
-  }
-
-  /** Cost-based dispatch between [[triangleDeltaOver]] (sparse/small delta
-    * — the operator's design regime) and [[triangleDeltaScratch]] (dense
-    * or oversized delta, where the increment loses to a rebuild): makes
-    * the operator never-worse instead of documenting the crossover. Both
-    * branches produce IDENTICAL rows (the telescoping pin), so the oracle
-    * contract is branch-independent. The decision reads two scalars off
-    * skinny (long, long) tables — a degree sum over delta endpoints and
-    * the edge count; a production deployment maintains both as standing
-    * state next to the graph, paying nothing per batch. */
-  def triangleDeltaAuto(base: DataFrame, delta: DataFrame): DataFrame =
-    triangleDeltaDispatch(base, delta)._1
-
-  /** [[triangleDeltaAuto]] exposing the branch taken, for specs.
-    *
-    * Both edge sets are localCheckpoint-ed first: the dispatch needs its
-    * decision scalars BEFORE the branch runs, and without truncation the
-    * stats action — plus the chosen branch itself — would re-derive the
-    * upstream edge lineage (for the registered query, the whole
-    * events→distinct-edges pipeline) from scratch. The checkpoint pays
-    * that derivation once; the skinny (long, long) canonical sets are the
-    * cheapest thing in the job to hold. A standing deployment maintains
-    * the graph (and its degree/count stats) as state anyway, so this
-    * mirrors production rather than diverging from it.
-    *
-    * All FOUR decision scalars (candidate mass, edge count, wedge work,
-    * verify-build estimate) come back in ONE action: the r17a bench read
-    * this row at wall 2.0 s / cpu 1.4 s — the serial-driver signature of
-    * the original four back-to-back scalar jobs, each a full
-    * submit/schedule round-trip on tables this skinny. The edge count is
-    * Σdeg/2 exactly (every undirected edge contributes its two endpoint
-    * rows to the degree union), and the √(2m) wedge cap folds in as a
-    * column — `ceil(sqrt(cast(Σdeg AS DOUBLE)))` is the identical IEEE
-    * double chain the driver-side `math.ceil(math.sqrt(2.0 · m))`
-    * computed, so the dispatch decision is bit-for-bit unchanged. The
-    * verify-build estimate is now computed unconditionally (the scratch
-    * branch discards it) — one |Δ|-row broadcast join against the
-    * checkpointed degree table, far cheaper than the scheduling
-    * round-trip it replaces. */
-  def triangleDeltaDispatch(base: DataFrame, delta: DataFrame): (DataFrame, Boolean) = {
-    val baseC  = Eager.materialize(base, "graphOps.triangleDelta.edges")
-    val deltaC = Eager.materialize(delta, "graphOps.triangleDelta.edges")
-    val und = baseC.unionByName(deltaC)
-    // |V|-row table consumed by the three stat subtrees below —
-    // materialize so the degree aggregation over the edge set runs once
-    val deg = und
-      .select(col("a").as("node"))
-      .union(und.select(col("b").as("node")))
-      .groupBy("node")
-      .agg(count(lit(1)).as("deg"))
-      .transform(Eager.materialize(_, "graphOps.triangleDelta.degrees"))
-    val candMassAgg = deltaC
-      .select(explode(array(col("a"), col("b"))).as("node"))
-      .join(deg, Seq("node"))
-      .agg(sum(col("deg")).as("cand_mass"))
-    val degTotalAgg = deg.agg(sum(col("deg")).as("deg_total")) // = 2m exactly
-    // full-graph oriented wedge work off the |V|-row degree table: the
-    // degree-ordered orientation caps every out-degree at O(√(2m)); the
-    // cap rides in as the broadcast 1-row deg_total
-    val wedgeAgg = deg
-      .crossJoin(broadcast(degTotalAgg))
-      .agg(
-        sum(col("deg") * least(col("deg"), ceil(sqrt(col("deg_total").cast(DoubleType)))))
-          .as("wedge_work"))
-    // verify-build size estimate: adjacency rows incident to a delta
-    // db-endpoint = 2 · Σ deg over DISTINCT db endpoints (both directions)
-    val dbAgg = deltaC
-      .select(col("b").as("node"))
-      .distinct()
-      .join(deg, Seq("node"))
-      .agg(sum(col("deg")).as("db_mass"))
-    val stats = Eager.collect(
-      candMassAgg.crossJoin(broadcast(wedgeAgg)).crossJoin(broadcast(degTotalAgg)).crossJoin(broadcast(dbAgg)),
-      1, "graphOps.triangleDelta.stats").head
-    def longAt(name: String): Long = {
-      val i = stats.fieldIndex(name)
-      if (stats.isNullAt(i)) 0L else stats.getLong(i)
-    }
-    val mass      = longAt("cand_mass")
-    val m         = longAt("deg_total") / 2
-    val wedgeWork = longAt("wedge_work")
-    val useScratch = m > 0 && mass > ScratchCrossover * wedgeWork
-    if (useScratch) (triangleDeltaScratch(baseC, deltaC), true)
-    else {
-      val adj2Est = 2L * longAt("db_mass")
-      (triangleDeltaOver(baseC, deltaC, broadcastAdj2 = adj2Est < Adj2BroadcastRows), false)
-    }
-  }
+  /** Row ceiling under which [[triangleDeltaOver]] forces the verify-side
+    * broadcast — ~2M five-long rows ≈ 80 MB, comfortably under
+    * driver/executor broadcast budgets on a real cluster; above it the
+    * planner keeps its choice (AQE broadcasts smaller folds on its own). */
+  val Adj2BroadcastRows = 2000000L
 
   /** Edges reported by [[edgeSimilarity]]. */
   val EdgeSimTopK = 50

@@ -61,7 +61,7 @@ object Multimodal extends QueryModule {
   val TruncLen = 24
 
   /** Payload length knob: md5-hex (32 ASCII chars) repeated 1..this times →
-    * 32–992 bytes, 1–4 strided frames under [[sampleFrames]]'s defaults. */
+    * 32–992 bytes, 1–4 strided frames under [[sampleFrames]]. */
   val PayloadRepMod = 31L
 
   /** The synthetic media payload for `doc_id`: repeated md5 hex of the id —
@@ -320,8 +320,10 @@ object Multimodal extends QueryModule {
   /** Frame sampling: one output row per strided 16-byte "frame" at offsets
     * 0, 256, 512, … — the generator-shaped multimodal op (explode over
     * payload positions), as mapPartitions + flatMap. */
-  def sampleFrames(media: Dataset[MediaRecord], stride: Int = 256, frameLen: Int = 16): Dataset[Frame] = {
+  def sampleFrames(media: Dataset[MediaRecord]): Dataset[Frame] = {
     import media.sparkSession.implicits._
+    val stride   = 256
+    val frameLen = 16
     media.mapPartitions { it =>
       val md = java.security.MessageDigest.getInstance("MD5")
       // P2 drop: a null payload samples zero frames, never a task failure

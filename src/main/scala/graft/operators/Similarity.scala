@@ -127,12 +127,12 @@ object Similarity extends QueryModule {
     * 100× replica at 8 bits packed ~780 vectors/bucket → Σocc² ≈ 156M
     * candidate pairs, 404 s / 10,006 cpu-s where the 30× corpus ran
     * 12.5 s / 220 — 45× the cpu for 3.3× the rows). Smallest bits ≥
-    * `floor` with expected occupancy n/2^bits ≤ [[LshTargetOccupancy]];
-    * gate corpora (≤ ~6k vectors) stay at the oracle-replayed 8-bit
+    * [[LshBucketBits]] with expected occupancy n/2^bits ≤
+    * [[LshTargetOccupancy]]; gate corpora (≤ ~6k vectors) stay at the oracle-replayed 8-bit
     * floor, and the 24-bit ceiling (16M buckets) is far past any
     * single-node corpus. */
-  def autoLshBits(n: Long, floor: Int = LshBucketBits): Int = {
-    var bits = floor
+  def autoLshBits(n: Long): Int = {
+    var bits = LshBucketBits
     while (bits < 24 && (1L << bits) * LshTargetOccupancy < n) bits += 1
     bits
   }
@@ -194,12 +194,12 @@ object Similarity extends QueryModule {
     * shuffle. A vector lives in exactly one bucket per band; the cross-band
     * union dedups candidate pairs BEFORE the verify join, so each
     * surviving pair pays the wide cosine exactly once. */
-  def lshPairs(s: SparkSession, dir: String, bitsFloor: Int = LshBucketBits): DataFrame =
+  def lshPairs(s: SparkSession, dir: String): DataFrame =
     // bits track the corpus ([[autoLshBits]]): the FILTERED vector count
     // (cached) — the rows the plan actually buckets, not the raw footer
     // count, which over-sizes on a null/NaN-bearing corpus; gate corpora
     // stay at the oracle-replayed 8-bit floor
-    lshPairsAt(s, dir, autoLshBits(Tables.embeddingsCountCached(s, dir), bitsFloor))
+    lshPairsAt(s, dir, autoLshBits(Tables.embeddingsCountCached(s, dir)))
 
   /** [[lshPairs]] at an explicit hyperplane count — the recall-measurement
     * surface (Q61RecallSpec sweeps bit settings against planted

@@ -439,7 +439,7 @@ object TrainingPrep extends QueryModule {
     * remainder rows land in the leading tiles, matching the window
     * function's definition, with zero additional shuffle (n is one scalar
     * broadcast). */
-  def globalNtile(s: SparkSession, dir: String, k: Int = NtileK): DataFrame = {
+  def globalNtile(s: SparkSession, dir: String): DataFrame = {
     val ranked = trainingOrder(s, dir)
     // n = corpus row count: trainingOrder emits exactly one row per
     // document (projection + rank + inner join against the complete
@@ -458,7 +458,7 @@ object TrainingPrep extends QueryModule {
     ranked.select(
       col("doc_id"),
       col("global_idx"),
-      (call_function("div", col("global_idx") * lit(k.toLong), lit(n)) + 1L).as("tile")
+      (call_function("div", col("global_idx") * lit(NtileK.toLong), lit(n)) + 1L).as("tile")
     )
   }
 

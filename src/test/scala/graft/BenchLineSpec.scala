@@ -21,8 +21,6 @@ class BenchLineSpec extends AnyFunSuite {
     root.get("tail").asText().linesIterator.find(_.startsWith("{\"metric\"")).get
   }
 
-  private def everything(_n: String): Boolean = true
-
   test("reproduces the recorded round-18 line byte for byte") {
     val j       = mapper.readTree(r18Line)
     val q       = j.get("queries")
@@ -37,7 +35,7 @@ class BenchLineSpec extends AnyFunSuite {
     val dWall = (total - queries.map(_._2).sum) / queries.size
     val rows  = queries.map { case (k, v) => (s"${k}_row", v + dWall, cpu / queries.size) }
     val line  = Bench.stdoutLine(
-      rows, everything, j.get("reps").asInt(), j.get("contended").asBoolean(),
+      rows, j.get("reps").asInt(), j.get("contended").asBoolean(),
       j.get("dirty").asInt(), j.get("sf").asText())
     assert(line == r18Line)
   }
@@ -45,7 +43,7 @@ class BenchLineSpec extends AnyFunSuite {
   test("a larger registry degrades to 2 decimals, then to the slowest rows, within 1900 chars") {
     def rowsOf(n: Int) = (1 to n).map(i => (f"q$i%03d_x", 1.0 + i / 1000.0 + 0.0004, 2.0))
     // 140 rows: 3 decimals overflow, 2 decimals fit with every row present
-    val two = Bench.stdoutLine(rowsOf(140), everything, 3, contended = false, dirty = 0, "sf0.1")
+    val two = Bench.stdoutLine(rowsOf(140), 3, contended = false, dirty = 0, "sf0.1")
     assert(two.length <= Bench.LineMaxChars)
     val q2 = mapper.readTree(two).get("queries")
     assert(q2.size == 140 && !two.contains("\"omitted\""))
@@ -54,7 +52,7 @@ class BenchLineSpec extends AnyFunSuite {
     assert(two.contains("\"value\":" + "%.3f".formatLocal(java.util.Locale.ROOT, rowsOf(140).map(_._2).sum)))
     assert(two.contains("\"cpu_sec\":280.000,"))
     // 400 rows: only the slowest fit, and the rest are counted
-    val top = Bench.stdoutLine(rowsOf(400), everything, 3, contended = true, dirty = 5, "sf0.1")
+    val top = Bench.stdoutLine(rowsOf(400), 3, contended = true, dirty = 5, "sf0.1")
     assert(top.length <= Bench.LineMaxChars)
     val j    = mapper.readTree(top)
     val kept = j.get("queries").fieldNames().asScala.toSeq
@@ -67,7 +65,7 @@ class BenchLineSpec extends AnyFunSuite {
   test("duplicate short keys throw") {
     val rows = Seq(("q01_a", 1.0, 1.0), ("q01_b", 2.0, 2.0))
     intercept[IllegalArgumentException] {
-      Bench.stdoutLine(rows, everything, 3, contended = false, dirty = 0, "sf")
+      Bench.stdoutLine(rows, 3, contended = false, dirty = 0, "sf")
     }
   }
 }

@@ -350,6 +350,29 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("q139 early-exit: unchanged survivor count halts the peel, output identical") {
+    import spark.implicits._
+    // triangle {1,2,3} with a 2-edge tail: k=2 peeling drains the tail in
+    // two rounds, round 3 confirms stability — well under the 8-round cap
+    val edgeList = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L))
+    val (fast, fastRounds) = graft.operators.GraphOps.kCoreRuns(edgeList.toDF("src", "dst"), k = 2, rounds = 8)
+    assert(fastRounds < 8, s"expected early stop under the 8-round cap, ran $fastRounds")
+    // fixed-round reference: all 8 peel rounds, no early exit
+    val und = edgeList.map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
+    def degrees(es: Seq[(Long, Long)]): Map[Long, Long] =
+      es.flatMap { case (a, b) => Seq(a, b) }.groupBy(identity).map { case (n, xs) => n -> xs.size.toLong }
+    val fullDeg = degrees(und)
+    val fixedCore = (1 to 8).foldLeft(fullDeg.keySet) { (surv, _) =>
+      degrees(und.filter { case (a, b) => surv(a) && surv(b) }).collect { case (n, d) if d >= 2 => n }.toSet
+    }
+    val full = fullDeg.map { case (n, d) => (n, d, if (fixedCore(n)) 1L else 0L) }.toSet
+    assert(
+      fast.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet == full,
+      "early-exit output must be bit-identical to the fixed-round peel")
+    val core = fast.filter(col("in_core") === 1L).select("node").as[Long].collect().toSet
+    assert(core == Set(1L, 2L, 3L), "the 2-core is exactly the triangle")
+  }
+
   test("q77: random graphs match an in-memory integer PageRank reference") {
     // The distributed plan (degree joins, dangling-mass left join + coalesce,
     // per-round checkpoint) against a 20-line replica of the SAME integer

@@ -707,4 +707,25 @@ class StreamingSpec extends AnyFunSuite {
     val nNovelty = spark.table("nb_novelty").count()
     assert(nNovelty == docs.count() * 2, s"novelty rows $nNovelty != 2x corpus")
   }
+
+  test("EventStream.fromParquet starts on an empty directory (DefaultFileSchema fallback)") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-empty-stream").toFile.getAbsolutePath
+    val df  = graft.streaming.EventStream.fromParquet(spark, tmp)
+    assert(df.isStreaming, "empty-dir start must yield a streaming frame, not throw")
+    // normalized event shape: ts present as TIMESTAMP next to the raw ns
+    assert(df.columns.toSet.intersect(Set("ts", "ts_ns", "event_type", "user_id")).size == 4)
+  }
+
+  test("EventStream.fromParquet honors an explicit caller schema on an empty directory") {
+    import org.apache.spark.sql.types._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-empty-stream-ns").toFile.getAbsolutePath
+    // the ns-LONG producer contract: ts arrives as a raw epoch-ns LONG
+    val nsSchema = StructType(graft.streaming.EventStream.DefaultFileSchema.map {
+      case f if f.name == "ts" => f.copy(dataType = LongType)
+      case f                   => f
+    })
+    val df = graft.streaming.EventStream.fromParquet(spark, tmp, schema = Some(nsSchema))
+    assert(df.isStreaming)
+    assert(df.columns.contains("ts") && df.columns.contains("ts_ns"))
+  }
 }
