@@ -953,24 +953,19 @@ class Round6OpsSpec extends AnyFunSuite {
     assert(out.getAs[Long]("touched_nodes") == 0L)
   }
 
-  test("q137 equals the q134 recount: sparse path, 75%-delta K30, all-new K4") {
+  private def clique(n: Int): Seq[(Long, Long)] =
+    for { a <- 0 until n; b <- (a + 1) until n } yield (a.toLong, b.toLong)
+
+  /** Runs q137 on each (name, base, delta) case, checks every output column
+    * against q134's per-node recount of base and base ++ delta, and returns
+    * (tri_added, touched_nodes) by case name. */
+  private def q137AgainstRecount(cases: Seq[(String, Seq[(Long, Long)], Seq[(Long, Long)])]): Map[String, (Long, Long)] = {
     import spark.implicits._
     import graft.operators.GraphOps
-    def clique(n: Int): Seq[(Long, Long)] =
-      for { a <- 0 until n; b <- (a + 1) until n } yield (a.toLong, b.toLong)
     // per-node triangle counts by q134's operator, the reference algorithm
     def perNode(es: Seq[(Long, Long)]): Map[Long, Long] =
       GraphOps.triangleStatsOver(es.toDF("src", "dst")).select("node", "triangles").as[(Long, Long)].collect().toMap
-    // three quarters of K30's 435 edges arrive in one batch
-    val (k30Base, k30Delta) = clique(30).partition { case (a, b) => (a * 31 + b) % 4 == 0 }
-    val cases = Seq(
-      // a 100-edge path plus 3 closing edges, one new triangle each
-      ("sparse path", (0 until 100).map(i => (i.toLong, (i + 1).toLong)), Seq((0L, 2L), (10L, 12L), (50L, 52L))),
-      ("75%-delta K30", k30Base, k30Delta),
-      // every K4 edge is new, next to a triangle-free spectator edge
-      ("all-new K4", Seq((100L, 101L)), clique(4))
-    )
-    val got = cases.map { case (name, base, delta) =>
+    cases.map { case (name, base, delta) =>
       val row = GraphOps.triangleDeltaOver(base.toDF("a", "b"), delta.toDF("a", "b")).head()
       val b   = perNode(base)
       val f   = perNode(base ++ delta)
@@ -980,10 +975,25 @@ class Round6OpsSpec extends AnyFunSuite {
       assert(row.getAs[Long]("touched_nodes") == touched.toLong, name)
       name -> (row.getAs[Long]("tri_added"), row.getAs[Long]("touched_nodes"))
     }.toMap
-    // the reference agrees with the hand counts, so none of the cases is vacuous
+  }
+
+  test("q137 equals the q134 recount: sparse path and 75%-delta K30") {
+    // three quarters of K30's 435 edges arrive in one batch
+    val (k30Base, k30Delta) = clique(30).partition { case (a, b) => (a * 31 + b) % 4 == 0 }
+    val got = q137AgainstRecount(Seq(
+      // a 100-edge path plus 3 closing edges, one new triangle each
+      ("sparse path", (0 until 100).map(i => (i.toLong, (i + 1).toLong)), Seq((0L, 2L), (10L, 12L), (50L, 52L))),
+      ("75%-delta K30", k30Base, k30Delta)
+    ))
+    // the reference agrees with the hand counts, so neither case is vacuous
     assert(got("sparse path") == ((3L, 9L)))
-    assert(got("all-new K4") == ((4L, 4L))) // C(4,3), every corner touched
     assert(got("75%-delta K30")._1 > 0L && got("75%-delta K30")._2 == 30L)
+  }
+
+  test("q137 equals the q134 recount: all-new K4, every corner touched") {
+    // every K4 edge is new, next to a triangle-free spectator edge
+    val got = q137AgainstRecount(Seq(("all-new K4", Seq((100L, 101L)), clique(4))))
+    assert(got("all-new K4") == ((4L, 4L))) // C(4,3), every corner touched
   }
 
   test("q138: edge similarity — K4 edges score 1.0, bridge and square edges score 0") {
