@@ -40,7 +40,7 @@ import graft.sources.Layout
   * batch are appended to the three tables with the same bucket spec, so
   * later batches dedup against base ∪ earlier survivors. [[build]] is the
   * rebuild primitive for periodic compaction (re-enforcing the global band
-  * cap). Streaming: [[probeBatch]] is the `foreachBatch` sink.
+  * cap).
   *
   * Schema migration: the shingle table gained the `fingerprint` column (the
   * one-text-scan layout). An index persisted by the earlier 2-column layout
@@ -115,20 +115,6 @@ object DedupIndex {
     * co-bucketed join build. */
   private def reset(s: SparkSession, table: String): Unit = Layout.resetTable(s, table)
 
-  /** Build (or rebuild) the persisted index from the base corpus.
-    *
-    * The corpus TEXT is scanned and tokenized exactly ONCE: the shingle
-    * table persists (doc_id, fingerprint, shingles) from a single
-    * projection, then BOTH derived tables come from read-backs of it —
-    * fingerprints as a skinny column scan, bands as the (doc_id, long[])
-    * scan through the band-key expression. At corpus scale reading and
-    * hashing raw text is the dominant build cost; one pass per rebuild is
-    * the whole point of the pay-once index.
-    *
-    * `numBuckets` ≤ 0 (the default) sizes buckets from the corpus row
-    * count via [[autoNumBuckets]] — the count is a doc_id-only job
-    * (column-pruned, no text IO), marginal next to the text pass the
-    * build pays anyway. */
   /** Run independent write jobs concurrently (guide §2.6: actions are only
     * sequential because the driver calls them sequentially). Fresh threads
     * per call — not a shared pool — so Spark's InheritableThreadLocal job
@@ -139,14 +125,14 @@ object DedupIndex {
     * footprint note: because all siblings run to completion before the
     * rethrow, a failed task can leave MORE sibling tables mutated than the
     * sequential form would have (e.g. shingles+bands appended while the fp
-    * append failed) — the same partial-index residue class as the
-    * documented mid-absorb crash window, healed by [[build]] compaction
-    * and visible via [[auditResidue]].
+    * append failed) — a partial-index residue healed by [[build]]
+    * compaction.
     *
     * Interrupt-safe: an interrupt of the CALLING thread mid-barrier must
-    * not return control while write jobs are still in flight (the
-    * streaming sink's commit marker relies on all-writes-complete-before-
-    * return), so the joins are retried until every worker settles and the
+    * not return control while write jobs are still in flight — a cancelled
+    * [[probeAndAbsorb]] (q112) that returned early would let its caller
+    * read or rebuild the index while sibling appends are still landing in
+    * it — so the joins are retried until every worker settles and the
     * interrupt is re-delivered via the thread's interrupt flag. */
   private[graft] def inParallel(tasks: (() => Unit)*): Unit = {
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -170,6 +156,20 @@ object DedupIndex {
     }
   }
 
+  /** Build (or rebuild) the persisted index from the base corpus.
+    *
+    * The corpus TEXT is scanned and tokenized exactly ONCE: the shingle
+    * table persists (doc_id, fingerprint, shingles) from a single
+    * projection, then BOTH derived tables come from read-backs of it —
+    * fingerprints as a skinny column scan, bands as the (doc_id, long[])
+    * scan through the band-key expression. At corpus scale reading and
+    * hashing raw text is the dominant build cost; one pass per rebuild is
+    * the whole point of the pay-once index.
+    *
+    * `numBuckets` ≤ 0 (the default) sizes buckets from the corpus row
+    * count via [[autoNumBuckets]] — the count is a doc_id-only job
+    * (column-pruned, no text IO), marginal next to the text pass the
+    * build pays anyway. */
   def build(docs: DataFrame, prefix: String = IndexPrefix, numBuckets: Int = 0): Unit = {
     val s = docs.sparkSession
     val n = if (numBuckets > 0) numBuckets else autoNumBuckets(Eager.count(docs, "dedupIndex.build.size"))
@@ -269,7 +269,7 @@ object DedupIndex {
   def probeAndAbsorb(s: SparkSession, batch: DataFrame, prefix: String = IndexPrefix): DataFrame = {
     // Detect a pre-fingerprint (2-column) shingle table UP FRONT — without
     // this, the mismatch surfaces as an AnalysisException on the absorb
-    // append, mid-stream, AFTER probe work was spent. A catalog schema
+    // append, AFTER probe work was spent. A catalog schema
     // lookup, not a scan.
     val shCols = s.table(s"${prefix}_shingles").schema.fieldNames
     require(
@@ -306,8 +306,8 @@ object DedupIndex {
     // three appends derive from the SAME checkpointed batch frame and
     // target three DIFFERENT tables — independent jobs, overlapped
     // (guide §2.6, r17); all complete before this returns, so callers
-    // (incl. the streaming sink's commit-marker write) see the same
-    // all-appends-then-return contract as the sequential form.
+    // (q112's batch-2 probe) see the same all-appends-then-return
+    // contract as the sequential form.
     Eager.phase("dedupIndex.absorb.write")(
       inParallel(
         () =>
@@ -338,185 +338,6 @@ object DedupIndex {
     val v2 = probe(s, docs.filter(m === 9), prefix).withColumn("batch", lit(2L))
     v1.unionByName(v2)
       .select("batch", "doc_id", "exact_dup", "n_near", "near_match", "keep")
-  }
-
-  /** Streaming sink for [[probe]] — the `foreachBatch` production shape:
-    * dedup state lives in the bucketed index tables (built once, refreshed
-    * offline), each micro-batch pays an O(delta) probe and appends its
-    * per-doc verdicts (tagged with the batch id) to `<prefix>_verdicts`.
-    * Probe semantics are delta-vs-INDEX only (q58's asymmetric contract),
-    * so each row's verdict is independent of its micro-batch boundaries —
-    * the union over any batching equals one batch probe over the union,
-    * which is exactly what StreamingSpec pins. `foreachBatch` is
-    * at-least-once under retry; verdicts are deterministic per doc, so
-    * replays duplicate rows rather than corrupt them — downstream readers
-    * dedup on (doc_id) as with any at-least-once sink. */
-  def probeBatch(prefix: String = IndexPrefix)(batch: DataFrame, batchId: Long): Unit =
-    probe(batch.sparkSession, batch, prefix)
-      .withColumn("batch_id", lit(batchId))
-      .write
-      .mode("append")
-      .format("parquet")
-      .saveAsTable(s"${prefix}_verdicts")
-
-  /** Streaming sink with ABSORB — q112's maintenance loop as a
-    * `foreachBatch` stream, made idempotent under replay by the standard
-    * batchId pattern: the verdict-table append (tagged with the batch id)
-    * is the batch's COMMIT MARKER, written after the absorb. `foreachBatch`
-    * is at-least-once — a kill between the sink completing and the
-    * checkpoint commit replays the same (batchId, data) on restart — and a
-    * replayed batch must NOT be re-probed: its survivors are already in
-    * the index, so a fresh probe would screen the batch against itself
-    * (every survivor flagged as its own duplicate) and the absorb would
-    * run twice. Seeing its marker, the replay is a no-op.
-    *
-    * Residual at-least-once window, documented not hidden: a kill strictly
-    * BETWEEN the three index appends and the marker write leaves that
-    * batch's survivors in the index without verdicts; the restart re-probes
-    * (self-screen for just that batch) — the same class of residue as any
-    * non-transactional multi-table append, healed by the periodic
-    * [[build]] compaction exactly like LSM segment repair. The recovery
-    * spec exercises the covered window (kill after sink, before
-    * checkpoint commit), which is what an orderly kill-and-restart hits. */
-  /** Per-JVM committed-batch high-water mark, keyed by (warehouse dir,
-    * verdict table) — table name alone would let one JVM hosting two
-    * sessions with DIFFERENT warehouses (each with its own
-    * `<prefix>_verdicts`) share a mark and silently drop the other
-    * stream's batches. Within a run `foreachBatch` ids are monotone and
-    * never repeat, so a replay can only be the FIRST batch after a
-    * (re)start — the marker TABLE only needs probing when this JVM has no
-    * mark yet; afterwards the in-memory mark answers "not a replay"
-    * without scanning the ever-growing verdict table on every trigger. */
-  private val committedHighWater = scala.collection.concurrent.TrieMap.empty[String, Long]
-
-  private def hwKey(s: SparkSession, vt: String): String =
-    s"${s.conf.get("spark.sql.warehouse.dir", "")}::$vt"
-
-  /** The replay state machine, keyed so marks never cross warehouses —
-    * extracted (and exercised by DedupIndexSpec's two-warehouse test,
-    * which a single test JVM cannot stage live: `spark.sql.warehouse.dir`
-    * is a STATIC conf, one value per SparkContext, so the two-sessions-
-    * different-warehouses scenario only arises across sequential contexts
-    * — precisely when the per-JVM map would have carried a stale mark
-    * under table-name-only keying). `seenInTable` is by-name: the verdict
-    * table is only scanned when this JVM holds no trusted mark. */
-  private[graft] def replayDecision(
-      key: String,
-      batchId: Long,
-      tableExists: Boolean,
-      seenInTable: () => Boolean): Boolean =
-    committedHighWater.get(key) match {
-      case Some(hw) if tableExists => batchId <= hw
-      case _ =>
-        committedHighWater.remove(key) // drop any stale mark
-        val seen = tableExists && seenInTable()
-        // a found batchId IS a valid high-water mark (ids are monotone):
-        // install it so the NEXT batch answers from memory, not the table
-        if (seen) committedHighWater.update(key, batchId)
-        seen
-    }
-
-  /** Test hook: the live key [[probeAndAbsorbBatch]] uses for a session —
-    * lets the two-warehouse spec assert the warehouse is PART of the key. */
-  private[graft] def replayKeyFor(s: SparkSession, prefix: String = IndexPrefix): String =
-    hwKey(s, s"${prefix}_verdicts")
-
-  /** Test hook: commit a mark directly (a stream that ran in some other
-    * warehouse/context). */
-  private[graft] def installReplayMark(key: String, hw: Long): Unit =
-    committedHighWater.update(key, hw)
-
-  def probeAndAbsorbBatch(prefix: String = IndexPrefix)(batch: DataFrame, batchId: Long): Unit = {
-    val s  = batch.sparkSession
-    val vt = s"${prefix}_verdicts"
-    // The mark is only trusted while its table still exists (a catalog
-    // lookup, not a scan): a DROP TABLE / warehouse wipe outside
-    // resetVerdicts would otherwise leave a stale mark silently dropping
-    // every batch of the next stream. A caller that keeps the table but
-    // restarts from a FRESH checkpoint must go through resetVerdicts —
-    // the same contract the marker table itself already imposes.
-    val key = hwKey(s, vt)
-    val replayed = replayDecision(
-      key,
-      batchId,
-      tableExists = s.catalog.tableExists(vt),
-      seenInTable = () =>
-        !Eager.phase("dedupIndex.replayProbe")(s.table(vt).filter(col("batch_id") === batchId).isEmpty))
-    // replay skips must be OBSERVABLE: if a stale mark (or a foreign
-    // verdict table under a fresh checkpoint without resetVerdicts) ever
-    // misclassifies a live batch, the failure mode is silent data loss —
-    // one log line per skip turns that into a diagnosable signal
-    if (replayed)
-      System.err.println(
-        s"[graft] probeAndAbsorbBatch: batch $batchId of $vt treated as a replay (already committed) — skipping"
-      )
-    if (!replayed) {
-      probeAndAbsorb(s, batch, prefix)
-        .withColumn("batch_id", lit(batchId))
-        .write
-        .mode("append")
-        .format("parquet")
-        .saveAsTable(vt)
-      // mark AFTER the marker write: a failed append must stay re-probeable
-      committedHighWater.update(key, math.max(committedHighWater.getOrElse(key, -1L), batchId))
-    }
-  }
-
-  /** Test hook: forget the in-memory mark WITHOUT touching the table —
-    * simulates a fresh JVM so a same-JVM spec can exercise the restart
-    * table-probe path a real recovery takes. */
-  private[graft] def clearReplayMark(prefix: String = IndexPrefix): Unit = {
-    // keys are (warehouse :: table); a fresh JVM forgets ALL warehouses
-    val suffix = s"::${prefix}_verdicts"
-    committedHighWater.keys.filter(_.endsWith(suffix)).foreach(committedHighWater.remove)
-  }
-
-  /** Reconciliation audit for the mid-absorb crash window
-    * ([[probeAndAbsorbBatch]]'s documented residue: a kill strictly between
-    * the three index appends and the verdict-marker write leaves survivors
-    * in the index with no verdicts). The residue is healed by the periodic
-    * [[build]] compaction but was invisible until then — this makes it
-    * visible ON DEMAND so a caller can decide whether to trust a maintained
-    * index or force the compaction early.
-    *
-    * `base` is the corpus the index was BUILT from (its docs legitimately
-    * have no verdicts); accountable docs = base ∪ verdict survivors. One
-    * row per table with its orphan count:
-    *  - `shingles` / `bands`: doc_ids in the table but not accountable
-    *  - `fp`: fingerprints with NO shingle-table backing (catches the
-    *    narrower crash-after-fp-append-only window, where doc_ids never
-    *    landed)
-    * All joins are id/fingerprint-sized LEFT ANTIs — no text, no shingle
-    * arrays ever shuffle; cost is a skinny column scan per table. A clean
-    * maintained index audits to three zeros. */
-  def auditResidue(s: SparkSession, base: DataFrame, prefix: String = IndexPrefix): DataFrame = {
-    val vt = s"${prefix}_verdicts"
-    val survivors =
-      if (s.catalog.tableExists(vt))
-        s.table(vt).filter(col("keep") === 1L).select("doc_id")
-      else s.emptyDataFrame.select(lit(0L).as("doc_id")).limit(0)
-    val accountable = base.select("doc_id").union(survivors).distinct()
-    val sh  = s.table(s"${prefix}_shingles")
-    def orphans(df: DataFrame): Long = Eager.count(df, "dedupIndex.audit")
-    val shOrphans = orphans(sh.select("doc_id").distinct().join(accountable, Seq("doc_id"), "left_anti"))
-    val bandOrphans = orphans(
-      s.table(s"${prefix}_bands").select("doc_id").distinct().join(accountable, Seq("doc_id"), "left_anti"))
-    val fpOrphans = orphans(
-      s.table(s"${prefix}_fp").select("fingerprint").distinct()
-        .join(sh.select("fingerprint").distinct(), Seq("fingerprint"), "left_anti"))
-    import s.implicits._
-    Seq(
-      ("shingles", shOrphans),
-      ("bands", bandOrphans),
-      ("fp", fpOrphans)
-    ).toDF("table", "orphans")
-  }
-
-  /** Drop the verdict table (and clear its location) before starting a new
-    * stream against `prefix`. */
-  def resetVerdicts(s: SparkSession, prefix: String = IndexPrefix): Unit = {
-    clearReplayMark(prefix)
-    reset(s, s"${prefix}_verdicts")
   }
 
   /** q106: build the index from the q58 base split, probe the q58 delta —

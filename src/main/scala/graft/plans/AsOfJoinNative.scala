@@ -182,8 +182,7 @@ object AsOfJoinNative {
 
   /** Idempotently make the strategy available on a live session — works on
     * ANY session (the driver's harness included), no builder-time
-    * extension wiring required. `GraftExtensions` also injects it for
-    * sessions built with `withExtensions`. */
+    * extension wiring required. */
   def ensureStrategy(spark: SparkSession): Unit =
     // check-then-append under a lock: concurrent asof() calls on one session
     // raced here and could register the strategy twice (harmless for

@@ -41,9 +41,9 @@ object HttpBatchSink {
   def post(
       df: DataFrame,
       transportClass: String,
-      batchSize: Int = 100,
-      policy: RetryPolicy = RetryPolicy(),
-      timeouts: HttpTimeouts = HttpTimeouts()
+      batchSize: Int,
+      policy: RetryPolicy,
+      timeouts: HttpTimeouts
   ): Long = {
     val size     = clampBatchSize(batchSize)
     val batches  = df.sparkSession.sparkContext.longAccumulator("posted_batches")

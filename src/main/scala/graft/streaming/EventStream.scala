@@ -1,22 +1,18 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
 import graft.Num
 
-/** Structured Streaming surface over the `events` stream: the same windowed
-  * aggregations as the batch module (`graft.operators.EventWindows`) run with
-  * `readStream` + watermarks — Spark guarantees batch/stream semantic parity
-  * for `window`/`session_window`, and `StreamingSpec` asserts it on the test
-  * data.
+/** Structured Streaming surface over the `events` stream: batch q25's
+  * tumbling-window aggregation (`graft.operators.EventWindows`) run with
+  * `readStream` + a watermark — Spark guarantees batch/stream semantic
+  * parity for `window`, and `StreamingSpec` asserts it on the test data.
   *
-  * State design for scale: watermarks bound state (late data beyond 1 hour
-  * is dropped); custom per-key state via `flatMapGroupsWithState` keeps one
-  * small record per user and emits on timeout — the pattern that survives
-  * unbounded keys at 100 TB/day ingest.
+  * State design for scale: the watermark bounds state (late data beyond
+  * 1 hour is dropped), so a window's state is evicted once it closes.
   */
 object EventStream {
 
@@ -85,232 +81,4 @@ object EventStream {
         col("n_events"),
         col("sum_value")
       )
-
-  /** Session windows (30 min gap) with watermark — streaming q26. */
-  def sessionCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "1 hour")
-      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(
-        col("user_id"),
-        date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss.SSSSSS").as("session_start"),
-        col("n_events")
-      )
-
-  /** Stream–stream event-time interval join: each purchase joins the same
-    * user's clicks from the strictly-preceding 10 minutes — the streaming
-    * counterpart of batch q65's binned range join. Both sides carry
-    * watermarks, and the time-interval predicate bounds the join state:
-    * Spark evicts buffered clicks once the purchase-side watermark passes
-    * `click_ts + 10 min`, so state is O(arrival rate × window), not
-    * unbounded. Inner join (stream–stream outer needs both watermarks too;
-    * the batch q65 LEFT semantics are recovered downstream by re-attaching
-    * zero-click purchases from the purchase stream itself if needed). */
-  def purchaseClickIntervalJoin(events: DataFrame): DataFrame = {
-    val purchases = events
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").as("p_id"), col("user_id").as("p_user"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", "1 hour")
-    val clicks = events
-      .filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("c_ts"))
-      .withWatermark("c_ts", "1 hour")
-    purchases.join(
-      clicks,
-      col("p_user") === col("c_user") &&
-        col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
-        col("c_ts") < col("p_ts"),
-      "inner"
-    )
-  }
-
-  /** Stream → batched HTTP sink via foreachBatch: each micro-batch posts
-    * through the reference's K1 sink semantics (clamped batches, retry,
-    * key-omission JSON). Returns the started query; at-least-once —
-    * micro-batch replay can re-POST, same as the reference's non-idempotent
-    * sink (README.md:151-154).
-    *
-    * `checkpointDir` bounds the replay window to ONE micro-batch: without
-    * a durable checkpoint a restarted query has no committed offsets and
-    * re-reads the entire source — every historical file re-POSTed to the
-    * non-idempotent sink, far beyond the documented per-micro-batch
-    * at-least-once. Required for any restartable deployment; tests may
-    * pass None to keep Spark's temp checkpoint (single-run lifetime). */
-  def toHttpSink(
-      aggregated: DataFrame,
-      transportClass: String,
-      batchSize: Int = 100,
-      checkpointDir: Option[String] = None
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = aggregated.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val n = graft.sinks.HttpBatchSink.post(batch, transportClass, batchSize)
-        println(s"[stream-sink] micro-batch $batchId -> $n POSTs")
-      }
-    checkpointDir.fold(writer)(d => writer.option("checkpointLocation", d)).start()
-  }
-
-  final case class UserEvent(user_id: Long, event_type: String, value: Double)
-  final case class UserState(nEvents: Long, totalValue: Double)
-  final case class UserSummary(user_id: Long, n_events: Long, total_value: Double)
-
-  final case class SeqEvent(user_id: Long, us: Long, event_id: Long, event_type: String)
-  final case class LastEvent(us: Long, event_id: Long, event_type: String)
-  final case class Transition(user_id: Long, prev_type: String, next_type: String)
-
-  /** Funnel progress per user: the first-view / first-qualifying-click
-    * timestamps, and whether the conversion already fired (each user
-    * converts at most once — same as batch q92's per-user min semantics). */
-  final case class FunnelState(t1: Option[Long], t2: Option[Long], converted: Boolean)
-  final case class Conversion(user_id: Long, t1_us: Long, t3_us: Long)
-
-  /** The open run per user: its state label, start time, and event count. */
-  final case class OpenRun(event_type: String, from_us: Long, n_events: Long)
-  final case class ClosedRun(user_id: Long, state: String, valid_from_us: Long, valid_to_us: Long, n_events: Long)
-
-  /** Custom keyed state: running per-user totals via flatMapGroupsWithState.
-    * Emits the updated summary on every micro-batch trigger.
-    *
-    * NULL `value` coalesces to 0.0 AT the typed boundary: the encoder's
-    * non-nullable Double would otherwise kill the whole QUERY on the first
-    * null-metric micro-batch (NOT_NULL_ASSERT_VIOLATION — found by the
-    * r15 streaming null-batch probe), and a zero contribution is exactly
-    * the batch twin's `sum(value)`-skips-NULL semantics (P3). */
-  def runningUserTotals(events: DataFrame): Dataset[UserSummary] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val typed = events
-      .select(col("user_id"), col("event_type"), coalesce(col("value"), lit(0.0)).as("value"))
-      .as[UserEvent]
-    typed
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (userId: Long, rows: Iterator[UserEvent], state: GroupState[UserState]) => {
-          val prev    = state.getOption.getOrElse(UserState(0L, 0.0))
-          var n       = prev.nEvents
-          var total   = prev.totalValue
-          rows.foreach { e => n += 1; total += e.value }
-          state.update(UserState(n, total))
-          Iterator(UserSummary(userId, n, total))
-        }
-      )
-  }
-
-  /** Streaming counterpart of batch q82's transition mining: one
-    * [[LastEvent]] of state per user; each arrival emits the
-    * (prev → next) pair and advances the state. Within a micro-batch rows
-    * are ordered by (event time, event_id) — the batch lag's exact order;
-    * ACROSS micro-batches the source must deliver each user's events in
-    * order (the Kafka-per-key-ordering assumption every stateful sequence
-    * consumer makes — a late straggler would emit its pair out of order
-    * rather than re-sort history, state being O(1) per user by design). */
-  def transitionPairs(events: DataFrame): Dataset[Transition] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val typed = events
-      .select(
-        col("user_id"),
-        unix_micros(col("ts")).as("us"),
-        col("event_id"),
-        col("event_type")
-      )
-      .as[SeqEvent]
-    typed
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (userId: Long, rows: Iterator[SeqEvent], state: GroupState[LastEvent]) => {
-          val ordered = rows.toSeq.sortBy(e => (e.us, e.event_id))
-          var prev    = state.getOption
-          val out     = Seq.newBuilder[Transition]
-          ordered.foreach { e =>
-            prev.foreach(p => out += Transition(userId, p.event_type, e.event_type))
-            prev = Some(LastEvent(e.us, e.event_id, e.event_type))
-          }
-          prev.foreach(state.update)
-          out.result().iterator
-        }
-      )
-  }
-
-  /** Streaming counterpart of batch q92's ordered funnel: O(1)
-    * [[FunnelState]] per user, advanced as a state machine — first view
-    * sets t1, first click strictly after t1 sets t2, first purchase
-    * strictly after t2 emits the [[Conversion]] (once per user). Under
-    * [[transitionPairs]]'s ordering discipline (micro-batch rows sorted by
-    * (event time, id), per-user in-order delivery across batches) each
-    * "first qualifying" arrival IS the minimum, so emitted conversions
-    * match the batch min-filter composition exactly — StreamingSpec pins
-    * the parity. State never grows with history: three longs per user,
-    * evictable on timeout in a production config. */
-  def funnelConversions(events: DataFrame): Dataset[Conversion] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val typed = events
-      .select(col("user_id"), unix_micros(col("ts")).as("us"), col("event_id"), col("event_type"))
-      .as[SeqEvent]
-    typed
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (userId: Long, rows: Iterator[SeqEvent], state: GroupState[FunnelState]) => {
-          val ordered = rows.toSeq.sortBy(e => (e.us, e.event_id))
-          var st      = state.getOption.getOrElse(FunnelState(None, None, converted = false))
-          val out     = Seq.newBuilder[Conversion]
-          ordered.foreach { e =>
-            e.event_type match {
-              case "view" if st.t1.isEmpty => st = st.copy(t1 = Some(e.us))
-              case "click" if st.t2.isEmpty && st.t1.exists(e.us > _) =>
-                st = st.copy(t2 = Some(e.us))
-              case "purchase" if !st.converted && st.t2.exists(e.us > _) =>
-                st = st.copy(converted = true)
-                out += Conversion(userId, st.t1.get, e.us)
-              case _ => ()
-            }
-          }
-          state.update(st)
-          out.result().iterator
-        }
-      )
-  }
-
-  /** Streaming counterpart of batch q91's SCD2 interval build: one
-    * [[OpenRun]] of state per user. Each arrival either extends the open
-    * run (same event_type) or CLOSES it — emitting the finished
-    * [[ClosedRun]] with valid_to = the new run's start, exactly the batch
-    * lead() semantics — and opens the next. The one still-open run per
-    * user stays in state (batch's is_current=1 / valid_to NULL rows), so
-    * emitted rows correspond 1:1 to the batch query's CLOSED intervals —
-    * StreamingSpec pins that parity. Ordering discipline and state bound
-    * are [[transitionPairs]]'s: micro-batch rows sorted by (time, id),
-    * per-user in-order delivery across batches, O(1) state per user. */
-  def scd2Runs(events: DataFrame): Dataset[ClosedRun] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val typed = events
-      .select(col("user_id"), unix_micros(col("ts")).as("us"), col("event_id"), col("event_type"))
-      .as[SeqEvent]
-    typed
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(
-        (userId: Long, rows: Iterator[SeqEvent], state: GroupState[OpenRun]) => {
-          val ordered = rows.toSeq.sortBy(e => (e.us, e.event_id))
-          var open    = state.getOption
-          val out     = Seq.newBuilder[ClosedRun]
-          ordered.foreach { e =>
-            open match {
-              case Some(r) if r.event_type == e.event_type =>
-                open = Some(r.copy(n_events = r.n_events + 1))
-              case Some(r) =>
-                out += ClosedRun(userId, r.event_type, r.from_us, e.us, r.n_events)
-                open = Some(OpenRun(e.event_type, e.us, 1L))
-              case None =>
-                open = Some(OpenRun(e.event_type, e.us, 1L))
-            }
-          }
-          open.foreach(state.update)
-          out.result().iterator
-        }
-      )
-  }
 }

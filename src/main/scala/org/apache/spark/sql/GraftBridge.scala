@@ -49,15 +49,4 @@ object GraftBridge {
     spark
       .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
-
-  /** Register a function on a LIVE session (the builder-time path is
-    * `graft.plans.GraftExtensions` via `withExtensions` /
-    * `spark.sql.extensions`; this covers sessions created elsewhere, e.g.
-    * the driver's own harness). */
-  def registerFunction(spark: SparkSession, name: String, builder: Seq[Expression] => Expression): Unit =
-    spark
-      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState
-      .functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
 }

@@ -36,36 +36,6 @@ class DedupIndexSpec extends AnyFunSuite {
     }
   }
 
-  test("streaming probe via foreachBatch equals the one-shot batch probe (micro-batch independence)") {
-    import org.apache.spark.sql.DataFrame
-    val prefix = "stream_idx"
-    val docs   = spark.read.parquet(s"$dir/documents.parquet")
-    val base   = docs.filter(col("doc_id") % FuzzyDedup.DeltaMod < 8)
-    val delta  = docs.filter(col("doc_id") % FuzzyDedup.DeltaMod >= 8)
-    DedupIndex.build(base, prefix)
-    DedupIndex.resetVerdicts(spark, prefix)
-    val d = java.nio.file.Files.createTempDirectory("graft_stream_delta")
-    delta.repartition(2).write.mode("overwrite").parquet(d.toString)
-    val sink: (DataFrame, Long) => Unit = DedupIndex.probeBatch(prefix)
-    val q = spark.readStream
-      .schema(docs.schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(d.toString)
-      .writeStream
-      .foreachBatch(sink)
-      .start()
-    try {
-      q.processAllAvailable()
-      val verdicts = spark.table(s"${prefix}_verdicts")
-      assert(verdicts.select("batch_id").distinct().count() >= 2,
-        "stream collapsed into one micro-batch — parity claim untested")
-      val streamed  = verdicts.drop("batch_id").collect().map(_.toSeq).toSet
-      val oneShot   = DedupIndex.probe(spark, delta, prefix).collect().map(_.toSeq).toSet
-      assert(streamed == oneShot, "streamed verdict union differs from the one-shot probe")
-      assert(verdicts.count() == delta.count(), "a delta doc is missing or duplicated")
-    } finally q.stop()
-  }
-
   test("q112 absorb: a batch-2 dup of a batch-1 survivor is caught; without absorb it is missed") {
     import spark.implicits._
     val prefix = "absorb_idx"
@@ -107,30 +77,6 @@ class DedupIndexSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(4))).toMap
     assert(got(1000000L)._1 == 1L && got(1000000L)._2 == 0L, s"exact dup not caught: $got")
     assert(got(1000001L) == ((0L, 1L)), s"novel doc not kept: $got")
-  }
-
-  test("replay mark does not outlive its verdict table: a dropped table re-enables batch 0") {
-    import org.apache.spark.sql.functions.col
-    val prefix = "stale_mark_idx"
-    val docs   = spark.read.parquet(s"$dir/documents.parquet")
-    val base   = docs.filter(col("doc_id") % FuzzyDedup.DeltaMod < 8)
-    val batch  = docs.filter(col("doc_id") % FuzzyDedup.DeltaMod === 9)
-    DedupIndex.build(base, prefix)
-    DedupIndex.resetVerdicts(spark, prefix)
-    // stream 1 commits batches 0 and 1 — the in-memory mark now says hw=1
-    DedupIndex.probeAndAbsorbBatch(prefix)(batch, 0L)
-    DedupIndex.probeAndAbsorbBatch(prefix)(batch, 1L)
-    assert(spark.table(s"${prefix}_verdicts").count() > 0)
-    // the table is dropped OUTSIDE resetVerdicts (warehouse wipe / manual
-    // DROP) — the stale mark must not classify the next stream's batch 0
-    // as a replay and silently drop it
-    spark.sql(s"DROP TABLE ${prefix}_verdicts")
-    DedupIndex.probeAndAbsorbBatch(prefix)(batch, 0L)
-    assert(
-      spark.table(s"${prefix}_verdicts").filter(col("batch_id") === 0L).count() > 0,
-      "batch 0 of the fresh stream was silently dropped by a stale replay mark"
-    )
-    DedupIndex.resetVerdicts(spark, prefix)
   }
 
   test("aligned writes share ONE exchange between compute and layout (fp distinct / band window)") {
@@ -269,64 +215,6 @@ class DedupIndexSpec extends AnyFunSuite {
     assert(again.forall(_.getAs[Long]("keep") == 0L), "a re-probed doc still reads as novel")
   }
 
-  test("two-warehouse replay marks: one JVM, same prefix, neither stream drops the other's batches") {
-    // spark.sql.warehouse.dir is a STATIC conf — two live sessions with
-    // different warehouses cannot coexist on one SparkContext, so the
-    // scenario that motivated (warehouse, table) keying arises across
-    // SEQUENTIAL contexts in one JVM, where the per-JVM mark map survives.
-    // Drive the extracted state machine with the two live keys directly.
-    val k1 = DedupIndex.replayKeyFor(spark, "twowh_idx")
-    val k2 = "file:/somewhere/else/warehouse::" + "twowh_idx_verdicts"
-    assert(k1 != k2 && k1.contains(spark.conf.get("spark.sql.warehouse.dir")),
-      s"replay key does not incorporate the warehouse: $k1")
-    DedupIndex.clearReplayMark("twowh_idx")
-    // stream A (warehouse 1) commits batches 0..1
-    assert(!DedupIndex.replayDecision(k1, 0L, tableExists = false, () => false))
-    DedupIndex.installReplayMark(k1, 0L)
-    assert(!DedupIndex.replayDecision(k1, 1L, tableExists = true, () => fail("mark should answer")))
-    DedupIndex.installReplayMark(k1, 1L)
-    // stream B: same table NAME, different warehouse, fresh batch 0 — a
-    // table-name-keyed mark (hw=1) would classify it as a replay and
-    // silently drop it; the warehouse-keyed mark must not
-    assert(!DedupIndex.replayDecision(k2, 0L, tableExists = true, () => false),
-      "stream B's batch 0 dropped by stream A's mark — warehouse leaked out of the key")
-    // and a TRUE replay in each warehouse still skips, independently
-    assert(DedupIndex.replayDecision(k1, 1L, tableExists = true, () => fail("mark should answer")))
-    DedupIndex.installReplayMark(k2, 0L)
-    assert(DedupIndex.replayDecision(k2, 0L, tableExists = true, () => fail("mark should answer")))
-    DedupIndex.clearReplayMark("twowh_idx")
-  }
-
-  test("auditResidue: clean maintained index audits to zeros; a mid-absorb crash residue is reported exactly") {
-    val prefix = "audit_idx"
-    val docs   = spark.read.parquet(s"$dir/documents.parquet")
-    val base   = docs.filter(col("doc_id") % FuzzyDedup.DeltaMod < 8)
-    val b1     = docs.filter(col("doc_id") % FuzzyDedup.DeltaMod === 8)
-    val b2     = docs.filter(col("doc_id") % FuzzyDedup.DeltaMod === 9)
-    DedupIndex.build(base, prefix)
-    DedupIndex.resetVerdicts(spark, prefix)
-    // batch 1 commits cleanly (verdict marker written) -> all zeros
-    DedupIndex.probeAndAbsorbBatch(prefix)(b1, 0L)
-    val clean = DedupIndex.auditResidue(spark, base, prefix)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(clean.values.forall(_ == 0L), s"clean index reports residue: $clean")
-    // batch 2 CRASHES mid-absorb: index appends land, verdict write never
-    // happens — exactly probeAndAbsorb without the marker step
-    val v2 = DedupIndex.probeAndAbsorb(spark, b2, prefix)
-    val orphaned = v2.filter(col("keep") === 1L).count()
-    assert(orphaned > 0, "fixture produced no survivors — audit untested")
-    val resid = DedupIndex.auditResidue(spark, base, prefix)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(resid("shingles") == orphaned, s"expected $orphaned shingle orphans: $resid")
-    assert(resid("bands") <= orphaned && resid("fp") == 0L, s"residue shape off: $resid")
-    // the documented heal — build() compaction — restores three zeros
-    DedupIndex.build(base.unionByName(b1).unionByName(b2), prefix)
-    DedupIndex.resetVerdicts(spark, prefix)
-    val healed = DedupIndex.auditResidue(spark, base.unionByName(b1).unionByName(b2), prefix)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(healed.values.forall(_ == 0L), s"post-compaction residue: $healed")
-  }
-
   test("pre-r7 2-column shingle layout: probe still answers, absorb fails upfront, build migrates") {
     import org.apache.spark.sql.functions.col
     val prefix = "oldlayout_idx"
@@ -366,10 +254,10 @@ class DedupIndexSpec extends AnyFunSuite {
 
   test("inParallel: all tasks run, and a task failure rethrows after the barrier (r17 overlapped writes)") {
     // The build/absorb write overlap relies on two properties: every task
-    // completes before the call returns (the streaming sink writes its
-    // commit marker AFTER probeAndAbsorb — a premature return would break
-    // at-least-once replay), and a failing write surfaces instead of
-    // silently producing a partial index.
+    // completes before the call returns (q112 probes batch 2 AFTER
+    // probeAndAbsorb — a premature return would let it read a half-absorbed
+    // index), and a failing write surfaces instead of silently producing a
+    // partial index.
     val ran = new java.util.concurrent.atomic.AtomicInteger(0)
     DedupIndex.inParallel(() => { ran.incrementAndGet(); () }, () => { ran.incrementAndGet(); () })
     assert(ran.get() == 2, "both tasks must have completed before return")

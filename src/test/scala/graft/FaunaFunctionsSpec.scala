@@ -18,7 +18,7 @@ class FaunaFunctionsSpec extends AnyFunSuite {
 
   private def iso(epoch: java.lang.Long): Option[String] = {
     val df = Seq(Option(epoch).map(Long2long)).toDF("e")
-    Option(df.select(epochToIso8601Utc(col("e"), asOf)).head.getString(0))
+    Option(df.select(epochToIso8601Utc(col("e"), asOf)).head().getString(0))
   }
 
   // test_util.py:4-7
@@ -76,7 +76,7 @@ class FaunaFunctionsSpec extends AnyFunSuite {
       ("2020-01-01", false)
     )
     cases.foreach { case (s, expect) =>
-      val got = Seq(Option(s)).toDF("z").select(isValidIsoUtc(col("z"))).head.getBoolean(0)
+      val got = Seq(Option(s)).toDF("z").select(isValidIsoUtc(col("z"))).head().getBoolean(0)
       assert(got == expect, s"validate($s)")
     }
   }

@@ -300,7 +300,7 @@ class FuzzyDedupSpec extends AnyFunSuite {
     // labels localCheckpoints legitimately persist and have no unpersist
     // handle (reclaimed by GC — see Bench's between-query nudge); the
     // store is the only non-checkpoint persist in the operator
-    val leaked = (spark.sparkContext.getPersistentRDDs -- before)
+    val leaked = (spark.sparkContext.getPersistentRDDs.toMap -- before)
       .filterNot(_._2.isCheckpointed)
     assert(leaked.isEmpty, s"packed pair store leaked persisted RDDs: ${leaked.keySet}")
   }

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.etl.Quarantine
 import graft.sources.{FatalStatusException, HttpResponse, HttpTimeouts, HttpTransport, Layout, RetriesExhaustedException, RetryingHttpClient, RetryPolicy}
 
-/** Storage layout, quarantine channel, SQL extensions, streaming sink. */
+/** Storage layout, file formats, quarantine channel, HTTP client contracts, media codec. */
 class InfraSpec extends AnyFunSuite {
   lazy val spark = GraftSession.get("local[4]", 4)
   private val dir = "/root/testdata/sf0.001"
@@ -85,61 +85,6 @@ class InfraSpec extends AnyFunSuite {
     ))
   }
 
-  test("native functions register for SQL use (live-session path)") {
-    // builder-time path is withExtensions(new GraftExtensions) /
-    // spark.sql.extensions; registerAll covers already-running sessions
-    // (getOrCreate on a live context cannot apply new extensions)
-    graft.plans.GraftExtensions.registerAll(spark)
-    val r = spark
-      .sql("SELECT graft_dot_product(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d, " +
-        "graft_simhash60('a b c') AS f, size(graft_word_shingles('a b c d')) AS n, " +
-        "size(graft_span_fingerprints('a b c d e', 2)) AS sp, " +
-        "size(graft_hyperplane_bands(array(1.0d, -2.0d), 4, 8)) AS hb")
-      .head()
-    assert(r.getDouble(0) == 11.0)
-    assert(r.getLong(1) != 0L)
-    assert(r.getInt(2) == 2)
-    assert(r.getInt(3) == 2, "5 tokens at width 2 = 2 complete spans")
-    assert(r.getInt(4) == 8, "one key per band")
-    // shape params must be literals: the generated code bakes them in
-    val e = intercept[Exception](
-      spark.sql("SELECT graft_span_fingerprints('a b', CAST(rand() * 2 AS INT) + 1)").head()
-    )
-    assert(e.getMessage.contains("literal"))
-  }
-
-  test("optimizer rule substitutes HOF dot product with the native expression") {
-    // live-session path; scoped so other suites (e.g. ExpressionParitySpec,
-    // which compares HOF vs native) keep an unmodified optimizer
-    spark.experimental.extraOptimizations = Seq(graft.plans.NativeDotProductRule)
-    def d(c: org.apache.spark.sql.Column) = c.cast("double")
-    try {
-      // non-foldable inputs (literal rows would be constant-folded away
-      // before the rule could matter)
-      val base = spark.range(1)
-      val hof = base
-        .select(
-          array(d(col("id") + 1), d(col("id") + 2)).as("a"),
-          array(d(col("id") + 3), d(col("id") + 4)).as("b")
-        )
-        .select(aggregate(zip_with(col("a"), col("b"), _ * _), lit(0.0), _ + _).as("d"))
-      val opt = hof.queryExecution.optimizedPlan.toString
-      assert(opt.toLowerCase.contains("dotproduct"), s"no substitution in:\n$opt")
-      assert(hof.head.getDouble(0) == 11.0) // 1*3 + 2*4
-      // exact-semantics guard: unequal lengths keep zip_with null-padding
-      val unequal = base
-        .select(array(d(col("id") + 1), d(col("id") + 2)).as("a"), array(d(col("id") + 3)).as("b"))
-        .select(aggregate(zip_with(col("a"), col("b"), _ * _), lit(0.0), _ + _).as("d"))
-      assert(unequal.head.isNullAt(0), "guarded rewrite changed null-padding semantics")
-      // a different fold seed must NOT be rewritten
-      val seeded = base
-        .select(array(d(col("id") + 1)).as("a"), array(d(col("id") + 3)).as("b"))
-        .select(aggregate(zip_with(col("a"), col("b"), _ * _), lit(1.0), _ + _).as("d"))
-      assert(!seeded.queryExecution.optimizedPlan.toString.toLowerCase.contains("dotproduct"))
-      assert(seeded.head.getDouble(0) == 4.0) // 1 + 1*3
-    } finally spark.experimental.extraOptimizations = Nil
-  }
-
   test("R6: client hands concrete timeouts to the transport") {
     class RecordingTransport extends HttpTransport {
       var seen: Option[HttpTimeouts] = None
@@ -198,21 +143,6 @@ class InfraSpec extends AnyFunSuite {
     assert(exitFor(wrapped).contains((2, "Validation error: friends must be a list")))
     assert(exitFor(new InterruptedException()).contains((0, "Aborted.")))
     assert(exitFor(new RuntimeException("boom")).isEmpty, "unmapped errors must propagate")
-  }
-
-  test("streaming foreachBatch drives the HTTP batch sink") {
-    val d = Files.createTempDirectory("graft_stream_sink")
-    Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"), d.resolve("events.parquet"))
-    FakeAnimalsTransport.posts.clear()
-    val stream = graft.streaming.EventStream.fromParquet(spark, d.toString)
-    val agg = graft.streaming.EventStream.tumblingCounts(stream)
-    val q = graft.streaming.EventStream.toHttpSink(agg, classOf[FakeAnimalsTransport].getName, 50)
-    try {
-      q.processAllAvailable()
-      assert(!FakeAnimalsTransport.posts.isEmpty, "no POSTs from streaming sink")
-      val body = FakeAnimalsTransport.posts.peek()
-      assert(body.contains("\"hour_start\""))
-    } finally q.stop()
   }
 
   test("ImageIOCodec decodes a real generated PNG per-partition; non-images fall back to FakeCodec") {
