@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 import graft.{Eager, Tables}
 import graft.sources.Layout
@@ -184,16 +183,7 @@ object DedupIndex {
     // already satisfied). Same for the fp distinct: aggregate + layout
     // share one fingerprint exchange.
     val bands = FuzzyDedup.boundedBands(
-      shTable
-        .filter(size(col("shingles")) > 0)
-        .select(
-          col("doc_id"),
-          explode(graft.plans.TextHashExpressions.minhashBandKeys(col("shingles"))).as("band")
-        )
-        .repartition(n, col("band")),
-      "band",
-      FuzzyDedup.MaxBandOccupancy
-    )
+      FuzzyDedup.minhashBands(shTable).repartition(n, col("band")), "band", FuzzyDedup.MaxBandOccupancy)
     // fp and bands both derive from the persisted shingle table and write
     // to DIFFERENT tables — independent jobs, overlapped (r17: 0.72 s +
     // 1.06 s sequential → max of the two; the tail tasks of one write
@@ -219,36 +209,14 @@ object DedupIndex {
   /** [[probe]] over an already-materialized [[hashed]] frame — shared with
     * [[probeAndAbsorb]], whose absorb appends reuse the same checkpoint. */
   private def probeHashed(s: SparkSession, h: DataFrame, prefix: String): DataFrame = {
-    val fpIdx   = s.table(s"${prefix}_fp")
-    val bandIdx = s.table(s"${prefix}_bands")
-    val shIdx   = s.table(s"${prefix}_shingles")
-    val exactDup = h
-      .select("doc_id", "fingerprint")
-      .join(fpIdx.withColumn("e", lit(1L)), Seq("fingerprint"), "left")
-      .select(col("doc_id"), coalesce(col("e"), lit(0L)).as("exact_dup"))
-    val dSh = h.filter(size(col("shingles")) > 0).select("doc_id", "shingles")
-    val cand = dSh
-      .select(
-        col("doc_id").as("d_id"),
-        explode(graft.plans.TextHashExpressions.minhashBandKeys(col("shingles"))).as("band")
-      )
-      .join(bandIdx.select(col("band"), col("doc_id").as("b_id")), Seq("band"))
-      .select("d_id", "b_id")
-      .distinct()
-    val near = cand
-      .join(dSh.select(col("doc_id").as("d_id"), col("shingles").as("sh_d")), Seq("d_id"))
-      .join(shIdx.select(col("doc_id").as("b_id"), col("shingles").as("sh_b")), Seq("b_id"))
-      .withColumn("inter", size(array_intersect(col("sh_d"), col("sh_b"))).cast(LongType))
-      .withColumn("union_n", (size(col("sh_d")) + size(col("sh_b"))).cast(LongType) - col("inter"))
-      .filter(round(col("inter") / col("union_n"), 6) >= 0.3)
-      .groupBy(col("d_id").as("doc_id"))
-      .agg(count(lit(1)).as("n_near"), min(col("b_id")).as("near_match"))
-    exactDup
-      .join(near, Seq("doc_id"), "left")
-      .withColumn("n_near", coalesce(col("n_near"), lit(0L)))
-      .withColumn("near_match", coalesce(col("near_match"), lit(-1L)))
-      .withColumn("keep", (col("exact_dup") === 0 && col("n_near") === 0).cast(LongType))
-      .select("doc_id", "exact_dup", "n_near", "near_match", "keep")
+    val sh    = h.select("doc_id", "shingles")
+    val cand  = FuzzyDedup.probePairs(FuzzyDedup.minhashBands(sh), s.table(s"${prefix}_bands").select("doc_id", "band"))
+    val shIdx = s.table(s"${prefix}_shingles").select("doc_id", "shingles")
+    val near = FuzzyDedup
+      .verify(cand, sh, shIdx)
+      .transform(FuzzyDedup.jaccard)
+      .filter(col("jaccard") >= FuzzyDedup.JaccardThreshold)
+    FuzzyDedup.deltaVerdicts(h.select("doc_id", "fingerprint"), s.table(s"${prefix}_fp"), near)
   }
 
   /** Probe the batch, ABSORB its survivors into the index, return the
@@ -291,16 +259,7 @@ object DedupIndex {
     val nBands = tableBuckets(s, s"${prefix}_bands")
     val nFp    = tableBuckets(s, s"${prefix}_fp")
     val bands = FuzzyDedup.boundedBands(
-      kept
-        .filter(size(col("shingles")) > 0)
-        .select(
-          col("doc_id"),
-          explode(graft.plans.TextHashExpressions.minhashBandKeys(col("shingles"))).as("band")
-        )
-        .repartition(nBands, col("band")),
-      "band",
-      FuzzyDedup.MaxBandOccupancy
-    )
+      FuzzyDedup.minhashBands(kept).repartition(nBands, col("band")), "band", FuzzyDedup.MaxBandOccupancy)
     // append with the PERSISTED spec of each table (whatever build() sized),
     // read from the catalog — Spark then re-validates on the write. The
     // three appends derive from the SAME checkpointed batch frame and

@@ -80,60 +80,109 @@ object FuzzyDedup extends QueryModule {
       .drop("bucket_n")
   }
 
-  /** MinHash-LSH near-dup pairs, verified with exact Jaccard ≥ 0.3:
-    * signatures → band buckets → same-bucket candidates → exact verify. */
-  def minhashLsh(s: SparkSession, dir: String, maxOccupancy: Int = MaxBandOccupancy): DataFrame = {
-    // (doc_id, shingles) is consumed three times (band derivation + both
-    // verify sides) — materialize so the text scan + tokenize/shingle pass
-    // runs once; the checkpointed projection is the hashed-longs layout
-    // DedupIndex persists, ~an order of magnitude smaller than the text
-    val docs = Tables
-      .documentsDistributed(s, dir)
-      .select(col("doc_id"), Dedup.shingles(col("text")).as("shingles"))
+  // ---- Banded candidate pairs: the one home of the 100 TB pair rule ----
+  //
+  // Every banded near-dup site (q33/q105/q107/q109 MinHash, q39/q61
+  // hyperplane LSH, the q58/q113 probes and DedupIndex's probe) runs the
+  // same three steps:
+  //  1. [[selfPairs]] / [[probePairs]] turn (id, key) rows into DISTINCT
+  //     (id_a, id_b) candidate pairs. Only the skinny (key, id) rows ride
+  //     the band join's exchange, and only (id_a, id_b) rides the pair
+  //     dedup — a pair can collide in several bands, and a payload riding
+  //     along would be re-shuffled once per collision. At 100 TB that is
+  //     the difference between shuffling a few GB of ids and re-shuffling
+  //     the corpus.
+  //  2. [[verify]] re-joins each pair's payload (shingles, vectors) BY ID on
+  //     both sides, once per distinct pair.
+  //  3. A scorer reads the re-joined payloads: [[jaccard]] for shingles, a
+  //     cosine for vectors.
+  // The one site that does not go through them is q35, whose reason sits
+  // on [[simhashPairs]].
+
+  /** Capped (id, key) rows → distinct `id_a < id_b` pairs sharing a key.
+    * `rows` has exactly two columns, the id first; buckets holding more than
+    * `cap` rows drop out ([[boundedBands]]). */
+  def selfPairs(rows: DataFrame, cap: Int): DataFrame = {
+    val Array(id, key) = rows.columns
+    val capped         = boundedBands(rows, key, cap)
+    capped
+      .select(col(key), col(id).as("id_a"))
+      .join(capped.select(col(key), col(id).as("id_b")), Seq(key))
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b")
+      .distinct()
+  }
+
+  /** Probe (id, key) rows joined against index (id, key) rows → distinct
+    * (id_a = probe, id_b = index) pairs. Both frames have exactly two
+    * columns, the id first and the same key name. Only selects, renames and
+    * joins, so a `broadcast(...)` on the index and a bucketed index scan's
+    * partitioning survive; any cap on the index is the caller's. */
+  def probePairs(probe: DataFrame, index: DataFrame): DataFrame = {
+    val Array(id, key) = probe.columns
+    probe
+      .select(col(key), col(id).as("id_a"))
+      .join(index.select(col(key), col(index.columns.head).as("id_b")), Seq(key))
+      .select("id_a", "id_b")
+      .distinct()
+  }
+
+  /** Re-join each (id_a, id_b) pair's payload by id: `a` and `b` are
+    * (id, payload…) frames, id first, and every payload column `c` comes
+    * back as `c_a` from `a` and `c_b` from `b`. */
+  def verify(pairs: DataFrame, a: DataFrame, b: DataFrame): DataFrame = {
+    def side(payload: DataFrame, s: String): DataFrame = {
+      val cols = payload.columns.toSeq
+      payload.select(col(cols.head).as(s"id_$s") +: cols.tail.map(c => col(c).as(s"${c}_$s")): _*)
+    }
+    pairs.join(side(a, "a"), Seq("id_a")).join(side(b, "b"), Seq("id_b"))
+  }
+
+  /** Verified-pair Jaccard threshold of every MinHash near-dup query. */
+  val JaccardThreshold = 0.3
+
+  /** Exact Jaccard of [[verify]]d shingle pairs: adds `inter`, `union_n` and
+    * the 6-dp `jaccard` the oracles round the same way. */
+  def jaccard(verified: DataFrame): DataFrame =
+    verified
+      .withColumn("inter", size(array_intersect(col("shingles_a"), col("shingles_b"))).cast(LongType))
+      .withColumn("union_n", (size(col("shingles_a")) + size(col("shingles_b"))).cast(LongType) - col("inter"))
+      .withColumn("jaccard", round(col("inter") / col("union_n"), 6))
+
+  /** (doc_id, band) rows of a (doc_id, shingles…) frame, via the native
+    * single-pass MinHash band keys (md5 once per shingle). Docs without
+    * shingles have no bands. */
+  def minhashBands(docs: DataFrame): DataFrame =
+    docs
+      .filter(size(col("shingles")) > 0)
+      .select(col("doc_id"), explode(graft.plans.TextHashExpressions.minhashBandKeys(col("shingles"))).as("band"))
+
+  /** `docs` as a materialized (doc_id, extra…, shingles) frame without
+    * shingle-less docs: the bands and both verify sides read this one text
+    * pass, and the checkpointed hashed-longs layout is about an order of
+    * magnitude smaller than the text. */
+  private def shingled(docs: DataFrame, extra: String*): DataFrame =
+    docs
+      .select(col("doc_id") +: extra.map(col) :+ Dedup.shingles(col("text")).as("shingles"): _*)
       .filter(size(col("shingles")) > 0)
       .transform(Eager.materialize(_, "fuzzyDedup.shingles"))
-    minhashPairsVerified(docs, maxOccupancy)
-  }
+
+  /** MinHash-LSH near-dup pairs, verified with exact Jaccard ≥ 0.3:
+    * signatures → band buckets → same-bucket candidates → exact verify. */
+  def minhashLsh(s: SparkSession, dir: String, maxOccupancy: Int = MaxBandOccupancy): DataFrame =
+    minhashPairsVerified(shingled(Tables.documentsDistributed(s, dir)), maxOccupancy)
 
   /** The mining half of [[minhashLsh]] over an already-materialized
     * (doc_id, shingles) frame — shared with the survivor queries
     * (q107/q109), whose fused corpus checkpoint carries extra per-doc
     * columns and passes the shingle projection in here (r18: ONE corpus
     * text pass instead of two; at 100 TB the second text scan is the
-    * single biggest removable cost of those rows). `docs` must already
-    * exclude empty-shingle rows — empty docs never produce bands, so the
-    * candidate set is unaffected either way; filtering before the verify
-    * sides keeps them join-skinny. */
-  private[graft] def minhashPairsVerified(docs: DataFrame, maxOccupancy: Int): DataFrame = {
-    // Candidate generation stays SKINNY: only (band, doc_id) shuffles. The
-    // shingle arrays would otherwise ride through the band join and the
-    // pair-dedup exchange — at 100 TB that's the difference between
-    // shuffling a few GB of ids and re-shuffling the corpus.
-    // Signatures + banding via the native single-pass expression (md5 once
-    // per shingle; the HOF formulation re-hashes per permutation).
-    val bands = boundedBands(
-      docs.select(col("doc_id"), explode(graft.plans.TextHashExpressions.minhashBandKeys(col("shingles"))).as("band")),
-      "band",
-      maxOccupancy
-    )
-    val cand = bands
-      .select(col("band"), col("doc_id").as("id_a"))
-      .join(bands.select(col("band"), col("doc_id").as("id_b")), Seq("band"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct() // a pair can collide in several bands
-    // Exact-Jaccard verification only on candidates: shingles re-join by id.
-    val shA = docs.select(col("doc_id").as("id_a"), col("shingles").as("sh_a"))
-    val shB = docs.select(col("doc_id").as("id_b"), col("shingles").as("sh_b"))
-    cand
-      .join(shA, Seq("id_a"))
-      .join(shB, Seq("id_b"))
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast(LongType))
-      .withColumn("union_n", (size(col("sh_a")) + size(col("sh_b"))).cast(LongType) - col("inter"))
-      .withColumn("jaccard", round(col("inter") / col("union_n"), 6))
-      .filter(col("jaccard") >= 0.3)
+    * single biggest removable cost of those rows). */
+  private[graft] def minhashPairsVerified(docs: DataFrame, maxOccupancy: Int): DataFrame =
+    verify(selfPairs(minhashBands(docs), maxOccupancy), docs, docs)
+      .transform(jaccard)
+      .filter(col("jaccard") >= JaccardThreshold)
       .select("id_a", "id_b", "inter", "union_n", "jaccard")
-  }
 
   /** Containment at corpus scale (q105) — the registered scale-path twin of
     * q101's Σdf² inverted-index baseline (the q37→q39 pattern): candidates
@@ -157,34 +206,12 @@ object FuzzyDedup extends QueryModule {
     * replays the identical candidate set in DuckDB, so the gate checks
     * PARITY of the declared semantics, not recall against q101. */
   def containmentLsh(s: SparkSession, dir: String): DataFrame = {
-    // three consumers (bands + both verify sides) — one shingle pass, as
-    // in [[minhashLsh]]
-    val docs = Tables
-      .documentsDistributed(s, dir)
-      .select(col("doc_id"), Dedup.shingles(col("text")).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-      .transform(Eager.materialize(_, "fuzzyDedup.shingles"))
-    val bands = boundedBands(
-      docs.select(col("doc_id"), explode(graft.plans.TextHashExpressions.minhashBandKeys(col("shingles"))).as("band")),
-      "band",
-      MaxBandOccupancy
-    )
-    val cand = bands
-      .select(col("band"), col("doc_id").as("id_a"))
-      .join(bands.select(col("band"), col("doc_id").as("id_b")), Seq("band"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
-    val shA = docs.select(col("doc_id").as("id_a"), col("shingles").as("sh_a"))
-    val shB = docs.select(col("doc_id").as("id_b"), col("shingles").as("sh_b"))
-    cand
-      .join(shA, Seq("id_a"))
-      .join(shB, Seq("id_b"))
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast(LongType))
-      .withColumn("n_a", size(col("sh_a")).cast(LongType))
-      .withColumn("n_b", size(col("sh_b")).cast(LongType))
+    val docs = shingled(Tables.documentsDistributed(s, dir))
+    verify(selfPairs(minhashBands(docs), MaxBandOccupancy), docs, docs)
+      .transform(jaccard)
+      .withColumn("n_a", size(col("shingles_a")).cast(LongType))
+      .withColumn("n_b", size(col("shingles_b")).cast(LongType))
       .withColumn("containment", round(col("inter") / least(col("n_a"), col("n_b")), 6))
-      .withColumn("jaccard", round(col("inter") / (col("n_a") + col("n_b") - col("inter")), 6))
       .filter(col("containment") >= Dedup.ContainmentThreshold)
       .select("id_a", "id_b", "inter", "n_a", "n_b", "containment", "jaccard")
   }
@@ -222,7 +249,9 @@ object FuzzyDedup extends QueryModule {
     )
     val a = banded.select(col("band"), col("doc_id").as("id_a"), col("fp").as("fp_a"))
     val b = banded.select(col("band"), col("doc_id").as("id_b"), col("fp").as("fp_b"))
-    // VERIFY BEFORE DEDUP: the fingerprints already ride the 8-byte banded
+    // The one banded site outside [[selfPairs]] + [[verify]]: it must
+    // VERIFY BEFORE DEDUP, and a shared verb that branched for one caller
+    // would not be simpler. The fingerprints already ride the 8-byte banded
     // rows, so the hamming check is a map-side filter on the join output —
     // candidates die in the codegen stage that produced them. Deduping
     // first would shuffle the FULL candidate volume (Σ occupancy² — on a
@@ -346,40 +375,20 @@ object FuzzyDedup extends QueryModule {
     * frame's row count ([[autoEmbBits]]). */
   def embCandidatesOver(emb: DataFrame): DataFrame = {
     val bits = autoEmbBits(Eager.count(emb, "fuzzyDedup.embBits"))
-    val banded = boundedBands(
-      emb.select(col("vec_id"), explode(embBandKeys(col("v"), bits)).as("band")),
-      "band",
-      MaxBandOccupancy
-    )
-    banded
-      .select(col("band"), col("vec_id").as("id_a"))
-      .join(banded.select(col("band"), col("vec_id").as("id_b")), Seq("band"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .distinct()
+    selfPairs(emb.select(col("vec_id"), explode(embBandKeys(col("v"), bits)).as("band")), MaxBandOccupancy)
   }
 
   /** Scale-safe embedding near-dup at 0.9: banded hyperplane LSH candidates
     * + exact cosine verify — [[embeddingPairs]]' semantics without the
-    * all-pairs join. Only (band, vec_id) pairs shuffle (the vectors rejoin
-    * by id for verification), so the exchange stays skinny at corpus scale,
-    * and the banding prunes candidates to ~bands·0.5^bits of all pairs (see
-    * [[EmbBits]] for the volume/recall trade and the bits ~ log₂(n) sizing
-    * rule). Oracle = the exact all-pairs SQL; recall on planted near-dups is
-    * additionally pinned by FuzzyDedupSpec. */
+    * all-pairs join. The banding prunes candidates to ~bands·0.5^bits of
+    * all pairs (see [[EmbBits]] for the volume/recall trade and the
+    * bits ~ log₂(n) sizing rule). Oracle = the exact all-pairs SQL; recall
+    * on planted near-dups is additionally pinned by FuzzyDedupSpec. */
   def embeddingPairsLsh(s: SparkSession, dir: String): DataFrame = {
     // four consumers (count probe, banding, both verify sides) — one
     // embedding scan + norm pass
-    val emb  = Eager.materialize(Similarity.embWithNorm(s, dir), "fuzzyDedup.embeddings")
-    val cand = embCandidatesOver(emb)
-    val a    = emb.select(col("vec_id").as("id_a"), col("v").as("va"), col("nrm").as("na"))
-    val b    = emb.select(col("vec_id").as("id_b"), col("v").as("vb"), col("nrm").as("nb"))
-    cand
-      .join(a, Seq("id_a"))
-      .join(b, Seq("id_b"))
-      .withColumn("cos", Similarity.cosine(Similarity.dot(col("va"), col("vb")), col("na"), col("nb")))
-      .filter(col("cos") >= 0.9)
-      .select("id_a", "id_b", "cos")
+    val emb = Eager.materialize(Similarity.embWithNorm(s, dir), "fuzzyDedup.embeddings")
+    Similarity.cosinePairs(verify(embCandidatesOver(emb), emb, emb), 0.9)
   }
 
   /** Base/delta split for the incremental scenario: docs with
@@ -407,58 +416,36 @@ object FuzzyDedup extends QueryModule {
     // delta/base splits both read this — one md5 text pass
     val withFp =
       Eager.materialize(docs.select(col("doc_id"), md5(col("text")).as("fingerprint")), "fuzzyDedup.fingerprints")
-    val delta  = withFp.filter(isDelta(col("doc_id")))
-    val baseFp = withFp.filter(!isDelta(col("doc_id"))).select("fingerprint").distinct()
+    val sh    = shingled(docs)
+    val bands = boundedBands(minhashBands(sh), "band", MaxBandOccupancy)
+    val near = verify(probePairs(bands.filter(isDelta(col("doc_id"))), bands.filter(!isDelta(col("doc_id")))), sh, sh)
+      .transform(jaccard)
+      .filter(col("jaccard") >= JaccardThreshold)
+    deltaVerdicts(
+      withFp.filter(isDelta(col("doc_id"))),
+      withFp.filter(!isDelta(col("doc_id"))).select("fingerprint").distinct(),
+      near)
+  }
+
+  /** q58's per-delta-doc verdicts, shared with [[DedupIndex]]'s probe:
+    * `exact_dup` when the delta's (doc_id, fingerprint) hits the base
+    * `fingerprint` set, `n_near`/`near_match` from the verified
+    * (id_a = delta, id_b = base) pairs, and `keep` when neither fires. */
+  private[graft] def deltaVerdicts(delta: DataFrame, baseFp: DataFrame, near: DataFrame): DataFrame = {
     val exactDup = delta
       .join(baseFp.withColumn("e", lit(1L)), Seq("fingerprint"), "left")
       .select(col("doc_id"), coalesce(col("e"), lit(0L)).as("exact_dup"))
-    // banding + both verify sides — one shingle pass (minhashLsh's rule)
-    val sh = docs
-      .select(col("doc_id"), Dedup.shingles(col("text")).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-      .transform(Eager.materialize(_, "fuzzyDedup.shingles"))
-    val bands = boundedBands(
-      sh.select(col("doc_id"), explode(graft.plans.TextHashExpressions.minhashBandKeys(col("shingles"))).as("band")),
-      "band",
-      MaxBandOccupancy
-    )
-    val cand = bands
-      .filter(isDelta(col("doc_id")))
-      .select(col("band"), col("doc_id").as("d_id"))
-      .join(bands.filter(!isDelta(col("doc_id"))).select(col("band"), col("doc_id").as("b_id")), Seq("band"))
-      .select("d_id", "b_id")
-      .distinct()
-    val shD = sh.select(col("doc_id").as("d_id"), col("shingles").as("sh_d"))
-    val shB = sh.select(col("doc_id").as("b_id"), col("shingles").as("sh_b"))
-    val near = cand
-      .join(shD, Seq("d_id"))
-      .join(shB, Seq("b_id"))
-      .withColumn("inter", size(array_intersect(col("sh_d"), col("sh_b"))).cast(LongType))
-      .withColumn("union_n", (size(col("sh_d")) + size(col("sh_b"))).cast(LongType) - col("inter"))
-      .filter(round(col("inter") / col("union_n"), 6) >= 0.3)
-      .groupBy(col("d_id").as("doc_id"))
-      .agg(count(lit(1)).as("n_near"), min(col("b_id")).as("near_match"))
+    val perDoc = near
+      .groupBy(col("id_a").as("doc_id"))
+      .agg(count(lit(1)).as("n_near"), min(col("id_b")).as("near_match"))
     exactDup
-      .join(near, Seq("doc_id"), "left")
+      .join(perDoc, Seq("doc_id"), "left")
       .withColumn("n_near", coalesce(col("n_near"), lit(0L)))
       .withColumn("near_match", coalesce(col("near_match"), lit(-1L)))
       .withColumn("keep", (col("exact_dup") === 0 && col("n_near") === 0).cast(LongType))
       .select("doc_id", "exact_dup", "n_near", "near_match", "keep")
   }
 
-  /** Connected components over the near-dup pair graph: the step that turns
-    * pairwise matches into actionable dedup groups (keep min-id per
-    * cluster). Hash-min label propagation WITH pointer jumping: each round
-    * (a) takes the min label over self + neighbours, then (b) relabels to
-    * the label's own label (labels are node ids, so one extra self-join
-    * doubles the propagation distance) — rounds are O(log diameter), not
-    * O(diameter), so chain-shaped components no longer dominate.
-    * Convergence is detected from the label sum (min-propagation is
-    * monotone decreasing, so sum unchanged ⇔ fixpoint) — ONE action per
-    * round, which also materializes the lazy localCheckpoint, instead of a
-    * separate checkpoint job + join-and-count job. Deterministic: labels
-    * converge to the component-minimum doc_id.
-    */
   /** Round ceiling for [[connectedComponents]]. With pointer jumping the
     * propagation distance at least doubles per round, so convergence needs
     * ≤ log₂(diameter) + 2 rounds; 64 covers any graph whose diameter fits
@@ -545,42 +532,6 @@ object FuzzyDedup extends QueryModule {
       }
     }
 
-  /** Min-label propagation with pointer jumping over an undirected pair
-    * list; returns (node, label) plus the round count (spec surface — a
-    * chain-shaped fixture pins the O(log diameter) bound). Each round is
-    * ONE action (the label sum, which also materializes the lazy
-    * localCheckpoint); min-propagation is monotone decreasing, so an
-    * unchanged sum ⇔ fixpoint, and an INCREASED sum is asserted away as a
-    * broken invariant. `pairs` must expose exactly (id_a, id_b) — every
-    * call site selects them first.
-    *
-    * THE PAIR STORE IS OUTPUT-VOLUME-PROOF BY CONSTRUCTION — no routing
-    * variable exists to misroute. History: the pair list is OUTPUT-sized,
-    * not corpus-skinny (~Σ|group|² on a dup-dense corpus; 24.75M pairs /
-    * 50M directed edges at the 100× replica), and an eager
-    * `localCheckpoint` of the doubled union OOMed the r9 100× sweep
-    * (per-row object blocks + cross-query block debt). Round 9 added a
-    * serialized-persist branch gated on source-table ROW count — the
-    * wrong variable: a dup-dense SMALL corpus (few docs, huge pair
-    * output) routed onto the object-block path with an edge list as
-    * large as the one that crashed, and no pre-materialization signal
-    * for the right variable (pair volume) exists without paying an extra
-    * mining pass (measured: a gating `count()` re-runs candidate
-    * generation + verify, +28% wall at gate scale; a columnar
-    * `persist(SER)`+count, +54%; CC rounds over a columnar SER cache,
-    * +70% — InMemoryRelation decompresses per round scan; CC rounds over
-    * `MEMORY_AND_DISK_SER` RDD rows, +38%/+48% wall/cpu on the 100×
-    * embedding replica — JavaSerializer pays per-row framing on every
-    * round). This store removes the choice AND the serde: each partition
-    * packs its mined UnsafeRows ONCE into length-prefixed byte chunks
-    * (the UnsafeRowSerializer wire pattern as a store), held at
-    * `MEMORY_AND_DISK` — heap cost is the data bytes themselves at HALF
-    * the r9 rows (the store holds pairs; the undirected doubling is a
-    * lazy union VIEW over it), spills chunk-at-a-time under pressure,
-    * keeps lineage, and every round's scan just WRAPS the buffers
-    * (`pointTo`, zero deserialization). The store is unpersisted after
-    * convergence (final labels are checkpoint-materialized by the last
-    * label-sum action). */
   /** The materialized packed pair store plus its lazy undirected edge
     * VIEW — the two halves [[connectedComponents]] composes. */
   private final case class PackedPairStore(
@@ -621,6 +572,49 @@ object FuzzyDedup extends QueryModule {
     PackedPairStore(packed, schema, pairs.sparkSession)
   }
 
+  /** Connected components over the near-dup pair graph: the step that
+    * turns pairwise matches into actionable dedup groups (keep the min id
+    * per cluster). Min-label propagation with pointer jumping over an
+    * undirected pair list: each round (a) takes the min label over self +
+    * neighbours, then (b) relabels to the label's own label (labels are
+    * node ids, so one extra self-join doubles the propagation distance), so
+    * rounds are O(log diameter), not O(diameter). Deterministic: labels
+    * converge to the component-minimum id. Returns (node, label) plus the
+    * round count (spec surface — a chain-shaped fixture pins the
+    * O(log diameter) bound). Each round is ONE action (the label sum,
+    * which also materializes the lazy localCheckpoint);
+    * min-propagation is monotone decreasing, so an unchanged sum ⇔
+    * fixpoint, and an INCREASED sum is asserted away as a broken
+    * invariant. `pairs` must expose exactly (id_a, id_b) — every call
+    * site selects them first.
+    *
+    * THE PAIR STORE IS OUTPUT-VOLUME-PROOF BY CONSTRUCTION — no routing
+    * variable exists to misroute. History: the pair list is OUTPUT-sized,
+    * not corpus-skinny (~Σ|group|² on a dup-dense corpus; 24.75M pairs /
+    * 50M directed edges at the 100× replica), and an eager
+    * `localCheckpoint` of the doubled union OOMed the r9 100× sweep
+    * (per-row object blocks + cross-query block debt). Round 9 added a
+    * serialized-persist branch gated on source-table ROW count — the
+    * wrong variable: a dup-dense SMALL corpus (few docs, huge pair
+    * output) routed onto the object-block path with an edge list as
+    * large as the one that crashed, and no pre-materialization signal
+    * for the right variable (pair volume) exists without paying an extra
+    * mining pass (measured: a gating `count()` re-runs candidate
+    * generation + verify, +28% wall at gate scale; a columnar
+    * `persist(SER)`+count, +54%; CC rounds over a columnar SER cache,
+    * +70% — InMemoryRelation decompresses per round scan; CC rounds over
+    * `MEMORY_AND_DISK_SER` RDD rows, +38%/+48% wall/cpu on the 100×
+    * embedding replica — JavaSerializer pays per-row framing on every
+    * round). This store removes the choice AND the serde: each partition
+    * packs its mined UnsafeRows ONCE into length-prefixed byte chunks
+    * (the UnsafeRowSerializer wire pattern as a store), held at
+    * `MEMORY_AND_DISK` — heap cost is the data bytes themselves at HALF
+    * the r9 rows (the store holds pairs; the undirected doubling is a
+    * lazy union VIEW over it), spills chunk-at-a-time under pressure,
+    * keeps lineage, and every round's scan just WRAPS the buffers
+    * (`pointTo`, zero deserialization). The store is unpersisted after
+    * convergence (final labels are checkpoint-materialized by the last
+    * label-sum action). */
   def connectedComponents(
       pairs: DataFrame,
       maxRounds: Int = MaxCcRounds): (DataFrame, Int) = {
@@ -733,40 +727,16 @@ object FuzzyDedup extends QueryModule {
     * report (which crawl source leaks the benchmark). */
   def nearContamination(s: SparkSession, dir: String): DataFrame = {
     // (doc_id, source, shingles) feeds FIVE consumers (eval bands, train
-    // bands, both verify sides, final accounting) — materialize so the
-    // corpus text is shingled ONCE per run instead of per consumer; the
-    // same skinny-projection checkpoint q33/q107/q109 take of this corpus
-    val docs = Tables
-      .documentsDistributed(s, dir)
-      .select(col("doc_id"), col("source"), Dedup.shingles(col("text")).as("shingles"))
-      .filter(size(col("shingles")) > 0)
-      .transform(Eager.materialize(_, "fuzzyDedup.shingles"))
+    // bands, both verify sides, final accounting)
+    val docs   = shingled(Tables.documentsDistributed(s, dir), "source")
     val isEval = col("doc_id") % TrainingPrep.EvalMod === 0
-    val eval   = docs.filter(isEval)
+    val eval   = docs.filter(isEval).select("doc_id", "shingles")
     val train  = docs.filter(!isEval)
-    val evalBands = boundedBands(
-      eval.select(
-        col("doc_id").as("e_id"),
-        explode(graft.plans.TextHashExpressions.minhashBandKeys(col("shingles"))).as("band")
-      ),
-      "band",
-      MaxBandOccupancy
-    )
-    val trainBands = train.select(
-      col("doc_id").as("t_id"),
-      explode(graft.plans.TextHashExpressions.minhashBandKeys(col("shingles"))).as("band")
-    )
-    val cand = trainBands
-      .join(broadcast(evalBands), Seq("band"))
-      .select("t_id", "e_id")
-      .distinct()
-    val leaks = cand
-      .join(train.select(col("doc_id").as("t_id"), col("shingles").as("sh_t")), Seq("t_id"))
-      .join(broadcast(eval.select(col("doc_id").as("e_id"), col("shingles").as("sh_e"))), Seq("e_id"))
-      .withColumn("inter", size(array_intersect(col("sh_t"), col("sh_e"))).cast(LongType))
-      .withColumn("union_n", (size(col("sh_t")) + size(col("sh_e"))).cast(LongType) - col("inter"))
-      .filter(round(col("inter") / col("union_n"), 6) >= 0.3)
-      .groupBy(col("t_id").as("doc_id"))
+    val cand   = probePairs(minhashBands(train), broadcast(boundedBands(minhashBands(eval), "band", MaxBandOccupancy)))
+    val leaks = verify(cand, train.select("doc_id", "shingles"), broadcast(eval))
+      .transform(jaccard)
+      .filter(col("jaccard") >= JaccardThreshold)
+      .groupBy(col("id_a").as("doc_id"))
       .agg(count(lit(1)).as("n_eval_matches"))
     train
       .select(col("doc_id"), col("source"))

@@ -110,9 +110,10 @@ object Similarity extends QueryModule {
       )
   }
 
-  /** Default hyperplane count for [[lshBucket]]: bucket fan-out is 2^bits.
-    * Like the banded embedding LSH, bits must track log₂(corpus): expected
-    * bucket occupancy is n/2^bits, so per-bucket candidate volume n²/2^bits
+  /** [[autoLshBits]]' floor on the [[lshBucket]] hyperplane count: bucket
+    * fan-out is 2^bits. Like the banded embedding LSH, bits must track
+    * log₂(corpus): expected bucket occupancy is n/2^bits, so per-bucket
+    * candidate volume n²/2^bits
     * stays O(n) only while 2^bits ≈ n — at a billion vectors use ~30 bits
     * (or the banded multi-table shape of q39 for recall). */
   val LshBucketBits = 8
@@ -159,8 +160,6 @@ object Similarity extends QueryModule {
     * literals in both the Spark plan and the DuckDB oracle, so the
     * bucketing is reproducible everywhere and costs no per-row hashing.
     */
-  def planesFor(bits: Int): Seq[Seq[Double]] = planesForBand(0, bits)
-
   def planesForBand(band: Int, bits: Int): Seq[Seq[Double]] = (0 until bits).map { b =>
     (0 until Dim).map { i =>
       // band 0 keeps the r6 key shape (committed oracle renderings and the
@@ -173,10 +172,8 @@ object Similarity extends QueryModule {
     }
   }
 
-  val Planes: Seq[Seq[Double]] = planesFor(LshBucketBits)
-
   /** Random-hyperplane signature: bucket id in [0, 2^bits). */
-  def lshBucket(v: Column, bits: Int = LshBucketBits, band: Int = 0): Column = {
+  def lshBucket(v: Column, bits: Int, band: Int): Column = {
     val terms = planesForBand(band, bits).zipWithIndex.map { case (plane, b) =>
       val planeCol = array(plane.map(lit): _*)
       val proj     = dot(v, planeCol)
@@ -188,12 +185,11 @@ object Similarity extends QueryModule {
   /** LSH-bucketed near-pair mining: cosine ≥ 0.95 pairs, candidates limited
     * to vectors sharing a bucket in ANY of the [[LshBandFamilies]]
     * independent hash tables (OR-of-bands — see the constant's scaladoc for
-    * the recall math). Each band's bucket self-join exchanges only
-    * (bucket, vec_id) — the vectors and norms rejoin BY ID for the cosine
-    * verify (q39's shape), so the wide columns never ride the bucket
-    * shuffle. A vector lives in exactly one bucket per band; the cross-band
-    * union dedups candidate pairs BEFORE the verify join, so each
-    * surviving pair pays the wide cosine exactly once. */
+    * the recall math). A vector lives in exactly one bucket per family;
+    * the families share one tagged key space, so a single
+    * [[FuzzyDedup.selfPairs]] dedups candidate pairs across families
+    * BEFORE the verify join, and each surviving pair pays the wide cosine
+    * exactly once. */
   def lshPairs(s: SparkSession, dir: String): DataFrame =
     // bits track the corpus ([[autoLshBits]]): the FILTERED vector count
     // (cached) — the rows the plan actually buckets, not the raw footer
@@ -207,31 +203,21 @@ object Similarity extends QueryModule {
   private[graft] def lshPairsAt(s: SparkSession, dir: String, bits: Int): DataFrame = {
     // bucketing + both verify sides — one embedding scan + norm pass
     val emb = Eager.materialize(embWithNorm(s, dir), "similarity.embeddings")
-    def bandCandidates(band: Int): DataFrame = {
-      val skinny = FuzzyDedup.boundedBands(
-        emb.select(lshBucket(col("v"), bits, band).as("bucket"), col("vec_id")),
-        "bucket",
-        FuzzyDedup.MaxBandOccupancy
-      )
-      skinny
-        .select(col("bucket"), col("vec_id").as("id_a"))
-        .join(skinny.select(col("bucket"), col("vec_id").as("id_b")), Seq("bucket"))
-        .filter(col("id_a") < col("id_b"))
-        .select("id_a", "id_b")
-    }
-    val cand = (0 until LshBandFamilies)
-      .map(bandCandidates)
-      .reduce(_ union _)
-      .distinct() // skinny (id, id) exchange — dedup before the wide verify
-    val a = emb.select(col("vec_id").as("id_a"), col("v").as("va"), col("nrm").as("na"))
-    val b = emb.select(col("vec_id").as("id_b"), col("v").as("vb"), col("nrm").as("nb"))
-    cand
-      .join(a, Seq("id_a"))
-      .join(b, Seq("id_b"))
-      .withColumn("cos", cosine(dot(col("va"), col("vb")), col("na"), col("nb")))
-      .filter(col("cos") >= 0.95)
-      .select("id_a", "id_b", "cos")
+    // one key space over all families: family t's bucket b is t·2^bits + b,
+    // so the cap still applies per (family, bucket) and one capped
+    // self-join yields the UNION of the per-family candidate pairs
+    val buckets = (0 until LshBandFamilies).map(t => lit(t.toLong << bits) + lshBucket(col("v"), bits, t))
+    val keys    = emb.select(col("vec_id"), explode(array(buckets: _*)).as("bucket"))
+    cosinePairs(FuzzyDedup.verify(FuzzyDedup.selfPairs(keys, FuzzyDedup.MaxBandOccupancy), emb, emb), 0.95)
   }
+
+  /** [[FuzzyDedup.verify]]d vector pairs (`v_a`/`nrm_a`, `v_b`/`nrm_b`)
+    * whose 6-dp cosine is ≥ `min`, as (id_a, id_b, cos). */
+  private[graft] def cosinePairs(verified: DataFrame, min: Double): DataFrame =
+    verified
+      .withColumn("cos", cosine(dot(col("v_a"), col("v_b")), col("nrm_a"), col("nrm_b")))
+      .filter(col("cos") >= min)
+      .select("id_a", "id_b", "cos")
 
   /** IVF-style ANN: coarse-quantize the corpus into inverted lists keyed by
     * the nearest of 16 centroids (deterministically: the vectors with
@@ -552,8 +538,9 @@ object Similarity extends QueryModule {
 
   /** The q61 oracle at an explicit hyperplane count — the SQL mirror of
     * [[lshPairsAt]]: per-band bucketing with the occupancy QUALIFY, a
-    * UNION (set-distinct) of the band candidate pairs, then the cosine
-    * verify once per distinct pair. The registered static oracle renders
+    * UNION (set-distinct) of the band candidate pairs (the pair set of the
+    * Spark side's one family-tagged self-join), then the cosine verify once
+    * per distinct pair. The registered static oracle renders
     * the 8-bit floor; [[oraclesDynamic]] re-renders it with
     * [[autoLshBits]] of the TARGET dir's corpus at verify time, so oracle
     * parity survives corpora past the floor threshold (2^8·128 = 32,768

@@ -11,7 +11,8 @@ import graft.plans.{VectorExpressions, VectorHash}
 /** Embedding near-dup (q37/q39) semantics the 0-row gate corpus can't pin:
   * recall on PLANTED near-duplicates, the candidate-volume prune the banding
   * must deliver, parity of the fused band-keys expression with its per-plane
-  * reference formulation, and the q37 scale guard.
+  * reference formulation, and the q37 scale guard — plus the MinHash
+  * survivor (q107/q109) and near-contamination (q113) checks.
   */
 class FuzzyDedupSpec extends AnyFunSuite {
   lazy val spark = GraftSession.get("local[4]", 4)
@@ -358,5 +359,74 @@ class FuzzyDedupSpec extends AnyFunSuite {
       assert(got == expected, s"trial $trial: n=$n m=$m rounds=$rounds")
       assert(rounds <= FuzzyDedup.MaxCcRounds)
     }
+  }
+
+  test("q109: per cluster the kept member has max quality; totals close against q107") {
+    val dir = "/root/testdata/sf0.001"
+    val q109 = graft.operators.FuzzyDedup.dedupSurvivorsByQuality(spark, dir).collect()
+    val q107 = graft.operators.FuzzyDedup.dedupSurvivors(spark, dir).collect()
+    // same clusters, same removal COUNT per source — only the chosen reps differ
+    val c109 = q109.map(r => r.getAs[String]("source") -> r.getAs[Long]("n_removed")).toMap
+    val c107 = q107.map(r => r.getAs[String]("source") -> r.getAs[Long]("n_removed")).toMap
+    assert(c109.values.sum == c107.values.sum, "total removal count differs from min-id survivors")
+    assert(c109.values.sum > 0, "gate corpus planted no near-dups — spec would be vacuous")
+    // independent argmax oracle: q_removed_sum == sum(member qm) - sum(per-cluster max qm)
+    import org.apache.spark.sql.functions._
+    val (labels, _) = graft.operators.FuzzyDedup.connectedComponents(
+      graft.operators.FuzzyDedup.minhashLsh(spark, dir).select("id_a", "id_b"))
+    val qm = Tables.documents(spark, dir).select(
+      col("doc_id").as("node"),
+      floor(graft.operators.TextAnalysis.qualityScore(col("text"), col("n_chars")) * lit(1e6))
+        .cast("long").as("qm"))
+    val members = labels.join(qm, Seq("node")).collect()
+      .map(r => (r.getAs[Long]("label"), r.getAs[Long]("qm")))
+    val expected = members.map(_._2).sum -
+      members.groupBy(_._1).values.map(_.map(_._2).max).sum
+    assert(q109.map(_.getAs[Long]("q_removed_sum")).sum == expected,
+      "removed quality mass != member mass minus per-cluster maxima")
+  }
+
+  test("q113: a paraphrased leak is caught where q54 misses it") {
+    import spark.implicits._
+    // gate-corpus sanity only (leak COUNT there is a chance property of the
+    // per-round regenerated data — eval set ∩ planted dup groups — so
+    // non-vacuity is proven by the controlled fixture below instead)
+    val gate = graft.operators.FuzzyDedup.nearContamination(spark, "/root/testdata/sf0.001").collect()
+    gate.foreach { r =>
+      assert(r.getAs[Long]("n_leaked") <= r.getAs[Long]("n_train"))
+      assert(r.getAs[Long]("n_leak_pairs") >= r.getAs[Long]("n_leaked"))
+    }
+    // planted paraphrase: train = eval text + novel tail, tuned so exact-shingle
+    // containment (q54's signal) is 0.453 < its 0.5 threshold while the pair
+    // still collides in MinHash bands and verifies at Jaccard 0.453 >= 0.3
+    val evalText = "kilo echo mike uniform bravo charlie red romeo delta lima sierra bravo amber quebec golf bravo charlie november november charlie hotel charlie romeo november bravo red sierra delta hotel uniform uniform sierra bravo sierra sierra mike bravo hotel bravo romeo blue echo juliet november echo romeo delta sierra juliet romeo red victor foxtrot delta sierra sierra uniform golf lima delta"
+    val tail = "novemberx4 deltax4 xrayx4 tangox4 romeox4 whiskeyx4 victorx4 quebecx4 uniformx4 golfx4 yankeex4 redx4 amberx4 bluex4 yankeex4 golfx4 kilox4 uniformx4 bravox4 whiskeyx4 yankeex4 whiskeyx4 bluex4 zulux4 echox4 bluex4 tangox4 limax4 charliex4 quebecx4 hotelx4 xrayx4 alphax4 echox4 whiskeyx4 alphax4 echox4 echox4 charliex4 redx4 quebecx4 kilox4 novemberx4 julietx4 alphax4 deltax4 novemberx4 deltax4 papax4 xrayx4 bravox4 bluex4 julietx4 romeox4 alphax4 hotelx4 greenx4 alphax4 bluex4 greenx4 whiskeyx4 mikex4 julietx4 oscarx4 bravox4 whiskeyx4 zulux4 foxtrotx4 victorx4 papax4"
+    val trainText = s"$evalText $tail"
+    val dir = java.nio.file.Files.createTempDirectory("graft-q113").toString
+    Seq(
+      (97L, evalText, "en", "seval", evalText.length.toLong),   // 97 % EvalMod == 0
+      (1L, trainText, "en", "strain", trainText.length.toLong)
+    ).toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val near = graft.operators.FuzzyDedup.nearContamination(spark, dir).collect()
+      .map(r => r.getAs[String]("source") -> r.getAs[Long]("n_leaked")).toMap
+    assert(near("strain") == 1L, "paraphrased leak not caught by the banded screen")
+    val exact = graft.operators.TrainingPrep.contaminationScreen(spark, dir).collect()
+    assert(exact.length == 1 && exact.head.getAs[Long]("flagged") == 0L,
+      "q54 flagged the paraphrase — fixture no longer demonstrates the gap q113 closes")
+  }
+
+  test("q107: survivors = corpus minus non-representative cluster members (min-id reps kept)") {
+    // sf0.001 gate corpus: q38's clusters vs q107's accounting must agree
+    val dir = "/root/testdata/sf0.001"
+    val clusters = graft.operators.FuzzyDedup.dedupClusters(spark, dir).collect()
+    val removedExpected = clusters.map(r => r.getAs[Long]("cluster_size") - 1).sum
+    val surv = graft.operators.FuzzyDedup.dedupSurvivors(spark, dir).collect()
+    val nDocs    = surv.map(_.getAs[Long]("n_docs")).sum
+    val nRemoved = surv.map(_.getAs[Long]("n_removed")).sum
+    val nKept    = surv.map(_.getAs[Long]("n_survivors")).sum
+    assert(nRemoved == removedExpected, s"removed $nRemoved != clusters' non-reps $removedExpected")
+    assert(nKept + nRemoved == nDocs, "survivor accounting does not close")
+    assert(nRemoved > 0, "gate corpus planted no near-dups — accounting would be vacuous")
   }
 }

@@ -246,6 +246,44 @@ class PropertySpec extends AnyFunSuite {
     assert(out.toSet.subsetOf(rows.toSet), "boundedBands invented rows")
   }
 
+  /** Random (doc_id, band) rows for the pair verbs: ~60 ordinary bands
+    * whose occupancy straddles `pairCap`, one mega band, and ids drawn from
+    * a narrow range so that many pairs share several bands. */
+  private val pairCap = 4
+  private def keyedRows(ids: Gen[Long], n: Int): List[(Long, String)] =
+    sample(Gen.zip(ids, Gen.frequency(6 -> Gen.choose(0, 59).map(k => s"k$k"), 1 -> Gen.const("mega"))), n).distinct
+
+  test("selfPairs: every a < b sharing a band at or under the cap, each pair exactly once") {
+    import spark.implicits._
+    val rows   = keyedRows(Gen.choose(0L, 30L), 240)
+    val byBand = rows.groupBy(_._2).values.map(_.map(_._1))
+    val shared = (for (ids <- byBand.toList if ids.size <= pairCap; a <- ids; b <- ids if a < b) yield (a, b))
+    val got = graft.operators.FuzzyDedup.selfPairs(rows.toDF("doc_id", "band"), pairCap).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toList
+    assert(got.sorted == shared.distinct.sorted, "pair set differs from the brute force")
+    assert(shared.size > shared.distinct.size, "no pair shares two bands: the dedup is untested")
+    assert(byBand.exists(_.size > pairCap), "no band above the cap: the cap is untested")
+  }
+
+  test("probePairs: every (probe, index) sharing a band once, capped on the index side only") {
+    import spark.implicits._
+    // "hot" sits above the cap on the probe side and under it on the index side
+    val index = keyedRows(Gen.choose(0L, 30L), 240) ++ Seq(1000L -> "hot", 1001L -> "hot")
+    val probe = keyedRows(Gen.choose(100L, 130L), 120) ++ (200L until 210L).map(_ -> "hot")
+    val kept  = index.groupBy(_._2).filter(_._2.size <= pairCap).values.flatten.toList
+    val shared = for ((p, band) <- probe; (i, indexBand) <- kept if band == indexBand) yield (p, i)
+    val got = graft.operators.FuzzyDedup
+      .probePairs(
+        probe.toDF("doc_id", "band"),
+        graft.operators.FuzzyDedup.boundedBands(index.toDF("doc_id", "band"), "band", pairCap))
+      .collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toList
+    assert(got.sorted == shared.distinct.sorted, "pair set differs from the brute force")
+    assert(shared.size > shared.distinct.size, "no pair shares two bands: the dedup is untested")
+    assert(got.contains(200L -> 1000L), "a band over the cap on the probe side lost its pairs")
+    assert(index.groupBy(_._2).values.exists(_.size > pairCap), "no index band above the cap")
+  }
+
   test("fp8/fp15 fingerprints: stay in their declared non-negative ranges") {
     import spark.implicits._
     val texts = sample(Gen.alphaNumStr, 200).filter(_.nonEmpty)
