@@ -93,9 +93,8 @@ object Dedup extends QueryModule {
 
   def ngramJaccard(s: SparkSession, dir: String): DataFrame =
     shinglePairStats(s, dir, "ngramJaccard")
-      .withColumn("union_n", col("n_a") + col("n_b") - col("inter"))
-      .withColumn("jaccard", round(col("inter") / col("union_n"), 6))
-      .filter(col("jaccard") >= 0.3)
+      .transform(FuzzyDedup.jaccard(col("n_a"), col("n_b")))
+      .filter(col("jaccard") >= FuzzyDedup.JaccardThreshold)
       .select("id_a", "id_b", "inter", "union_n", "jaccard")
 
   /** Containment flag threshold for [[containment]]. */

@@ -84,12 +84,9 @@ object DedupIndex {
     * outputPartitioning); absorb reads the spec BACK from the catalog
     * ([[tableBuckets]]) so appends keep validating against what the table
     * actually is, never against what today's sizing rule would pick. */
-  def autoNumBuckets(rows: Long): Int = {
-    val needed = math.max(1L, (rows + TargetRowsPerBucket - 1) / TargetRowsPerBucket)
-    val pow2   = java.lang.Long.highestOneBit(needed)
-    val up     = if (pow2 == needed) needed else pow2 << 1
-    math.min(MaxBuckets.toLong, math.max(NumBuckets.toLong, up)).toInt
-  }
+  def autoNumBuckets(rows: Long): Int =
+    1 << FuzzyDedup.pow2Bits(rows, TargetRowsPerBucket, Integer.numberOfTrailingZeros(NumBuckets),
+      Integer.numberOfTrailingZeros(MaxBuckets))
 
   /** The PERSISTED bucket count of an index table — absorb's append spec
     * must match the catalog entry (Spark validates and fails loudly on

@@ -83,8 +83,8 @@ object FuzzyDedup extends QueryModule {
   // ---- Banded candidate pairs: the one home of the 100 TB pair rule ----
   //
   // Every banded near-dup site (q33/q105/q107/q109 MinHash, q39/q61
-  // hyperplane LSH, the q58/q113 probes and DedupIndex's probe) runs the
-  // same three steps:
+  // hyperplane LSH via [[hyperplanePairs]], the q58/q113 probes and
+  // DedupIndex's probe) runs the same three steps:
   //  1. [[selfPairs]] / [[probePairs]] turn (id, key) rows into DISTINCT
   //     (id_a, id_b) candidate pairs. Only the skinny (key, id) rows ride
   //     the band join's exchange, and only (id_a, id_b) rides the pair
@@ -138,6 +138,33 @@ object FuzzyDedup extends QueryModule {
     pairs.join(side(a, "a"), Seq("id_a")).join(side(b, "b"), Seq("id_b"))
   }
 
+  /** Hyperplane-LSH candidate pairs of a (vec_id, v, …) frame: vectors
+    * sharing any of `bands` sign signatures of `bits` planes each. The keys
+    * "band:signature" come from the native
+    * [[graft.plans.HyperplaneBandKeys]] in one fused pass per row, over the
+    * one md5 plane family [[graft.plans.VectorHash.planes]]. */
+  def hyperplaneCandidates(emb: DataFrame, bits: Int, bands: Int): DataFrame = {
+    val keys = graft.plans.VectorExpressions.hyperplaneBandKeys(col("v"), bits, bands)
+    selfPairs(emb.select(col("vec_id"), explode(keys).as("band")), MaxBandOccupancy)
+  }
+
+  /** The one banded hyperplane-LSH pair miner: [[hyperplaneCandidates]] →
+    * [[verify]] against the (vec_id, v, nrm) frame on both sides → 6-dp
+    * cosine ≥ `min`, as (id_a, id_b, cos). q39/q76 and q61 are two calls
+    * with their own bits, bands and threshold. */
+  def hyperplanePairs(emb: DataFrame, bits: Int, bands: Int, min: Double): DataFrame =
+    Similarity.cosinePairs(verify(hyperplaneCandidates(emb, bits, bands), emb, emb), min)
+
+  /** The one power-of-two sizing rule (q39/q61 plane bits, the dedup
+    * index's bucket count): the smallest b in [lo, hi] with
+    * n ≤ 2^b · perBucket, or hi when none is. 2^b buckets then hold at most
+    * `perBucket` rows each on average, so per-bucket pair work stays linear
+    * in n. Compares ceil(n / perBucket) with 2^b, so no n overflows. */
+  def pow2Bits(n: Long, perBucket: Long, lo: Int, hi: Int): Int = {
+    val buckets = if (n <= 0) 1L else (n - 1) / perBucket + 1
+    math.min(hi, math.max(lo, 64 - java.lang.Long.numberOfLeadingZeros(buckets - 1)))
+  }
+
   /** Verified-pair Jaccard threshold of every MinHash near-dup query. */
   val JaccardThreshold = 0.3
 
@@ -146,7 +173,14 @@ object FuzzyDedup extends QueryModule {
   def jaccard(verified: DataFrame): DataFrame =
     verified
       .withColumn("inter", size(array_intersect(col("shingles_a"), col("shingles_b"))).cast(LongType))
-      .withColumn("union_n", (size(col("shingles_a")) + size(col("shingles_b"))).cast(LongType) - col("inter"))
+      .transform(jaccard(size(col("shingles_a")).cast(LongType), size(col("shingles_b")).cast(LongType)))
+
+  /** The one Spark Jaccard formula, at count level: adds
+    * `union_n` = n_a + n_b − `inter` and the 6-dp `jaccard` to a frame
+    * carrying the intersection size `inter`, given both set sizes. */
+  def jaccard(nA: Column, nB: Column)(withInter: DataFrame): DataFrame =
+    withInter
+      .withColumn("union_n", nA + nB - col("inter"))
       .withColumn("jaccard", round(col("inter") / col("union_n"), 6))
 
   /** (doc_id, band) rows of a (doc_id, shingles…) frame, via the native
@@ -346,14 +380,9 @@ object FuzzyDedup extends QueryModule {
   val EmbBits  = 12
   val EmbBands = 64
 
-  /** Band keys "b:sig" per vector — one fused narrow pass (codegen'd native
-    * expression; see [[graft.plans.HyperplaneBandKeys]]), no shuffle. */
-  def embBandKeys(v: Column, bits: Int = EmbBits): Column =
-    graft.plans.VectorExpressions.hyperplaneBandKeys(v, bits, EmbBands)
-
   /** [[EmbBits]]'s own sizing rule made executable: per-band candidate
     * volume is n²/2^bits, so `bits` must track log₂(n) for candidates to
-    * stay O(n·bands). ceil(log₂ n) floored at [[EmbBits]] — a no-op at
+    * stay O(n·bands). ceil(log₂ n) in [[EmbBits]]..30 — a no-op at
     * gate scale (2^12 = 4096 ≥ both gate corpora, so the oracles see the
     * identical plan), engaged on scale corpora (20k vectors → 15 bits,
     * 60k → 16). The 30× spot-run measured the fixed-bits cost: 919 cpu-s
@@ -361,34 +390,22 @@ object FuzzyDedup extends QueryModule {
     * auto-bits (6.8 s wall vs 35.2). The recall trade is the documented one: more bits lowers
     * per-band collision odds at fixed band count (0.99998 → ~0.996 AT the
     * 0.9 boundary for 16 bits); production re-sizing pairs bits growth
-    * with more bands to buy it back. */
-  def autoEmbBits(n: Long): Int = {
-    val ceilLog2 = 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1))
-    math.max(EmbBits, ceilLog2)
-  }
-
-  /** LSH candidate pairs only (pre-verification) over a caller-supplied
-    * (vec_id, v, nrm) frame — lets [[embeddingPairsLsh]] share ONE
-    * materialized projection between the row-count probe, the banding
-    * pass, and both verify sides, and lets specs measure the candidate
-    * volume the banding actually admits. The bit count is sized from the
-    * frame's row count ([[autoEmbBits]]). */
-  def embCandidatesOver(emb: DataFrame): DataFrame = {
-    val bits = autoEmbBits(Eager.count(emb, "fuzzyDedup.embBits"))
-    selfPairs(emb.select(col("vec_id"), explode(embBandKeys(col("v"), bits)).as("band")), MaxBandOccupancy)
-  }
+    * with more bands to buy it back. The ceiling is the widest signature
+    * [[graft.plans.HyperplaneBandKeys]] takes. */
+  def autoEmbBits(n: Long): Int = pow2Bits(n, 1L, EmbBits, graft.plans.VectorHash.MaxBits)
 
   /** Scale-safe embedding near-dup at 0.9: banded hyperplane LSH candidates
-    * + exact cosine verify — [[embeddingPairs]]' semantics without the
-    * all-pairs join. The banding prunes candidates to ~bands·0.5^bits of
-    * all pairs (see [[EmbBits]] for the volume/recall trade and the
-    * bits ~ log₂(n) sizing rule). Oracle = the exact all-pairs SQL; recall
-    * on planted near-dups is additionally pinned by FuzzyDedupSpec. */
+    * + exact cosine verify ([[hyperplanePairs]]) — [[embeddingPairs]]'
+    * semantics without the all-pairs join. The banding prunes candidates
+    * to ~bands·0.5^bits of all pairs (see [[EmbBits]] for the volume/recall
+    * trade and the bits ~ log₂(n) sizing rule). Oracle = the exact
+    * all-pairs SQL; recall on planted near-dups is additionally pinned by
+    * FuzzyDedupSpec. */
   def embeddingPairsLsh(s: SparkSession, dir: String): DataFrame = {
-    // four consumers (count probe, banding, both verify sides) — one
-    // embedding scan + norm pass
+    // banding and both verify sides — one embedding scan + norm pass; bits
+    // from the cached filtered-view count every sizing knob reads
     val emb = Eager.materialize(Similarity.embWithNorm(s, dir), "fuzzyDedup.embeddings")
-    Similarity.cosinePairs(verify(embCandidatesOver(emb), emb, emb), 0.9)
+    hyperplanePairs(emb, autoEmbBits(Tables.embeddingsCountCached(s, dir)), EmbBands, 0.9)
   }
 
   /** Base/delta split for the incremental scenario: docs with

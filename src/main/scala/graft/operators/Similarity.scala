@@ -110,8 +110,8 @@ object Similarity extends QueryModule {
       )
   }
 
-  /** [[autoLshBits]]' floor on the [[lshBucket]] hyperplane count: bucket
-    * fan-out is 2^bits. Like the banded embedding LSH, bits must track
+  /** [[autoLshBits]]' floor on the q61 hyperplane count: bucket fan-out
+    * per band is 2^bits. Like the banded embedding LSH, bits must track
     * log₂(corpus): expected bucket occupancy is n/2^bits, so per-bucket
     * candidate volume n²/2^bits
     * stays O(n) only while 2^bits ≈ n — at a billion vectors use ~30 bits
@@ -132,64 +132,27 @@ object Similarity extends QueryModule {
     * [[LshTargetOccupancy]]; gate corpora (≤ ~6k vectors) stay at the oracle-replayed 8-bit
     * floor, and the 24-bit ceiling (16M buckets) is far past any
     * single-node corpus. */
-  def autoLshBits(n: Long): Int = {
-    var bits = LshBucketBits
-    while (bits < 24 && (1L << bits) * LshTargetOccupancy < n) bits += 1
-    bits
-  }
+  def autoLshBits(n: Long): Int = FuzzyDedup.pow2Bits(n, LshTargetOccupancy, LshBucketBits, 24)
 
-  /** Independent hash-table count for the q61 pair miner — the standard
-    * OR-of-bands LSH amplification. A pair at cosine c collides in ONE
-    * table with probability p^bits (p = 1 − acos(c)/π), so recall at the
-    * corpus-sized bit count decays as bits grow; T independent tables lift
-    * it to 1 − (1 − p^bits)^T while per-table occupancy (and therefore
-    * per-bucket candidate volume) is unchanged — cost scales ×T, linear,
-    * where buying the same recall with FEWER bits would grow per-bucket
-    * volume ×2^Δbits, quadratic in occupancy. Two tables took the measured
-    * auto-bits recall on the planted-pair fixture from 0.568 to ≈0.8
-    * (Q61RecallSpec pins ≥0.6). */
+  /** Band count of the q61 pair miner — the standard OR-of-bands LSH
+    * amplification. A pair at cosine c collides in ONE band with
+    * probability p^bits (p = 1 − acos(c)/π), so recall at the corpus-sized
+    * bit count decays as bits grow; T independent bands lift it to
+    * 1 − (1 − p^bits)^T while per-band occupancy (and therefore per-bucket
+    * candidate volume) is unchanged — cost scales ×T, linear, where buying
+    * the same recall with FEWER bits would grow per-bucket volume ×2^Δbits,
+    * quadratic in occupancy. Two bands took the measured auto-bits recall
+    * on the planted-pair fixture from 0.568 to 0.835 (Q61RecallSpec pins
+    * ≥0.6). */
   val LshBandFamilies = 2
 
   /** Embedding dimension. */
   val Dim = 64
 
-  /** Deterministic pseudo-random ±1 hyperplane matrix (bits × [[Dim]]),
-    * derived from md5("plane<b>:<i>") parity at build time — band family 0.
-    * Band families ≥ 1 salt the digest key with the band index, giving
-    * independent tables with the same reproducibility. Embedded as
-    * literals in both the Spark plan and the DuckDB oracle, so the
-    * bucketing is reproducible everywhere and costs no per-row hashing.
-    */
-  def planesForBand(band: Int, bits: Int): Seq[Seq[Double]] = (0 until bits).map { b =>
-    (0 until Dim).map { i =>
-      // band 0 keeps the r6 key shape (committed oracle renderings and the
-      // replayed gate hashes depend on these exact planes)
-      val key = if (band == 0) s"plane$b:$i" else s"band$band:plane$b:$i"
-      val digest = java.security.MessageDigest
-        .getInstance("MD5")
-        .digest(key.getBytes("UTF-8"))
-      if ((digest(3) & 1) == 0) 1.0 else -1.0
-    }
-  }
-
-  /** Random-hyperplane signature: bucket id in [0, 2^bits). */
-  def lshBucket(v: Column, bits: Int, band: Int): Column = {
-    val terms = planesForBand(band, bits).zipWithIndex.map { case (plane, b) =>
-      val planeCol = array(plane.map(lit): _*)
-      val proj     = dot(v, planeCol)
-      when(proj >= 0, lit(1L << b)).otherwise(lit(0L))
-    }
-    terms.reduce(_ + _)
-  }
-
   /** LSH-bucketed near-pair mining: cosine ≥ 0.95 pairs, candidates limited
-    * to vectors sharing a bucket in ANY of the [[LshBandFamilies]]
-    * independent hash tables (OR-of-bands — see the constant's scaladoc for
-    * the recall math). A vector lives in exactly one bucket per family;
-    * the families share one tagged key space, so a single
-    * [[FuzzyDedup.selfPairs]] dedups candidate pairs across families
-    * BEFORE the verify join, and each surviving pair pays the wide cosine
-    * exactly once. */
+    * to vectors sharing a bucket in ANY of the [[LshBandFamilies]] bands
+    * (OR-of-bands — see the constant's scaladoc for the recall math) —
+    * q39's [[FuzzyDedup.hyperplanePairs]] with q61's own constants. */
   def lshPairs(s: SparkSession, dir: String): DataFrame =
     // bits track the corpus ([[autoLshBits]]): the FILTERED vector count
     // (cached) — the rows the plan actually buckets, not the raw footer
@@ -203,12 +166,7 @@ object Similarity extends QueryModule {
   private[graft] def lshPairsAt(s: SparkSession, dir: String, bits: Int): DataFrame = {
     // bucketing + both verify sides — one embedding scan + norm pass
     val emb = Eager.materialize(embWithNorm(s, dir), "similarity.embeddings")
-    // one key space over all families: family t's bucket b is t·2^bits + b,
-    // so the cap still applies per (family, bucket) and one capped
-    // self-join yields the UNION of the per-family candidate pairs
-    val buckets = (0 until LshBandFamilies).map(t => lit(t.toLong << bits) + lshBucket(col("v"), bits, t))
-    val keys    = emb.select(col("vec_id"), explode(array(buckets: _*)).as("bucket"))
-    cosinePairs(FuzzyDedup.verify(FuzzyDedup.selfPairs(keys, FuzzyDedup.MaxBandOccupancy), emb, emb), 0.95)
+    FuzzyDedup.hyperplanePairs(emb, bits, LshBandFamilies, 0.95)
   }
 
   /** [[FuzzyDedup.verify]]d vector pairs (`v_a`/`nrm_a`, `v_b`/`nrm_b`)
@@ -527,8 +485,9 @@ object Similarity extends QueryModule {
   private val dotSql =
     "list_sum(list_transform(generate_series(1, 64), i -> CAST(a.v[i] AS DOUBLE) * CAST(b.v[i] AS DOUBLE)))"
 
-  /** DuckDB rendering of one plane's projection + sign bit. */
-  private def bucketSql(vExpr: String, planes: Seq[Seq[Double]]): String = {
+  /** DuckDB rendering of one band's signature: each plane's projection +
+    * sign bit. */
+  private def bucketSql(vExpr: String, planes: Seq[Array[Double]]): String = {
     val bitTerms = planes.zipWithIndex.map { case (plane, b) =>
       val planeList = plane.map(p => if (p > 0) "1.0" else "-1.0").mkString("[", ", ", "]")
       s"(CASE WHEN list_sum(list_transform(generate_series(1, 64), i -> CAST($vExpr[i] AS DOUBLE) * ($planeList)[i])) >= 0 THEN ${1L << b} ELSE 0 END)"
@@ -539,8 +498,8 @@ object Similarity extends QueryModule {
   /** The q61 oracle at an explicit hyperplane count — the SQL mirror of
     * [[lshPairsAt]]: per-band bucketing with the occupancy QUALIFY, a
     * UNION (set-distinct) of the band candidate pairs (the pair set of the
-    * Spark side's one family-tagged self-join), then the cosine verify once
-    * per distinct pair. The registered static oracle renders
+    * Spark side's one self-join on "band:signature" keys), then the cosine
+    * verify once per distinct pair. The registered static oracle renders
     * the 8-bit floor; [[oraclesDynamic]] re-renders it with
     * [[autoLshBits]] of the TARGET dir's corpus at verify time, so oracle
     * parity survives corpora past the floor threshold (2^8·128 = 32,768
@@ -549,10 +508,11 @@ object Similarity extends QueryModule {
   private def q61OracleAt(bits: Int): String = {
     // the QUALIFY mirrors boundedBands' occupancy cap (parity even on a
     // corpus with a >= cap degenerate bucket)
-    // CAST: the CASE-literal sum is INT32 in DuckDB but Spark's bucket is
-    // BIGINT — dtype-sensitive driver hash needs them identical
+    // band t's planes are rows t·bits until (t+1)·bits of the one family
+    // HyperplaneBandKeys reads, so both engines bucket with the same planes
+    val planes = graft.plans.VectorHash.planes(Dim, bits, LshBandFamilies).toSeq
     val bandBuckets = (0 until LshBandFamilies)
-      .map(t => s"CAST(${bucketSql("embedding", planesForBand(t, bits))} AS BIGINT) AS bucket$t")
+      .map(t => s"${bucketSql("embedding", planes.slice(t * bits, (t + 1) * bits))} AS bucket$t")
       .mkString(",\n       ")
     val bandCtes = (0 until LshBandFamilies)
       .map(t =>

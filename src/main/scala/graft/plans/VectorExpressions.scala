@@ -60,6 +60,10 @@ object VectorHash {
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int), Array[Array[Double]]]()
 
+  /** Widest signature [[HyperplaneBandKeys]] takes: `bits` sign bits land in
+    * one non-negative Int. */
+  val MaxBits = 30
+
   /** ±1 random hyperplanes for `bands` sign-signatures of `bits` planes each,
     * md5-derived at first use (seed "emb-lsh:band:plane:dim") so the banding
     * is deterministic across engines and reruns — no RNG state, and the
@@ -119,7 +123,7 @@ object VectorHash {
   * behind a single static call.
   */
 case class HyperplaneBandKeys(child: Expression, bits: Int, bands: Int) extends UnaryExpression {
-  require(bits > 0 && bits <= 30 && bands > 0, s"bad LSH shape: $bits bits × $bands bands")
+  require(bits > 0 && bits <= VectorHash.MaxBits && bands > 0, s"bad LSH shape: $bits bits × $bands bands")
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def nullSafeEval(input: Any): Any =
     VectorHash.bandKeys(input.asInstanceOf[ArrayData], bits, bands)

@@ -174,6 +174,8 @@ class DedupIndexSpec extends AnyFunSuite {
     // mid-range: a billion docs -> 4096 (the cap is exactly 2^30 docs)
     assert(autoNumBuckets(1L << 30) == MaxBuckets)
     assert(autoNumBuckets(Long.MaxValue / 4) == MaxBuckets)
+    // no overflow back to the floor at the top of the Long range
+    assert(autoNumBuckets(Long.MaxValue) == MaxBuckets)
     // always a power of two
     for (rows <- Seq(1L, 12345L, 10000000L, 123456789L, 1L << 33))
       assert(Integer.bitCount(autoNumBuckets(rows)) == 1, s"rows=$rows")

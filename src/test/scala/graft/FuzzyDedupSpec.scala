@@ -112,7 +112,8 @@ class FuzzyDedupSpec extends AnyFunSuite {
     // magnitude on realistic (correlated) data, not just on uniform noise.
     val n        = Tables.embeddings(spark, dir).count()
     val allPairs = n * (n - 1) / 2
-    val cands    = FuzzyDedup.embCandidatesOver(Similarity.embWithNorm(spark, dir)).count()
+    val emb      = Similarity.embWithNorm(spark, dir)
+    val cands    = FuzzyDedup.hyperplaneCandidates(emb, FuzzyDedup.autoEmbBits(n), FuzzyDedup.EmbBands).count()
     assert(
       cands * 40 <= allPairs,
       s"banding admits $cands of $allPairs pairs (${cands * 100.0 / allPairs}%) — no real prune"
@@ -120,26 +121,29 @@ class FuzzyDedupSpec extends AnyFunSuite {
   }
 
   test("HyperplaneBandKeys == per-plane reference formulation") {
-    val (bits, bands) = (FuzzyDedup.EmbBits, FuzzyDedup.EmbBands)
     val emb = Tables.embeddings(spark, dir).limit(50)
       .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
-    // reference: one literal-array dot product per plane, same md5 planes
-    val pl = VectorHash.planes(64, bits, bands)
-    val ref = array((0 until bands).map { b =>
-      val sig = (0 until bits).map { p =>
-        val plane = array(pl(b * bits + p).toIndexedSeq.map(lit): _*)
-        when(VectorExpressions.dotProduct(col("v"), plane) >= 0, lit(1 << p)).otherwise(lit(0))
-      }.reduce(_ + _)
-      concat_ws(":", lit(b), sig)
-    }: _*)
-    val rows = emb
-      .select(
-        col("vec_id"),
-        FuzzyDedup.embBandKeys(col("v")).as("a"),
-        ref.as("b")
-      )
-      .collect()
-    rows.foreach(r => assert(r.getSeq[String](1) == r.getSeq[String](2), s"vec_id=${r.getLong(0)}"))
+    // both callers' shapes: q39's 12 bits × 64 bands and q61's 8 × 2
+    val shapes = Seq(FuzzyDedup.EmbBits -> FuzzyDedup.EmbBands, Similarity.LshBucketBits -> Similarity.LshBandFamilies)
+    for ((bits, bands) <- shapes) {
+      // reference: one literal-array dot product per plane, same md5 planes
+      val pl = VectorHash.planes(64, bits, bands)
+      val ref = array((0 until bands).map { b =>
+        val sig = (0 until bits).map { p =>
+          val plane = array(pl(b * bits + p).toIndexedSeq.map(lit): _*)
+          when(VectorExpressions.dotProduct(col("v"), plane) >= 0, lit(1 << p)).otherwise(lit(0))
+        }.reduce(_ + _)
+        concat_ws(":", lit(b), sig)
+      }: _*)
+      val rows = emb
+        .select(
+          col("vec_id"),
+          VectorExpressions.hyperplaneBandKeys(col("v"), bits, bands).as("a"),
+          ref.as("b")
+        )
+        .collect()
+      rows.foreach(r => assert(r.getSeq[String](1) == r.getSeq[String](2), s"$bits x $bands, vec_id=${r.getLong(0)}"))
+    }
   }
 
   test("q37 guard fails fast above the row limit and can be overridden") {

@@ -209,6 +209,12 @@ class PlanQualitySpec extends AnyFunSuite {
     assert((1L << bits) * LshTargetOccupancy >= n100x, "occupancy above target")
     assert((1L << (bits - 1)) * LshTargetOccupancy < n100x, "bits overshoot (candidates lost to recall for nothing)")
     assert(autoLshBits(Long.MaxValue) == 24, "ceiling must bound the plane count")
+    // q39's bits, same rule: floored at 12, ceil(log2 n) past it, and
+    // never wider than the 30 bits HyperplaneBandKeys accepts
+    import graft.operators.FuzzyDedup.autoEmbBits
+    assert(autoEmbBits(1) == 12 && autoEmbBits(4096) == 12)
+    assert(autoEmbBits(4097) == 13)
+    assert(autoEmbBits(Long.MaxValue) <= 30, "ceiling must stay inside HyperplaneBandKeys' limit")
   }
 
   test("q46 running sum is chunked (lang, g) — no full-corpus |langs|-task window") {

@@ -19,12 +19,14 @@ import graft.operators.Similarity
   * sequential-fold double arithmetic.
   *
   * Expected shape (random-hyperplane LSH, OR of `LshBandFamilies`
-  * independent tables): a pair at cosine c collides in one table with
+  * independent bands of the `emb-lsh` planes q39 also uses): a pair at
+  * cosine c collides in one band with
   * probability p^bits (p = 1 − acos(c)/π) and survives the OR with
   * 1 − (1 − p^bits)^T — more bits = sharper buckets = lower recall (the
   * trade `autoLshBits` makes to keep candidate volume linear), and the
-  * band families buy recall back at ×T linear cost instead of ×2^Δbits
-  * occupancy growth. Recall-critical retrieval still uses q39's banded
+  * bands buy recall back at ×T linear cost instead of ×2^Δbits
+  * occupancy growth. Measured: 0.860/0.835/0.735/0.580 at 8/9/12/16 bits.
+  * Recall-critical retrieval still uses q39's banded
   * multi-table shape or q60/q62's exact/IVF paths.
   */
 class Q61RecallSpec extends AnyFunSuite {
@@ -113,7 +115,7 @@ class Q61RecallSpec extends AnyFunSuite {
     val r = recallAt(9)
     info(f"recall at auto bits (9): $r%.3f over ${truePairs.size} planted pairs")
     // single-table recall measured 0.568 here (r11); the OR-of-two-bands
-    // amplification lifts the seeded fixture to ≈0.8 — the 0.6 floor is
+    // amplification lifts the seeded fixture to 0.835 — the 0.6 floor is
     // the r12 operating contract, with headroom for FP platform drift
     // without masking a real recall regression
     assert(r >= 0.6, f"recall at auto bits collapsed: $r%.3f")
